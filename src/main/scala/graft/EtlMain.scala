@@ -32,6 +32,10 @@ object EtlMain {
       val result = Pipeline.run(spark, dataDir, outDir, asOf)
       println(s"valid records written: ${result.validCount}")
       println(s"quarantined records:   ${result.quarantineCount}")
+      def counts(m: Map[String, Long]) =
+        m.toSeq.sorted.map { case (k, n) => s"$k=$n" }.mkString(", ")
+      println(s"quarantined by reason: ${counts(result.quarantinedByReason)}")
+      println(s"valid by country:      ${counts(result.validByCountry)}")
       println(s"countries:             ${result.countries.mkString(", ")}")
       result.views.foreach { v =>
         println(s"\n== $v ==")

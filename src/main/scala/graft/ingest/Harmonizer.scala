@@ -1,7 +1,15 @@
 package graft.ingest
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.schema.{ColumnMappings, Schemas}
 
 /** Schema harmonization: heterogeneous per-country CSVs → one canonical
@@ -18,6 +26,11 @@ import graft.schema.{ColumnMappings, Schemas}
   * per-file loop. Only the header probe (1 line per file) touches the driver;
   * with millions of files you would instead pre-bucket paths by layout
   * convention, which this API accepts directly via [[loadGrouped]].
+  *
+  * Job count: the header probe is the one Spark job of ingest. Each layout's
+  * schema is derived from its probed header line ([[headerSchema]]) and its
+  * embedded-header check reads one data line on the driver, so no layout
+  * adds a job however many there are.
   */
 object Harmonizer {
 
@@ -73,45 +86,110 @@ object Harmonizer {
     df.filter(first.isNull || !first.startsWith("|"))
   }
 
-  /** P2: extract an embedded `|H|` header from the FIRST ROW ONLY — the
-    * reference probes ANY column of `df.iloc[0]` (`data_validator.py:227-230`
-    * uses `.any()` across the row), so every column of the one probed row is
-    * checked, not just the first. This stays bounded work: a
-    * filter-then-limit over the whole frame would scan every row of a layout
-    * that has no embedded header before concluding so. Caveat (documented,
-    * matching the reference's own file-order assumption): `limit(1)` without
-    * an ordering returns the first row in file order by convention only. */
-  def extractEmbeddedHeader(df: DataFrame): Option[String] =
-    df.limit(1).collect().headOption.flatMap { row =>
-      (0 until row.length).iterator
-        .map(i => if (row.isNullAt(i)) null else row.get(i).toString)
-        .find(v => v != null && v.startsWith("|H|"))
-    }
+  /** P2 on one parsed row: the first of its values that is an embedded `|H|`
+    * header. The reference probes ANY column of `df.iloc[0]`
+    * (`data_validator.py:227-230` uses `.any()` across the row), so every
+    * value is checked, not just the first. */
+  def embeddedHeaderIn(values: Seq[String]): Option[String] =
+    values.find(v => v != null && v.startsWith("|H|"))
 
   def headerMatches(header: String): Boolean = header == Schemas.expectedHeader
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** P2 wired into the load path: probe one layout for an embedded `|H|`
-    * header row and WARN (only — never fail) on mismatch, reproducing
+  /** P2 check of one parsed row: WARN (only — never fail) when it holds an
+    * embedded `|H|` header that does not match, reproducing
     * `data_validator.py:227-230` + `:37-50`. Returns Some(matched) when an
-    * embedded header exists, None otherwise; the 1-row probe is bounded
-    * driver work per layout, not per file. */
-  def checkEmbeddedHeader(df: DataFrame): Option[Boolean] =
-    extractEmbeddedHeader(df).map { h =>
+    * embedded header exists, None otherwise. */
+  def checkEmbeddedHeaderRow(values: Seq[String]): Option[Boolean] =
+    embeddedHeaderIn(values).map { h =>
       val ok = headerMatches(h)
       if (!ok) log.warn(
         s"Header does not match expected format.\nExpected: ${Schemas.expectedHeader}\nReceived: $h")
       ok
     }
 
+  /** The values of a frame's FIRST ROW ONLY: bounded work, where a
+    * filter-then-limit over the whole frame would scan every row of a layout
+    * that has no embedded header before concluding so. Caveat (documented,
+    * matching the reference's own file-order assumption): `limit(1)` without
+    * an ordering returns the first row in file order by convention only. */
+  private def firstRowValues(df: DataFrame): Option[Seq[String]] =
+    df.limit(1).collect().headOption.map { row =>
+      (0 until row.length).map(i => if (row.isNullAt(i)) null else row.get(i).toString)
+    }
+
+  /** P2 over a frame: [[embeddedHeaderIn]] of its first row. */
+  def extractEmbeddedHeader(df: DataFrame): Option[String] =
+    firstRowValues(df).flatMap(embeddedHeaderIn)
+
+  /** P2 over a frame: [[checkEmbeddedHeaderRow]] of its first row. The load
+    * path checks a layout's first data line instead, without a job. */
+  def checkEmbeddedHeader(df: DataFrame): Option[Boolean] =
+    firstRowValues(df).flatMap(checkEmbeddedHeaderRow)
+
+  /** Reader options of every layout scan; [[headerSchema]] parses headers
+    * with the same options. */
+  private val csvReadOptions = Map("header" -> "true", "inferSchema" -> "false")
+
   /** S1/S2: read one CSV layout all-string (`inferSchema=false` reproduces
-    * the reference's string-first ingestion, `data_validator.py:141-143`). */
-  def readCsv(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .csv(paths: _*)
+    * the reference's string-first ingestion, `data_validator.py:141-143`)
+    * with the layout's [[headerSchema]], so Spark runs no header-inference
+    * job. */
+  def readCsv(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame =
+    spark.read.options(csvReadOptions).schema(schema).csv(paths: _*)
+
+  private def csvOptions(spark: SparkSession): CSVOptions =
+    new CSVOptions(csvReadOptions, true, spark.conf.get("spark.sql.session.timeZone"))
+
+  /** The all-string schema Spark infers for a CSV whose header is `header`:
+    * the line parsed with Spark's own parser settings (which also drop a
+    * leading U+FEFF byte order mark), then Spark's safe-header renames (a
+    * blank name becomes `_c<i>`; duplicates, case-insensitively unless the
+    * session is case-sensitive, become name + index). */
+  def headerSchema(spark: SparkSession, header: String): StructType = {
+    val options = csvOptions(spark)
+    val names = CSVUtils.makeSafeHeader(new CsvParser(options.asParserSettings).parseLine(header),
+      spark.conf.get("spark.sql.caseSensitive").toBoolean, options)
+    StructType(names.map(StructField(_, StringType)))
+  }
+
+  /** The first `n` non-blank lines of one file, read on the driver. Blank
+    * means empty after trim, the lines Spark's CSV reader skips, so the
+    * first is the line Spark takes as the file's header. */
+  private def firstLines(spark: SparkSession, path: String, n: Int): List[String] = {
+    val p = new Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try {
+      val reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+      Iterator.continually(reader.readLine()).takeWhile(_ != null)
+        .filter(_.trim.nonEmpty).take(n).toList
+    } finally in.close()
+  }
+
+  /** P2 for one layout, without a job: [[checkEmbeddedHeaderRow]] on the
+    * first data line of the layout's first file (sorted path), read and
+    * parsed on the driver — one open per layout. */
+  def checkLayoutHeader(spark: SparkSession, paths: Seq[String]): Option[Boolean] =
+    firstLines(spark, paths.min, 2).drop(1).headOption.flatMap { line =>
+      checkEmbeddedHeaderRow(new CsvParser(csvOptions(spark).asParserSettings).parseLine(line).toSeq)
+    }
+
+  /** Files whose first line is blank regrouped by their first non-blank
+    * line, the header Spark reads for them. A file with no such line holds
+    * no rows: it is skipped with a WARN that names it. */
+  private def regroupBlankHeaders(spark: SparkSession,
+                                  groups: Map[String, Seq[String]]): Map[String, Seq[String]] = {
+    val (blank, headed) = groups.partition(_._1.trim.isEmpty)
+    val rekeyed = blank.values.flatten.toSeq.sorted
+      .map(p => firstLines(spark, p, 1).headOption -> p)
+    val empty = rekeyed.collect { case (None, p) => p }
+    if (empty.nonEmpty)
+      log.warn(s"Skipping CSV files without a header line (no rows): ${empty.mkString(", ")}")
+    rekeyed.collect { case (Some(h), p) => h -> p }.foldLeft(headed) {
+      case (acc, (h, p)) => acc.updated(h, acc.getOrElse(h, Seq.empty) :+ p)
+    }
+  }
 
   /** Group CSV paths by header line so each distinct layout becomes ONE scan.
     * The one-line-per-file header probe runs as a tiny Spark job over the
@@ -156,13 +234,18 @@ object Harmonizer {
 
   /** U1: harmonize each layout group and union by name (`pd.concat` aligns by
     * column name, `main.py:60`); fixed canonical schema makes the union a
-    * zero-copy plan concat. */
+    * zero-copy plan concat.
+    *
+    * Runs no Spark job: each layout is read with the [[headerSchema]] of its
+    * header line and gets the warn-only [[checkLayoutHeader]]. Files without
+    * a header line hold no rows and are skipped. */
   def loadGrouped(spark: SparkSession, groups: Map[String, Seq[String]]): DataFrame = {
     require(groups.nonEmpty, "no CSV files found to load")
-    val frames = groups.toSeq.sortBy(_._1).map { case (_, paths) =>
-      val raw = readCsv(spark, paths)
-      checkEmbeddedHeader(raw) // P2: warn-only embedded-header layout check
-      harmonizeWith(raw, Some(countryFromFileName))
+    val layouts = regroupBlankHeaders(spark, groups)
+    require(layouts.nonEmpty, "no CSV file with a header line found to load")
+    val frames = layouts.toSeq.sortBy(_._1).map { case (header, paths) =>
+      checkLayoutHeader(spark, paths)
+      harmonizeWith(readCsv(spark, paths, headerSchema(spark, header)), Some(countryFromFileName))
     }
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }

@@ -1,6 +1,6 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.schema.Schemas
 import graft.functions.GraftFunctions
@@ -25,6 +25,31 @@ import graft.functions.GraftFunctions
 object Validator {
 
   private def p(c: String) = s"__p_$c"
+
+  /** P6 (`data_validator.py:267-281`) given each date column's parsed value:
+    * mandatory dates present, mandatory strings present and non-empty. */
+  private def isValid(dateValue: String => Column): Column =
+    Schemas.mandatoryDateColumns.map(c => dateValue(c).isNotNull).reduce(_ && _) &&
+      Seq("Customer_Name", "Customer_Id")
+        .map(c => col(c).isNotNull && col(c) =!= "")
+        .reduce(_ && _)
+
+  /** A quarantine reason: the error message up to its value-specific tail
+    * ("Invalid month: 13 (...)" → "Invalid month"; every "Unable to parse
+    * date '<value>': ..." → "Unable to parse date"). */
+  def reasonOf(error: Column): Column =
+    when(error.startsWith("Unable to parse date"), lit("Unable to parse date"))
+      .otherwise(substring_index(error, ":", 1))
+
+  /** What one validation produced: valid rows per country (a null country
+    * is keyed "") and quarantine rows per [[reasonOf reason]]. */
+  final case class Counts(validByCountry: Map[String, Long],
+                          quarantinedByReason: Map[String, Long]) {
+    def valid: Long = validByCountry.values.sum
+    def quarantined: Long = quarantinedByReason.values.sum
+    /** The non-empty countries with valid rows, sorted. */
+    def countries: Seq[String] = validByCountry.keys.filter(_.nonEmpty).toSeq.sorted
+  }
 
   final case class Validated(annotated: DataFrame) {
 
@@ -69,14 +94,23 @@ object Validator {
 
     /** P6 (`data_validator.py:267-281`): mandatory dates present, mandatory
       * strings present and non-empty. */
-    def validRecords: DataFrame = {
-      val pred = Schemas.mandatoryDateColumns
-        .map(c => col(c).isNotNull)
-        .reduce(_ && _) &&
-        Seq("Customer_Name", "Customer_Id")
-          .map(c => col(c).isNotNull && col(c) =!= "")
-          .reduce(_ && _)
-      clean.filter(pred)
+    def validRecords: DataFrame = clean.filter(isValid(col))
+
+    /** [[Counts]] of [[validRecords]] and [[quarantine]] in one grouped
+      * aggregate over [[annotated]] (persisted, this query fills the cache).
+      * A row counts once per failed mandatory date column, as the quarantine
+      * union counts it. */
+    def counts: Counts = {
+      val validCountry = when(isValid(c => col(p(c)).getField("value")),
+        coalesce(col("Country"), lit("")))
+      val reasons = Schemas.mandatoryDateColumns.map(c => reasonOf(col(p(c)).getField("error")))
+      val rows = annotated.groupBy(validCountry +: reasons: _*).count().collect()
+      def sumBy(pairs: Seq[(String, Long)]) = pairs.groupMapReduce(_._1)(_._2)(_ + _)
+      def n(r: Row) = r.getLong(reasons.size + 1)
+      Counts(
+        sumBy(rows.toSeq.flatMap(r => Option(r.getString(0)).map(_ -> n(r)))),
+        sumBy(rows.toSeq.flatMap(r =>
+          reasons.indices.flatMap(i => Option(r.getString(i + 1))).map(_ -> n(r)))))
     }
   }
 
@@ -96,25 +130,29 @@ object Validator {
     * (the reference skips empty too). Returns the written path, if any.
     * `timestamp` is injectable for deterministic tests. */
   def saveInvalidRecords(quarantine: DataFrame, dir: String,
-                         timestamp: Option[String] = None): Option[String] = {
+                         timestamp: Option[String] = None): Option[String] =
     if (quarantine.isEmpty) None
-    else {
-      val ts = timestamp.getOrElse(java.time.LocalDateTime.now.format(
-        java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")))
-      // two runs inside the same second must both land (accumulate-per-run
-      // semantics) — suffix a sequence number instead of failing the write.
-      // Resolve the filesystem FROM the target path: FileSystem.get(conf)
-      // returns the default FS, whose exists-probe is wrong when `dir` is on
-      // s3a:// or hdfs:// while the default is file:// (or vice versa).
-      val base = s"$dir/invalid_records_$ts"
-      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(
-        quarantine.sparkSession.sparkContext.hadoopConfiguration)
-      val path = Iterator.from(0)
-        .map(i => if (i == 0) base else s"${base}_$i")
-        .find(p => !fs.exists(new org.apache.hadoop.fs.Path(p)))
-        .get
-      quarantine.write.mode("errorifexists").option("header", "true").csv(path)
-      Some(path)
-    }
+    else Some(writeInvalidRecords(quarantine, dir, timestamp))
+
+  /** The write half of [[saveInvalidRecords]], for a caller that already
+    * knows the quarantine is non-empty. Returns the written path. */
+  def writeInvalidRecords(quarantine: DataFrame, dir: String,
+                          timestamp: Option[String] = None): String = {
+    val ts = timestamp.getOrElse(java.time.LocalDateTime.now.format(
+      java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")))
+    // two runs inside the same second must both land (accumulate-per-run
+    // semantics) — suffix a sequence number instead of failing the write.
+    // Resolve the filesystem FROM the target path: FileSystem.get(conf)
+    // returns the default FS, whose exists-probe is wrong when `dir` is on
+    // s3a:// or hdfs:// while the default is file:// (or vice versa).
+    val base = s"$dir/invalid_records_$ts"
+    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(
+      quarantine.sparkSession.sparkContext.hadoopConfiguration)
+    val path = Iterator.from(0)
+      .map(i => if (i == 0) base else s"${base}_$i")
+      .find(p => !fs.exists(new org.apache.hadoop.fs.Path(p)))
+      .get
+    quarantine.write.mode("errorifexists").option("header", "true").csv(path)
+    path
   }
 }

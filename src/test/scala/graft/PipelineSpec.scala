@@ -233,6 +233,79 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("run report: quarantined rows per reason, valid rows per country") {
+    assert(result.quarantinedByReason == Map("Invalid month" -> 1L))
+    assert(result.validByCountry == Map("AUS" -> 2L, "IND" -> 3L, "USA" -> 3L))
+  }
+
+  /** A fresh input directory holding the given golden files and extra files. */
+  private def inputDir(golden: Seq[String], extra: (String, String)*): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-in")
+    val src = new java.io.File(dataDir).listFiles().filter(f => golden.exists(f.getName.startsWith))
+    src.foreach(f => java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    extra.foreach { case (name, text) =>
+      java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+    }
+    dir.toString
+  }
+
+  private def runAt(in: String): Pipeline.Result = Pipeline.run(spark, in,
+    java.nio.file.Files.createTempDirectory("graft-out").toString,
+    asOf = lit("2026-08-12").cast("date"))
+
+  test("numeric-looking country from a file name stays a string") {
+    val in = inputDir(Nil, "007 x.csv" -> Seq(
+      "ID,Name,DOB,VaccinationType,VaccinationDate",
+      "1,Ann,01/02/1990,ABC,04/05/2022", "2,Bo,01/02/1991,ABC,04/06/2022",
+      "3,Cy,01/02/1992,XYZ,04/07/2022").mkString("", "\n", "\n"))
+    val r = runAt(in)
+    assert(r.countries == Seq("007"))
+    assert(r.views == Seq("VIEW_007"))
+    assert(spark.table("VIEW_007").count() == 3)
+    assert(r.warehouse.schema("COUNTRY").dataType.typeName == "string")
+  }
+
+  test("a 0-byte CSV is skipped; only header-less files fail loudly") {
+    val r = runAt(inputDir(Seq("AUS", "IND", "USA"), "ZZZ empty.csv" -> ""))
+    assert(r.validByCountry == Map("AUS" -> 2L, "IND" -> 3L, "USA" -> 3L))
+    assert(r.quarantineCount == 1)
+    val e = intercept[IllegalArgumentException](runAt(inputDir(Nil, "ZZZ.csv" -> "")))
+    assert(e.getMessage.contains("no CSV file with a header line"))
+  }
+
+  test("a CSV whose first line is blank takes its first non-blank line as header") {
+    val r = runAt(inputDir(Seq("AUS"), "NZL late.csv" ->
+      "\n  \nID,Name,DOB,VaccinationType,VaccinationDate\n9,Tui,01/02/1990,ABC,04/05/2022\n"))
+    assert(r.validByCountry == Map("AUS" -> 2L, "NZL" -> 1L))
+  }
+
+  test("job budget: at most 6 jobs, the same for one layout as for three") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    def jobsOf(in: String): Int = {
+      val group = s"budget-${java.util.UUID.randomUUID()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, "job budget")
+        try runAt(in) finally sc.clearJobGroup()
+        org.apache.spark.graft.ListenerFlush.flush(sc)
+        jobs.get()
+      } finally sc.removeSparkListener(listener)
+    }
+    // the AUS file alone is one layout and, like the golden set, has a
+    // quarantined row, so both runs write a quarantine CSV
+    val threeLayouts = jobsOf(dataDir)
+    val oneLayout = jobsOf(inputDir(Seq("AUS")))
+    assert(threeLayouts == oneLayout)
+    assert(threeLayouts <= 6, s"$threeLayouts jobs")
+  }
+
   test("warehouse name normalization uppercases and strips") {
     import spark.implicits._
     val df = Seq((1, 2)).toDF("some col", "other-\"col\"")

@@ -105,4 +105,57 @@ class HarmonizerProbeSpec extends SparkSpec {
     val groups = Harmonizer.groupByLayout(spark, dir.toAbsolutePath.toString)
     assert(groups.keySet === Set(header))
   }
+
+  test("derived layout schema equals the schema Spark infers from the header") {
+    val headers = Seq(
+      "\"a,b\",c,\"d, e\"",                // quoted names containing commas
+      "\"q\"\"z\",id",                        // an escaped quote
+      "Name,name,NAME,id",                  // case-only duplicates
+      "id,id,x,id",                         // exact duplicates
+      ",id,,x",                             // blank names
+      "ID,Namé,Größe,名前",                  // non-ASCII names
+      "\uFEFFID,Name,DOB")                  // a byte order mark
+    val dir = Files.createTempDirectory("probe_schema")
+    def check(header: String, i: Int): Unit = {
+      val name = s"h$i-${System.nanoTime()}.csv"
+      writeCsv(dir, name, header, "1,2,3,4")
+      val path = dir.resolve(name).toString
+      val inferred = spark.read.option("header", "true").csv(path).schema
+      assert(Harmonizer.headerSchema(spark, header) === inferred, header)
+    }
+    headers.zipWithIndex.foreach { case (h, i) => check(h, i) }
+    val prev = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try check("Name,name,NAME,id", headers.size)
+    finally spark.conf.set("spark.sql.caseSensitive", prev)
+  }
+
+  test("a BOM-prefixed header maps its first column") {
+    val dir = Files.createTempDirectory("probe_bom")
+    writeCsv(dir, "usa.csv", "\uFEFFID,Name,VaccinationType,VaccinationDate", "7,a,covid,01012021")
+    val df = Harmonizer.loadSourceData(spark, dir.toAbsolutePath.toString)
+    assert(df.select("Customer_Id", "Customer_Name").collect().map(r => (r.getString(0), r.getString(1)))
+      .toSeq === Seq(("7", "a")))
+  }
+
+  test("layout plan: one driver open per layout, the first data line checked for |H|") {
+    val dir = Files.createTempDirectory("probe_plan")
+    val expected = graft.schema.Schemas.expectedHeader
+    writeCsv(dir, "a1.csv", "ID,Name", s"\"$expected\",x", "1,a")
+    writeCsv(dir, "a2.csv", "ID,Name", "2,b")
+    writeCsv(dir, "b1.csv", "Unique ID,Patient Name", "|H|Wrong|Layout,x", "3,c")
+    writeCsv(dir, "c1.csv", "\"Name\",ID", "", "d,4")
+    withCountingFs {
+      val groups = Harmonizer.groupByLayout(spark, countingUri(dir))
+      def check(header: String) = Harmonizer.checkLayoutHeader(spark, groups(header))
+      CountingFs.opens.set(0)
+      assert(check("ID,Name") === Some(true))
+      assert(check("Unique ID,Patient Name") === Some(false))
+      assert(check("\"Name\",ID") === None)
+      assert(CountingFs.opens.get() === 3L)
+      CountingFs.opens.set(0)
+      Harmonizer.loadGrouped(spark, groups)
+      assert(CountingFs.opens.get() === 3L, "one open per layout, no scan")
+    }
+  }
 }
