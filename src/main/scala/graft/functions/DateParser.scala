@@ -71,14 +71,6 @@ object DateParser {
 
   def validateDate(raw: String): Boolean = parseDate(raw).isRight
 
-  /** Error message for an unparseable date, or null when valid — the shape
-    * the validator needs for quarantine annotation (E2). */
-  def parseError(raw: String): String = parseDate(raw).left.toOption.orNull
-
-  /** Parsed date or null — used after parseError has routed invalid rows. */
-  def parseOrNull(raw: String): java.sql.Date =
-    parseDate(raw).toOption.map(java.sql.Date.valueOf).orNull
-
   private sealed trait CompactResult
   private case class CompactOk(d: LocalDate) extends CompactResult
   private case class CompactErr(msg: String) extends CompactResult

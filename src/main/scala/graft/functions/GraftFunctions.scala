@@ -1,15 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 /** Column-level entry points for the engine's one custom scalar function.
   *
   * Backed by the native codegen'd Catalyst expression
   * [[graft.expr.ParseDateStruct]] — one parse feeds both channels, and the
   * ingest validation projection stays inside whole-stage codegen (a Scala UDF
-  * here would split the generated stage). UDF variants remain registered for
-  * `spark.sql` string-API use.
+  * here would split the generated stage). SQL callers get
+  * `parse_date_struct` from [[graft.GraftExtensions]].
   */
 object GraftFunctions {
   import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -21,18 +20,4 @@ object GraftFunctions {
   /** Parsed date or null (validation error swallowed). Subexpression
     * elimination collapses sibling getFields over the same parse. */
   def parse_date(c: Column): Column = parse_date_struct(c).getField("value")
-
-  /** Error message or null (valid). */
-  def parse_date_err(c: Column): Column = parse_date_struct(c).getField("error")
-
-  /** SQL registration for spark.sql access. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.udf.register("parse_date_graft",
-      udf { (s: String) => DateParser.parseOrNull(s) })
-    spark.udf.register("parse_date_err_graft",
-      udf { (s: String) => DateParser.parseError(s) })
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_date_struct", exprs => graft.expr.ParseDateStruct(exprs.head),
-      "scala_udf")
-  }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Multinomial Naive Bayes text classification — the trained document
   * classifier of a pretraining-data pipeline (CCNet / LLaMA-style quality
   * and language filtering score documents with exactly this shape of model:
@@ -38,7 +40,7 @@ object Classify {
     * broadcast at score time. Call [[materialize]] before scoring many
     * batches (streaming inference) so training runs once, not per batch. */
   final case class NbModel(lp: DataFrame, prior: DataFrame) {
-    def materialize: NbModel = NbModel(lp.localCheckpoint(), prior.localCheckpoint())
+    def materialize: NbModel = NbModel(Materialize(lp), Materialize(prior))
   }
 
   /** Train add-one-smoothed multinomial NB on `train` (labelCol must be

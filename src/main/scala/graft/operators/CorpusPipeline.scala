@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** End-to-end corpus curation — the composition the individual operators
   * exist for, as one lazy chain:
   *
@@ -66,9 +68,8 @@ object CorpusPipeline {
     // Materialize the filtered+deduped set once: three consumers (pair
     // derivation, survivor join, budget input) would otherwise each rerun
     // the profile scan and dedup window.
-    val exactKept = exactStage(docs, cfg)
-      .withColumn("n_tok", col("__p.n_bpeish").cast("long"))
-      .localCheckpoint()
+    val exactKept = Materialize(exactStage(docs, cfg)
+      .withColumn("n_tok", col("__p.n_bpeish").cast("long")))
     val pairs = Dedup.ngramJaccardPairs(
       exactKept.select(col("doc_id"), col("text")), "doc_id", "text",
       n = cfg.ngram, threshold = cfg.jaccardThreshold)
@@ -126,24 +127,25 @@ object CorpusPipeline {
                         cfg: Config = Config(),
                         embIdCol: String = "vec_id",
                         embVecCol: String = "embedding"): DataFrame = {
-    val exactKept = exactStage(docs, cfg).select(col("doc_id"), col("text"))
-      .localCheckpoint() // feeds the removal's anchor AND token scans once
+    // feeds the removal's anchor AND token scans once
+    val exactKept = Materialize(
+      exactStage(docs, cfg).select(col("doc_id"), col("text")))
     val cleaned = SubstringDedup.removeRepeatedSpans(
       exactKept, "doc_id", "text", k = cfg.substringK)
-    val requal = cleaned
+    // feeds the pair derivation + the survivor join
+    val requal = Materialize(cleaned
       .withColumn("__p", TextAnalysis.profile(col("clean_text")))
       .filter(col("__p.n_tokens") >= cfg.minTokens)
       .withColumn("n_tok", col("__p.n_bpeish").cast("long"))
-      .select(col("doc_id"), col("clean_text"), col("n_tok"), col("n_removed"))
-      .localCheckpoint() // pair derivation + survivor join
+      .select(col("doc_id"), col("clean_text"), col("n_tok"), col("n_removed")))
     val pairs = Dedup.ngramJaccardPairs(
       requal.select(col("doc_id"), col("clean_text")), "doc_id", "clean_text",
       n = cfg.ngram, threshold = cfg.jaccardThreshold)
     val fuzzyKept = Dedup.nearDupSurvivors(requal, "doc_id", pairs)
     val emb = embeddings.select(col(embIdCol).as("doc_id"),
       col(embVecCol).as("__emb"))
-    val joined = fuzzyKept.join(emb, Seq("doc_id"), "left")
-      .localCheckpoint() // split into embedded/unembedded consumers
+    // split into embedded/unembedded consumers
+    val joined = Materialize(fuzzyKept.join(emb, Seq("doc_id"), "left"))
     val withE = joined.filter(col("__emb").isNotNull)
     val semPairs = Dedup.embeddingNearDupPairs(withE, "doc_id", "__emb",
       cfg.semanticThreshold, exact = cfg.semanticExact)
@@ -170,8 +172,8 @@ object CorpusPipeline {
                        mediaIdCol: String = "media_id",
                        hashCol: String = "phash",
                        maxHamming: Int = 6): DataFrame = {
-    val surv = curateV2Survivors(docs, embeddings, cfg)
-      .localCheckpoint() // feeds the pair restriction AND the CC survivor join
+    // feeds the pair restriction AND the CC survivor join
+    val surv = Materialize(curateV2Survivors(docs, embeddings, cfg))
     val hs = imageHashes
       .select(col(mediaIdCol).as("doc_id"), col(hashCol))
       .join(surv.select(col("doc_id")), Seq("doc_id"))

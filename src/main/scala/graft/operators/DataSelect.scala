@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** DSIR-style data selection (Xie, Santurkar, Ma & Liang, "Data Selection
   * for Language Models via Importance Resampling", NeurIPS 2023): score
   * every RAW document by how much more likely its hashed n-gram features
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   * B-row log-ratio table broadcasts back into the per-doc sum (the
   * unigram-LM layout); selection is orderBy+limit = TakeOrdered, never a
   * global sort materialization. The raw feature frame is materialized
-  * once (localCheckpoint) because both the raw bucket counts and the
+  * once ([[graft.Materialize]]) because both the raw bucket counts and the
   * per-doc scoring read it. */
 object DataSelect {
 
@@ -62,8 +64,8 @@ object DataSelect {
   def dsirWeights(raw: DataFrame, target: DataFrame, idCol: String,
                   textCol: String, buckets: Int = 4096): DataFrame =
     weightsFromFeatures(
-      featureBuckets(raw, idCol, textCol, buckets)
-        .localCheckpoint(), // read twice: raw bucket counts + scoring
+      // read twice: raw bucket counts + scoring
+      Materialize(featureBuckets(raw, idCol, textCol, buckets)),
       raw.select(col(idCol)), target, idCol, textCol, buckets)
 
   /** Weight derivation from an already-extracted raw feature frame

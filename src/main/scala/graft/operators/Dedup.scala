@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Deduplication operators for training-data pipelines — beyond-reference
   * extensions (SURVEY.md §7.1.9).
   *
@@ -332,16 +334,15 @@ object Dedup {
     * Jaccard verification, so signature collisions between non-duplicates
     * still get filtered by the true jaccard.
     *
-    * The signature frame is materialized once (eager localCheckpoint): it
+    * The signature frame is materialized once ([[graft.Materialize]]): it
     * feeds the band buckets, the star groups, and both verify-join sides —
     * without it the O(shingles × k) signature UDF re-runs per subtree. */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           n: Int = 3, k: Int = 64, bands: Int = 16,
                           threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
     val rows = k / bands
-    val withSig = df.select(col(idCol), shingles(col(textCol), n).as("sh"))
-      .withColumn("sig", graft.expr.MinHashExpressions.minhash_signature(col("sh"), k))
-      .localCheckpoint()
+    val withSig = Materialize(df.select(col(idCol), shingles(col(textCol), n).as("sh"))
+      .withColumn("sig", graft.expr.MinHashExpressions.minhash_signature(col("sh"), k)))
     val bucketCands = candidatePairs(
       bandBuckets(withSig, "sig", idCol, bands, rows), idCol, maxBucket)
     val cands = bucketCands.union(starPairs(withSig, "sig", idCol)).distinct()
@@ -457,15 +458,14 @@ object Dedup {
   // codegen expression instead of a per-call hash-set `array_intersect`.
   // Exactness is modulo 64-bit hash collisions (~|shingles|^2 / 2^64;
   // the brute-force-equivalence spec would catch one on the fixtures).
-  // Materialized once (eager localCheckpoint): the frame feeds the posting
+  // Materialized once ([[graft.Materialize]]): the frame feeds the posting
   // list AND both sides of the verify join — without it the most expensive
   // per-row work (shingle UDF, hashing, sort) runs three times.
   private def hashedShingleSets(df: DataFrame, idCol: String, textCol: String,
                                 n: Int): DataFrame =
-    df.select(col(idCol).as("id"), shingles(col(textCol), n).as("shs"))
+    Materialize(df.select(col(idCol).as("id"), shingles(col(textCol), n).as("shs"))
       .select(col("id"),
-        sort_array(array_distinct(transform(col("shs"), s => xxhash64(s)))).as("sh"))
-      .localCheckpoint()
+        sort_array(array_distinct(transform(col("shs"), s => xxhash64(s)))).as("sh")))
 
   /** Per-doc PREFIX posting list under the global (doc-frequency ASC,
     * shingle ASC) order — the first `|sh| - ceil(t*|sh|) + 1` shingles.
@@ -598,7 +598,7 @@ object Dedup {
     // both verify sides) read it, and a bare union of cached slices costs
     // measurably more than one compact frame (measured +2.5 s on
     // q_stream_curate at sf0.1 without this)
-    val withSh = corpusSh.unionByName(deltaSh).localCheckpoint()
+    val withSh = Materialize(corpusSh.unionByName(deltaSh))
     val prefix = prefixPostings(withSh, threshold)
     val deltaIds = deltaSh.select(col("id")).distinct()
     val deltaPrefix = prefix.join(deltaIds, Seq("id"), "left_semi")
@@ -768,11 +768,10 @@ object Dedup {
     * without a change-count join (decimal(38,0): id sums can exceed Long
     * at corpus scale); if the cap is somehow hit without that certificate,
     * the operator FAILS rather than returning partial components. Each
-    * round's frame is an eager localCheckpoint — the plan references the
-    * previous round twice, so without lineage truncation analysis cost
-    * doubles per round; superseded checkpoint RDDs are released by the
-    * ContextCleaner once the frame reference drops (use reliable
-    * `checkpoint()` on multi-node clusters for fault tolerance).
+    * round's frame is eagerly materialized ([[graft.Materialize]]) — the
+    * plan references the previous round twice, so without lineage
+    * truncation analysis cost doubles per round — and each superseded
+    * round is released.
     *
     * Adaptive: when the edge list is driver-bounded-small
     * (≤ `maxDriverEdges`), a collected union-find replaces the loop — same
@@ -796,42 +795,14 @@ object Dedup {
                           maxDriverEdges: Long = 1L << 20): DataFrame = {
     // Materialize the pair list ONCE before symmetrizing: the union reads
     // it twice, and the upstream pair derivation (an LSH or set-similarity
-    // join) is far too expensive to run once per direction. EAGER CHECKPOINT,
-    // not persist(): a cached subtree is compiled without adaptive
-    // execution (AQE leaves InMemoryRelation plans alone), which costs the
-    // expensive upstream join its runtime broadcast/skew rewrites —
-    // measured 3x on the n-gram pair pipeline at sf0.1. The checkpoint
-    // materializes the SAME single execution (with AQE) and every later
-    // read (count, collect, per-round joins) scans the materialized blocks.
-    val sc0 = nodes.sparkSession.sparkContext
-    val reliableCkpt = sc0.getCheckpointDir.isDefined
-    def materialized(df: DataFrame): DataFrame =
-      if (reliableCkpt) df.checkpoint() else df.localCheckpoint()
-    // best-effort: resolve a checkpointed frame's backing file for cleanup
-    // (reliable checkpoint files are not reference-tracked by default —
-    // spark.cleaner.referenceTracking.cleanCheckpoints is off — so dead
-    // ones are deleted explicitly; local checkpoint blocks are weak-ref
-    // reclaimed by the ContextCleaner and need no help)
-    def ckptFile(df: DataFrame): Option[String] =
-      scala.util.Try {
-        df.queryExecution.optimizedPlan match {
-          case r: org.apache.spark.sql.execution.LogicalRDD =>
-            r.rdd.getCheckpointFile
-          case _ => None
-        }
-      }.toOption.flatten
-    def deleteCkpt(path: String): Unit =
-      scala.util.Try {
-        val pth = new org.apache.hadoop.fs.Path(path)
-        pth.getFileSystem(sc0.hadoopConfiguration).delete(pth, true)
-      }
-    val p = materialized(pairs.select(col("idA"), col("idB")))
-    def dropPairCkpt(): Unit = if (reliableCkpt) ckptFile(p).foreach(deleteCkpt)
+    // join) is far too expensive to run once per direction; every later
+    // read (collect, per-round joins) scans the materialized blocks.
+    val p = Materialize(pairs.select(col("idA"), col("idB")))
     // Failure-path cleanup (the persist-era `finally unpersist` equivalent):
     // if anything below throws — a mid-loop job failure, the convergence
     // require — the pair checkpoint and the newest round's label checkpoint
-    // are dead weight nobody will ever read; reliable files are not
-    // reference-tracked, so delete them before rethrowing.
+    // are dead weight nobody will ever read, so release them before
+    // rethrowing.
     var curLabels: DataFrame = null
     try {
     // ADAPTIVE fast path: near-dup pair graphs are typically minuscule
@@ -861,7 +832,7 @@ object Dedup {
     // No edges ⇒ every node is its own singleton component — skip the
     // loop (an empty label frame would also null the convergence sum).
     if (head != null && head.isEmpty) {
-      dropPairCkpt()
+      Materialize.release(p)
       return nodes.select(col(idCol).as("id")).distinct()
         .withColumn("component", col("id"))
     }
@@ -886,7 +857,7 @@ object Dedup {
       val spark = nodes.sparkSession
       import spark.implicits._
       val labelMap = mapping.toSeq.toDF("id", "component")
-      dropPairCkpt() // labelMap is driver data — p is dead from here
+      Materialize.release(p) // labelMap is driver data — p is dead from here
       // Same row-set contract as the iterative path: ids appearing only in
       // `pairs` (not in `nodes`) still get a labeled row — union them in
       // before the mapping join so the output is identical on either side
@@ -899,19 +870,9 @@ object Dedup {
     }
     val edges = p.select(col("idA").as("src"), col("idB").as("dst"))
       .union(p.select(col("idB").as("src"), col("idA").as("dst")))
-    // Lineage truncation per round: RELIABLE checkpoint when the session
-    // has a checkpoint dir (multi-node: survives executor loss — local
-    // checkpoint blocks do not, and losing one aborts the whole iteration),
-    // executor-local otherwise (single-node/test: no HDFS round-trip).
-    // Reliable checkpoint FILES are not reference-tracked like local
-    // checkpoint blocks (Spark deletes them only under
-    // spark.cleaner.referenceTracking.cleanCheckpoints=true, default off),
-    // so each round deletes its predecessor's files explicitly once the
-    // new round is materialized — only the FINAL round's files outlive the
-    // call (the returned frame reads them lazily; enable the conf above to
-    // reclaim those at GC, or they last until the app exits).
-    val reliable = reliableCkpt
-    def truncated(df: DataFrame): DataFrame = materialized(df)
+    // Lineage truncation per round: each round releases its predecessor
+    // once the new round is materialized, so only the FINAL round's
+    // checkpoint outlives the call (the returned frame reads it lazily).
     // Iterate ONLY over the edge-induced subgraph: a node with no incident
     // edge is its own singleton component by definition and never changes
     // label, so it has no business inside the loop. At corpus scale the
@@ -919,7 +880,7 @@ object Dedup {
     // runs on ~2·|pairs| rows instead of |corpus| rows, and the full node
     // set joins back in ONCE at the end as label = id.
     val allNodes = nodes.select(col(idCol).as("id")).distinct()
-    var labels = truncated(
+    var labels = Materialize(
       p.select(col("idA").as("id")).union(p.select(col("idB").as("id")))
         .distinct().withColumn("component", col("id")))
     curLabels = labels
@@ -955,15 +916,15 @@ object Dedup {
       // ONE eager checkpoint per round: truncates lineage (the plan
       // references the round's frame twice, so analysis cost would double
       // per round) and makes the convergence-sum action a cheap scan
-      val superseded = if (reliable) ckptFile(labels) else None
-      val next = truncated(jumped.select("id", "component").union(msgs)
+      val prev = labels
+      val next = Materialize(jumped.select("id", "component").union(msgs)
         .groupBy("id").agg(min("component").as("component")))
       val s = labelSum(next)
       labels = next
       curLabels = next
       // `next` is materialized (checkpoint is eager) — the previous
-      // round's reliable checkpoint files are now dead weight
-      superseded.foreach(deleteCkpt)
+      // round is now dead weight
+      Materialize.release(prev)
       converged = prevSum != null && sameSum(s, prevSum)
       prevSum = s
       iter += 1
@@ -971,7 +932,7 @@ object Dedup {
     require(converged,
       s"connectedComponents did not converge within $maxIter rounds — " +
         "component structure would be incomplete; raise maxIter")
-    dropPairCkpt() // final labels are checkpointed — the edge list is dead
+    Materialize.release(p) // final labels are checkpointed — the edge list is dead
     // Singletons rejoin here: every node not touched by an edge keeps its
     // own id as component. Anti-join on the (small) touched-label set.
     labels.union(
@@ -979,9 +940,8 @@ object Dedup {
         .withColumn("component", col("id")))
     } catch {
       case t: Throwable =>
-        dropPairCkpt()
-        if (reliableCkpt)
-          Option(curLabels).flatMap(ckptFile).foreach(deleteCkpt)
+        Materialize.release(p)
+        Option(curLabels).foreach(Materialize.release)
         throw t
     }
   }
@@ -1088,9 +1048,10 @@ object Dedup {
       if (targetCell <= 0) k
       else math.max(k, ((df.count() + targetCell - 1) / targetCell).toInt)
     val model = IvfIndex.train(df, idCol, vecCol, k = kEff)
-    val base = df.select(col(idCol), col(vecCol).cast("array<float>").as("v"))
-      .withColumn("norm", Similarity.l2norm(col("v")))
-      .localCheckpoint() // feeds probes and both verify sides
+    // feeds probes and both verify sides
+    val base = Materialize(
+      df.select(col(idCol), col(vecCol).cast("array<float>").as("v"))
+        .withColumn("norm", Similarity.l2norm(col("v"))))
     val probed = IvfIndex.withProbes(base, "v", model, nprobe, out = "cell")
       .select(col("cell"), col(idCol))
     val cands = probed.select(col("cell"), col(idCol).as("idA"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Distributed graph ranking over an edge list — the link-analysis half of
   * a web-scale corpus pipeline (rank pages before quality filtering; weight
   * sources in the mixing stage by their link authority).
@@ -50,10 +52,6 @@ object Graph {
                checkpointEvery: Int = 5,
                edgesDeduped: Boolean = false): DataFrame = {
     require(iters >= 1 && damp >= 0 && damp <= 100 && base > 0)
-    val spark = edges.sparkSession
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.isDefined
-    def materialized(df: DataFrame): DataFrame =
-      if (reliableCkpt) df.checkpoint() else df.localCheckpoint()
 
     // Edge list with the source's out-degree attached ONCE — reused by every
     // iteration, so materialize it (the distinct + degree agg should run one
@@ -62,11 +60,12 @@ object Graph {
                             col(dstCol).cast("long").as("dst"))
     val e = if (edgesDeduped) eRaw else eRaw.distinct()
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outd"))
-    val eDeg = materialized(e.join(deg, "src"))
-    val nodes = materialized(eDeg.select(col("src").as("node")).distinct())
+    val eDeg = Materialize(e.join(deg, "src"))
+    val nodes = Materialize(eDeg.select(col("src").as("node")).distinct())
 
     val teleport = lit(base * (100L - damp) / 100L)
     var ranks = nodes.withColumn("pr", lit(base))
+    var cut = ranks // the last materialized round (released once superseded)
     for (i <- 1 to iters) {
       val contrib = eDeg.join(ranks, eDeg("src") === ranks("node"))
         .select(col("dst"), expr("pr div outd").as("c"))
@@ -75,8 +74,11 @@ object Graph {
       ranks = nodes.join(contrib, nodes("node") === contrib("dst"), "left")
         .select(col("node"),
           (teleport + expr(s"($damp * coalesce(s, 0L)) div 100")).as("pr"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        ranks = materialized(ranks)
+      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
+        ranks = Materialize(ranks)
+        Materialize.release(cut)
+        cut = ranks
+      }
     }
     ranks
   }
@@ -177,9 +179,8 @@ object Graph {
       when(uFirst, col("v")).otherwise(col("u")).as("dst"))
     // one adjacency pass feeds the edge re-derivation AND both join
     // sides — eagerly materialized so orientation runs once, not thrice
-    val adj = oriented.groupBy(col("src"))
-      .agg(collect_list(col("dst")).as("ns"))
-      .localCheckpoint()
+    val adj = Materialize(oriented.groupBy(col("src"))
+      .agg(collect_list(col("dst")).as("ns")))
     val edges = adj.select(col("src"), explode(col("ns")).as("dst"))
     edges
       .join(adj.select(col("src").as("__au"), col("ns").as("__nu")),
@@ -303,22 +304,19 @@ object Graph {
                        iters: Int = 3, checkpointEvery: Int = 5,
                        edgesSymmetricDeduped: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.isDefined
-    def materialized(df: DataFrame): DataFrame =
-      if (reliableCkpt) df.checkpoint() else df.localCheckpoint()
 
     val adj = if (edgesSymmetricDeduped)
       edges.select(col(srcCol).cast("long").as("a"),
                    col(dstCol).cast("long").as("b"))
     else {
       val und = canonicalUndirected(edges, srcCol, dstCol)
-      materialized(
+      Materialize(
         und.select(col("u").as("a"), col("v").as("b"))
           .unionAll(und.select(col("v").as("a"), col("u").as("b"))))
     }
     var labels = adj.select(col("a").as("node")).distinct()
       .withColumn("lab", col("node"))
+    var cut = labels // the last materialized round (released once superseded)
     for (i <- 1 to iters) {
       val counts = adj.join(labels, adj("b") === labels("node"))
         .groupBy(adj("a"), col("lab")).agg(count(lit(1)).as("cnt"))
@@ -326,8 +324,11 @@ object Graph {
         .groupBy(col("a"))
         .agg(max(struct(col("cnt"), (-col("lab")).as("nl"))).as("m"))
         .select(col("a").as("node"), (-col("m.nl")).as("lab"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        labels = materialized(labels)
+      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
+        labels = Materialize(labels)
+        Materialize.release(cut)
+        cut = labels
+      }
     }
     labels
   }
@@ -365,15 +366,11 @@ object Graph {
                    sources: DataFrame, sourceCol: String,
                    maxHops: Int, edgesDeduped: Boolean = false): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val spark = edges.sparkSession
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.isDefined
-    def materialized(df: DataFrame): DataFrame =
-      if (reliableCkpt) df.checkpoint() else df.localCheckpoint()
 
     val eRaw = edges.select(col(srcCol).cast("long").as("src"),
                             col(dstCol).cast("long").as("dst"))
-    val e = if (edgesDeduped) eRaw else materialized(eRaw.distinct())
-    var dist = materialized(
+    val e = if (edgesDeduped) eRaw else Materialize(eRaw.distinct())
+    var dist = Materialize(
       sources.select(col(sourceCol).cast("long").as("node")).distinct()
         .withColumn("dist", lit(0)))
     var frontier = dist
@@ -384,13 +381,16 @@ object Graph {
         .select(e("dst").as("node"), lit(h).as("dist"))
       // relax: a node reached before keeps its smaller distance, so the
       // post-min rows AT h are exactly the first-time-reached frontier
-      dist = materialized(
+      val prev = dist
+      dist = Materialize(
         dist.unionAll(next).groupBy(col("node"))
           .agg(min(col("dist")).as("dist")))
+      Materialize.release(prev)
       frontier = dist.filter(col("dist") === h)
       saturated = frontier.isEmpty
       h += 1
     }
+    if (!edgesDeduped) Materialize.release(e) // the result no longer reads it
     dist
   }
 
@@ -433,19 +433,15 @@ object Graph {
                         // GraphSpec flag-equality test.
                         edgesPreAggregated: Boolean = false): DataFrame = {
     require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
-    val spark = edges.sparkSession
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.isDefined
-    def materialized(df: DataFrame): DataFrame =
-      if (reliableCkpt) df.checkpoint() else df.localCheckpoint()
 
     val eBase = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
       col(weightCol).cast("long").as("w"))
     val e =
       if (edgesPreAggregated) eBase
-      else materialized(
+      else Materialize(
         eBase.groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
-    var dist = materialized(
+    var dist = Materialize(
       sources.select(col(sourceCol).cast("long").as("node")).distinct()
         .withColumn("dist", lit(0L)))
     var changed = dist
@@ -454,18 +450,25 @@ object Graph {
     while (r <= maxRounds && !converged) {
       val cand = changed.join(e, changed("node") === e("src"))
         .select(e("dst").as("node"), (changed("dist") + e("w")).as("dist"))
-      val relaxed = materialized(
+      val relaxed = Materialize(
         dist.unionAll(cand).groupBy(col("node"))
           .agg(min(col("dist")).as("dist")))
-      changed = materialized(
+      val prevChanged = changed
+      changed = Materialize(
         relaxed.join(dist.select(col("node"), col("dist").as("__old")),
             Seq("node"), "left")
           .filter(col("__old").isNull || col("dist") < col("__old"))
           .select(col("node"), col("dist")))
+      Materialize.release(dist)
+      Materialize.release(prevChanged)
       dist = relaxed
       converged = changed.isEmpty
       r += 1
     }
+    // the result reads neither the last changed-set (unless no round ran,
+    // when it IS the result) nor the edge frame
+    if (changed ne dist) Materialize.release(changed)
+    if (!edgesPreAggregated) Materialize.release(e)
     dist
   }
 
@@ -491,16 +494,13 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 200, checkpointEvery: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = edges.sparkSession
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.isDefined
-    def materialized(df: DataFrame): DataFrame =
-      if (reliableCkpt) df.checkpoint() else df.localCheckpoint()
 
     val und = canonicalUndirected(edges, srcCol, dstCol)
     // symmetric adjacency among currently-alive nodes
-    var adj = materialized(
+    var adj = Materialize(
       und.select(col("u").as("a"), col("v").as("b"))
         .unionAll(und.select(col("v").as("a"), col("u").as("b"))))
+    var cut = adj // the last materialized adjacency (released once superseded)
     var removed: DataFrame = null
     var round = 0
     var done = false
@@ -517,17 +517,20 @@ object Graph {
       val nFell = falls.count()
       if (nFell == 0L) done = true
       else {
+        val prevRemoved = removed
         removed =
-          if (removed == null) materialized(falls)
-          else materialized(removed.unionAll(falls))
+          if (removed == null) Materialize(falls)
+          else Materialize(removed.unionAll(falls))
+        Option(prevRemoved).foreach(Materialize.release)
         val next = adj
           .join(surviving, Seq("a"), "left_semi")
           .join(surviving.select(col("a").as("b")), Seq("b"), "left_semi")
           .select(col("a"), col("b"))
-        adj =
-          if (checkpointEvery > 0 && (round + 1) % checkpointEvery == 0)
-            materialized(next)
-          else next
+        if (checkpointEvery > 0 && (round + 1) % checkpointEvery == 0) {
+          adj = Materialize(next)
+          Materialize.release(cut)
+          cut = adj
+        } else adj = next
         round += 1
       }
     }
@@ -609,11 +612,7 @@ object Graph {
   def triangleEstimateViolations(edges: DataFrame, srcCol: String,
                                  dstCol: String, pPct: Int = 50): DataFrame = {
     require(pPct > 0 && pPct <= 100, s"pPct must be in (0,100], got $pPct")
-    val spark = edges.sparkSession
-    val reliableCkpt = spark.sparkContext.getCheckpointDir.isDefined
-    def materialized(df: DataFrame): DataFrame =
-      if (reliableCkpt) df.checkpoint() else df.localCheckpoint()
-    val tris = materialized(
+    val tris = Materialize(
       triangleRowsOf(canonicalUndirected(edges, srcCol, dstCol)))
     // support(e) per canonical undirected edge of each triangle
     val triEdges = tris.select(explode(array(

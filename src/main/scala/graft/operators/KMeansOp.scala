@@ -5,6 +5,8 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Distributed Lloyd k-means over an embedding column — the first-class
   * clustering operator (corpus topic cells, SemDeDup-style bucketing, IVF
   * coarse quantizers all sit on this primitive; [[IvfIndex]] trains on a
@@ -61,8 +63,8 @@ object KMeansOp {
   def lloyd(df: DataFrame, idCol: String, vecCol: String, k: Int,
             iters: Int): DataFrame = {
     require(k > 0 && iters > 0, "lloyd: k and iters must be positive")
-    val base = df.select(col(idCol), quantize(col(vecCol)).as("__vq"))
-      .localCheckpoint() // iterations and the final pass share one scan
+    // iterations and the final pass share one scan
+    val base = Materialize(df.select(col(idCol), quantize(col(vecCol)).as("__vq")))
     val initRows = base.orderBy(col(idCol)).limit(k).collect()
     require(initRows.length == k, s"lloyd: need at least k=$k rows")
     val dim = {

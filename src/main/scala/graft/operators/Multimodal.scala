@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** One media item: opaque bytes + typed metadata (the 100 TB-scale layout for
   * image/audio/video columns — binary payload, no parsing at rest). */
 case class MediaRecord(media_id: Long, media: Array[Byte], mime: String)
@@ -1277,11 +1279,10 @@ object Multimodal {
     // a few KB per signature and a no-op on any frame already planned at
     // defaultParallelism or wider.
     val sigs = graft.SparkEntry.spread(
-      frames.filter(col(loCol).isNotNull && col(hiCol).isNotNull)
+      Materialize(frames.filter(col(loCol).isNotNull && col(hiCol).isNotNull)
         .select(col(vidCol).cast("long").as("vid"),
           col(loCol).cast("long").as("lo"), col(hiCol).cast("long").as("hi"))
-        .distinct()
-        .localCheckpoint())
+        .distinct()))
     val sizes = sigs.groupBy(col("vid")).agg(count(lit(1)).as("n_sig"))
     val banded = sigs.select(col("vid"), col("lo"), col("hi"),
         explode(array((0 until 7).map(lit): _*)).as("band"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Distributed prefix sum (cumulative sum in a total order) — the building
   * block for token-budget corpus selection, quota assignment, and ordered
   * allocation generally.
@@ -63,7 +65,7 @@ object PrefixSum {
     // Materialized once: three consumers follow (partials collect, window
     // pass, caller's action), and a recomputed nondeterministic input could
     // otherwise surface buckets absent from the collected offset map.
-    val bucketed = df.withColumn("__bucket", bucket).localCheckpoint()
+    val bucketed = Materialize(df.withColumn("__bucket", bucket))
     val partials = bucketed.groupBy("__bucket").agg(sum(v).as("psum"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val maxB = if (partials.isEmpty) 0 else partials.keys.max

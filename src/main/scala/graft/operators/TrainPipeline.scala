@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Training-prep capstone — the second half of the story the dedup-ladder
   * capstone ([[CorpusPipeline.curateV2]]) starts. A curated corpus is not
   * yet trainable data; this composes the remaining stages in production
@@ -40,9 +42,9 @@ object TrainPipeline {
         "coupling shard layout to split membership")
     val curated = CorpusPipeline.curateV2(docs, embeddings, cfg)
       .select(col("doc_id"), col("n_tok"))
-    val split = Sampling.trainValTestSplit(curated, "doc_id",
-      splitWeightsPerMille, splitSeed)
-      .localCheckpoint() // consumed by the train branch AND the final join
+    // consumed by the train branch AND the final join
+    val split = Materialize(Sampling.trainValTestSplit(curated, "doc_id",
+      splitWeightsPerMille, splitSeed))
     val train = split.filter(col("split") === 0)
       .select(col("doc_id"), col("n_tok"))
     val packed = Packing.packSequences(train, "doc_id", "n_tok", capacity)

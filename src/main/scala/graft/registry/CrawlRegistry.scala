@@ -596,18 +596,16 @@ private[graft] object CrawlRegistry extends QueryRegistry {
       // `trapped` and `keyed` each feed TWO consumers (the in-query
       // nDropped gate AND the anti-join), and `cond` feeds two more (the
       // freshLeak gate AND the declared output) — without the
-      // localCheckpoints every require() recomputed its whole upstream
+      // materializations every require() recomputed its whole upstream
       // (ledger sketch, template derivation, both plan joins) a second
       // time (guide §2.4/§5: materialize a multiply-consumed subtree
       // once). The gates still fire on every run; rows are unchanged.
-      val trapped = operators.WebCuration.crawlTrapsSketch(
+      val trapped = Materialize(operators.WebCuration.crawlTrapsSketch(
           trapFixturePages(docs), "url", col("fp"), k = 4096,
           minUrls = 10, maxDiversity = 0.2)
-        .filter(col("is_trap")).select(col("template"))
-        .localCheckpoint()
-      val keyed = cands.withColumn("template",
-        operators.WebCuration.urlTemplate(col("loc")))
-        .localCheckpoint()
+        .filter(col("is_trap")).select(col("template")))
+      val keyed = Materialize(cands.withColumn("template",
+        operators.WebCuration.urlTemplate(col("loc"))))
       val nDropped = keyed.join(broadcast(trapped), Seq("template")).count()
       require(nDropped == docs.count(),
         s"trap gate dropped $nDropped, expected one calendar candidate " +
@@ -618,9 +616,8 @@ private[graft] object CrawlRegistry extends QueryRegistry {
       // (2) recrawl plan + (3) conditional revalidation
       val plan = operators.Sitemap.recrawlPlan(survivors, "domain", held,
         "url", "fetched_at")
-      val cond = operators.Sitemap.conditionalPlan(plan, held, "url",
-        "etag", "fetched_at", "fetched_at")
-        .localCheckpoint()
+      val cond = Materialize(operators.Sitemap.conditionalPlan(plan, held, "url",
+        "etag", "fetched_at", "fetched_at"))
       val freshLeak = cond
         .join(cCand.select(col("loc")).distinct(), Seq("loc")).count()
       require(freshLeak == 0,

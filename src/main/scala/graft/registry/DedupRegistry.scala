@@ -503,9 +503,8 @@ private[graft] object DedupRegistry extends QueryRegistry {
     // flips on a CC/labeling regression (round-14 fold; labels stay in
     // the API, the exact-slice sibling keeps the value oracle).
     "q_dedup_semantic" -> ((s, dir) => {
-      val res = Dedup.semanticDedup(t(s, dir, "embeddings"), "vec_id",
-          "embedding", threshold = 0.2, k = 16, nprobe = 1)
-        .localCheckpoint()
+      val res = Materialize(Dedup.semanticDedup(t(s, dir, "embeddings"),
+        "vec_id", "embedding", threshold = 0.2, k = 16, nprobe = 1))
       val w = Window.partitionBy(col("component"))
       res.withColumn("__m", min(col("vec_id")).over(w))
         .join(res.filter(col("survivor"))
@@ -537,9 +536,9 @@ private[graft] object DedupRegistry extends QueryRegistry {
     // only; oracle = empty relation. (Pair-level cosine ≥ threshold is
     // gated by q_dedup_embedding_verify on the shared candidate machinery.)
     "q_dedup_semantic_verify" -> ((s, dir) => {
-      val res = Dedup.semanticDedup(t(s, dir, "embeddings"), "vec_id",
-        "embedding", threshold = 0.2, k = 16, nprobe = 1)
-        .localCheckpoint() // three contract checks read it
+      // three contract checks read `res`
+      val res = Materialize(Dedup.semanticDedup(t(s, dir, "embeddings"),
+        "vec_id", "embedding", threshold = 0.2, k = 16, nprobe = 1))
       val badFlag = res
         .filter(col("survivor") =!= (col("component") === col("vec_id")))
         .select(col("vec_id"), col("component"), lit("flag_mismatch").as("issue"))

@@ -153,7 +153,7 @@ private[graft] object QualityRegistry extends QueryRegistry {
     // Violations only; oracle = empty relation.
     "q_reg_verify" -> ((s, dir) => {
       import s.implicits._
-      val d = regFeatures(t(s, dir, "documents")).localCheckpoint()
+      val d = Materialize(regFeatures(t(s, dir, "documents")))
       val feats = Seq("f_tokens", "f_stop")
       val fit = operators.LinearModel.fit(d, feats, "y_chars")
       // bound + the gradient computation's own quantization (n/grid),

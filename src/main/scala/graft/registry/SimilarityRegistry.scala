@@ -70,19 +70,19 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
       val docs = spread(t(s, dir, "documents"))
       // chunk keys pack (doc, chunk) into one numeric total order; the
       // fixture corpus tops out far below 4096 chunks per document
-      val emb = operators.TextExtract.slidingChunks(
+      val emb = Materialize(operators.TextExtract.slidingChunks(
           docs.select(col("doc_id"), col("text")),
           "doc_id", "text", chunkSize = 32, overlap = 8)
         .select((col("doc_id") * 4096L + col("chunk_id")).as("vec_id"),
           col("doc_id"), col("chunk_id"),
           operators.Similarity.hashedEmbedding(col("chunk_text"), 16)
-            .as("embedding"))
-        .localCheckpoint() // five consumers: exact, 2×train, index, rerank
+            .as("embedding"))) // five consumers: exact, 2×train, index, rerank
       val isQ = pmod(col("doc_id"), lit(25)) === 7 && col("chunk_id") === 0L
       val queries = emb.filter(isQ)
       val corpus = emb.filter(!isQ)
-      val exact = operators.Similarity.cosineTopK(queries, corpus, k = 10)
-        .localCheckpoint() // feeds ndcg and the recall gate
+      // feeds ndcg and the recall gate
+      val exact = Materialize(
+        operators.Similarity.cosineTopK(queries, corpus, k = 10))
       val srcs = docs.select(col("doc_id"), col("source"))
       val ranked = exact
         .withColumn("qdoc", expr("query_id div 4096"))
@@ -114,8 +114,8 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
         m = 4, k = 16)
       operators.IvfPq.saveModels(s, modelPath, ivf, pq)
       val (livf, lpq) = operators.IvfPq.loadModels(s, modelPath)
-      val ann = operators.IvfPq.topK(queries, corpus, livf, lpq, k = 10,
-        nprobe = nprobe, shortlist = shortlist).localCheckpoint()
+      val ann = Materialize(operators.IvfPq.topK(queries, corpus, livf, lpq, k = 10,
+        nprobe = nprobe, shortlist = shortlist))
       val annCnt = ann.groupBy(col("query_id")).agg(count(lit(1)).as("__n"))
       val meanOk = exact.select(col("query_id"), col("neighbor_id"))
         .join(ann.select(col("query_id"), col("neighbor_id"),
@@ -209,8 +209,8 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
       implicit val sp: SparkSession = s
       val emb = t(s, dir, "embeddings")
       val src = bitextSrc(emb)
-      val exact = Similarity.bitextMine(src, emb, k = 4,
-        minMarginPpm = 1050000L).localCheckpoint()
+      val exact = Materialize(Similarity.bitextMine(src, emb, k = 4,
+        minMarginPpm = 1050000L))
       // corpus-SCALED serving knobs (the q_rag_pipeline lesson: fixed
       // knobs decay with corpus growth; scaled ones hold — probed
       // agreement 0.933 at sf0.01 / 0.949 at sf0.1 vs the 0.9 floor)
@@ -228,8 +228,8 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
         (col("query_id") - lit(1000000L)).as("src_id"),
         col("neighbor_id").as("tgt_id"),
         round(col("cosine") * 1e6).cast("long").as("c_ppm"))
-      val mined = Similarity.marginMine(scored, k = 4,
-        minMarginPpm = 1050000L).localCheckpoint()
+      val mined = Materialize(Similarity.marginMine(scored, k = 4,
+        minMarginPpm = 1050000L))
       val badShape = exact.select(col("src_id"))
         .except(mined.select(col("src_id")))
         .select(col("src_id"), lit("src_missing_from_ivf_path").as("issue"))
@@ -271,8 +271,8 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
       val emb = embT.select(col("vec_id"),
         col("embedding").cast("array<float>").as("v"))
       val model = operators.IvfIndex.train(embT, "vec_id", "embedding", k = 16)
-      val res = operators.IvfIndex.topK(embT.filter(col("vec_id") < 16),
-        embT, model, k = 10, nprobe = 4).localCheckpoint()
+      val res = Materialize(operators.IvfIndex.topK(embT.filter(col("vec_id") < 16),
+        embT, model, k = 10, nprobe = 4))
       val badScore = res
         .join(emb.select(col("vec_id").as("query_id"), col("v").as("__q")),
           Seq("query_id"), "left")
@@ -299,10 +299,10 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
         .select(col("vec_id"), col("embedding").cast("array<float>").as("v"))
       val model = operators.IvfIndex.train(
         t(s, dir, "embeddings"), "vec_id", "embedding", k = 16)
-      val res = operators.IvfIndex.topK(
+      val res = Materialize(operators.IvfIndex.topK(
         t(s, dir, "embeddings").filter(col("vec_id") < 16),
-        t(s, dir, "embeddings"), model, k = 10, nprobe = 4)
-        .localCheckpoint() // three checks read it; the IVF join runs once
+        t(s, dir, "embeddings"), model, k = 10, nprobe = 4))
+      // three checks read `res`; the IVF join runs once
       // LEFT joins + null clause (dangling ids / null recomputes are
       // violations); rank contiguity additionally requires DISTINCT ranks —
       // min==1 && max==count alone would pass a duplicate-plus-gap pattern
@@ -334,13 +334,12 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
       val emb = spread(t(s, dir, "embeddings"))
       val model = operators.ProductQuantize.train(emb, "vec_id", "embedding",
         m = 16, k = 64)
-      val enc = operators.ProductQuantize.encode(
-        emb.select(col("vec_id"), col("embedding")), "embedding", model)
-        .localCheckpoint()
-      val res = operators.ProductQuantize.adcTopKEncoded(
+      val enc = Materialize(operators.ProductQuantize.encode(
+        emb.select(col("vec_id"), col("embedding")), "embedding", model))
+      val res = Materialize(operators.ProductQuantize.adcTopKEncoded(
         emb.filter(col("vec_id") < 16),
         enc.select(col("vec_id").as("neighbor_id"), col("pq_code")),
-        model, k = 10).localCheckpoint()
+        model, k = 10))
       val dec = operators.ProductQuantize.decodeCol(enc, "pq_code", model)
         .select(col("vec_id").as("neighbor_id"), col("pq_decoded").as("__dv"))
       val badScore = res
@@ -369,14 +368,12 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
         m = 16, k = 64)
       // ONE k-means-assignment pass over the corpus feeds both the search
       // and the decoded-vector side (the production codes-at-ingest shape)
-      val enc = operators.ProductQuantize.encode(
-        emb.select(col("vec_id"), col("embedding")), "embedding", model)
-        .localCheckpoint()
-      val res = operators.ProductQuantize.adcTopKEncoded(
+      val enc = Materialize(operators.ProductQuantize.encode(
+        emb.select(col("vec_id"), col("embedding")), "embedding", model))
+      val res = Materialize(operators.ProductQuantize.adcTopKEncoded(
         emb.filter(col("vec_id") < 16),
         enc.select(col("vec_id").as("neighbor_id"), col("pq_code")),
-        model, k = 10)
-        .localCheckpoint() // three checks read it; scoring runs once
+        model, k = 10)) // three checks read it; scoring runs once
       val dec = operators.ProductQuantize.decodeCol(enc, "pq_code", model)
         .select(col("vec_id").as("neighbor_id"), col("pq_decoded").as("__dv"))
       val badScore = res
@@ -422,8 +419,8 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
       val ivf = operators.IvfIndex.train(embT, "vec_id", "embedding", k = 16)
       val pq = operators.ProductQuantize.train(embT, "vec_id", "embedding",
         m = 16, k = 64)
-      val res = operators.IvfPq.topK(embT.filter(col("vec_id") < 16), embT,
-        ivf, pq, k = 10, nprobe = 4, shortlist = 32).localCheckpoint()
+      val res = Materialize(operators.IvfPq.topK(embT.filter(col("vec_id") < 16), embT,
+        ivf, pq, k = 10, nprobe = 4, shortlist = 32))
       val badScore = res
         .join(emb.select(col("vec_id").as("query_id"), col("v").as("__q")),
           Seq("query_id"), "left")
@@ -453,9 +450,9 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
       val ivf = operators.IvfIndex.train(embRaw, "vec_id", "embedding", k = 16)
       val pq = operators.ProductQuantize.train(embRaw, "vec_id", "embedding",
         m = 16, k = 64)
-      val res = operators.IvfPq.topK(embRaw.filter(col("vec_id") < 16),
-        embRaw, ivf, pq, k = 10, nprobe = 4, shortlist = 32)
-        .localCheckpoint() // four checks read it; the search runs once
+      val res = Materialize(operators.IvfPq.topK(embRaw.filter(col("vec_id") < 16),
+        embRaw, ivf, pq, k = 10, nprobe = 4, shortlist = 32))
+      // four checks read `res`; the search runs once
       val badScore = res
         .join(emb.select(col("vec_id").as("query_id"), col("v").as("__q")),
           Seq("query_id"), "left")
@@ -643,9 +640,7 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
       // expression tree into every downstream reference — the trees
       // multiply through err2 → pyth_delta → filter, codegen gives up,
       // and the interpreted query ran 127 s at sf0.1 (vs ~1 s staged).
-      val scored = withB
-        .withColumn("__recon", recon)
-        .localCheckpoint()
+      val scored = Materialize(withB.withColumn("__recon", recon))
         .withColumn("__err2",
           aggregate(zip_with(col("embedding"), col("__recon"),
             (x, y) => sq(x.cast("double") - y)), lit(0.0), (acc, x) => acc + x))

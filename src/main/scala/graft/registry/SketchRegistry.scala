@@ -39,9 +39,9 @@ private[graft] object SketchRegistry extends QueryRegistry {
     // estimates stay in the API, the exact sibling above keeps the
     // fingerprint-level oracle).
     "q_source_overlap_est" -> ((s, dir) => {
-      val fps = operators.Winnowing.sourceFingerprints(
+      val fps = Materialize(operators.Winnowing.sourceFingerprints(
         t(s, dir, "documents"), "doc_id", "text", "source",
-        k = 4, w = 4, maxDocFreq = 50).localCheckpoint()
+        k = 4, w = 4, maxDocFreq = 50))
       val bad = operators.SetSketch.pairOverlapViolations(fps,
           "src", "fp_hash", k = 512)
         .select(col("seg_a"), col("seg_b")).distinct()
@@ -226,9 +226,9 @@ private[graft] object SketchRegistry extends QueryRegistry {
       val li = t(s, dir, "lineitem")
         .withColumn("__price_micro",
           floor(col("l_extendedprice").cast("double") * 1e6).cast("long"))
-      val est = operators.QuantileSketch.groupQuantiles(li,
+      val est = Materialize(operators.QuantileSketch.groupQuantiles(li,
         "l_returnflag", "__price_micro", k = 256,
-        ps = Seq(0.01, 0.25, 0.5, 0.75, 0.99)).localCheckpoint()
+        ps = Seq(0.01, 0.25, 0.5, 0.75, 0.99)))
       val values = li.filter(col("__price_micro").isNotNull)
         .select(col("l_returnflag").cast("string").as("segment"),
           col("__price_micro").as("v"))

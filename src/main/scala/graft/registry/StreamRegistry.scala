@@ -753,13 +753,13 @@ private[graft] object StreamRegistry extends QueryRegistry {
       // IvfPq.index pass (§2.4 share one materialization)
       val (a0, indexed) =
         streaming.StreamingIngest.runStreamAnnBounded(s, src, modelPath)
-      val a = a0.localCheckpoint()
+      val a = Materialize(a0)
       val emb = s.read.parquet(src)
       val (livf, lpq) = operators.IvfPq.loadModels(s, modelPath)
-      val b = operators.IvfPq.topKIndexed(
+      val b = Materialize(operators.IvfPq.topKIndexed(
         emb.filter(col("vec_id") < 16),
         indexed, emb, livf, lpq,
-        k = 10, nprobe = 4, shortlist = 32).localCheckpoint()
+        k = 10, nprobe = 4, shortlist = 32))
       val drift = a.exceptAll(b).unionAll(b.exceptAll(a))
         .select(col("query_id")).distinct().withColumn("__bad", lit(true))
       a.groupBy(col("query_id")).agg(count(lit(1)).as("n_results"))
@@ -795,11 +795,11 @@ private[graft] object StreamRegistry extends QueryRegistry {
       // both frames feed BOTH exceptAll sides — checkpoint to sever the
       // shared index lineage (duplicate attribute ids otherwise collide
       // inside the dual anti-join plan) and to run each search once
-      val a = streamRes.localCheckpoint()
-      val b = operators.IvfPq.topKIndexed(
+      val a = Materialize(streamRes)
+      val b = Materialize(operators.IvfPq.topKIndexed(
         emb.filter(col("vec_id") < 16),
         indexed, emb, livf, lpq,
-        k = 10, nprobe = 4, shortlist = 32).localCheckpoint()
+        k = 10, nprobe = 4, shortlist = 32))
       a.exceptAll(b).withColumn("side", lit("stream_only"))
         .unionAll(b.exceptAll(a).withColumn("side", lit("batch_only")))
         .orderBy(col("query_id"), col("rank"), col("side"))
@@ -927,12 +927,11 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // → the gated output is the same (segment, p, n, rank_ok) claim,
     // checked against the exact batch data (round-14 headliner fold).
     "q_stream_quantile" -> ((s, dir) => {
-      val est = StreamingIngest.runStreamQuantileBounded(s,
+      val est = Materialize(StreamingIngest.runStreamQuantileBounded(s,
         s"$dir/events.parquet", "event_type",
         floor(col("value").cast("double") * 1e6), k = 256,
         ps = Seq(0.25, 0.5, 0.75, 0.95),
-        queryName = s"stream_kll_${streamCounter.incrementAndGet()}")
-        .localCheckpoint()
+        queryName = s"stream_kll_${streamCounter.incrementAndGet()}"))
       val values = t(s, dir, "events")
         .withColumn("__v", floor(col("value").cast("double") * 1e6).cast("long"))
         .filter(col("__v").isNotNull)

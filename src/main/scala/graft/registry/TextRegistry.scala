@@ -268,7 +268,7 @@ private[graft] object TextRegistry extends QueryRegistry {
             .otherwise(element_at(array(lit("."), lit("!"), lit("?")),
               pmod(col("doc_id") + g, lit(3)).cast("int") + 1)))
       })
-      docs
+      Materialize(docs
         .withColumn("__caps",
           transform(filter(split(col("text"), " "), w => length(w) > 0),
             (w, i) => when(i % 6 === 0,
@@ -278,7 +278,7 @@ private[graft] object TextRegistry extends QueryRegistry {
         .withColumn("__ng", ((col("__nw") + lit(5)) / lit(6)).cast("int"))
         .select(col("doc_id"),
           graft.expr.SentenceExpressions.split_sentences(
-            array_join(sentences, " ")).as("__s"))
+            array_join(sentences, " ")).as("__s")))
         // lineage cut before the explode: InferFiltersFromGenerate
         // otherwise pushes a `size(__s) > 0` guard below the projection
         // chain by SUBSTITUTING the whole sentence construction into the
@@ -286,7 +286,6 @@ private[graft] object TextRegistry extends QueryRegistry {
         // materialization of the 2-column (doc_id, __s) frame is far
         // cheaper (guide §3.3: materialize to truncate a plan the
         // optimizer mangles).
-        .localCheckpoint()
         .select(col("doc_id"),
           posexplode(col("__s")).as(Seq("sidx", "sentence")))
         .select(col("doc_id"), col("sidx").cast("long").as("sidx"),

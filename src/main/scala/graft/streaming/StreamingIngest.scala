@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Structured Streaming extension (SURVEY.md §2.9/§7.1.9): the reference is
   * strictly batch; this adds the streaming ingest+aggregate shape a
   * continuous pipeline needs — file-source stream, event-time watermark,
@@ -519,7 +521,7 @@ object StreamingIngest {
   /** Streaming MODEL INFERENCE: classify a document stream under a
     * batch-trained multinomial NB model (graft.operators.Classify) — the
     * standard train-once/score-forever serving shape. The model tables are
-    * materialized ONCE (localCheckpoint) before the stream starts; each
+    * materialized ONCE ([[graft.Materialize]]) before the stream starts; each
     * micro-batch scores its documents in foreachBatch (a document is one
     * row, so scoring needs no cross-batch state) and appends to an
     * in-memory sink. Appends are idempotent per doc — scoring is a pure
@@ -543,8 +545,8 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // score THIS batch under the shared model; persist eagerly so the
         // result survives the batch frame's lifecycle
-        sink.add(graft.operators.Classify
-          .scoreNaiveBayes(model, batch, idCol, textCol).localCheckpoint())
+        sink.add(Materialize(graft.operators.Classify
+          .scoreNaiveBayes(model, batch, idCol, textCol)))
         ()
       }
       .start()
@@ -581,7 +583,7 @@ object StreamingIngest {
     * Output: one row per input doc — (doc_id, status) with status ∈
     * quality | duplicate | curated. State held per batch: the
     * quality-passing corpus frame + the accumulated pair ledger, each
-    * localCheckpointed (executor blocks, ContextCleaner-reclaimed).
+    * materialized ([[graft.Materialize]]).
     *
     * Scale note (honest cost model): each batch's incrementalNgramPairs
     * call re-derives the global document-frequency order over
@@ -623,19 +625,17 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val docs = batch.select(col(idCol).cast("long").as("doc_id"),
           col(textCol).cast("string").as("text"))
-        val gated = docs.withColumn("__pass",
-          size(Dedup.cleanTokens(col("text"))) >= minTokens)
-          .localCheckpoint()
+        val gated = Materialize(docs.withColumn("__pass",
+          size(Dedup.cleanTokens(col("text"))) >= minTokens))
         statuses.put(bid, gated.select(col("doc_id"), col("__pass")))
         val passers = gated.filter(col("__pass")).select(col("doc_id"), col("text"))
-        val deltaSh = Dedup.hashedShingles(passers, "doc_id", "text", n)
-          .localCheckpoint()
+        val deltaSh = Materialize(Dedup.hashedShingles(passers, "doc_id", "text", n))
         val corpusSh = shingleSlices.asScala.toSeq
           .filter(_._1 < bid).map(_._2)
           .reduceOption(_ unionByName _)
           .getOrElse(deltaSh.limit(0))
         val pairs = Dedup.incrementalNgramPairsFromSets(corpusSh, deltaSh, threshold)
-        pairLedger.put(bid, pairs.select(col("idA"), col("idB")).localCheckpoint())
+        pairLedger.put(bid, Materialize(pairs.select(col("idA"), col("idB"))))
         shingleSlices.put(bid, deltaSh)
         ()
       }
@@ -688,14 +688,13 @@ object StreamingIngest {
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val docs = batch.select(col(idCol).cast("long").as("doc_id"),
           col(textCol).cast("string").as("text"))
-        val gated = docs.withColumn("__pass",
-          size(Dedup.cleanTokens(col("text"))) >= minTokens)
-          .localCheckpoint()
+        val gated = Materialize(docs.withColumn("__pass",
+          size(Dedup.cleanTokens(col("text"))) >= minTokens))
         statuses.put(bid, gated.select(col("doc_id"), col("__pass")))
         val passers = gated.filter(col("__pass")).select(col("doc_id"), col("text"))
         // sign the DELTA once; the checkpoint is what later batches reuse
-        val deltaSigs = Dedup.minhashSignatures(passers, "doc_id", "text", n, k)
-          .localCheckpoint()
+        val deltaSigs = Materialize(
+          Dedup.minhashSignatures(passers, "doc_id", "text", n, k))
         val corpusSigs = sigSlices.asScala.toSeq
           .filter(_._1 < bid).map(_._2)
           .reduceOption(_ unionByName _)
@@ -705,7 +704,7 @@ object StreamingIngest {
           case Some(corpus) => Dedup.incrementalMinhashPairs(
             corpus, deltaSigs, "doc_id", k, bands, threshold)
         }
-        pairLedger.put(bid, pairs.select(col("idA"), col("idB")).localCheckpoint())
+        pairLedger.put(bid, Materialize(pairs.select(col("idA"), col("idB"))))
         sigSlices.put(bid, deltaSigs)
         ()
       }
@@ -771,15 +770,15 @@ object StreamingIngest {
       ProductQuantize.train(corpus, "vec_id", "embedding", m = m, k = codes)))
     IvfPq.saveModels(spark, modelPath, ivf0, pq0)
     val (ivf, pq) = IvfPq.loadModels(spark, modelPath)
-    val indexed = IvfPq.index(corpus, ivf, pq).localCheckpoint()
+    val indexed = Materialize(IvfPq.index(corpus, ivf, pq))
     val stream = boundedStream(spark, parquetPath, corpus.schema, maxFilesPerTrigger)
     val results = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         val queries = batch.filter(col("vec_id") < queryMaxId)
-        results.put(bid, IvfPq.topKIndexed(queries, indexed, corpus, ivf, pq,
-          k, nprobe, shortlist).localCheckpoint())
+        results.put(bid, Materialize(IvfPq.topKIndexed(queries, indexed, corpus, ivf, pq,
+          k, nprobe, shortlist)))
         ()
       }
       .start()
@@ -812,7 +811,7 @@ object StreamingIngest {
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, Multimodal
+        results.put(bid, Materialize(Multimodal
           .extractFeatures(Multimodal.syntheticMediaRecords(batch, idCol))
           .toDF()
           .select(col("media_id"),
@@ -820,8 +819,7 @@ object StreamingIngest {
             col("width").cast("long").as("width"),
             col("height").cast("long").as("height"),
             col("channels").cast("long").as("channels"),
-            size(col("frame_offsets")).cast("long").as("n_frames"))
-          .localCheckpoint())
+            size(col("frame_offsets")).cast("long").as("n_frames"))))
         ()
       }
       .start()
@@ -856,7 +854,7 @@ object StreamingIngest {
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, build(batch).localCheckpoint())
+        results.put(bid, Materialize(build(batch)))
         ()
       }
       .start()
@@ -892,7 +890,7 @@ object StreamingIngest {
         // tag each batch's aggregates with the micro-batch id — the
         // contract check below keys on it
         results.put(bid,
-          build(batch).withColumn("__graft_bid", lit(bid)).localCheckpoint())
+          Materialize(build(batch).withColumn("__graft_bid", lit(bid))))
         ()
       }
       .start()
@@ -930,11 +928,10 @@ object StreamingIngest {
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, TextExtract.fromHtml(
+        results.put(bid, Materialize(TextExtract.fromHtml(
             batch.select(col(idCol),
               TextExtract.syntheticHtml(col(idCol), col("text")).as("html")),
-            idCol, "html")
-          .localCheckpoint())
+            idCol, "html")))
         ()
       }
       .start()
@@ -970,7 +967,7 @@ object StreamingIngest {
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, batch.localCheckpoint())
+        results.put(bid, Materialize(batch))
         ()
       }
       .start()
@@ -1000,7 +997,7 @@ object StreamingIngest {
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        slices.put(bid, batch.localCheckpoint())
+        slices.put(bid, Materialize(batch))
         ()
       }
       .start()
@@ -1040,8 +1037,7 @@ object StreamingIngest {
             lit("url").as("kind"), col("link").as("loc"),
             col("published").as("lastmod"))
         results.put(bid,
-          Sitemap.seedSurvivors(entries, domainCol, crawled, crawledUrlCol)
-            .localCheckpoint())
+          Materialize(Sitemap.seedSurvivors(entries, domainCol, crawled, crawledUrlCol)))
         ()
       }
       .start()
@@ -1073,7 +1069,7 @@ object StreamingIngest {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
         results.put(bid,
-          RobotsTxt.gate(batch, "url", rules, userAgent).localCheckpoint())
+          Materialize(RobotsTxt.gate(batch, "url", rules, userAgent)))
         ()
       }
       .start()
@@ -1117,18 +1113,17 @@ object StreamingIngest {
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val deltaKeyed = EntityResolution
-          .blockKeys(batch, idCol, nameCol, blockChars).localCheckpoint()
+        val deltaKeyed = Materialize(EntityResolution
+          .blockKeys(batch, idCol, nameCol, blockChars))
         val corpusKeyed = keySlices.asScala.toSeq
           .filter(_._1 < bid).map(_._2)
           .reduceOption(_ unionByName _)
           .getOrElse(deltaKeyed.limit(0))
-        pairLedger.put(bid, EntityResolution
-          .incrementalMatches(corpusKeyed, deltaKeyed, maxDist)
-          .localCheckpoint())
+        pairLedger.put(bid, Materialize(EntityResolution
+          .incrementalMatches(corpusKeyed, deltaKeyed, maxDist)))
         keySlices.put(bid, deltaKeyed)
         recordSlices.put(bid,
-          batch.select(col(idCol)).localCheckpoint())
+          Materialize(batch.select(col(idCol))))
         ()
       }
       .start()
@@ -1170,9 +1165,8 @@ object StreamingIngest {
         val standing = fronts.asScala.toSeq.filter(_._1 < bid)
           .sortBy(-_._1).headOption.map(_._2)
           .getOrElse(batch.limit(0))
-        fronts.put(bid, DataSelect
-          .paretoFront2D(standing.unionByName(batch), xCol, yCol)
-          .localCheckpoint())
+        fronts.put(bid, Materialize(DataSelect
+          .paretoFront2D(standing.unionByName(batch), xCol, yCol)))
         ()
       }
       .start()
@@ -1195,7 +1189,7 @@ object StreamingIngest {
     * verbatim (full hash), the same discipline as q_stream_classify.
     *
     * Per-batch frames key on the BATCH ID (a replayed batch overwrites
-    * its own entry — idempotent), each localCheckpointed. */
+    * its own entry — idempotent), each materialized. */
   def runStreamDsirBounded(spark: SparkSession, rawParquetPath: String,
                            target: DataFrame, idCol: String, textCol: String,
                            buckets: Int, maxFilesPerTrigger: Int = 0): DataFrame = {
@@ -1207,9 +1201,9 @@ object StreamingIngest {
     val q = stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ids.put(bid, batch.select(col(idCol)).localCheckpoint())
-        feats.put(bid, DataSelect
-          .featureBuckets(batch, idCol, textCol, buckets).localCheckpoint())
+        ids.put(bid, Materialize(batch.select(col(idCol))))
+        feats.put(bid, Materialize(DataSelect
+          .featureBuckets(batch, idCol, textCol, buckets)))
         ()
       }
       .start()
@@ -1493,7 +1487,7 @@ object StreamingIngest {
     // branch to the SAME MemoryPlan instance — ambiguous references
     // without this copy (vocab²-bounded, so the checkpoint is small)
     TextAnalysis.pmiFromPairCounts(
-      spark.table(queryName).localCheckpoint(), minCount, topK)
+      Materialize(spark.table(queryName)), minCount, topK)
   }
 
   /** Streaming per-class discriminative keywords: the (cls, term) token
@@ -1524,7 +1518,7 @@ object StreamingIngest {
     // and memory-sink views resolve every branch to one MemoryPlan —
     // see runStreamPmiBounded
     TextAnalysis.keywordsFromCounts(
-      spark.table(queryName).localCheckpoint(), minCount, topK)
+      Materialize(spark.table(queryName)), minCount, topK)
   }
 
   /** Streaming per-segment Bloom filter over the native OR-merge
@@ -1585,10 +1579,10 @@ object StreamingIngest {
       try q.processAllAvailable()
       finally q.stop()
     }
-    // localCheckpoint: densify self-joins the counts frame, and a memory-
+    // materialized: densify self-joins the counts frame, and a memory-
     // sink table's lineage trips analyzer reference-dedup; the snapshot is
     // grid-sized (keys × buckets), so materializing it is free
-    val counts = spark.table(queryName).localCheckpoint()
+    val counts = Materialize(spark.table(queryName))
     graft.operators.TimeSeries.anomaliesFromCounts(
       graft.operators.TimeSeries.densify(counts), window, k)
   }

@@ -164,22 +164,60 @@ class FunnelSpec extends graft.SparkSpec {
     assert(fast2.contains((502L, 500L)), "pair-only ids must be labeled")
   }
 
+  /** The reliable checkpoint files a frame still reads: the files behind
+    * every checkpointed leaf of its plan. */
+  private def checkpointFilesReadBy(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.getCheckpointFile
+    }.flatten.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath)
+
+  private def filesUnder(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap(f =>
+      if (f.isDirectory) filesUnder(f) else Seq(f))
+
   test("connected components: identical under reliable checkpoint dir") {
     import spark.implicits._
     val nodes = (1L to 50L).toDF("id")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 20L), (20L, 30L), (30L, 40L))
       .toDF("idA", "idB")
-    // maxDriverEdges = 0 forces the ITERATIVE path — the checkpoint
-    // machinery under test is only used there
-    val local = Dedup.connectedComponents(nodes, pairs, "id", maxDriverEdges = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val reliable = Dedup.connectedComponents(nodes, pairs, "id", maxDriverEdges = 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(reliable == local)
-      assert(new java.io.File(dir).listFiles().nonEmpty, "checkpoint dir unused")
-    } finally spark.sparkContext.setCheckpointDir(null)
+    // a chain with a tail and a dense core: kCore peels several rounds,
+    // the distance loops relax several rounds
+    val edges = ((1L to 11L).map(i => (i, i + 1L)) ++
+      (for (a <- 20L to 24L; b <- 20L to 24L if a < b) yield (a, b)) ++
+      Seq((12L, 20L), (3L, 22L)))
+      .toDF("src", "dst")
+    val weighted = edges.withColumn("w", (col("src") % 3) + 1L)
+    val seeds = Seq(1L).toDF("seed")
+    // each loop is forced past its first round cut; maxDriverEdges = 0
+    // forces CC's ITERATIVE path, the only one that checkpoints rounds
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "connectedComponents" ->
+        (() => Dedup.connectedComponents(nodes, pairs, "id", maxDriverEdges = 0)),
+      "pageRank" ->
+        (() => Graph.pageRank(edges.union(edges.select(col("dst"), col("src"))),
+          "src", "dst", iters = 7, checkpointEvery = 2)),
+      "labelPropagation" ->
+        (() => Graph.labelPropagation(edges, "src", "dst", iters = 5,
+          checkpointEvery = 2)),
+      "weightedDistances" ->
+        (() => Graph.weightedDistances(weighted, "src", "dst", "w", seeds, "seed",
+          maxRounds = 6)),
+      "kCore" ->
+        (() => Graph.kCore(edges, "src", "dst", k = 3, checkpointEvery = 1)))
+    for ((name, run) <- cases) {
+      val local = run().collect().toSet
+      val dir = java.nio.file.Files.createTempDirectory("ckpt-" + name).toFile
+      spark.sparkContext.setCheckpointDir(dir.getPath)
+      try {
+        val out = run()
+        assert(out.collect().toSet == local, s"$name: reliable != local")
+        val live = checkpointFilesReadBy(out)
+        val files = filesUnder(dir)
+        assert(files.nonEmpty, s"$name: checkpoint dir unused")
+        val leaked = files.map(_.getPath)
+          .filterNot(f => live.exists(l => f.startsWith(l + "/")))
+        assert(leaked.isEmpty, s"$name: files of superseded rounds left behind: $leaked")
+      } finally spark.sparkContext.setCheckpointDir(null)
+    }
   }
 }
