@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.current_date
+import org.apache.spark.sql.functions.{current_date, input_file_name}
 import org.apache.spark.storage.StorageLevel
 import graft.ingest.Harmonizer
 import graft.validate.Validator
@@ -31,7 +31,8 @@ import graft.views.CountryViews
   *  - the warehouse write.
   * The warehouse is read back with the schema it was written with, so no
   * footer-read job runs and `COUNTRY` stays a string whatever its values
-  * look like. The views are lazy.
+  * look like. The views are lazy: registering them plans their cached
+  * latest-row set but fills nothing, so the first view read pays the rank.
   */
 object Pipeline {
 
@@ -50,7 +51,10 @@ object Pipeline {
 
   def run(spark: SparkSession, dataDir: String, outDir: String,
           asOf: org.apache.spark.sql.Column = current_date()): Result = {
+    // Lineage is taken at the scan: input_file_name() is empty over the
+    // persisted annotated frame the warehouse is written from.
     val raw = Harmonizer.loadSourceData(spark, dataDir)
+      .withColumn("Source_File", input_file_name())
     val validated = Validator.validate(raw)
     val annotated = validated.annotated.persist(StorageLevel.MEMORY_AND_DISK)
     try {

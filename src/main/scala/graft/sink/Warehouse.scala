@@ -25,9 +25,14 @@ object Warehouse {
     df.toDF(df.columns.map(
       _.toUpperCase.replace(' ', '_').replace('-', '_').replace("\"", "")): _*)
 
-  /** S9+S10: lineage metadata. The rebuild records real per-row lineage via
-    * `input_file_name()` where the reference hardcodes a literal
-    * (`snowflake_connector.py:299`); pass `sourceFile=Some(lit)` for parity. */
+  /** S9+S10: lineage metadata. The rebuild records real per-row lineage
+    * where the reference hardcodes a literal (`snowflake_connector.py:299`);
+    * pass `sourceFile=Some(lit)` for parity. A `SOURCE_FILE` column already
+    * on the frame is kept: callers take it with `input_file_name()` at the
+    * file scan, as [[graft.Pipeline.run]] and the streaming ETL do. Without
+    * one, `input_file_name()` is evaluated here, which gives the file name
+    * only when this frame is read straight from files; over a persisted or
+    * in-memory frame it is "". */
   def withMetadata(df: DataFrame, sourceFile: Option[String] = None): DataFrame = {
     val src: Column = sourceFile.map(lit).getOrElse(input_file_name())
     val withSrc =

@@ -3,6 +3,7 @@ package graft.views
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Per-country analytic views (reference `view_generator.py:4-72` +
   * `main.py:64-139`; operators S6/S7/S8/A1/W1/E4/E5/P9 in SURVEY.md §2).
@@ -26,9 +27,11 @@ import org.apache.spark.sql.functions._
   * reproducible (§7.4.5). Pass `asOf = current_date()` for live parity.
   *
   * Scale: the dedup is one hash-shuffle on `CUST_I` + per-partition sort —
-  * the single shuffle this pipeline needs. All derived columns ride the same
-  * projection (whole-stage codegen); per-country outputs are filters over one
-  * shared ranked plan, so N countries do not mean N shuffles.
+  * the single shuffle this pipeline needs, run once per registration: the
+  * per-country views are filters over one latest-row set (base columns
+  * only), cached lazily, so N countries do not mean N shuffles and a
+  * request after the first reads the cache with no shuffle. The as-of
+  * columns are computed over the cached rows per query.
   */
 object CountryViews {
 
@@ -39,26 +42,32 @@ object CountryViews {
     col("VAC_ID").asc_nulls_last,
     col("NAME").asc_nulls_last)
 
-  /** W1+E4+E5: the `RankedCustomers` CTE body (`view_generator.py:19-48`). */
-  def rankedCustomers(warehouse: DataFrame, asOf: Column = current_date()): DataFrame = {
+  private val baseColumns = Seq(
+    "CUST_I", "NAME", "OPEN_DT", "CONSUL_DT", "VAC_ID", "DR_NAME", "STATE",
+    "COUNTRY", "DOB", "FLAG")
+
+  /** W1: the latest-consultation row per customer, base columns only
+    * (`view_generator.py:42-45`, `:63`). Nothing in it depends on the
+    * as-of date, so it can be cached across queries. */
+  private def latestRows(warehouse: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("CUST_I")).orderBy(dedupOrder: _*)
     warehouse
-      .withColumn("AGE", year(asOf) - year(col("DOB")))
-      .withColumn("DAYS_SINCE_CONSUL_GT_30",
-        when(datediff(asOf, col("CONSUL_DT")) > 30, true).otherwise(false))
       .withColumn("RowNum", row_number().over(w))
+      .filter(col("RowNum") === 1)
+      .select(baseColumns.map(col): _*)
   }
 
-  private val viewColumns = Seq(
-    "CUST_I", "NAME", "OPEN_DT", "CONSUL_DT", "VAC_ID", "DR_NAME", "STATE",
-    "COUNTRY", "DOB", "FLAG", "AGE", "DAYS_SINCE_CONSUL_GT_30")
+  /** E4+E5: the as-of columns (`view_generator.py:33-40`). */
+  private def withAsOf(latest: DataFrame, asOf: Column): DataFrame =
+    latest.select(col("*"),
+      (year(asOf) - year(col("DOB"))).as("AGE"),
+      when(datediff(asOf, col("CONSUL_DT")) > 30, true).otherwise(false)
+        .as("DAYS_SINCE_CONSUL_GT_30"))
 
   /** Latest-consultation row per customer with derived columns — the view
-    * body before the country predicate (`view_generator.py:49-63`). */
+    * body before the country predicate (`view_generator.py:19-63`). */
   def dedupedCustomers(warehouse: DataFrame, asOf: Column = current_date()): DataFrame =
-    rankedCustomers(warehouse, asOf)
-      .filter(col("RowNum") === 1)
-      .select(viewColumns.map(col): _*)
+    withAsOf(latestRows(warehouse), asOf)
 
   /** P9: one country's view (`view_generator.py:64`) — filter AFTER rank. */
   def countryView(warehouse: DataFrame, country: String,
@@ -135,15 +144,30 @@ object CountryViews {
     files
   }
 
+  /** The temp view holding the cached latest-row set of the current
+    * registration. */
+  private val LatestRowsView = "__graft_latest_customers"
+
   /** S6+S7: register each country view as a temp view — the Spark-native
     * replacement for generating SQL text files and executing them remotely
-    * (`view_generator.py:17-72`, `main.py:107-139`). Views are lazy: the
-    * shared ranked plan evaluates only when a view is queried, mirroring the
-    * reference's views-not-tables design (README.md:89-98). */
+    * (`view_generator.py:17-72`, `main.py:107-139`). Views are lazy,
+    * mirroring the reference's views-not-tables design (README.md:89-98).
+    *
+    * The views share one latest-row set per registration, registered as a
+    * temp view and cached lazily on disk: the first view read ranks the
+    * warehouse and fills the cache, every later read scans it with no
+    * shuffle. It is cached `DISK_ONLY`, so it holds no storage memory. The
+    * as-of columns are computed over the cached rows, so `current_date()`
+    * is still evaluated per query.
+    * Replacing the temp view releases the previous registration's cache
+    * (Spark uncaches a temp view whose plan changes), so a session holds at
+    * most one. */
   def registerCountryViews(spark: SparkSession, warehouse: DataFrame,
                            countries: Seq[String],
                            asOf: Column = current_date()): Seq[String] = {
-    val deduped = dedupedCustomers(warehouse, asOf)
+    latestRows(warehouse).createOrReplaceTempView(LatestRowsView)
+    spark.catalog.cacheTable(LatestRowsView, StorageLevel.DISK_ONLY)
+    val deduped = withAsOf(spark.table(LatestRowsView), asOf)
     countries.sorted.map { c =>
       val name = viewName(c)
       deduped.filter(col("COUNTRY") === lit(c)).createOrReplaceTempView(name)

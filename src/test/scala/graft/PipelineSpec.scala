@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import graft.ingest.Harmonizer
 import graft.validate.Validator
@@ -233,6 +237,21 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("lineage: every warehouse row names the CSV it came from") {
+    val csvs = new java.io.File(dataDir).listFiles().map(_.getName).toSet
+    val rows = result.warehouse.select("SOURCE_FILE", "COUNTRY").collect()
+    assert(rows.length == 8)
+    val names = rows.map { r =>
+      // input_file_name() is a URI: the file name is percent-encoded
+      val name = new java.io.File(new java.net.URI(r.getString(0)).getPath).getName
+      assert(csvs.contains(name), r.getString(0))
+      // the fixtures carry no country column: it is the file name's prefix
+      assert(name.take(3) == r.getString(1), name)
+      name
+    }
+    assert(names.toSet == csvs)
+  }
+
   test("run report: quarantined rows per reason, valid rows per country") {
     assert(result.quarantinedByReason == Map("Invalid month" -> 1L))
     assert(result.validByCountry == Map("AUS" -> 2L, "IND" -> 3L, "USA" -> 3L))
@@ -280,30 +299,72 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("job budget: at most 6 jobs, the same for one layout as for three") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    def jobsOf(in: String): Int = {
-      val group = s"budget-${java.util.UUID.randomUUID()}"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null &&
-              e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup(group, "job budget")
-        try runAt(in) finally sc.clearJobGroup()
-        org.apache.spark.graft.ListenerFlush.flush(sc)
-        jobs.get()
-      } finally sc.removeSparkListener(listener)
-    }
+    def jobsOf(in: String): Int = jobsIn(runAt(in))
     // the AUS file alone is one layout and, like the golden set, has a
     // quarantined row, so both runs write a quarantine CSV
     val threeLayouts = jobsOf(dataDir)
     val oneLayout = jobsOf(inputDir(Seq("AUS")))
     assert(threeLayouts == oneLayout)
     assert(threeLayouts <= 6, s"$threeLayouts jobs")
+  }
+
+  /** The cached latest-row set a country view reads. */
+  private def latestSet(view: String): InMemoryRelation =
+    spark.table(view).queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r }
+      .getOrElse(fail(s"$view reads no cached relation"))
+
+  private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def names(view: String): Seq[String] =
+    spark.table(view).collect().map(_.getAs[String]("NAME")).toSeq.sorted
+
+  test("two loads in one session keep one cached latest-row set, filled by the first read") {
+    val before = persistentRdds
+    runAt(dataDir)
+    val first = latestSet("VIEW_AUS")
+    assert(!first.cacheBuilder.isCachedColumnBuffersLoaded, "Pipeline.run filled the cache")
+    assert(persistentRdds -- before == Set.empty)
+
+    assert(names("VIEW_AUS") == Seq("Cristina"))
+    val firstRdds = persistentRdds -- before
+    assert(firstRdds == Set(first.cacheBuilder.cachedColumnBuffers.id))
+
+    // the AUS file alone: ids 1 and 3 no longer lose to IND and USA rows
+    runAt(inputDir(Seq("AUS")))
+    val second = latestSet("VIEW_AUS")
+    assert(second ne first)
+    assert(names("VIEW_AUS") == Seq("Cristina", "Mike"))
+    assert(persistentRdds -- before == Set(second.cacheBuilder.cachedColumnBuffers.id))
+    assert((firstRdds & persistentRdds).isEmpty)
+  }
+
+  test("the cached set holds base columns only; the views equal countryView at their as-of") {
+    val r = runAt(dataDir)
+    assert(latestSet("VIEW_IND").output.map(_.name) == Seq("CUST_I", "NAME", "OPEN_DT",
+      "CONSUL_DT", "VAC_ID", "DR_NAME", "STATE", "COUNTRY", "DOB", "FLAG"))
+    def rows(df: DataFrame) = df.orderBy("CUST_I").collect().map(_.toSeq).toSeq
+    // the same rows under a plan the cache does not match: a fresh rank
+    val copy = spark.createDataFrame(
+      spark.sparkContext.parallelize(r.warehouse.collect().toSeq), r.warehouse.schema)
+    for (c <- r.countries) {
+      val view = spark.table(CountryViews.viewName(c))
+      assert(view.columns.takeRight(2).toSeq == Seq("AGE", "DAYS_SINCE_CONSUL_GT_30"))
+      val fresh = CountryViews.countryView(copy, c, lit("2026-08-12").cast("date"))
+      assert(!fresh.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+      assert(rows(view) == rows(fresh), s"country $c")
+    }
+  }
+
+  test("after the first read a lookup is one job over the cached set, with no exchange") {
+    runAt(dataDir)
+    spark.table("VIEW_IND").collect()
+    val lookup = spark.table("VIEW_IND").filter(col("CUST_I") === "2")
+    assert(jobsIn(assert(lookup.collect().map(_.getAs[String]("NAME")).toSeq == Seq("Rahul"))) == 1)
+    val plan = lookup.queryExecution.executedPlan
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(plan) { case n => n }
+    assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
+    assert(!nodes.exists(_.isInstanceOf[Exchange]), plan)
   }
 
   test("warehouse name normalization uppercases and strips") {

@@ -9,6 +9,26 @@ trait SparkSpec extends AnyFunSuite {
   def testDataDir(sf: String = "0.001"): String = s"/root/testdata/sf$sf"
   def resourcePath(rel: String): String =
     new java.io.File(getClass.getClassLoader.getResource(rel).toURI).getAbsolutePath
+
+  /** The number of Spark jobs `body` starts, counted by job group. */
+  def jobsIn(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graft.ListenerFlush.flush(sc)
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

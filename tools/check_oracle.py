@@ -10,10 +10,18 @@ For each query dir under <verifyOutDir> (written by graft.Verify):
   - compare row count, column names (sorted), and a value hash computed
     over rows sorted by all columns (column order = sorted names).
 Queries without oracle SQL get a rows-only report.
+
+DuckDB runs capped (MEMORY_LIMIT, THREADS) and spills to a temporary
+directory deleted on exit: with its default limit of 80% of RAM the sweep
+over the sf0.01 output grew past 13 GB. A query whose oracle SQL still
+exhausts the cap reports ORACLE_SQL_FAIL with DuckDB's out-of-memory error.
 """
-import sys, os, json, glob, math
+import sys, os, json, glob, math, tempfile
 
 import duckdb
+
+MEMORY_LIMIT = "2GB"
+THREADS = 2
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -42,7 +50,13 @@ def frame_fingerprint(rows, cols):
 
 
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    with tempfile.TemporaryDirectory(prefix="check_oracle_spill_") as spill:
+        return check(sf_dir, out_dir, spill)
+
+
+def check(sf_dir, out_dir, spill):
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT, "threads": THREADS,
+                                 "temp_directory": spill})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
