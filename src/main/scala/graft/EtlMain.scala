@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{current_date, lit}
   *
   * Reads every CSV layout under `csvDataDir`, harmonizes + validates,
   * quarantines invalid rows to `outDir/invalid_records`, writes the
-  * warehouse table to `outDir/warehouse` (parquet, partitioned by COUNTRY),
+  * warehouse table to `outDir/warehouse` (one unpartitioned parquet table),
   * registers one temp view per country, and prints each view.
   */
 object EtlMain {

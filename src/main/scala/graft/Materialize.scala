@@ -28,16 +28,17 @@ object Materialize {
     if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint()
     else ds.localCheckpoint()
 
-  /** Delete the reliable checkpoint files behind a frame returned by
-    * [[apply]], once nothing reads it any more. Spark deletes such files
-    * only under `spark.cleaner.referenceTracking.cleanCheckpoints` (off by
-    * default), so loops release each round they supersede. A no-op for
-    * local checkpoints, which the ContextCleaner reclaims on its own, and
-    * for any frame that is not itself a checkpoint (a plan built on one
-    * keeps its source's files). Best-effort: a failed delete is ignored. */
+  /** Free what a frame returned by [[apply]] holds, once nothing reads it
+    * any more: a reliable checkpoint's files (Spark deletes them only under
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`, off by default) and
+    * a local checkpoint's blocks (the ContextCleaner frees those only once
+    * the RDD is garbage-collected on the driver, which a long-lived session
+    * may not do for a while). A no-op for any frame that is not itself a
+    * checkpoint (a plan built on one keeps its source's data). Best-effort:
+    * a failed delete is ignored. */
   def release(ds: Dataset[_]): Unit =
     ds.queryExecution.logical match {
-      case r: LogicalRDD =>
+      case r: LogicalRDD if r.rdd.isCheckpointed =>
         r.rdd.getCheckpointFile.foreach { file =>
           scala.util.Try {
             val path = new org.apache.hadoop.fs.Path(file)
@@ -45,6 +46,7 @@ object Materialize {
               .delete(path, true)
           }
         }
+        r.rdd.unpersist(blocking = false)
       case _ => ()
     }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{current_date, input_file_name}
-import org.apache.spark.storage.StorageLevel
 import graft.ingest.Harmonizer
 import graft.validate.Validator
 import graft.sink.Warehouse
@@ -15,20 +14,23 @@ import graft.views.CountryViews
   *   warehouse write → enumerate countries → register per-country views.
   *
   * Each stage is a lazy DataFrame transform; Catalyst plans the whole chain.
-  * The annotated validation frame is persisted (MEMORY_AND_DISK — spill-safe
-  * at scale) because the counters, the quarantine and the warehouse write all
-  * read it (SURVEY.md §7.4.3).
+  * The annotated validation frame goes through [[Materialize]] because the
+  * counters, the quarantine and the warehouse write all read it (SURVEY.md
+  * §7.4.3): they scan its checkpointed rows, and the run releases them when
+  * it ends.
   *
   * Job budget: a run issues at most 6 Spark jobs, whatever the number of
   * input layouts —
   *  - the header probe of [[Harmonizer.groupByLayout]] (layout schemas and
   *    the embedded-header check need no job);
+  *  - the materialization of the annotated frame: the one scan and date
+  *    parse of the input;
   *  - one grouped aggregate, [[Validator.Validated.counts]], which gives the
   *    valid and quarantine counts, the countries and the run report; under
-  *    adaptive execution it is three jobs: the cache fill, the shuffle map
-  *    stage and the result;
+  *    adaptive execution it is two jobs: the shuffle map stage and the
+  *    result;
   *  - the quarantine CSV write, only when the quarantine is non-empty;
-  *  - the warehouse write.
+  *  - the warehouse write, unpartitioned: one file per write task.
   * The warehouse is read back with the schema it was written with, so no
   * footer-read job runs and `COUNTRY` stays a string whatever its values
   * look like. The views are lazy: registering them plans their cached
@@ -52,11 +54,10 @@ object Pipeline {
   def run(spark: SparkSession, dataDir: String, outDir: String,
           asOf: org.apache.spark.sql.Column = current_date()): Result = {
     // Lineage is taken at the scan: input_file_name() is empty over the
-    // persisted annotated frame the warehouse is written from.
+    // materialized annotated frame the warehouse is written from.
     val raw = Harmonizer.loadSourceData(spark, dataDir)
       .withColumn("Source_File", input_file_name())
-    val validated = Validator.validate(raw)
-    val annotated = validated.annotated.persist(StorageLevel.MEMORY_AND_DISK)
+    val validated = Validator.Validated(Materialize(Validator.validate(raw).annotated))
     try {
       val counts = validated.counts
       val quarantinePath =
@@ -70,6 +71,6 @@ object Pipeline {
       val views = CountryViews.registerCountryViews(spark, warehouse, counts.countries, asOf)
       Result(warehouse, counts.quarantined, quarantinePath, counts.valid,
         counts.countries, views, counts.quarantinedByReason, counts.validByCountry)
-    } finally annotated.unpersist()
+    } finally Materialize.release(validated.annotated)
   }
 }

@@ -50,14 +50,7 @@ object DateParser {
   /** Parse one date string; Left = the reference's error message. */
   def parseDate(raw: String): Either[String, LocalDate] = {
     if (raw == null || raw.trim.isEmpty) return Left("Empty date string")
-    var s = raw.trim
-    // Float normalization (date_parser.py:32-37). Scala's toDouble accepts the
-    // same shapes as Python float() for this domain ("123", "1.5", "1e6").
-    try {
-      val f = s.toDouble
-      if (!f.isNaN && !f.isInfinite) s = f.toLong.toString
-    } catch { case _: NumberFormatException => }
-
+    val s = floatNormalized(raw.trim)
     val digits = s.filter(_.isDigit)
     if (digits.length >= 6) {
       compact(digits) match {
@@ -70,6 +63,32 @@ object DateParser {
   }
 
   def validateDate(raw: String): Boolean = parseDate(raw).isRight
+
+  /** Float normalization (date_parser.py:32-37): a string that parses as a
+    * finite float becomes its integer part. Scala's toDouble accepts the
+    * same shapes as Python float() for this domain ("123", "1.5", "1e6"). */
+  private[functions] def floatNormalized(s: String): String =
+    if (!mayParseAsDouble(s)) s
+    else
+      try {
+        val f = s.toDouble
+        if (!f.isNaN && !f.isInfinite) f.toLong.toString else s
+      } catch { case _: NumberFormatException => s }
+
+  /** False where `java.lang.Double.parseDouble` must reject `s`: it holds a
+    * '/', or a sign right after a digit (a sign is valid only first or after
+    * an exponent letter). That covers `MM/DD/YYYY` and `MM-DD-YYYY`, most
+    * dates, which then skip the exception `toDouble` would throw. */
+  private def mayParseAsDouble(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '/') return false
+      if ((c == '-' || c == '+') && i > 0 && Character.isDigit(s.charAt(i - 1))) return false
+      i += 1
+    }
+    true
+  }
 
   private sealed trait CompactResult
   private case class CompactOk(d: LocalDate) extends CompactResult

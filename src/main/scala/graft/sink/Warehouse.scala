@@ -9,8 +9,8 @@ import graft.schema.ColumnMappings
   *
   * The reference's manual chunk loop (50k-row chunks, a dead
   * `parallel_threads` knob — `snowflake_connector.py:206-238`) is replaced by
-  * Spark's partitioned parallel write: every partition is an independent
-  * writer task, so "chunking" and "parallelism" fall out of partition count.
+  * Spark's parallel write: every partition is an independent writer task,
+  * so "chunking" and "parallelism" fall out of partition count.
   */
 object Warehouse {
 
@@ -48,15 +48,14 @@ object Warehouse {
   def toWarehouse(df: DataFrame, sourceFile: Option[String] = None): DataFrame =
     withMetadata(normalizeNames(renameToWarehouse(df)), sourceFile)
 
-  /** S3: partitioned parallel write. `COUNTRY` partitioning gives the
-    * per-country views partition pruning on their final filter; at 100 TB the
-    * country cardinality (~200) keeps file counts sane while each partition
-    * still splits across many tasks. */
-  def write(df: DataFrame, path: String, partitionByCountry: Boolean = true,
-            mode: String = "append"): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionByCountry) w.partitionBy("COUNTRY") else w).parquet(path)
-  }
+  /** S3: parallel write, unpartitioned like the reference's one table
+    * (`snowflake_connector.py:166-246`): each write task writes one file and
+    * `COUNTRY` is a data column. No reader prunes on a country directory —
+    * the views rank the whole table before their country filter — so
+    * partitioning by country would only multiply the files, one per task
+    * and country. */
+  def write(df: DataFrame, path: String, mode: String = "append"): Unit =
+    df.write.mode(mode).parquet(path)
 
   /** Incremental merge: combine the existing table with an update batch and
     * keep, per key, the row ranking first by `orderCols` — the "latest

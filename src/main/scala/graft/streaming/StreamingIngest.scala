@@ -66,14 +66,13 @@ object StreamingIngest {
       .withColumn("Source_File", input_file_name())
     harmonized.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val validated = Validator.validate(batch.toDF())
-        val annotated = validated.annotated.persist()
+        val validated = Validator.Validated(Materialize(Validator.validate(batch.toDF()).annotated))
         try {
           validated.quarantine.write.mode("append").option("header", "true")
             .csv(s"$outDir/invalid_records")
           Warehouse.write(Warehouse.toWarehouse(validated.validRecords),
             s"$outDir/warehouse", mode = "append")
-        } finally annotated.unpersist()
+        } finally Materialize.release(validated.annotated)
         ()
       }
       .option("checkpointLocation", s"$outDir/_checkpoint")

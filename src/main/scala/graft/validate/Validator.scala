@@ -10,10 +10,11 @@ import graft.functions.GraftFunctions
   *
   * Spark-first shape: ONE annotation projection computes every date column's
   * `(error, value)` struct in a single pass (the UDF parses each value exactly
-  * once); `clean` and `quarantine` are two cheap filters over that frame. The
-  * caller should `cache()` [[Validated.annotated]] when materializing both
-  * outputs so the parse doesn't run twice (SURVEY.md §7.4.3) — at cluster
-  * scale use `persist(MEMORY_AND_DISK)` or write-once/read-twice.
+  * once); `clean` and `quarantine` are two cheap filters over that frame. A
+  * caller that reads more than one output should build [[Validated]] over
+  * `graft.Materialize(validate(df).annotated)`, so the parse runs once
+  * (SURVEY.md §7.4.3), and release that frame when done, as
+  * [[graft.Pipeline.run]] does.
   *
   * Intentional divergence from the reference (SURVEY.md §7.4.2): pandas
   * `astype(str)` turns missing values into the literal string `"nan"`, which
@@ -97,7 +98,7 @@ object Validator {
     def validRecords: DataFrame = clean.filter(isValid(col))
 
     /** [[Counts]] of [[validRecords]] and [[quarantine]] in one grouped
-      * aggregate over [[annotated]] (persisted, this query fills the cache).
+      * aggregate over [[annotated]].
       * A row counts once per failed mandatory date column, as the quarantine
       * union counts it. */
     def counts: Counts = {

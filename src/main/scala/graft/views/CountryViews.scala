@@ -148,6 +148,9 @@ object CountryViews {
     * registration. */
   private val LatestRowsView = "__graft_latest_customers"
 
+  /** The country views of each session's last registration. */
+  private val registered = new java.util.WeakHashMap[SparkSession, Seq[String]]()
+
   /** S6+S7: register each country view as a temp view — the Spark-native
     * replacement for generating SQL text files and executing them remotely
     * (`view_generator.py:17-72`, `main.py:107-139`). Views are lazy,
@@ -161,17 +164,22 @@ object CountryViews {
     * is still evaluated per query.
     * Replacing the temp view releases the previous registration's cache
     * (Spark uncaches a temp view whose plan changes), so a session holds at
-    * most one. */
+    * most one. The views of the session's previous registration for
+    * countries this one lacks are dropped, so none answers from an earlier
+    * warehouse; temp views this method did not register are left alone. */
   def registerCountryViews(spark: SparkSession, warehouse: DataFrame,
                            countries: Seq[String],
                            asOf: Column = current_date()): Seq[String] = {
     latestRows(warehouse).createOrReplaceTempView(LatestRowsView)
     spark.catalog.cacheTable(LatestRowsView, StorageLevel.DISK_ONLY)
     val deduped = withAsOf(spark.table(LatestRowsView), asOf)
-    countries.sorted.map { c =>
+    val names = countries.sorted.map { c =>
       val name = viewName(c)
       deduped.filter(col("COUNTRY") === lit(c)).createOrReplaceTempView(name)
       name
     }
+    val previous = registered.synchronized(Option(registered.put(spark, names)).getOrElse(Nil))
+    previous.filterNot(names.contains).foreach(spark.catalog.dropTempView)
+    names
   }
 }

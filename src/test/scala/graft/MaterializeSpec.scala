@@ -22,6 +22,16 @@ class MaterializeSpec extends SparkSpec {
 
   private val expected = (0L until 200L).map(i => (i, i * 7 % 13)).toSet
 
+  test("release drops a local checkpoint's blocks") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = Materialize(spark.range(0, 200, 1, 4).toDF("id"))
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.nonEmpty, "the local checkpoint persisted no RDD")
+    Materialize.release(df)
+    assert((sc.getPersistentRDDs.keySet & held).isEmpty)
+  }
+
   test("lost local checkpoint block: re-reading fails loudly, never returns rows") {
     val (df, nDropped) = materializeThenDropBlocks()
     assert(nDropped > 0, "no checkpoint block was dropped — the check is vacuous")
@@ -38,14 +48,14 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
-  /** Lines (1-based) of Scala source that call `.localCheckpoint(` or
-    * `.checkpoint(` in code: string literals and comments are blanked
-    * first, keeping their line breaks. */
-  private def checkpointCalls(src: String): Seq[Int] = {
+  /** Lines (1-based) of Scala source that call `.localCheckpoint(`,
+    * `.checkpoint(`, `.persist(` or `.cache()` in code: string literals and
+    * comments are blanked first, keeping their line breaks. */
+  private def materializeCalls(src: String): Seq[Int] = {
     val noise = """(?s)"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*.*?\*/""".r
     val code = noise.replaceAllIn(src, m =>
       scala.util.matching.Regex.quoteReplacement(m.matched.filter(_ == '\n')))
-    val call = """\.(localCheckpoint|checkpoint)\(""".r
+    val call = """\.(localCheckpoint\(|checkpoint\(|persist\(|cache\(\))""".r
     code.split("\n", -1).toSeq.zipWithIndex
       .collect { case (line, n) if call.findFirstIn(line).isDefined => n + 1 }
   }
@@ -57,8 +67,12 @@ class MaterializeSpec extends SparkSpec {
       "/** df.localCheckpoint() */ val b = 1",
       "val s = \"df.checkpoint()\"",
       "/* df.checkpoint()",
-      "   */ val c = \"a/*\"; df.checkpoint(eager = true)").mkString("\n")
-    assert(checkpointCalls(src) == Seq(1, 6))
+      "   */ val c = \"a/*\"; df.checkpoint(eager = true)",
+      "val d = df.persist(StorageLevel.MEMORY_AND_DISK)",
+      "val e = df.cache()",
+      "df.unpersist(); spark.catalog.cacheTable(t); val f = df.cached()",
+      "// df.cache()").mkString("\n")
+    assert(materializeCalls(src) == Seq(1, 6, 7, 8))
   }
 
   test("guard: only Materialize.scala checkpoints a frame directly") {
@@ -71,7 +85,7 @@ class MaterializeSpec extends SparkSpec {
     val offenders = for {
       f <- scalaFiles(root) if f.getName != "Materialize.scala"
       src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      line <- checkpointCalls(src)
+      line <- materializeCalls(src)
     } yield s"${f.getPath}:$line"
     assert(offenders.isEmpty,
       s"materialize through graft.Materialize, not directly: ${offenders.mkString(", ")}")

@@ -9,6 +9,7 @@ import graft.ingest.Harmonizer
 import graft.validate.Validator
 import graft.sink.Warehouse
 import graft.views.CountryViews
+import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end test over the three reference CSVs (SURVEY.md §5.3).
   * Expected values hand-derived from the reference semantics:
@@ -365,6 +366,62 @@ class PipelineSpec extends SparkSpec {
     val nodes = new AdaptiveSparkPlanHelper {}.collect(plan) { case n => n }
     assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
     assert(!nodes.exists(_.isInstanceOf[Exchange]), plan)
+  }
+
+  test("a reload drops the previous load's views of countries it lacks, and no other temp view") {
+    runAt(dataDir)
+    spark.range(1).createOrReplaceTempView("VIEW_NOT_A_LOAD")
+    assert(spark.catalog.tableExists("VIEW_IND"))
+    assert(runAt(inputDir(Seq("AUS"))).views == Seq("VIEW_AUS"))
+    assert(!spark.catalog.tableExists("VIEW_IND"))
+    assert(!spark.catalog.tableExists("VIEW_USA"))
+    assert(names("VIEW_AUS") == Seq("Cristina", "Mike"))
+    assert(spark.catalog.tableExists("VIEW_NOT_A_LOAD"))
+    spark.catalog.dropTempView("VIEW_NOT_A_LOAD")
+  }
+
+  test("the warehouse is one flat table: no COUNTRY= directory, one file per write task") {
+    // one CSV holding three countries in its Country column: one write task
+    val in = inputDir(Nil, "mixed.csv" -> Seq(
+      "ID,Name,VaccinationType,VaccinationDate,Doctor,State,Country,Consultation Date,Post Code",
+      "1,Ann,ABC,04/05/2022,Dr A,S1,AUS,05/05/2022,1",
+      "2,Bo,ABC,04/06/2022,Dr B,S2,IND,05/06/2022,2",
+      "3,Cy,XYZ,04/07/2022,Dr C,S3,USA,05/07/2022,3").mkString("", "\n", "\n"))
+    val out = java.nio.file.Files.createTempDirectory("graft-out").toString
+    val r = Pipeline.run(spark, in, out, asOf = lit("2026-08-12").cast("date"))
+    assert(r.validByCountry == Map("AUS" -> 1L, "IND" -> 1L, "USA" -> 1L))
+    // the write tasks are the input's scan partitions: nothing in between shuffles
+    def assertFlat(input: String, warehouse: String): Unit = {
+      val entries = new java.io.File(warehouse).listFiles().toSeq
+      assert(!entries.exists(_.isDirectory), entries)
+      val files = entries.filter(_.getName.endsWith(".parquet"))
+      val writeTasks = Harmonizer.loadSourceData(spark, input).rdd.getNumPartitions
+      assert(files.nonEmpty && files.size <= writeTasks, s"$warehouse: ${files.size} files")
+    }
+    assertFlat(in, s"$out/warehouse")
+    assert(result.validCount == 8)
+    assertFlat(dataDir, s"$outDir/warehouse")
+    assert(r.warehouse.columns.count(_ == "COUNTRY") == 1)
+    assert(spark.read.parquet(s"$out/warehouse").schema == r.warehouse.schema)
+  }
+
+  test("under a checkpoint dir a run gives the local result and leaves no checkpoint files") {
+    def report(r: Pipeline.Result) = (r.validCount, r.quarantineCount, r.countries,
+      r.views, r.quarantinedByReason, r.validByCountry)
+    def viewRows(r: Pipeline.Result) =
+      r.views.map(v => spark.table(v).orderBy("CUST_I").collect().map(_.toSeq).toSeq)
+    val local = runAt(dataDir)
+    val (localReport, localViews) = (report(local), viewRows(local))
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try {
+      val reliable = runAt(dataDir)
+      assert(report(reliable) == localReport)
+      assert(viewRows(reliable) == localViews)
+      val left = java.nio.file.Files.walk(dir).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+      assert(left.isEmpty, left)
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("warehouse name normalization uppercases and strips") {

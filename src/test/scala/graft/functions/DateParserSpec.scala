@@ -80,4 +80,36 @@ class DateParserSpec extends AnyFunSuite {
     assert(failures.isEmpty,
       s"${failures.size}/$n mismatches:\n${failures.take(20).mkString("\n")}")
   }
+
+  /** The float normalization as it was before strings Java's parser must
+    * reject skipped `toDouble`: try it on every string. */
+  private def normalizedByTrying(s: String): String =
+    try {
+      val f = s.toDouble
+      if (!f.isNaN && !f.isInfinite) f.toLong.toString else s
+    } catch { case _: NumberFormatException => s }
+
+  test("float normalization agrees with trying toDouble on every string") {
+    val rng = new scala.util.Random(20260812)
+    val dates = Seq.fill(500)(java.time.LocalDate.ofEpochDay(rng.nextInt(80000) - 25000))
+    def two(n: Int) = f"$n%02d"
+    // the benchmark generator's valid and invalid spellings
+    val generated = dates.flatMap { d =>
+      val (m, dd, y) = (d.getMonthValue, d.getDayOfMonth, d.getYear)
+      Seq(s"${two(m)}/${two(dd)}/$y", s"${two(m)}-${two(dd)}-$y", s"${two(m)}${two(dd)}$y",
+        s"$m${two(dd)}$y", d.toString, s"13/${two(dd)}/$y", s"${two(m)}/00/$y",
+        s"02/30/$y", s"${two(m)}/${two(dd)}/1850", s"$m/$dd")
+    } ++ Seq("", "02/29/1900", "NULL")
+    val edges = Seq("1e6", "12f", "0x1p3", "NaN", "+5", "0102022", "-5", "5-", "1e-5",
+      "1E+5", "1-2", "1+2", "+-1", "--1", "Infinity", "-Infinity", "0x1P-3", "0x1p+3",
+      "12d", "1.5e3f", "1/2", "1.", ".5", "e5", "6152022.0", "-6152022", "1e400",
+      "9e18", "1 -2", "1e5-", "0xA-1", "\u0663-1")
+    // random strings over the characters Java's float grammar gives meaning to
+    val alphabet = "0123456789/-+.eEfFdDxXpPNaIinfty "
+    val random = Seq.fill(20000)(
+      Seq.fill(rng.nextInt(12))(alphabet(rng.nextInt(alphabet.length))).mkString.trim)
+    val diffs = (generated ++ edges ++ random).filter(s =>
+      DateParser.floatNormalized(s) != normalizedByTrying(s))
+    assert(diffs.isEmpty, diffs.take(20))
+  }
 }
