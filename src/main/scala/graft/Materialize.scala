@@ -35,7 +35,8 @@ object Materialize {
     * the RDD is garbage-collected on the driver, which a long-lived session
     * may not do for a while). A no-op for any frame that is not itself a
     * checkpoint (a plan built on one keeps its source's data). Best-effort:
-    * a failed delete is ignored. */
+    * a failed delete is ignored. Logs nothing: the blocks are dropped
+    * through [[org.apache.spark.graft.ListenerFlush.unpersistQuietly]]. */
   def release(ds: Dataset[_]): Unit =
     ds.queryExecution.logical match {
       case r: LogicalRDD if r.rdd.isCheckpointed =>
@@ -46,7 +47,9 @@ object Materialize {
               .delete(path, true)
           }
         }
-        r.rdd.unpersist(blocking = false)
+        // not r.rdd.unpersist: it warns on every local checkpoint
+        org.apache.spark.graft.ListenerFlush
+          .unpersistQuietly(r.rdd.sparkContext, r.rdd.id, blocking = false)
       case _ => ()
     }
 }

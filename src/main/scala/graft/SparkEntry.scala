@@ -56,6 +56,30 @@ object SparkEntry {
     else df.repartition(want)
   }
 
+  /** The extracted text of each document's synthetic HTML page — the one
+    * projection q_text_extract and its streaming twin share. */
+  private[graft] def syntheticPageText(docs: DataFrame): DataFrame =
+    operators.TextExtract.fromHtml(
+      docs.select(col("doc_id"),
+        operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
+          .as("html")),
+      "doc_id", "html")
+
+  /** Header-parsed features of each document's synthetic media payload,
+    * as long columns — the one projection q_multimodal_features and its
+    * streaming twin share. */
+  private[graft] def syntheticMediaFeatures(docs: DataFrame): DataFrame = {
+    implicit val sp: SparkSession = docs.sparkSession
+    operators.Multimodal.extractFeatures(
+        operators.Multimodal.syntheticMediaRecords(docs, "doc_id")).toDF()
+      .select(col("media_id"),
+        col("n_bytes").cast("long").as("n_bytes"),
+        col("width").cast("long").as("width"),
+        col("height").cast("long").as("height"),
+        col("channels").cast("long").as("channels"),
+        size(col("frame_offsets")).cast("long").as("n_frames"))
+  }
+
   /** Regression feature frame for the LinearModel queries: predict text
     * LENGTH from token/stopword counts (profile-derived, ONE fused scan)
     * — the fitted weights are interpretable (≈ mean word length, and the
@@ -2103,8 +2127,6 @@ object SparkEntry {
   /** Exact sum: decimal arithmetic, double surface. */
   private[graft] def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(s"decimal(18,$scale)")).cast("double")
-
-  private[graft] val streamCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Entity-resolution fixture: parts < 300 as clean records plus one
     * deliberately corrupted twin each (id + 100000) — one character

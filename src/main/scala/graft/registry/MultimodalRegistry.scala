@@ -378,15 +378,7 @@ private[graft] object MultimodalRegistry extends QueryRegistry {
     // deterministic in doc_id) are decoded by genuine header parsing; the
     // oracle recomputes the expected features from doc_id by construction.
     "q_multimodal_features" -> ((s, dir) => {
-      implicit val sp: SparkSession = s
-      val media = Multimodal.syntheticMediaRecords(spread(t(s, dir, "documents")), "doc_id")
-      Multimodal.extractFeatures(media).toDF()
-        .select(col("media_id"),
-          col("n_bytes").cast("long").as("n_bytes"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          col("channels").cast("long").as("channels"),
-          size(col("frame_offsets")).cast("long").as("n_frames"))
+      syntheticMediaFeatures(spread(t(s, dir, "documents")))
         .orderBy(col("media_id"))
     }),
 

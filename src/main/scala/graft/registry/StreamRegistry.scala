@@ -27,8 +27,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // q_stream_anomalies / q_stream_auc pattern.
     "q_stream_pmi" -> ((s, dir) =>
       StreamingIngest.runStreamPmiBounded(s, s"$dir/documents.parquet",
-        "text", minCount = 5, topK = 100,
-        queryName = s"stream_pmi_${streamCounter.incrementAndGet()}")),
+        "text", minCount = 5, topK = 100)),
 
 
     // The same keyword extraction with the (cls, term) counts as
@@ -36,8 +35,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // identically, sharing the batch oracle verbatim (full hash gate).
     "q_stream_keywords" -> ((s, dir) =>
       StreamingIngest.runStreamKeywordsBounded(s, s"$dir/documents.parquet",
-        "lang", "text", minCount = 5, topK = 20,
-        queryName = s"stream_kw_${streamCounter.incrementAndGet()}")
+        "lang", "text", minCount = 5, topK = 20)
         .orderBy(col("cls"), col("odds_ppm").desc, col("a").desc, col("term"))),
 
 
@@ -52,7 +50,8 @@ private[graft] object StreamRegistry extends QueryRegistry {
         s"${System.getProperty("java.io.tmpdir")}/graft_tx_src_${runTag(dir)}"
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
-      streaming.StreamingIngest.runStreamTextExtractBounded(s, src, "doc_id")
+      streaming.StreamingIngest.runStreamRowMapBounded(s, src,
+          syntheticPageText, keyCols = Seq("doc_id"))
         .orderBy(col("doc_id"))
     }),
 
@@ -341,8 +340,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     "q_stream_traps" -> ((s, dir) => {
       StreamingIngest.runStreamTrapLedger(s, s"$dir/documents.parquet",
           trapFixturePages, "url", "fp", k = 4096, minUrls = 10,
-          maxDiversity = 0.2,
-          queryName = s"stream_traps_${streamCounter.incrementAndGet()}")
+          maxDiversity = 0.2)
         .orderBy(col("template"))
     }),
 
@@ -485,8 +483,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     "q_stream_auc" -> ((s, dir) =>
       StreamingIngest.runStreamAucBounded(s, s"$dir/events.parquet",
         pmod(col("user_id"), lit(3)), floor(col("value") * 1000),
-        col("event_type") === "purchase",
-        queryName = s"stream_auc_${streamCounter.incrementAndGet()}")
+        col("event_type") === "purchase")
         .orderBy(col("grp"))),
 
 
@@ -544,14 +541,14 @@ private[graft] object StreamRegistry extends QueryRegistry {
         s"${System.getProperty("java.io.tmpdir")}/graft_mm_src_${runTag(dir)}"
       t(s, dir, "documents").select(col("doc_id"))
         .repartition(4).write.mode("overwrite").parquet(src)
-      streaming.StreamingIngest.runStreamMultimodalBounded(s, src, "doc_id")
+      streaming.StreamingIngest.runStreamRowMapBounded(s, src,
+          syntheticMediaFeatures, keyCols = Seq("media_id"))
         .orderBy(col("media_id"))
     }),
 
 
     "q_stream_hourly" -> ((s, dir) =>
-      StreamingIngest.runWindowedEventAgg(s, s"$dir/events.parquet",
-        s"events_windowed_${streamCounter.incrementAndGet()}")
+      StreamingIngest.runWindowedEventAgg(s, s"$dir/events.parquet")
         .orderBy(col("window_start"), col("event_type"))),
 
 
@@ -561,8 +558,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // inequality join is the exact oracle.
     "q_stream_join" -> ((s, dir) =>
       StreamingIngest.runAttributionBounded(s, s"$dir/events.parquet",
-        windowMicros = 7200000000L,
-        queryName = s"stream_join_${streamCounter.incrementAndGet()}")
+        windowMicros = 7200000000L)
         .orderBy(col("user_id"), col("view_event_id"), col("purchase_event_id"))),
 
 
@@ -576,15 +572,8 @@ private[graft] object StreamRegistry extends QueryRegistry {
       val stream = s.readStream.schema(schema).parquet(path + "*")
       val keyed = stream.select(
         array_join(slice(split(trim(lower(col("text"))), "\\s+"), 1, 5), " ").as("key5"))
-      val name = s"stream_dedup_${streamCounter.incrementAndGet()}"
-      // state partitions sized to the key cardinality (~500 distinct keys),
-      // not the batch session's partition count — see withStatePartitions
-      StreamingIngest.withStatePartitions(s, 8) {
-        val q = StreamingIngest.streamingDedup(keyed, "key5")
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(name).select(col("key5")).orderBy(col("key5"))
+      StreamingIngest.memorySnapshot(StreamingIngest.streamingDedup(keyed, "key5"), "append")
+        .select(col("key5")).orderBy(col("key5"))
     }),
 
 
@@ -814,8 +803,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // (round-14 headliner fold; raw summary in the API).
     "q_stream_hotkeys" -> ((s, dir) => {
       val sk = streaming.StreamingIngest.runStreamHotKeysBounded(s,
-        s"$dir/events.parquet", "user_id", capacity = 32,
-        queryName = s"stream_hotkeys_${streamCounter.incrementAndGet()}")
+        s"$dir/events.parquet", "user_id", capacity = 32)
       val items = t(s, dir, "events").filter(col("user_id").isNotNull)
         .select(col("user_id").cast("long").as("item"))
       items.agg(count(lit(1)).as("n"))
@@ -829,8 +817,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // against exact batch counts of the same events. Violations only.
     "q_stream_hotkeys_verify" -> ((s, dir) => {
       val sk = streaming.StreamingIngest.runStreamHotKeysBounded(s,
-        s"$dir/events.parquet", "user_id", capacity = 32,
-        queryName = s"stream_hotkeys_v_${streamCounter.incrementAndGet()}")
+        s"$dir/events.parquet", "user_id", capacity = 32)
       val items = t(s, dir, "events").filter(col("user_id").isNotNull)
         .select(col("user_id").cast("long").as("item"))
       operators.HeavyHitters.violationsAgainst(sk, items, capacity = 32)
@@ -851,14 +838,9 @@ private[graft] object StreamRegistry extends QueryRegistry {
       val stream = s.readStream.schema(ev.schema).parquet(path + "*")
         .select(col("user_id"), col("event_type"),
           EventTime.timestamp(ev).as("tsm"))
-      val name = s"stream_dedup_wm_${streamCounter.incrementAndGet()}"
-      StreamingIngest.withStatePartitions(s, 8) {
-        val q = StreamingIngest.dedupWithinWatermark(
-            stream, Seq("user_id", "event_type"), "tsm", delay)
-          .writeStream.outputMode("append").format("memory").queryName(name).start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      s.table(name).select(col("user_id"), col("event_type"))
+      StreamingIngest.memorySnapshot(StreamingIngest.dedupWithinWatermark(
+          stream, Seq("user_id", "event_type"), "tsm", delay), "append")
+        .select(col("user_id"), col("event_type"))
         .orderBy(col("user_id"), col("event_type"))
     }),
 
@@ -870,8 +852,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // staged far-future sentinel row.
     "q_stream_sessions" -> ((s, dir) =>
       StreamingIngest.runSessionizeBounded(s, s"$dir/events.parquet",
-        gapMicros = 1800L * 1000 * 1000,
-        queryName = s"stream_sessions_${streamCounter.incrementAndGet()}")
+        gapMicros = 1800L * 1000 * 1000)
         .select(col("user_id"), col("session_start"), col("session_last"),
           col("n_events"))
         .orderBy(col("user_id"), col("session_start"))),
@@ -882,8 +863,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // it bit-identical to batch, so it shares q_rate_anomalies' oracle.
     "q_stream_anomalies" -> ((s, dir) =>
       StreamingIngest.runStreamRateAnomaliesBounded(s, s"$dir/events.parquet",
-        "event_type", bucketMicros = 3600L * 1000 * 1000, window = 24, k = 3,
-        queryName = s"stream_anom_${streamCounter.incrementAndGet()}")
+        "event_type", bucketMicros = 3600L * 1000 * 1000, window = 24, k = 3)
         .orderBy(col("key"), col("bucket"))),
 
 
@@ -892,8 +872,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // in the state store. Rows-only; the gate below pins the result.
     "q_stream_hll" -> ((s, dir) =>
       StreamingIngest.runStreamDistinctBounded(s, s"$dir/events.parquet",
-        "event_type", "user_id", lgK = 12,
-        queryName = s"stream_hll_${streamCounter.incrementAndGet()}")
+        "event_type", "user_id", lgK = 12)
         .orderBy(col("segment"))),
 
 
@@ -903,8 +882,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // stronger gate than any error bound. Violations only.
     "q_stream_hll_verify" -> ((s, dir) => {
       val stream = StreamingIngest.runStreamDistinctBounded(s,
-        s"$dir/events.parquet", "event_type", "user_id", lgK = 12,
-        queryName = s"stream_hllv_${streamCounter.incrementAndGet()}")
+        s"$dir/events.parquet", "event_type", "user_id", lgK = 12)
       val batch = operators.Profiler.nativeDistinctRollup(
         t(s, dir, "events"), "event_type", "user_id")
       // null-safe segment join: a NULL segment is a real segment; a plain
@@ -930,8 +908,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
       val est = Materialize(StreamingIngest.runStreamQuantileBounded(s,
         s"$dir/events.parquet", "event_type",
         floor(col("value").cast("double") * 1e6), k = 256,
-        ps = Seq(0.25, 0.5, 0.75, 0.95),
-        queryName = s"stream_kll_${streamCounter.incrementAndGet()}"))
+        ps = Seq(0.25, 0.5, 0.75, 0.95)))
       val values = t(s, dir, "events")
         .withColumn("__v", floor(col("value").cast("double") * 1e6).cast("long"))
         .filter(col("__v").isNotNull)
@@ -953,8 +930,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
       val est = StreamingIngest.runStreamQuantileBounded(s,
         s"$dir/events.parquet", "event_type",
         floor(col("value").cast("double") * 1e6), k = 256,
-        ps = Seq(0.25, 0.5, 0.75, 0.95),
-        queryName = s"stream_kllv_${streamCounter.incrementAndGet()}")
+        ps = Seq(0.25, 0.5, 0.75, 0.95))
       val values = t(s, dir, "events")
         .withColumn("__v", floor(col("value").cast("double") * 1e6).cast("long"))
         .filter(col("__v").isNotNull)
@@ -972,8 +948,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // gate below pins the result.
     "q_stream_kmv" -> ((s, dir) =>
       StreamingIngest.runStreamOverlapBounded(s, s"$dir/events.parquet",
-        "event_type", "user_id", k = 512,
-        queryName = s"stream_kmv_${streamCounter.incrementAndGet()}")
+        "event_type", "user_id", k = 512)
         .orderBy(col("seg_a"), col("seg_b"))),
 
 
@@ -982,8 +957,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // regardless of how the replay batched. Violations only.
     "q_stream_kmv_verify" -> ((s, dir) => {
       val stream = StreamingIngest.runStreamOverlapBounded(s,
-        s"$dir/events.parquet", "event_type", "user_id", k = 512,
-        queryName = s"stream_kmvv_${streamCounter.incrementAndGet()}")
+        s"$dir/events.parquet", "event_type", "user_id", k = 512)
       val batch = operators.SetSketch.pairOverlap(
         t(s, dir, "events"), "event_type", "user_id", k = 512)
       val sCols = stream.columns.map(c => col(c).as(s"s_$c"))
@@ -1013,8 +987,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     "q_stream_bloom" -> ((s, dir) => {
       val stream = StreamingIngest.runStreamBloomBounded(s,
         s"$dir/events.parquet", "event_type", "user_id",
-        numBits = 1 << 15, numHashes = 7,
-        queryName = s"stream_bloom_${streamCounter.incrementAndGet()}")
+        numBits = 1 << 15, numHashes = 7)
       val members = t(s, dir, "events").filter(col("user_id").isNotNull)
         .select(col("event_type").cast("string").as("segment"),
           col("user_id").cast("long").as("__v"))
@@ -1038,8 +1011,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     "q_stream_bloom_verify" -> ((s, dir) => {
       val stream = StreamingIngest.runStreamBloomBounded(s,
         s"$dir/events.parquet", "event_type", "user_id",
-        numBits = 1 << 15, numHashes = 7,
-        queryName = s"stream_bloomv_${streamCounter.incrementAndGet()}")
+        numBits = 1 << 15, numHashes = 7)
       val ev = t(s, dir, "events").filter(col("user_id").isNotNull)
       val batch = ev
         .groupBy(col("event_type").cast("string").as("segment"))
@@ -1074,8 +1046,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // the replay. Rows-only; pinned by the gate below.
     "q_stream_cms" -> ((s, dir) =>
       StreamingIngest.runStreamFreqBounded(s, s"$dir/events.parquet",
-        "user_id", k = 25, depth = 10, width = 2048,
-        queryName = s"stream_cms_${streamCounter.incrementAndGet()}")
+        "user_id", k = 25, depth = 10, width = 2048)
         .orderBy(col("exact_cnt").desc, col("item"))),
 
 
@@ -1083,8 +1054,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // batch estimates BIT-EXACTLY for every probe item. Violations only.
     "q_stream_cms_verify" -> ((s, dir) => {
       val stream = StreamingIngest.runStreamFreqBounded(s,
-        s"$dir/events.parquet", "user_id", k = 25, depth = 10, width = 2048,
-        queryName = s"stream_cmsv_${streamCounter.incrementAndGet()}")
+        s"$dir/events.parquet", "user_id", k = 25, depth = 10, width = 2048)
       val batch = operators.FreqSketch.topItemEstimates(
         t(s, dir, "events"), "user_id", k = 25)
       stream.withColumnRenamed("exact_cnt", "s_exact")

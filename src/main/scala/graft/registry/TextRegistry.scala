@@ -129,15 +129,8 @@ private[graft] object TextRegistry extends QueryRegistry {
     // the expected content — constant h1 + text + uppercase twin — from
     // the source column directly, so parse/segment/classify/entity-decode
     // is hash-gated end-to-end (the synthetic-PNG playbook for text).
-    "q_text_extract" -> ((s, dir) => {
-      val docs = spread(t(s, dir, "documents"))
-      operators.TextExtract.fromHtml(
-        docs.select(col("doc_id"),
-          operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
-            .as("html")),
-        "doc_id", "html")
-        .orderBy(col("doc_id"))
-    }),
+    "q_text_extract" -> ((s, dir) =>
+      syntheticPageText(spread(t(s, dir, "documents"))).orderBy(col("doc_id"))),
 
 
     // Block-level view of the same pages: every segmented block's tag,

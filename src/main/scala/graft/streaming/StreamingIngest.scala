@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,8 +15,28 @@ import graft.Materialize
   * tumbling-window aggregation.
   *
   * At scale the same plan runs over a Kafka/file stream with checkpointing;
-  * locally the memory sink + `processAllAvailable` drives it synchronously
-  * for tests and the correctness harness.
+  * locally every `run*` twin replays a BOUNDED source synchronously for
+  * tests and the correctness harness, through one of three drivers:
+  *
+  *  - [[eachBatch]]: an append-mode `foreachBatch` query run to
+  *    `processAllAvailable` and stopped in `finally`. Runners that keep
+  *    several per-batch maps (curate, ER, DSIR, Pareto) use it directly.
+  *  - [[collectBatches]]: `eachBatch` plus one materialized frame per
+  *    batch, unioned at the end; no batch at all is an error.
+  *  - [[memorySnapshot]]: a complete- or append-mode memory-sink query
+  *    whose final table is the result.
+  *
+  * Bounded replay: a source is listed once. `maxFilesPerTrigger <= 0`
+  * sets no cap, so the whole input is ONE micro-batch; a positive value
+  * forces one batch per N files, which the cross-batch-state twins use to
+  * make their state genuinely carry across batches. Every per-batch
+  * result is keyed by its batch id, so a redelivered batch overwrites its
+  * own entry instead of adding a second copy. Stateful queries run under
+  * 8 state partitions (see [[withStatePartitions]]), and a memory-sink
+  * run fails if any state operator dropped a row as late: each twin is
+  * built so that nothing can be late on a bounded replay.
+  *
+  * Each runner's scaladoc carries only its own stream ≡ batch argument.
   */
 object StreamingIngest {
 
@@ -156,8 +180,7 @@ object StreamingIngest {
     * Production (unbounded) streams need none of this — later events
     * advance the watermark naturally. */
   def runSessionizeBounded(spark: SparkSession, parquetPath: String,
-                           gapMicros: Long, queryName: String,
-                           statePartitions: Int = 8,
+                           gapMicros: Long,
                            keyCol: String = "user_id",
                            tsCol: String = "ts"): DataFrame = {
     val ev = spark.read.parquet(parquetPath)
@@ -188,7 +211,7 @@ object StreamingIngest {
     // processed EARLY (e.g. if someone adds maxFilesPerTrigger to these
     // sources) would advance the watermark 3 gaps past max event time
     // and real rows arriving later would be silently dropped as late —
-    // which is why the run asserts numRowsDroppedByWatermark == 0 below.
+    // which memorySnapshot's no-late-rows check turns into a failure.
     val stage = java.nio.file.Files.createTempDirectory("graft-sess-stage").toString
     val maxUs = ev.agg(max(graft.functions.EventTime.microsFor(tsType, tsCol)))
       .head().getLong(0)
@@ -201,28 +224,13 @@ object StreamingIngest {
         graft.functions.EventTime.literalFor(tsType, maxUs + 3 * gapMicros))
       .coalesce(1)
       .write.mode("overwrite").parquet(stage)
-    val stream = spark.readStream.schema(ev.schema).parquet(streamGlob(parquetPath))
+    val stream = boundedStream(spark, parquetPath, ev.schema, 0)
       .union(spark.readStream.schema(ev.schema).parquet(stage + "/*.parquet"))
       .withColumn("__tsm", graft.functions.EventTime.timestampFor(tsType, tsCol))
-    try {
-      withStatePartitions(spark, statePartitions) {
-        val q = sessionizedEvents(stream, gapMicros, keyCol, "__tsm")
-          .writeStream.outputMode("append").format("memory")
-          .queryName(queryName).start()
-        try {
-          q.processAllAvailable()
-          val dropped = watermarkDropped(q)
-          require(dropped == 0,
-            s"runSessionizeBounded: $dropped rows dropped as late — the " +
-              "sentinel was processed before real rows; see the staging " +
-              "comment (single-batch file listing is the invariant)")
-        } finally q.stop()
-      }
-    } finally {
-      // the memory sink holds the result; the staged copy is disposable
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
-    }
-    spark.table(queryName).filter(col(keyCol) >= 0)
+    // the memory sink holds the result; the staged copy is disposable
+    try memorySnapshot(sessionizedEvents(stream, gapMicros, keyCol, "__tsm"), "append")
+      .filter(col(keyCol) >= 0)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stage))
   }
 
   /** Stream-stream interval join — the attribution shape ("purchase within
@@ -260,8 +268,7 @@ object StreamingIngest {
     * (One residual boundary: a row at EXACTLY epoch 0 is evicted against
     * the initial state watermark, also 0 — real event time never is.) */
   def runAttributionBounded(spark: SparkSession, parquetPath: String,
-                            windowMicros: Long, queryName: String,
-                            statePartitions: Int = 8): DataFrame = {
+                            windowMicros: Long): DataFrame = {
     val ev = spark.read.parquet(parquetPath)
     val evUs = graft.functions.EventTime.micros(ev)
     val window_ = s"$windowMicros microseconds"
@@ -273,7 +280,7 @@ object StreamingIngest {
     // inject, so both sides stream straight from the source glob — the
     // previous staged copy paid a full write job per run for nothing.
     def side(eventType: String, prefix: String): DataFrame =
-      spark.readStream.schema(ev.schema).parquet(streamGlob(parquetPath))
+      boundedStream(spark, parquetPath, ev.schema, 0)
         .filter(col("event_type") === eventType)
         .select(col("user_id").as(s"${prefix}_user_id"),
           col("event_id").as(s"${prefix}_event_id"),
@@ -282,19 +289,7 @@ object StreamingIngest {
     val joined = intervalJoin(
       side("view", "v"), side("purchase", "p"),
       "v_user_id", "p_user_id", "v_tsm", "p_tsm", window_)
-    withStatePartitions(spark, statePartitions) {
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(queryName).start()
-      try {
-        q.processAllAvailable()
-        val dropped = watermarkDropped(q)
-        require(dropped == 0,
-          s"runAttributionBounded: $dropped rows dropped as late — the " +
-            "full-span watermark delay should make lateness impossible " +
-            "on a bounded replay")
-      } finally q.stop()
-    }
-    spark.table(queryName)
+    memorySnapshot(joined, "append")
       .select(col("v_user_id").as("user_id"),
         col("v_event_id").as("view_event_id"),
         col("p_event_id").as("purchase_event_id"),
@@ -312,20 +307,11 @@ object StreamingIngest {
   private def streamGlob(parquetPath: String): String =
     if (parquetPath.endsWith("*")) parquetPath else parquetPath + "*"
 
-  /** Bounded file-source reader for the batch-count-INVARIANT twins.
-    * `maxFilesPerTrigger <= 0` (now the default at those runners) sets NO
-    * trigger cap: the source lists once and the whole bounded input flows
-    * through ONE micro-batch — one planning round, one foreachBatch body,
-    * one sink commit — the availableNow posture for a bounded replay.
-    * Each of those runners' scaladocs proves its result is arrival-order-
-    * and batch-count-invariant (that proof is what lets them share the
-    * batch oracle), so the batch count is pure execution overhead there:
-    * at the r19 profile, 4 micro-batches cost ~2.4 s of planning/commit
-    * per stream query ON TOP of 4× the per-batch checkpoint jobs. A
-    * positive value still forces one batch per N files — the cross-batch-
-    * state specs pin 1 to keep genuinely exercising the incremental
-    * paths, and order-SENSITIVE runners (Misra–Gries hot keys) keep their
-    * multi-batch default. */
+  /** Bounded parquet file-source stream (see the object scaladoc for the
+    * `maxFilesPerTrigger` rule). One micro-batch is the default for the
+    * batch-count-INVARIANT twins: there the batch count is pure execution
+    * overhead (4 micro-batches cost ~2.4 s of planning and commit per
+    * stream query, on top of 4× the per-batch checkpoint jobs). */
   private def boundedStream(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType,
       maxFilesPerTrigger: Int): DataFrame = {
@@ -335,15 +321,58 @@ object StreamingIngest {
     r2.parquet(streamGlob(path))
   }
 
-  /** Sum of rows the state operators dropped as late across a bounded
-    * run — used as a loud guard where the harness DESIGN guarantees no
-    * lateness (sentinel unions, full-span watermark delays), so any
-    * nonzero count is a harness bug, not data skew. */
-  private def watermarkDropped(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Long =
-    q.recentProgress.iterator
+  /** Run `stream` to the end of its bounded input as an append-mode
+    * `foreachBatch` query, handing `body` each micro-batch and its id. The
+    * query is stopped even when a batch fails; the failure reaches the
+    * caller from `processAllAvailable`. */
+  private def eachBatch(stream: DataFrame)(body: (DataFrame, Long) => Unit): Unit = {
+    val q = stream.writeStream
+      .outputMode("append")
+      .foreachBatch(body)
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+  }
+
+  private def byBatchId() = new ConcurrentHashMap[java.lang.Long, DataFrame]()
+
+  /** [[eachBatch]] keeping ONE frame per batch id: `f`'s result is
+    * materialized (it must outlive the batch frame) and put under its
+    * batch id, and the union of all of them is returned. A stream that
+    * produced no batch fails, naming `who`. */
+  private def collectBatches(stream: DataFrame, who: String)(
+      f: (DataFrame, Long) => DataFrame): DataFrame = {
+    val results = byBatchId()
+    eachBatch(stream)((batch, bid) => results.put(bid, Materialize(f(batch, bid))))
+    require(!results.isEmpty, s"$who: stream produced no batches")
+    results.values.asScala.reduce(_ unionByName _)
+  }
+
+  private val sinkNames = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Run `frame` to the end of its bounded input into a memory sink, in
+    * `outputMode`, under 8 state partitions, and return the sink's final
+    * table. The sink's name is drawn from a JVM-wide counter, so back-to-
+    * back runs never share a table. Fails if any state operator dropped a
+    * row as late: on a bounded replay that is a bug in the runner's
+    * design (sentinel order, watermark delay), not data skew. */
+  private[graft] def memorySnapshot(frame: DataFrame, outputMode: String): DataFrame = {
+    val spark = frame.sparkSession
+    val name = s"graft_stream_${sinkNames.incrementAndGet()}"
+    val progress = withStatePartitions(spark, 8) {
+      val q = frame.writeStream.outputMode(outputMode).format("memory")
+        .queryName(name).start()
+      try q.processAllAvailable()
+      finally q.stop()
+      q.recentProgress
+    }
+    val dropped = progress.iterator
       .flatMap(_.stateOperators.iterator)
       .map(_.numRowsDroppedByWatermark).sum
+    require(dropped == 0,
+      s"$name: $dropped rows dropped as late on a bounded replay")
+    spark.table(name)
+  }
 
   /** Run a thunk with `spark.sql.shuffle.partitions` temporarily set to
     * `n`, restoring the previous value after. Stateful streaming queries
@@ -353,7 +382,7 @@ object StreamingIngest {
     * distinct groups), not a session-wide default. A few thousand groups do
     * not need (or want) the batch session's partition count: every extra
     * state store is per-batch open/commit/maintenance overhead. */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
+  private def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, n.toString)
@@ -490,22 +519,17 @@ object StreamingIngest {
   /** One lock object per upsert table path in this JVM — see the
     * same-JVM serialization note in [[streamUpsertToWarehouse]]. */
   private val upsertLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+    new ConcurrentHashMap[String, Object]()
 
   /** Bounded-stream driver for [[streamUpsertToWarehouse]]: streams a
-    * parquet path (optionally a few files per trigger, to force MULTIPLE
+    * parquet path (a positive `maxFilesPerTrigger` forces MULTIPLE
     * micro-batches through the merge) and returns the final table. */
   def runStreamUpsertBounded(spark: SparkSession, parquetPath: String,
                              tablePath: String, keyCols: Seq[String],
                              orderCols: Seq[org.apache.spark.sql.Column],
                              maxFilesPerTrigger: Int = 0): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val reader = spark.readStream.schema(schema)
-    val withTrigger =
-      if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      else reader
-    val stream = normalizeTs(withTrigger.parquet(streamGlob(parquetPath)))
+    val stream = normalizeTs(boundedStream(spark, parquetPath, schema, maxFilesPerTrigger))
     val checkpoint = java.nio.file.Files
       .createTempDirectory("graft-upsert-ckpt").toString
     val q = streamUpsertToWarehouse(stream, tablePath, keyCols, orderCols, checkpoint)
@@ -521,11 +545,10 @@ object StreamingIngest {
     * batch-trained multinomial NB model (graft.operators.Classify) — the
     * standard train-once/score-forever serving shape. The model tables are
     * materialized ONCE ([[graft.Materialize]]) before the stream starts; each
-    * micro-batch scores its documents in foreachBatch (a document is one
-    * row, so scoring needs no cross-batch state) and appends to an
-    * in-memory sink. Appends are idempotent per doc — scoring is a pure
-    * deterministic function of (doc, model) — so at-least-once foreachBatch
-    * composes to exactly-once results after a final per-doc dedup.
+    * micro-batch scores its documents (a document is one row, so scoring
+    * needs no cross-batch state). Scoring is a pure deterministic function
+    * of (doc, model), so the batch-id-keyed results are replay-idempotent
+    * and a final per-doc dedup leaves exactly the batch scores.
     *
     * 100-TB posture: the model is vocabulary-sized and broadcasts into
     * every batch; per-batch cost is the batch's own (doc,·)-keyed
@@ -538,24 +561,9 @@ object StreamingIngest {
       .trainNaiveBayes(trainDf, textCol, labelCol).materialize
     val schema = spark.read.parquet(scoreParquetPath).schema
     val stream = boundedStream(spark, scoreParquetPath, schema, maxFilesPerTrigger)
-    val sink = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // score THIS batch under the shared model; persist eagerly so the
-        // result survives the batch frame's lifecycle
-        sink.add(Materialize(graft.operators.Classify
-          .scoreNaiveBayes(model, batch, idCol, textCol)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = sink.asScala.toSeq
-    require(parts.nonEmpty, "runStreamClassifyBounded: stream produced no batches")
-    // replayed batches re-emit identical rows; one per doc survives
-    parts.reduce(_ unionByName _).dropDuplicates(idCol)
+    collectBatches(stream, "runStreamClassifyBounded") { (batch, _) =>
+      graft.operators.Classify.scoreNaiveBayes(model, batch, idCol, textCol)
+    }.dropDuplicates(idCol)
   }
 
   /** Streaming CORPUS CURATION — the incremental form of the curate
@@ -603,44 +611,33 @@ object StreamingIngest {
     import graft.operators.Dedup
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    // Every per-batch frame keys on the BATCH ID and overwrites on replay
-    // (the DSIR twin's replay-idempotence discipline): a redelivered batch
-    // replaces its own statuses/pairs/corpus-slice instead of appending a
-    // second copy, and the standing corpus for batch b is rebuilt as the
-    // union of slices with id < b — identical on first delivery and on
-    // replay, so at-least-once foreachBatch composes to exactly-once.
-    val statuses = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val pairLedger = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
+    // The standing corpus for batch b is rebuilt as the union of slices
+    // with id < b, so a replayed batch sees the same corpus it saw first.
+    val statuses = byBatchId()
+    val pairLedger = byBatchId()
     // the standing dedup INDEX: each batch's hashed shingle sets, computed
     // once and checkpointed — later batches reuse them, so corpus text is
     // never re-shingled/re-hashed/re-sorted per batch (the steady-state
     // form of the old "re-derive over corpus+delta" cost model; only the
     // cheap long-keyed df/prefix derivation re-runs, which the batch-
     // equality gate requires for ONE consistent global order)
-    val shingleSlices = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    import scala.jdk.CollectionConverters._
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val docs = batch.select(col(idCol).cast("long").as("doc_id"),
-          col(textCol).cast("string").as("text"))
-        val gated = Materialize(docs.withColumn("__pass",
-          size(Dedup.cleanTokens(col("text"))) >= minTokens))
-        statuses.put(bid, gated.select(col("doc_id"), col("__pass")))
-        val passers = gated.filter(col("__pass")).select(col("doc_id"), col("text"))
-        val deltaSh = Materialize(Dedup.hashedShingles(passers, "doc_id", "text", n))
-        val corpusSh = shingleSlices.asScala.toSeq
-          .filter(_._1 < bid).map(_._2)
-          .reduceOption(_ unionByName _)
-          .getOrElse(deltaSh.limit(0))
-        val pairs = Dedup.incrementalNgramPairsFromSets(corpusSh, deltaSh, threshold)
-        pairLedger.put(bid, Materialize(pairs.select(col("idA"), col("idB"))))
-        shingleSlices.put(bid, deltaSh)
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val shingleSlices = byBatchId()
+    eachBatch(stream) { (batch, bid) =>
+      val docs = batch.select(col(idCol).cast("long").as("doc_id"),
+        col(textCol).cast("string").as("text"))
+      val gated = Materialize(docs.withColumn("__pass",
+        size(Dedup.cleanTokens(col("text"))) >= minTokens))
+      statuses.put(bid, gated.select(col("doc_id"), col("__pass")))
+      val passers = gated.filter(col("__pass")).select(col("doc_id"), col("text"))
+      val deltaSh = Materialize(Dedup.hashedShingles(passers, "doc_id", "text", n))
+      val corpusSh = shingleSlices.asScala.toSeq
+        .filter(_._1 < bid).map(_._2)
+        .reduceOption(_ unionByName _)
+        .getOrElse(deltaSh.limit(0))
+      val pairs = Dedup.incrementalNgramPairsFromSets(corpusSh, deltaSh, threshold)
+      pairLedger.put(bid, Materialize(pairs.select(col("idA"), col("idB"))))
+      shingleSlices.put(bid, deltaSh)
+    }
     val allStatuses = statuses.values.asScala.toSeq
     require(allStatuses.nonEmpty, "runStreamCurateBounded: no batches")
     val docs = allStatuses.reduce(_ unionByName _).dropDuplicates("doc_id")
@@ -668,8 +665,7 @@ object StreamingIngest {
     * Stream ≡ batch: uncapped pair discovery is arrival-order-invariant
     * (see incrementalMinhashPairs), so the union of per-batch pair
     * ledgers equals the batch [[graft.operators.Dedup.minhashNearDupPairs]]
-    * pair set and the statuses gate against the batch twin verbatim.
-    * Replay-idempotent by the same batch-id-keyed discipline as above. */
+    * pair set and the statuses gate against the batch twin verbatim. */
   def runStreamCurateFuzzyBounded(spark: SparkSession, parquetPath: String,
                                   idCol: String, textCol: String,
                                   minTokens: Int, n: Int = 3, k: Int = 64,
@@ -678,38 +674,31 @@ object StreamingIngest {
     import graft.operators.Dedup
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val statuses = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val pairLedger = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val sigSlices = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    import scala.jdk.CollectionConverters._
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val docs = batch.select(col(idCol).cast("long").as("doc_id"),
-          col(textCol).cast("string").as("text"))
-        val gated = Materialize(docs.withColumn("__pass",
-          size(Dedup.cleanTokens(col("text"))) >= minTokens))
-        statuses.put(bid, gated.select(col("doc_id"), col("__pass")))
-        val passers = gated.filter(col("__pass")).select(col("doc_id"), col("text"))
-        // sign the DELTA once; the checkpoint is what later batches reuse
-        val deltaSigs = Materialize(
-          Dedup.minhashSignatures(passers, "doc_id", "text", n, k))
-        val corpusSigs = sigSlices.asScala.toSeq
-          .filter(_._1 < bid).map(_._2)
-          .reduceOption(_ unionByName _)
-        val pairs = corpusSigs match {
-          case None => Dedup.incrementalMinhashPairs(
-            deltaSigs.limit(0), deltaSigs, "doc_id", k, bands, threshold)
-          case Some(corpus) => Dedup.incrementalMinhashPairs(
-            corpus, deltaSigs, "doc_id", k, bands, threshold)
-        }
-        pairLedger.put(bid, Materialize(pairs.select(col("idA"), col("idB"))))
-        sigSlices.put(bid, deltaSigs)
-        ()
+    val statuses = byBatchId()
+    val pairLedger = byBatchId()
+    val sigSlices = byBatchId()
+    eachBatch(stream) { (batch, bid) =>
+      val docs = batch.select(col(idCol).cast("long").as("doc_id"),
+        col(textCol).cast("string").as("text"))
+      val gated = Materialize(docs.withColumn("__pass",
+        size(Dedup.cleanTokens(col("text"))) >= minTokens))
+      statuses.put(bid, gated.select(col("doc_id"), col("__pass")))
+      val passers = gated.filter(col("__pass")).select(col("doc_id"), col("text"))
+      // sign the DELTA once; the checkpoint is what later batches reuse
+      val deltaSigs = Materialize(
+        Dedup.minhashSignatures(passers, "doc_id", "text", n, k))
+      val corpusSigs = sigSlices.asScala.toSeq
+        .filter(_._1 < bid).map(_._2)
+        .reduceOption(_ unionByName _)
+      val pairs = corpusSigs match {
+        case None => Dedup.incrementalMinhashPairs(
+          deltaSigs.limit(0), deltaSigs, "doc_id", k, bands, threshold)
+        case Some(corpus) => Dedup.incrementalMinhashPairs(
+          corpus, deltaSigs, "doc_id", k, bands, threshold)
       }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      pairLedger.put(bid, Materialize(pairs.select(col("idA"), col("idB"))))
+      sigSlices.put(bid, deltaSigs)
+    }
     val allStatuses = statuses.values.asScala.toSeq
     require(allStatuses.nonEmpty, "runStreamCurateFuzzyBounded: no batches")
     val docs = allStatuses.reduce(_ unionByName _).dropDuplicates("doc_id")
@@ -736,8 +725,7 @@ object StreamingIngest {
     * cross-batch state, no arrival-order dependence — so the union of
     * per-batch results equals the batch [[graft.operators.IvfPq
     * .topKIndexed]] run verbatim, and the harness gates with strict
-    * equality, not a recall floor. Replay-idempotent: batch-id-keyed
-    * results overwrite on redelivery.
+    * equality, not a recall floor.
     *
     * 100-TB posture: the models are model-sized broadcasts, the index is
     * codes-at-ingest (m bytes/row), and each batch pays only its own
@@ -771,99 +759,27 @@ object StreamingIngest {
     val (ivf, pq) = IvfPq.loadModels(spark, modelPath)
     val indexed = Materialize(IvfPq.index(corpus, ivf, pq))
     val stream = boundedStream(spark, parquetPath, corpus.schema, maxFilesPerTrigger)
-    val results = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val queries = batch.filter(col("vec_id") < queryMaxId)
-        results.put(bid, Materialize(IvfPq.topKIndexed(queries, indexed, corpus, ivf, pq,
-          k, nprobe, shortlist)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamAnnBounded: stream produced no batches")
-    (parts.reduce(_ unionByName _).dropDuplicates("query_id", "rank"), indexed)
+    val served = collectBatches(stream, "runStreamAnnBounded") { (batch, _) =>
+      val queries = batch.filter(col("vec_id") < queryMaxId)
+      IvfPq.topKIndexed(queries, indexed, corpus, ivf, pq, k, nprobe, shortlist)
+    }
+    (served.dropDuplicates("query_id", "rank"), indexed)
   }
 
-  /** Streaming MULTIMODAL ingest — the decode-at-arrival shape of a
-    * media pipeline: each micro-batch's binary payloads are header-parsed
-    * and feature-extracted as they land ([[graft.operators.Multimodal
-    * .extractFeatures]] inside foreachBatch), so the expensive per-row
-    * decode work never re-touches the standing corpus. Feature extraction
-    * is a pure per-row function of the payload — no cross-batch state —
-    * so the bounded stream equals the batch run VERBATIM and the harness
-    * gates it with the batch query's full hash oracle, the
-    * q_stream_classify discipline. Replay-idempotent: batch-id-keyed
-    * results overwrite on redelivery. */
-  def runStreamMultimodalBounded(spark: SparkSession, parquetPath: String,
-                                 idCol: String,
-                                 maxFilesPerTrigger: Int = 0): DataFrame = {
-    implicit val sp: SparkSession = spark
-    import graft.operators.Multimodal
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val results = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, Materialize(Multimodal
-          .extractFeatures(Multimodal.syntheticMediaRecords(batch, idCol))
-          .toDF()
-          .select(col("media_id"),
-            col("n_bytes").cast("long").as("n_bytes"),
-            col("width").cast("long").as("width"),
-            col("height").cast("long").as("height"),
-            col("channels").cast("long").as("channels"),
-            size(col("frame_offsets")).cast("long").as("n_frames"))))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamMultimodalBounded: stream produced no batches")
-    parts.reduce(_ unionByName _).dropDuplicates("media_id")
-  }
-
-  /** Streaming HTML→text extraction — crawl pages arrive in micro-batches
-    * and are boilerplate-stripped on arrival (the front of a streaming
-    * curation pipeline). Extraction is a PURE per-row function
-    * ([[graft.operators.TextExtract]] / `expr.HtmlContentText`), so the
-    * bounded stream hash-matches the batch q_text_extract oracle
-    * VERBATIM — no state, no tolerance gate. */
   /** Generic per-row streaming twin: apply a PURE row-local projection
     * (exploding allowed) to each micro-batch and union the results —
     * per-row purity is what makes stream ≡ batch VERBATIM, so the twin
-    * shares the batch query's oracle unchanged. `keyCols` dedupe the
+    * shares the batch query's oracle unchanged (HTML→text extraction and
+    * multimodal feature extraction run here). `keyCols` dedupe the
     * file-overlap replays of a restarted stream. */
   def runStreamRowMapBounded(spark: SparkSession, parquetPath: String,
                              build: DataFrame => DataFrame,
                              keyCols: Seq[String],
-                             maxFilesPerTrigger: Int = 0,
-                             dedupe: Boolean = true): DataFrame = {
+                             maxFilesPerTrigger: Int = 0): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val results =
-      new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, Materialize(build(batch)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamRowMapBounded: stream produced no batches")
-    val unioned = parts.reduce(_ unionByName _)
-    if (dedupe) unioned.dropDuplicates(keyCols) else unioned
+    collectBatches(stream, "runStreamRowMapBounded")((batch, _) => build(batch))
+      .dropDuplicates(keyCols)
   }
 
   /** Streaming twin for GROUP-LOCAL aggregations — the contract one
@@ -878,30 +794,16 @@ object StreamingIngest {
                               build: DataFrame => DataFrame,
                               keyCols: Seq[String],
                               maxFilesPerTrigger: Int = 0): DataFrame = {
-    import org.apache.spark.sql.functions.{col, countDistinct, lit}
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val results =
-      new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // tag each batch's aggregates with the micro-batch id — the
-        // contract check below keys on it
-        results.put(bid,
-          Materialize(build(batch).withColumn("__graft_bid", lit(bid))))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamGroupedBounded: stream produced no batches")
-    val unioned = parts.reduce(_ unionByName _)
-    // CONTRACT CHECK, loud not silent, keyed on the BATCH ID: in this
-    // bounded run every micro-batch is one source file processed exactly
-    // once (processAllAvailable, no restart), so a group-complete source
+    // tag each batch's aggregates with the micro-batch id — the contract
+    // check below keys on it
+    val unioned = collectBatches(stream, "runStreamGroupedBounded") {
+      (batch, bid) => build(batch).withColumn("__graft_bid", lit(bid))
+    }
+    // CONTRACT CHECK, loud not silent, keyed on the BATCH ID: with a
+    // positive maxFilesPerTrigger every micro-batch is one source file
+    // processed exactly once (no restart), so a group-complete source
     // puts each key's rows in EXACTLY one distinct batch. A key seen in
     // two batches is a split group — even when the partial aggregates
     // happen to be byte-identical (sum 5 in file A + sum 5 in file B),
@@ -915,31 +817,6 @@ object StreamingIngest {
         "micro-batch — the source is not group-complete per file " +
         "(write it repartitionByRange on the group key)")
     unioned.drop("__graft_bid").dropDuplicates(keyCols)
-  }
-
-  def runStreamTextExtractBounded(spark: SparkSession, parquetPath: String,
-                                  idCol: String,
-                                  maxFilesPerTrigger: Int = 0): DataFrame = {
-    import graft.operators.TextExtract
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val results = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, Materialize(TextExtract.fromHtml(
-            batch.select(col(idCol),
-              TextExtract.syntheticHtml(col(idCol), col("text")).as("html")),
-            idCol, "html")))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamTextExtractBounded: stream produced no batches")
-    parts.reduce(_ unionByName _).dropDuplicates(idCol)
   }
 
   /** Streaming dirty-JSONL ingestion — the dump arrives file by file and
@@ -962,20 +839,7 @@ object StreamingIngest {
         reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       else reader)
       .json(streamGlob(srcDir))
-    val results = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid, Materialize(batch))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamJsonlBounded: stream produced no batches")
-    parts.reduce(_ unionByName _)
+    collectBatches(stream, "runStreamJsonlBounded")((batch, _) => batch)
   }
 
   /** Streaming anchor-text aggregation — link records arrive in
@@ -992,21 +856,9 @@ object StreamingIngest {
                               k: Int, maxFilesPerTrigger: Int = 0): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val slices = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        slices.put(bid, Materialize(batch))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = slices.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamAnchorsBounded: stream produced no batches")
     graft.operators.WebCuration.topAnchors(
-      parts.reduce(_ unionByName _), "src", "dst", "anchor", k)
+      collectBatches(stream, "runStreamAnchorsBounded")((batch, _) => batch),
+      "src", "dst", "anchor", k)
   }
 
   /** Streaming DISCOVERY seeds — feed documents (RSS/Atom XML polled
@@ -1027,25 +879,14 @@ object StreamingIngest {
     import graft.operators.{Feeds, Sitemap}
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val results = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val entries = Feeds.parseEntries(batch, xmlCol)
-          .select(col(domainCol), col("kind").as("feed_kind"),
-            lit("url").as("kind"), col("link").as("loc"),
-            col("published").as("lastmod"))
-        results.put(bid,
-          Materialize(Sitemap.seedSurvivors(entries, domainCol, crawled, crawledUrlCol)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamSeedsBounded: stream produced no batches")
-    Sitemap.rankSeeds(parts.reduce(_ unionByName _), domainCol)
+    val survivors = collectBatches(stream, "runStreamSeedsBounded") { (batch, _) =>
+      val entries = Feeds.parseEntries(batch, xmlCol)
+        .select(col(domainCol), col("kind").as("feed_kind"),
+          lit("url").as("kind"), col("link").as("loc"),
+          col("published").as("lastmod"))
+      Sitemap.seedSurvivors(entries, domainCol, crawled, crawledUrlCol)
+    }
+    Sitemap.rankSeeds(survivors, domainCol)
   }
 
   /** Streaming robots.txt politeness gate — discovered URLs arrive in
@@ -1063,21 +904,9 @@ object StreamingIngest {
     import graft.operators.RobotsTxt
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val results = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        results.put(bid,
-          Materialize(RobotsTxt.gate(batch, "url", rules, userAgent)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
-    val parts = results.values.asScala.toSeq
-    require(parts.nonEmpty, "runStreamRobotsGateBounded: stream produced no batches")
-    parts.reduce(_ unionByName _).dropDuplicates(idCol)
+    collectBatches(stream, "runStreamRobotsGateBounded") { (batch, _) =>
+      RobotsTxt.gate(batch, "url", rules, userAgent)
+    }.dropDuplicates(idCol)
   }
 
   /** Streaming ENTITY RESOLUTION — records arrive in micro-batches and
@@ -1094,10 +923,8 @@ object StreamingIngest {
     * finalize through the SAME connected-components code as the batch
     * path, so stream ≡ batch VERBATIM and the harness gates this with
     * the batch query's full hash oracle (the q_stream_classify
-    * discipline). Replay-idempotent: all per-batch frames key on the
-    * batch id and overwrite on redelivery; the standing index for batch
-    * b is rebuilt as the union of slices with id < b — identical on
-    * first delivery and on replay. */
+    * discipline). The standing index for batch b is rebuilt as the union
+    * of slices with id < b — identical on first delivery and on replay. */
   def runStreamErBounded(spark: SparkSession, parquetPath: String,
                          idCol: String, nameCol: String, maxDist: Int = 1,
                          blockChars: Int = 4,
@@ -1105,29 +932,22 @@ object StreamingIngest {
     import graft.operators.EntityResolution
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val keySlices = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val recordSlices = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val pairLedger = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    import scala.jdk.CollectionConverters._
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val deltaKeyed = Materialize(EntityResolution
-          .blockKeys(batch, idCol, nameCol, blockChars))
-        val corpusKeyed = keySlices.asScala.toSeq
-          .filter(_._1 < bid).map(_._2)
-          .reduceOption(_ unionByName _)
-          .getOrElse(deltaKeyed.limit(0))
-        pairLedger.put(bid, Materialize(EntityResolution
-          .incrementalMatches(corpusKeyed, deltaKeyed, maxDist)))
-        keySlices.put(bid, deltaKeyed)
-        recordSlices.put(bid,
-          Materialize(batch.select(col(idCol))))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val keySlices = byBatchId()
+    val recordSlices = byBatchId()
+    val pairLedger = byBatchId()
+    eachBatch(stream) { (batch, bid) =>
+      val deltaKeyed = Materialize(EntityResolution
+        .blockKeys(batch, idCol, nameCol, blockChars))
+      val corpusKeyed = keySlices.asScala.toSeq
+        .filter(_._1 < bid).map(_._2)
+        .reduceOption(_ unionByName _)
+        .getOrElse(deltaKeyed.limit(0))
+      pairLedger.put(bid, Materialize(EntityResolution
+        .incrementalMatches(corpusKeyed, deltaKeyed, maxDist)))
+      keySlices.put(bid, deltaKeyed)
+      recordSlices.put(bid,
+        Materialize(batch.select(col(idCol))))
+    }
     val recs = recordSlices.values.asScala.toSeq
     require(recs.nonEmpty, "runStreamErBounded: stream produced no batches")
     val records = recs.reduce(_ unionByName _).dropDuplicates(idCol)
@@ -1147,30 +967,22 @@ object StreamingIngest {
     * arrival order, and the harness gates this stream with the batch
     * query's full hash oracle (the q_stream_classify discipline). State
     * size is the front itself — domain-bounded, typically tiny — not the
-    * corpus. Replay-idempotent: the per-batch front keys on the batch id
-    * (overwrite on redelivery), and the standing front for batch b is
-    * rebuilt from the latest slice with id < b. */
+    * corpus. The standing front for batch b is rebuilt from the latest
+    * slice with id < b, so a replayed batch sees the front it saw first. */
   def runStreamParetoBounded(spark: SparkSession, parquetPath: String,
                              xCol: String, yCol: String,
                              maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.DataSelect
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    val fronts = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    import scala.jdk.CollectionConverters._
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val standing = fronts.asScala.toSeq.filter(_._1 < bid)
-          .sortBy(-_._1).headOption.map(_._2)
-          .getOrElse(batch.limit(0))
-        fronts.put(bid, Materialize(DataSelect
-          .paretoFront2D(standing.unionByName(batch), xCol, yCol)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val fronts = byBatchId()
+    eachBatch(stream) { (batch, bid) =>
+      val standing = fronts.asScala.toSeq.filter(_._1 < bid)
+        .sortBy(-_._1).headOption.map(_._2)
+        .getOrElse(batch.limit(0))
+      fronts.put(bid, Materialize(DataSelect
+        .paretoFront2D(standing.unionByName(batch), xCol, yCol)))
+    }
     val last = fronts.asScala.toSeq.sortBy(-_._1).headOption
     require(last.nonEmpty, "runStreamParetoBounded: stream produced no batches")
     last.get._2
@@ -1185,30 +997,20 @@ object StreamingIngest {
     * multiset functions of the input — no arrival-order dependence
     * anywhere — the final weights are replay- and order-invariant, so
     * the harness gates this stream with the batch q_dsir_weights oracle
-    * verbatim (full hash), the same discipline as q_stream_classify.
-    *
-    * Per-batch frames key on the BATCH ID (a replayed batch overwrites
-    * its own entry — idempotent), each materialized. */
+    * verbatim (full hash), the same discipline as q_stream_classify. */
   def runStreamDsirBounded(spark: SparkSession, rawParquetPath: String,
                            target: DataFrame, idCol: String, textCol: String,
                            buckets: Int, maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.DataSelect
     val schema = spark.read.parquet(rawParquetPath).schema
     val stream = boundedStream(spark, rawParquetPath, schema, maxFilesPerTrigger)
-    val feats = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val ids = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, DataFrame]()
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ids.put(bid, Materialize(batch.select(col(idCol))))
-        feats.put(bid, Materialize(DataSelect
-          .featureBuckets(batch, idCol, textCol, buckets)))
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    import scala.jdk.CollectionConverters._
+    val feats = byBatchId()
+    val ids = byBatchId()
+    eachBatch(stream) { (batch, bid) =>
+      ids.put(bid, Materialize(batch.select(col(idCol))))
+      feats.put(bid, Materialize(DataSelect
+        .featureBuckets(batch, idCol, textCol, buckets)))
+    }
     val featFrames = feats.values.asScala.toSeq
     val idFrames = ids.values.asScala.toSeq
     require(idFrames.nonEmpty, "runStreamDsirBounded: stream produced no batches")
@@ -1233,25 +1035,17 @@ object StreamingIngest {
     * dependent (MG semantics) — the stream result equals SOME valid MG
     * run, which is why the harness gates it with the guarantee check
     * ([[graft.operators.HeavyHitters.violationsAgainst]]) instead of a
-    * hash oracle. `maxFilesPerTrigger=1` forces one micro-batch per input
-    * file so state genuinely carries across batches in the bounded replay. */
+    * hash oracle. */
   def runStreamHotKeysBounded(spark: SparkSession, parquetPath: String,
                               itemCol: String, capacity: Int,
-                              queryName: String,
-                              maxFilesPerTrigger: Int = 1,
-                              statePartitions: Int = 8): DataFrame = {
+                              maxFilesPerTrigger: Int = 1): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = stream
+    graft.operators.HeavyHitters.itemsFromSummary(memorySnapshot(
+      stream
         .select(col(itemCol).cast("long").as("item"))
-        .agg(graft.operators.HeavyHitters.summary(col("item"), capacity).as("mg"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    graft.operators.HeavyHitters.itemsFromSummary(spark.table(queryName))
+        .agg(graft.operators.HeavyHitters.summary(col("item"), capacity).as("mg")),
+      "complete"))
   }
 
   /** Streaming distinct-count rollup over the NATIVE HLL aggregate
@@ -1262,29 +1056,20 @@ object StreamingIngest {
     * register-wise max makes the sketch a pure function of the input SET,
     * so the streaming result must equal the batch rollup BIT-EXACTLY no
     * matter how the replay batches — the harness gates that equality, a
-    * stronger claim than MG's arrival-order-dependent bounds.
-    * `maxFilesPerTrigger=1` forces one micro-batch per input file so the
-    * state genuinely carries across batches. */
+    * stronger claim than MG's arrival-order-dependent bounds. */
   def runStreamDistinctBounded(spark: SparkSession, parquetPath: String,
                                segCol: String, valueCol: String, lgK: Int,
-                               queryName: String,
-                               maxFilesPerTrigger: Int = 1,
-                               statePartitions: Int = 8): DataFrame = {
+                               maxFilesPerTrigger: Int = 1): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = stream.filter(col(valueCol).isNotNull)
-        .groupBy(col(segCol).cast("string").as("segment"))
-        .agg(graft.operators.Profiler
-          .hllSketch(col(valueCol).cast("long"), lgK).as("__sk"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // the SAME perSeg + __TOTAL__ derivation as the batch rollup, shared
     // verbatim — the bit-exact stream ≡ batch gate depends on it
-    graft.operators.Profiler.rollupFromSketches(spark.table(queryName))
+    graft.operators.Profiler.rollupFromSketches(memorySnapshot(
+      stream.filter(col(valueCol).isNotNull)
+        .groupBy(col(segCol).cast("string").as("segment"))
+        .agg(graft.operators.Profiler
+          .hllSketch(col(valueCol).cast("long"), lgK).as("__sk")),
+      "complete"))
   }
 
   /** Streaming crawl-trap ledger over KMV sketch state
@@ -1295,30 +1080,22 @@ object StreamingIngest {
     * and the final ledger derivation is shared VERBATIM with the batch
     * form — KMV state is a set function, so the streaming ledger equals
     * the batch one bit-exactly regardless of how the replay batched,
-    * and both share one oracle. `maxFilesPerTrigger=1` forces one
-    * micro-batch per input file so the state genuinely merges across
-    * batches. */
+    * and both share one oracle. */
   def runStreamTrapLedger(spark: SparkSession, parquetPath: String,
                           build: DataFrame => DataFrame, urlCol: String,
                           fingerprintCol: String, k: Int, minUrls: Int,
-                          maxDiversity: Double, queryName: String,
-                          maxFilesPerTrigger: Int = 1,
-                          statePartitions: Int = 8): DataFrame = {
+                          maxDiversity: Double,
+                          maxFilesPerTrigger: Int = 1): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = graft.operators.WebCuration
+    val sketches = memorySnapshot(
+      graft.operators.WebCuration
         .trapKeyed(build(stream), urlCol, col(fingerprintCol))
         .groupBy(col("template"))
         .agg(graft.operators.SetSketch.kmvSketch(col("__u"), k).as("__sku"),
-          graft.operators.SetSketch.kmvSketch(col("__f"), k).as("__skf"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    graft.operators.WebCuration.trapLedgerFromSketches(
-      spark.table(queryName), minUrls, maxDiversity)
+          graft.operators.SetSketch.kmvSketch(col("__f"), k).as("__skf")),
+      "complete")
+    graft.operators.WebCuration.trapLedgerFromSketches(sketches, minUrls, maxDiversity)
   }
 
   /** Streaming segment set-OVERLAP over the native KMV (theta) sketch
@@ -1327,29 +1104,20 @@ object StreamingIngest {
     * derived from the final state. Like HLL (and unlike MG/KLL) the k
     * smallest distinct hashes are a pure function of the input SET, so
     * the streaming pair-overlap must equal the batch one BIT-EXACTLY no
-    * matter how the replay batches — the harness gates that equality.
-    * `maxFilesPerTrigger=1` forces one micro-batch per input file so the
-    * state genuinely carries across batches. */
+    * matter how the replay batches — the harness gates that equality. */
   def runStreamOverlapBounded(spark: SparkSession, parquetPath: String,
                               segCol: String, valueCol: String, k: Int,
-                              queryName: String,
-                              maxFilesPerTrigger: Int = 1,
-                              statePartitions: Int = 8): DataFrame = {
+                              maxFilesPerTrigger: Int = 1): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = stream.filter(col(valueCol).isNotNull)
-        .groupBy(col(segCol).cast("string").as("segment"))
-        .agg(graft.operators.SetSketch
-          .kmvSketch(col(valueCol).cast("long"), k).as("__sk"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // the SAME pairwise derivation as the batch operator, shared verbatim
     // — the bit-exact stream ≡ batch gate depends on it
-    graft.operators.SetSketch.pairOverlapFromSketches(spark.table(queryName))
+    graft.operators.SetSketch.pairOverlapFromSketches(memorySnapshot(
+      stream.filter(col(valueCol).isNotNull)
+        .groupBy(col(segCol).cast("string").as("segment"))
+        .agg(graft.operators.SetSketch
+          .kmvSketch(col(valueCol).cast("long"), k).as("__sk")),
+      "complete"))
   }
 
   /** Streaming model-quality monitoring: per-group tie-aware AUC over a
@@ -1363,26 +1131,20 @@ object StreamingIngest {
     * quantized scores, same contract as the batch operator. */
   def runStreamAucBounded(spark: SparkSession, parquetPath: String,
                           groupExpr: Column, scoreExpr: Column,
-                          labelExpr: Column, queryName: String,
-                          maxFilesPerTrigger: Int = 1,
-                          statePartitions: Int = 8): DataFrame = {
+                          labelExpr: Column,
+                          maxFilesPerTrigger: Int = 1): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = stream
+    graft.operators.Eval.aucFromCounts(memorySnapshot(
+      stream
         .select(groupExpr.cast("string").as("grp"),
           scoreExpr.cast("long").as("__s"),
           labelExpr.cast("boolean").as("__l"))
         .filter(col("__s").isNotNull && col("__l").isNotNull)
         .groupBy(col("grp"), col("__s"))
         .agg(sum(when(col("__l"), 1L).otherwise(0L)).as("__p"),
-          count(lit(1)).as("__c"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    graft.operators.Eval.aucFromCounts(spark.table(queryName))
+          count(lit(1)).as("__c")),
+      "complete"))
   }
 
   /** Streaming quantile summary over the NATIVE KLL aggregate
@@ -1394,32 +1156,24 @@ object StreamingIngest {
     * valid KLL run rather than the batch run bit-for-bit — which is why
     * the harness gates it with the self-reported worst-case rank bound
     * ([[graft.operators.QuantileSketch.violations]]) instead of a
-    * stream ≡ batch equality. `maxFilesPerTrigger=1` forces one
-    * micro-batch per input file so state genuinely carries across
-    * batches in the bounded replay. */
+    * stream ≡ batch equality. */
   def runStreamQuantileBounded(spark: SparkSession, parquetPath: String,
                                segCol: String, valueExpr: Column, k: Int,
-                               ps: Seq[Double], queryName: String,
-                               maxFilesPerTrigger: Int = 1,
-                               statePartitions: Int = 8): DataFrame = {
+                               ps: Seq[Double],
+                               maxFilesPerTrigger: Int = 1): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = stream
+    val summaries = memorySnapshot(
+      stream
         .select(col(segCol).cast("string").as("segment"),
           valueExpr.cast("long").as("__v"))
         .filter(col("__v").isNotNull)
         .groupBy(col("segment"))
-        .agg(graft.operators.QuantileSketch.summary(col("__v"), k).as("__sk"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+        .agg(graft.operators.QuantileSketch.summary(col("__v"), k).as("__sk")),
+      "complete")
     // the SAME summary→estimate expansion as the batch operator, shared
     // verbatim — the guarantee gate depends on comparing like for like
-    graft.operators.QuantileSketch
-      .quantilesFromSummaries(spark.table(queryName), ps)
+    graft.operators.QuantileSketch.quantilesFromSummaries(summaries, ps)
   }
 
   /** Streaming point-frequency sketch over the NATIVE Count-Min aggregate:
@@ -1432,27 +1186,22 @@ object StreamingIngest {
     * matter how the replay batched; the harness gates that equality. */
   def runStreamFreqBounded(spark: SparkSession, parquetPath: String,
                            itemCol: String, k: Int,
-                           depth: Int, width: Int, queryName: String,
-                           maxFilesPerTrigger: Int = 1,
-                           statePartitions: Int = 8): DataFrame = {
+                           depth: Int, width: Int,
+                           maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.operators.FreqSketch
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = stream.filter(col(itemCol).isNotNull)
+    val grid = memorySnapshot(
+      stream.filter(col(itemCol).isNotNull)
         .select(col(itemCol).cast("long").as("item"))
-        .agg(FreqSketch.cmsSketch(col("item"), depth, width).as("__sk"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+        .agg(FreqSketch.cmsSketch(col("item"), depth, width).as("__sk")),
+      "complete")
     // the SAME exact-top-k probe as the batch operator, shared verbatim —
     // the bit-exact stream ≡ batch gate depends on it
     val items = spark.read.parquet(parquetPath)
       .filter(col(itemCol).isNotNull)
       .select(col(itemCol).cast("long").as("item"))
-    FreqSketch.probeTopK(items, spark.table(queryName), k)
+    FreqSketch.probeTopK(items, grid, k)
   }
 
   /** Streaming PMI collocations: the (w1, w2) pair counts run as
@@ -1466,27 +1215,20 @@ object StreamingIngest {
     * the harness can make. */
   def runStreamPmiBounded(spark: SparkSession, parquetPath: String,
                           textCol: String, minCount: Long, topK: Int,
-                          queryName: String,
-                          maxFilesPerTrigger: Int = 1,
-                          statePartitions: Int = 8): DataFrame = {
+                          maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.operators.TextAnalysis
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = TextAnalysis.bigramPairs(stream, textCol)
+    val counts = memorySnapshot(
+      TextAnalysis.bigramPairs(stream, textCol)
         .groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as("c12"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+        .agg(count(lit(1)).as("c12")),
+      "complete")
     // snapshot the state table: the derivation self-joins it three ways
     // (marginals + pair filter), and the memory-sink view resolves every
     // branch to the SAME MemoryPlan instance — ambiguous references
     // without this copy (vocab²-bounded, so the checkpoint is small)
-    TextAnalysis.pmiFromPairCounts(
-      Materialize(spark.table(queryName)), minCount, topK)
+    TextAnalysis.pmiFromPairCounts(Materialize(counts), minCount, topK)
   }
 
   /** Streaming per-class discriminative keywords: the (cls, term) token
@@ -1498,26 +1240,20 @@ object StreamingIngest {
     * [[runStreamPmiBounded]]. */
   def runStreamKeywordsBounded(spark: SparkSession, parquetPath: String,
                                classCol: String, textCol: String,
-                               minCount: Long, topK: Int, queryName: String,
-                               maxFilesPerTrigger: Int = 1,
-                               statePartitions: Int = 8): DataFrame = {
+                               minCount: Long, topK: Int,
+                               maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.operators.TextAnalysis
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = TextAnalysis.classTermTokens(stream, classCol, textCol)
+    val counts = memorySnapshot(
+      TextAnalysis.classTermTokens(stream, classCol, textCol)
         .groupBy(col("cls"), col("term"))
-        .agg(count(lit(1)).as("a"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+        .agg(count(lit(1)).as("a")),
+      "complete")
     // snapshot: the derivation self-joins the state table (marginals),
     // and memory-sink views resolve every branch to one MemoryPlan —
     // see runStreamPmiBounded
-    TextAnalysis.keywordsFromCounts(
-      Materialize(spark.table(queryName)), minCount, topK)
+    TextAnalysis.keywordsFromCounts(Materialize(counts), minCount, topK)
   }
 
   /** Streaming per-segment Bloom filter over the native OR-merge
@@ -1527,26 +1263,19 @@ object StreamingIngest {
     * pure function of the input SET — like HLL/KMV the streaming bits
     * must equal the batch bits EXACTLY however the replay batches, and
     * the `_verify` gate compares the raw filter bytes per segment.
-    * `maxFilesPerTrigger=1` forces one micro-batch per input file so
-    * state genuinely carries across batches. Output: (segment, bloom). */
+    * Output: (segment, bloom). */
   def runStreamBloomBounded(spark: SparkSession, parquetPath: String,
                             segCol: String, valueCol: String,
-                            numBits: Int, numHashes: Int, queryName: String,
-                            maxFilesPerTrigger: Int = 1,
-                            statePartitions: Int = 8): DataFrame = {
+                            numBits: Int, numHashes: Int,
+                            maxFilesPerTrigger: Int = 1): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
     val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
-    withStatePartitions(spark, statePartitions) {
-      val q = stream.filter(col(valueCol).isNotNull)
+    memorySnapshot(
+      stream.filter(col(valueCol).isNotNull)
         .groupBy(col(segCol).cast("string").as("segment"))
         .agg(graft.sink.BloomIndex
-          .bloomAgg(col(valueCol).cast("long"), numBits, numHashes).as("bloom"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(queryName)
+          .bloomAgg(col(valueCol).cast("long"), numBits, numHashes).as("bloom")),
+      "complete")
   }
 
   /** Streaming ingest-rate anomaly gate: per-(key, bucket) counts run as
@@ -1559,52 +1288,31 @@ object StreamingIngest {
     * needed, the stronger claim the integer-exact design buys. */
   def runStreamRateAnomaliesBounded(spark: SparkSession, parquetPath: String,
                                     keyCol: String, bucketMicros: Long,
-                                    window: Int, k: Int, queryName: String,
-                                    maxFilesPerTrigger: Int = 1,
-                                    statePartitions: Int = 8): DataFrame = {
+                                    window: Int, k: Int,
+                                    maxFilesPerTrigger: Int = 1): DataFrame = {
     val ev = spark.read.parquet(parquetPath)
     val bucket = graft.operators.TimeSeries.bucketExpr(
       graft.functions.EventTime.micros(ev), bucketMicros)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(streamGlob(parquetPath))
-    withStatePartitions(spark, statePartitions) {
-      val q = stream
+    val stream = boundedStream(spark, parquetPath, ev.schema, maxFilesPerTrigger)
+    val snapshot = memorySnapshot(
+      stream
         .select(col(keyCol).cast("string").as("key"), bucket.as("bucket"))
         .groupBy(col("key"), col("bucket"))
-        .agg(count(lit(1)).as("cnt"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(queryName).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+        .agg(count(lit(1)).as("cnt")),
+      "complete")
     // materialized: densify self-joins the counts frame, and a memory-
     // sink table's lineage trips analyzer reference-dedup; the snapshot is
     // grid-sized (keys × buckets), so materializing it is free
-    val counts = Materialize(spark.table(queryName))
+    val counts = Materialize(snapshot)
     graft.operators.TimeSeries.anomaliesFromCounts(
       graft.operators.TimeSeries.densify(counts), window, k)
   }
 
   /** Run the windowed aggregation over a parquet path as a bounded stream;
-    * returns the final result as a batch DataFrame. `statePartitions` sizes
-    * the state-store layout (see [[withStatePartitions]]). */
-  def runWindowedEventAgg(spark: SparkSession, parquetPath: String,
-                          queryName: String = "events_windowed",
-                          statePartitions: Int = 8): DataFrame = {
+    * returns the final result as a batch DataFrame. */
+  def runWindowedEventAgg(spark: SparkSession, parquetPath: String): DataFrame = {
     val schema = spark.read.parquet(parquetPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(streamGlob(parquetPath)))
-    withStatePartitions(spark, statePartitions) {
-      val q = windowedEventAgg(stream)
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(queryName)
+    val stream = normalizeTs(boundedStream(spark, parquetPath, schema, 0))
+    memorySnapshot(windowedEventAgg(stream), "complete")
   }
 }

@@ -2,12 +2,24 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** The one `private[spark]` doorway the bench telemetry needs: listener
-  * events are delivered asynchronously, so per-query shuffle tallies are
-  * only correct after the bus drains. Lives in an `org.apache.spark`
-  * subpackage solely to reach `SparkContext.listenerBus` — no other
-  * internals are touched. */
+/** The `private[spark]` doorways the engine needs. Lives in an
+  * `org.apache.spark` subpackage solely to reach them; no other internals
+  * are touched.
+  *
+  *  - [[flush]]: listener events are delivered asynchronously, so the
+  *    bench telemetry's per-query shuffle tallies are only correct after
+  *    the bus drains (`SparkContext.listenerBus`).
+  *  - [[unpersistQuietly]]: `RDD.unpersist` logs a WARN for every locally
+  *    checkpointed RDD ("cannot be recomputed after unpersisting") before
+  *    it calls `SparkContext.unpersistRDD`. For [[graft.Materialize]]'s
+  *    release that loss is the point, so it calls `unpersistRDD` directly:
+  *    the same block removal, without the warning. The RDD keeps its
+  *    storage-level field, which changes nothing for a checkpoint: a read
+  *    after release fails on the missing blocks either way. */
 object ListenerFlush {
   def flush(sc: SparkContext, timeoutMillis: Long = 60000L): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)
+
+  def unpersistQuietly(sc: SparkContext, rddId: Int, blocking: Boolean): Unit =
+    sc.unpersistRDD(rddId, blocking)
 }

@@ -124,8 +124,7 @@ class EventTimeEncodingSpec extends SparkSpec {
     withBoth { (nanosPath, ntzPath) =>
       def run(path: String, tag: String): Seq[Seq[Any]] =
         streaming.StreamingIngest.runSessionizeBounded(spark, path,
-            gapMicros = 1800L * 1000 * 1000,
-            queryName = s"enc_sess_${tag}_${System.nanoTime()}")
+            gapMicros = 1800L * 1000 * 1000)
           .orderBy("user_id", "session_start")
           .collect().map(_.toSeq).toSeq
       val (a, b) = (run(nanosPath, "nanos"), run(ntzPath, "ntz"))

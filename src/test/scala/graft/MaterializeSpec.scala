@@ -48,17 +48,65 @@ class MaterializeSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
-  /** Lines (1-based) of Scala source that call `.localCheckpoint(`,
-    * `.checkpoint(`, `.persist(` or `.cache()` in code: string literals and
-    * comments are blanked first, keeping their line breaks. */
-  private def materializeCalls(src: String): Seq[Int] = {
+  test("release logs no 'cannot be recomputed' warning") {
+    val df = Materialize(spark.range(0, 200, 1, 4).toDF("id"))
+    val logged = warnings(Materialize.release(df))
+    assert(!logged.exists(_.contains("cannot be recomputed")), logged.mkString("\n"))
+    // the capture is live: Spark's own unpersist of a local checkpoint warns
+    val rdd = spark.sparkContext.parallelize(1 to 10, 2).localCheckpoint()
+    rdd.count()
+    assert(warnings(rdd.unpersist(blocking = true))
+      .exists(_.contains("cannot be recomputed")), "the log capture saw nothing")
+  }
+
+  /** The messages of the WARN-or-worse events logged while `body` runs. */
+  private def warnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("materialize-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val ctx = LoggerContext.getContext(false)
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(app, Level.WARN, null)
+    ctx.updateLoggers()
+    try body
+    finally {
+      root.removeAppender(app.getName)
+      ctx.updateLoggers()
+      app.stop()
+    }
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  /** The code of a Scala source, one entry per line: comments and string
+    * literals are blanked first, keeping their line breaks. A literal of
+    * word characters only (`"memory"`) is kept: it can hold no call, and a
+    * pattern may name it as an argument. */
+  private def codeLines(src: String): Seq[String] = {
     val noise = """(?s)"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*.*?\*/""".r
     val code = noise.replaceAllIn(src, m =>
-      scala.util.matching.Regex.quoteReplacement(m.matched.filter(_ == '\n')))
-    val call = """\.(localCheckpoint\(|checkpoint\(|persist\(|cache\(\))""".r
-    code.split("\n", -1).toSeq.zipWithIndex
-      .collect { case (line, n) if call.findFirstIn(line).isDefined => n + 1 }
+      scala.util.matching.Regex.quoteReplacement(
+        if (m.matched.matches("\"\\w*\"")) m.matched
+        else m.matched.filter(_ == '\n')))
+    code.split("\n", -1).toSeq
   }
+
+  /** Lines (1-based) of Scala source whose code matches `call`. */
+  private def callLines(src: String, call: scala.util.matching.Regex): Seq[Int] =
+    codeLines(src).zipWithIndex
+      .collect { case (line, n) if call.findFirstIn(line).isDefined => n + 1 }
+
+  private val materializeCall =
+    """\.(localCheckpoint\(|checkpoint\(|persist\(|cache\(\))""".r
+  private val streamDriverCall =
+    """processAllAvailable\(|\.foreachBatch|format\("memory"\)""".r
 
   test("guard predicate: sees a call in code, not in a comment or a string") {
     val src = Seq(
@@ -71,23 +119,55 @@ class MaterializeSpec extends SparkSpec {
       "val d = df.persist(StorageLevel.MEMORY_AND_DISK)",
       "val e = df.cache()",
       "df.unpersist(); spark.catalog.cacheTable(t); val f = df.cached()",
-      "// df.cache()").mkString("\n")
-    assert(materializeCalls(src) == Seq(1, 6, 7, 8))
+      "// df.cache()",
+      "try q.processAllAvailable() finally q.stop()",
+      "df.writeStream.foreachBatch { (b: DataFrame, _: Long) => () }",
+      "df.writeStream.format(\"memory\").queryName(n).start()").mkString("\n")
+    assert(callLines(src, materializeCall) == Seq(1, 6, 7, 8))
+    assert(callLines(src, streamDriverCall) == Seq(11, 12, 13))
   }
 
-  test("guard: only Materialize.scala checkpoints a frame directly") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+  private val mainRoot = new java.io.File("src/main/scala")
+
+  private def mainSources(): Seq[(java.io.File, String)] = {
+    assert(mainRoot.isDirectory, s"run from the project root: ${mainRoot.getAbsolutePath}")
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f =>
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    scalaFiles(mainRoot).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("guard: only Materialize.scala checkpoints a frame directly") {
     val offenders = for {
-      f <- scalaFiles(root) if f.getName != "Materialize.scala"
-      src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      line <- materializeCalls(src)
+      (f, src) <- mainSources() if f.getName != "Materialize.scala"
+      line <- callLines(src, materializeCall)
     } yield s"${f.getPath}:$line"
     assert(offenders.isEmpty,
       s"materialize through graft.Materialize, not directly: ${offenders.mkString(", ")}")
+  }
+
+  test("guard: only StreamingIngest's drivers run a stream to its end") {
+    val (ingest, others) = mainSources().partition(_._1.getName == "StreamingIngest.scala")
+    val offenders = for {
+      (f, src) <- others
+      line <- callLines(src, streamDriverCall)
+    } yield s"${f.getPath}:$line"
+    assert(offenders.isEmpty,
+      s"drive a stream through graft.streaming.StreamingIngest: ${offenders.mkString(", ")}")
+    // inside it, a foreachBatch belongs to the bounded driver or to one of
+    // the two open-ended checkpointed queries
+    val src = ingest.map(_._2).headOption.getOrElse(fail("StreamingIngest.scala not found"))
+    val code = codeLines(src)
+    val member = """^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+    val owners = callLines(src, """\.foreachBatch""".r).map { line =>
+      code.take(line).reverseIterator
+        .flatMap(l => member.findFirstMatchIn(l).map(_.group(1))).nextOption()
+        .getOrElse(s"line $line")
+    }
+    assert(owners.nonEmpty, "no foreachBatch found: the check is vacuous")
+    assert(owners.toSet.subsetOf(Set("eachBatch", "streamingEtl", "streamUpsertToWarehouse")),
+      s"foreachBatch outside eachBatch: ${owners.mkString(", ")}")
   }
 }

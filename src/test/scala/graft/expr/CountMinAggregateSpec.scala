@@ -61,8 +61,7 @@ class CountMinAggregateSpec extends SparkSpec {
         .repartition(3).write.parquet(src) // 3 files → 3 micro-batches
       val stream = graft.streaming.StreamingIngest
         .runStreamFreqBounded(spark, src, "user_id", k = 20,
-          depth = 10, width = 2048,
-          queryName = s"t_cms_stream_${System.nanoTime()}")
+          depth = 10, width = 2048)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       val batch = FreqSketch
         .topItemEstimates(spark.read.parquet(src), "user_id", k = 20)

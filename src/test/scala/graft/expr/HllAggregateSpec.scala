@@ -95,7 +95,7 @@ class HllAggregateSpec extends SparkSpec {
         .repartition(3).write.parquet(src) // 3 files → 3 micro-batches
       val stream = graft.streaming.StreamingIngest
         .runStreamDistinctBounded(spark, src, "event_type", "user_id",
-          lgK = 12, queryName = s"t_hll_stream_${System.nanoTime()}")
+          lgK = 12)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       val batch = Profiler
         .nativeDistinctRollup(spark.read.parquet(src), "event_type", "user_id")

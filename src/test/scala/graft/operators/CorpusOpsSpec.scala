@@ -58,7 +58,7 @@ class CorpusOpsSpec extends graft.SparkSpec {
     ev.write.mode("overwrite").parquet(dir + "/events.parquet")
     def us(sec: Long) = sec * 1000L * 1000
     val out = graft.streaming.StreamingIngest.runSessionizeBounded(
-        spark, dir + "/events.parquet", gapUs, "sess_spec_q")
+        spark, dir + "/events.parquet", gapUs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(out == Set(
       (1L, us(1000), us(1100), 2L), // exactly-gap events merge (touching windows)
@@ -124,8 +124,7 @@ class CorpusOpsSpec extends graft.SparkSpec {
         .repartition(3).write.parquet(src) // 3 files → 3 micro-batches
       val stream = graft.streaming.StreamingIngest
         .runStreamRateAnomaliesBounded(spark, src, "event_type",
-          bucketMicros = 3600L * 1000 * 1000, window = 24, k = 3,
-          queryName = s"t_anom_stream_${System.nanoTime()}")
+          bucketMicros = 3600L * 1000 * 1000, window = 24, k = 3)
         .collect().map(_.toSeq).toSet
       val ev = spark.read.parquet(src)
       val batch = TimeSeries.rateAnomalies(ev, "event_type",
@@ -584,7 +583,7 @@ class CorpusOpsSpec extends graft.SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ssj-spec").toString
     try {
       ev.write.mode("overwrite").parquet(dir)
-      val got = StreamingIngest.runAttributionBounded(spark, dir, 7200000000L, "ssj_spec")
+      val got = StreamingIngest.runAttributionBounded(spark, dir, 7200000000L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .toSet
       val M = 1000000L // seconds -> micros

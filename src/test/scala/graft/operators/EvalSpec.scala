@@ -82,8 +82,7 @@ class EvalSpec extends SparkSpec {
         .repartition(3).write.parquet(src) // 3 files -> 3 micro-batches
       val stream = graft.streaming.StreamingIngest.runStreamAucBounded(
           spark, src, pmod(col("user_id"), lit(3)),
-          floor(col("value") * 1000), col("event_type") === "purchase",
-          queryName = s"t_auc_stream_${System.nanoTime()}")
+          floor(col("value") * 1000), col("event_type") === "purchase")
         .collect().map(r => r.getString(0) ->
           (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
       val batch = Eval.aucByGroup(

@@ -56,7 +56,7 @@ class HeavyHittersSpec extends SparkSpec {
     rows.toDF("user_id").repartition(4).write.mode("overwrite").parquet(dir)
     try {
       val sk = graft.streaming.StreamingIngest.runStreamHotKeysBounded(
-        spark, dir, "user_id", capacity = 8, queryName = "hotkeys_spec")
+        spark, dir, "user_id", capacity = 8)
         .as[(Long, Long, Long, Long)].collect()
       assert(sk.head._3 === 1000L, "n must count the whole stream")
       val sub = sk.head._4
@@ -65,7 +65,7 @@ class HeavyHittersSpec extends SparkSpec {
       val items = rows.toDF("k").select(col("k").as("item"))
       assert(HeavyHitters.violationsAgainst(
         graft.streaming.StreamingIngest.runStreamHotKeysBounded(
-          spark, dir, "user_id", capacity = 8, queryName = "hotkeys_spec2"),
+          spark, dir, "user_id", capacity = 8),
         items, capacity = 8).isEmpty)
     } finally
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))

@@ -513,8 +513,7 @@ class OperatorsSpec extends SparkSpec {
       def key(r: org.apache.spark.sql.Row) =
         (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))
       val stream = graft.streaming.StreamingIngest
-        .runStreamPmiBounded(spark, src, "text", minCount = 5, topK = 100,
-          queryName = s"t_pmi_stream_${System.nanoTime()}")
+        .runStreamPmiBounded(spark, src, "text", minCount = 5, topK = 100)
         .collect().map(key)
       val batch = TextAnalysis
         .pmiCollocations(spark.read.parquet(src), "text", 5, 100)
@@ -564,8 +563,7 @@ class OperatorsSpec extends SparkSpec {
         (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))
       val stream = graft.streaming.StreamingIngest
         .runStreamKeywordsBounded(spark, src, "lang", "text",
-          minCount = 5, topK = 20,
-          queryName = s"t_kw_stream_${System.nanoTime()}")
+          minCount = 5, topK = 20)
         .orderBy(col("cls"), col("odds_ppm").desc, col("a").desc, col("term"))
         .collect().map(key)
       val batch = TextAnalysis
@@ -1152,7 +1150,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("streaming hourly agg equals batch aggregation") {
     val streamed = graft.streaming.StreamingIngest
-      .runWindowedEventAgg(spark, s"${testDataDir()}/events.parquet", "t_stream_eq")
+      .runWindowedEventAgg(spark, s"${testDataDir()}/events.parquet")
     val events0 = spark.read.parquet(s"${testDataDir()}/events.parquet")
     val events = events0
       .withColumn("ts", graft.functions.EventTime.timestamp(events0))

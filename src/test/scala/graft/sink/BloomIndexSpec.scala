@@ -93,8 +93,7 @@ class BloomIndexSpec extends SparkSpec {
         .repartition(3).write.parquet(src) // 3 files → 3 micro-batches
       val stream = graft.streaming.StreamingIngest
         .runStreamBloomBounded(spark, src, "event_type", "user_id",
-          numBits = 1 << 14, numHashes = 7,
-          queryName = s"t_bloom_stream_${System.nanoTime()}")
+          numBits = 1 << 14, numHashes = 7)
         .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1).toSeq)
         .toMap
       val ev = spark.read.parquet(src).filter(col("user_id").isNotNull)
