@@ -97,128 +97,43 @@ object SparkEntry {
         col("__p.n_stopwords").cast("double").as("f_stop"),
         col("__p.n_chars").cast("double").as("y_chars"))
 
-  /** Suffix for scratch paths/tables written by demonstration queries:
-    * keyed by the dataset dir (cross-SF runs never interleave) and the
-    * process id (concurrent harness/test JVMs never clobber each other
-    * mid-read). Stable within one process so bench re-runs reuse a name. */
-  private[graft] def runTag(dir: String): String = {
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir))
-    s"${h}_p${ProcessHandle.current().pid()}"
-  }
-
-  /** Reclaim scratch dirs left by DEAD processes: [[runTag]] names embed
-    * `_p<pid>` (possibly followed by a stage suffix like `__upserting`),
-    * and a dir whose pid no longer exists is unreachable garbage (its
-    * owning JVM — and any in-memory catalog entry — died with it). Live
-    * pids — including ours — are never touched, with one precise escape
-    * hatch for OS pid recycling: a real owner's process START always
-    * precedes every write it makes to its dir, so a "live" pid whose
-    * process started AFTER the dir's mtime (plus a minute of clock slack)
-    * cannot be the owner and the dir is orphaned. Age alone is NOT a
-    * reclaim signal for pid-tagged dirs — write-once-read-many scratch
-    * (bucketed tables reused across bench re-runs) goes hours without an
-    * mtime update while its owner is still reading it. `legacy` names
-    * (the pre-suffix fixed names, which carry no pid to test) are
-    * reclaimed only past `legacyGraceMillis`, so a still-running
-    * pre-suffix JVM sharing the tmpdir is not raced. Everything is
-    * per-entry best-effort — an unparseable pid in the shared tmpdir, a
-    * racing sweep, or a permission blip must not fail the query. */
-  private[graft] def sweepDeadScratch(parent: java.io.File, prefixes: Seq[String],
-                                      legacy: Seq[String] = Nil,
-                                      legacyGraceMillis: Long = 6L * 3600 * 1000): Unit = {
-    val mine = ProcessHandle.current().pid()
-    // NOT end-anchored: crash leftovers like `..._p123__upserting` must
-    // still resolve to their owning pid to be reclaimable
-    val pidRe = "_p(\\d+)".r
-    val now = System.currentTimeMillis()
-    Option(parent.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { f =>
-      scala.util.Try {
-        if (legacy.contains(f.getName)) {
-          val m = f.lastModified() // 0 = unknown (IO error): never reclaim
-          if (m > 0 && now - m > legacyGraceMillis)
-            org.apache.commons.io.FileUtils.deleteDirectory(f)
-        } else if (prefixes.exists(f.getName.startsWith)) {
-          pidRe.findFirstMatchIn(f.getName).map(_.group(1).toLong).foreach { pid =>
-            val handle = ProcessHandle.of(pid)
-            val dead = !handle.isPresent
-            val recycled = !dead && {
-              val start = handle.get().info().startInstant()
-              val m = f.lastModified()
-              start.isPresent && m > 0 &&
-                start.get().toEpochMilli > m + 60000L
-            }
-            if (pid != mine && (dead || recycled))
-              org.apache.commons.io.FileUtils.deleteDirectory(f)
-          }
-        }
-      }
-    }
-  }
-
-  /** The session's warehouse directory as a local file, when it is one. */
-  private[graft] def warehouseDir(s: SparkSession): Option[java.io.File] =
-    scala.util.Try {
-      val raw = s.conf.get("spark.sql.warehouse.dir")
-      if (raw.startsWith("file:")) new java.io.File(new java.net.URI(raw))
-      else new java.io.File(raw)
-    }.toOption.filter(_.isDirectory)
-
   private[graft] val asOf: Column = lit("1998-12-01").cast("date")
 
-  /** Write-once-per-process synthetic WARC archives derived from the
+  /** Synthetic WARC archives derived from the
     * documents table: 4 buckets keyed by doc_id % 4, bucket 0 gzipped
     * with per-record members, each file led by a warcinfo record, every
     * response carrying the synthetic crawl page ([[operators.TextExtract
     * .syntheticHtml]]) behind a real HTTP/1.1 200 message. Deterministic,
-    * so bench re-runs reuse the archives (the `_SUCCESS` marker is
-    * written only after a complete build; a crashed partial write has no
-    * marker and is rebuilt). */
-  private[graft] val warcFixtureLock = new Object
+    * so bench re-runs reuse the archives ([[Scratch.once]]). */
   private[graft] def warcFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warc_"))
-      val out = new java.io.File(tmp, s"graft_warc_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://www."), col("source"), lit(".example.com/docs/"),
-            col("doc_id").cast("string")).as("uri"),
-          operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
-            .as("body"))
-        ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri", "body",
-          out.getAbsolutePath, nFiles = 4)
-        marker.createNewFile()
-      }
-      out.getAbsolutePath
+    Scratch.once(dir, "warc") { out =>
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://www."), col("source"), lit(".example.com/docs/"),
+          col("doc_id").cast("string")).as("uri"),
+        operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
+          .as("body"))
+      ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri", "body",
+        out, nFiles = 4)
     }
 
-  /** Write-once-per-process IMAGE archives: the same WARC framing with
+  /** IMAGE archives: the same WARC framing with
     * `image/png` responses whose bodies are the synthetic pixel PNGs
     * ([[operators.Multimodal.syntheticPngPixelPayload]]) — crawls are
     * mostly binary, and this fixture is what pins the reader's
     * byte-exact `body_bytes` path. */
   private[graft] def warcImageFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warcimg_"))
-      val out = new java.io.File(tmp, s"graft_warcimg_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val png = udf((id: Long) => Multimodal.syntheticPngPixelPayload(id))
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://img."), col("source"),
-            lit(".example.com/png/"), col("doc_id").cast("string"),
-            lit(".png")).as("uri"),
-          png(col("doc_id")).as("body"))
-        ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri", "body",
-          out.getAbsolutePath, nFiles = 4, contentType = "image/png")
-        marker.createNewFile()
-      }
-      out.getAbsolutePath
+    Scratch.once(dir, "warcimg") { out =>
+      val png = udf((id: Long) => Multimodal.syntheticPngPixelPayload(id))
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://img."), col("source"),
+          lit(".example.com/png/"), col("doc_id").cast("string"),
+          lit(".png")).as("uri"),
+        png(col("doc_id")).as("body"))
+      ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri", "body",
+        out, nFiles = 4, contentType = "image/png")
     }
 
-  /** Write-once-per-process PAGE archives whose HTML references the
+  /** PAGE archives whose HTML references the
     * [[warcImageFixtureDir]] pixel PNGs — the image-text JOIN fixture:
     * each page carries one `<figure>` img pointing at its document's
     * synthetic PNG (absolute src on the img. host) plus alt text and a
@@ -227,31 +142,23 @@ object SparkEntry {
     * archive-decoded pixels into one frame and the caption/pixel
     * agreement is itself oracle-checkable. */
   private[graft] def warcImgPageFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warcimgpg_"))
-      val out = new java.io.File(tmp, s"graft_warcimgpg_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://www."), col("source"),
-            lit(".example.com/docs/"), col("doc_id").cast("string"))
-            .as("uri"),
-          concat(
-            lit("<html><body><figure><img src=\"https://img."),
-            col("source"), lit(".example.com/png/"),
-            col("doc_id").cast("string"),
-            lit(".png\" alt=\"png "), pmod(col("doc_id"), lit(13)),
-            lit("\"><figcaption>Pixel grid "),
-            (lit(16) + pmod(col("doc_id"), lit(17))).cast("string"),
-            lit(" by "),
-            (lit(16) + pmod(col("doc_id") * 3, lit(13))).cast("string"),
-            lit("</figcaption></figure></body></html>")).as("body"))
-        ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri",
-          "body", out.getAbsolutePath, nFiles = 4)
-        marker.createNewFile()
-      }
-      out.getAbsolutePath
+    Scratch.once(dir, "warcimgpg") { out =>
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://www."), col("source"),
+          lit(".example.com/docs/"), col("doc_id").cast("string"))
+          .as("uri"),
+        concat(
+          lit("<html><body><figure><img src=\"https://img."),
+          col("source"), lit(".example.com/png/"),
+          col("doc_id").cast("string"),
+          lit(".png\" alt=\"png "), pmod(col("doc_id"), lit(13)),
+          lit("\"><figcaption>Pixel grid "),
+          (lit(16) + pmod(col("doc_id"), lit(17))).cast("string"),
+          lit(" by "),
+          (lit(16) + pmod(col("doc_id") * 3, lit(13))).cast("string"),
+          lit("</figcaption></figure></body></html>")).as("body"))
+      ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri",
+        "body", out, nFiles = 4)
     }
 
   /** The legacy-charset rotation for the charset-sniffing WARC fixture:
@@ -269,7 +176,7 @@ object SparkEntry {
     ("Shift_JIS", "日本語テキスト"),
     ("UTF-16", "Ωmega ±π bom"))
 
-  /** Write-once-per-process LEGACY-CHARSET archives: each document's
+  /** LEGACY-CHARSET archives: each document's
     * page re-encoded under the doc_id % 6 rotation and declared three
     * different ways — Content-Type parameter (modes 1/3), `<meta>` in
     * the head (modes 0/2/4: charset attr and http-equiv both), or a
@@ -279,52 +186,44 @@ object SparkEntry {
     * twin: non-ASCII case-mapping is locale-lore neither engine should
     * be oracled on). */
   private[graft] def warcCharsetFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warccs_"))
-      val out = new java.io.File(tmp, s"graft_warccs_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val modes = CharsetModes
-        val pageBytes = udf { (id: Long, text: String) =>
-          val mode = (id % 6).toInt
-          val (cs, mk) = modes(mode)
-          val meta = mode match {
-            case 0 => "<meta charset=\"utf-8\">\n"
-            case 2 => "<meta http-equiv=\"Content-Type\" " +
-              "content=\"text/html; charset=windows-1252\">\n"
-            case 4 => "<meta charset=\"shift_jis\">\n"
-            case _ => ""
-          }
-          val esc = text.replace("&", "&amp;")
-            .replace("<", "&lt;").replace(">", "&gt;")
-          val page = "<!doctype html>\n<html>\n<head>\n" + meta +
-            "<title>Doc " + id + "</title>\n</head>\n<body>\n" +
-            "<h1>Charset probe document about encodings</h1>\n<p>" +
-            esc + " " + mk + "</p>\n</body>\n</html>\n"
-          page.getBytes(java.nio.charset.Charset.forName(cs))
+    Scratch.once(dir, "warccs") { out =>
+      val modes = CharsetModes
+      val pageBytes = udf { (id: Long, text: String) =>
+        val mode = (id % 6).toInt
+        val (cs, mk) = modes(mode)
+        val meta = mode match {
+          case 0 => "<meta charset=\"utf-8\">\n"
+          case 2 => "<meta http-equiv=\"Content-Type\" " +
+            "content=\"text/html; charset=windows-1252\">\n"
+          case 4 => "<meta charset=\"shift_jis\">\n"
+          case _ => ""
         }
-        val ctOf = udf { (id: Long) =>
-          (id % 6).toInt match {
-            case 1 => "text/html; charset=iso-8859-1"
-            case 3 => "text/html; charset=gb2312"
-            case 5 => "text/html; charset=utf-16"
-            case _ => "text/html"
-          }
-        }
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://cs."), col("source"), lit(".example.com/p/"),
-            col("doc_id").cast("string")).as("uri"),
-          pageBytes(col("doc_id"), col("text")).as("body"),
-          ctOf(col("doc_id")).as("ct"))
-        ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
-          "ct", out.getAbsolutePath, nFiles = 4)
-        marker.createNewFile()
+        val esc = text.replace("&", "&amp;")
+          .replace("<", "&lt;").replace(">", "&gt;")
+        val page = "<!doctype html>\n<html>\n<head>\n" + meta +
+          "<title>Doc " + id + "</title>\n</head>\n<body>\n" +
+          "<h1>Charset probe document about encodings</h1>\n<p>" +
+          esc + " " + mk + "</p>\n</body>\n</html>\n"
+        page.getBytes(java.nio.charset.Charset.forName(cs))
       }
-      out.getAbsolutePath
+      val ctOf = udf { (id: Long) =>
+        (id % 6).toInt match {
+          case 1 => "text/html; charset=iso-8859-1"
+          case 3 => "text/html; charset=gb2312"
+          case 5 => "text/html; charset=utf-16"
+          case _ => "text/html"
+        }
+      }
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://cs."), col("source"), lit(".example.com/p/"),
+          col("doc_id").cast("string")).as("uri"),
+        pageBytes(col("doc_id"), col("text")).as("body"),
+        ctOf(col("doc_id")).as("ct"))
+      ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
+        "ct", out, nFiles = 4)
     }
 
-  /** Write-once-per-process WIRE-ENCODING archives: each document's page
+  /** WIRE-ENCODING archives: each document's page
     * framed under the doc_id % 5 rotation of HTTP transfer/content
     * codings a Heritrix-style raw capture preserves — identity,
     * chunked (16-byte chunks), gzip, gzip-then-chunked, zlib deflate.
@@ -333,101 +232,85 @@ object SparkEntry {
     * octets for the SQL-derivable modes (identity head arithmetic and
     * the exact chunk-framing formula). */
   private[graft] def warcEncodingsFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warcenc_"))
-      val out = new java.io.File(tmp, s"graft_warcenc_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val payload = udf { (id: Long, text: String) =>
-          val ascii = java.nio.charset.StandardCharsets.UTF_8
-          val esc = text.replace("&", "&amp;")
-            .replace("<", "&lt;").replace(">", "&gt;")
-          val page = ("<html>\n<head>\n<title>E" + id + "</title>\n</head>\n" +
-            "<body>\n<h1>Encoding probe document headline</h1>\n<p>" + esc +
-            "</p>\n</body>\n</html>\n").getBytes(ascii)
-          def gz(b: Array[Byte]) = {
-            val bos = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
-            val g = new java.util.zip.GZIPOutputStream(bos)
-            try { g.write(b); g.finish() } finally g.close()
-            bos.toByteArray
-          }
-          def defl(b: Array[Byte]) = {
-            val d = new java.util.zip.Deflater()
-            d.setInput(b); d.finish()
-            val bos = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
-            val buf = new Array[Byte](4096)
-            while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-            d.end()
-            bos.toByteArray
-          }
-          def chunk(b: Array[Byte]) = {
-            val bos = new java.io.ByteArrayOutputStream(b.length + b.length / 4 + 16)
-            var i = 0
-            while (i < b.length) {
-              val k = math.min(16, b.length - i)
-              bos.write((java.lang.Long.toHexString(k.toLong) + "\r\n").getBytes(ascii))
-              bos.write(b, i, k)
-              bos.write("\r\n".getBytes(ascii))
-              i += k
-            }
-            bos.write("0\r\n\r\n".getBytes(ascii))
-            bos.toByteArray
-          }
-          val (codingHeaders, body) = (id % 5).toInt match {
-            case 0 => (s"Content-Length: ${page.length}\r\n", page)
-            case 1 => ("Transfer-Encoding: chunked\r\n", chunk(page))
-            case 2 =>
-              val g = gz(page)
-              (s"Content-Encoding: gzip\r\nContent-Length: ${g.length}\r\n", g)
-            case 3 =>
-              ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
-                chunk(gz(page)))
-            case _ =>
-              val d = defl(page)
-              (s"Content-Encoding: deflate\r\nContent-Length: ${d.length}\r\n", d)
-          }
-          val head = ("HTTP/1.1 200 OK\r\n" +
-            "Content-Type: text/html; charset=utf-8\r\n" +
-            codingHeaders + "\r\n").getBytes(ascii)
-          head ++ body
+    Scratch.once(dir, "warcenc") { out =>
+      val payload = udf { (id: Long, text: String) =>
+        val ascii = java.nio.charset.StandardCharsets.UTF_8
+        val esc = text.replace("&", "&amp;")
+          .replace("<", "&lt;").replace(">", "&gt;")
+        val page = ("<html>\n<head>\n<title>E" + id + "</title>\n</head>\n" +
+          "<body>\n<h1>Encoding probe document headline</h1>\n<p>" + esc +
+          "</p>\n</body>\n</html>\n").getBytes(ascii)
+        def gz(b: Array[Byte]) = {
+          val bos = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
+          val g = new java.util.zip.GZIPOutputStream(bos)
+          try { g.write(b); g.finish() } finally g.close()
+          bos.toByteArray
         }
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://enc."), col("source"), lit(".example.com/p/"),
-            col("doc_id").cast("string")).as("uri"),
-          payload(col("doc_id"), col("text")).as("payload"))
-        ingest.WarcIngest.writeHttpResponsesWarc(s, docs, "doc_id", "uri",
-          "payload", out.getAbsolutePath, nFiles = 4)
-        marker.createNewFile()
+        def defl(b: Array[Byte]) = {
+          val d = new java.util.zip.Deflater()
+          d.setInput(b); d.finish()
+          val bos = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
+          val buf = new Array[Byte](4096)
+          while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
+          d.end()
+          bos.toByteArray
+        }
+        def chunk(b: Array[Byte]) = {
+          val bos = new java.io.ByteArrayOutputStream(b.length + b.length / 4 + 16)
+          var i = 0
+          while (i < b.length) {
+            val k = math.min(16, b.length - i)
+            bos.write((java.lang.Long.toHexString(k.toLong) + "\r\n").getBytes(ascii))
+            bos.write(b, i, k)
+            bos.write("\r\n".getBytes(ascii))
+            i += k
+          }
+          bos.write("0\r\n\r\n".getBytes(ascii))
+          bos.toByteArray
+        }
+        val (codingHeaders, body) = (id % 5).toInt match {
+          case 0 => (s"Content-Length: ${page.length}\r\n", page)
+          case 1 => ("Transfer-Encoding: chunked\r\n", chunk(page))
+          case 2 =>
+            val g = gz(page)
+            (s"Content-Encoding: gzip\r\nContent-Length: ${g.length}\r\n", g)
+          case 3 =>
+            ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
+              chunk(gz(page)))
+          case _ =>
+            val d = defl(page)
+            (s"Content-Encoding: deflate\r\nContent-Length: ${d.length}\r\n", d)
+        }
+        val head = ("HTTP/1.1 200 OK\r\n" +
+          "Content-Type: text/html; charset=utf-8\r\n" +
+          codingHeaders + "\r\n").getBytes(ascii)
+        head ++ body
       }
-      out.getAbsolutePath
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://enc."), col("source"), lit(".example.com/p/"),
+          col("doc_id").cast("string")).as("uri"),
+        payload(col("doc_id"), col("text")).as("payload"))
+      ingest.WarcIngest.writeHttpResponsesWarc(s, docs, "doc_id", "uri",
+        "payload", out, nFiles = 4)
     }
 
-  /** Write-once-per-process PDF archives: application/pdf responses
+  /** PDF archives: application/pdf responses
     * whose bodies are the synthetic-invertible PDFs
     * ([[graft.expr.PdfOps.syntheticPdf]]; odd doc_ids FlateDecode-
     * compressed) — the second text modality decoded straight out of the
     * crawl archive, like the PNG fixture pins the binary path. */
   private[graft] def warcPdfFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warcpdf_"))
-      val out = new java.io.File(tmp, s"graft_warcpdf_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val pdf = udf { (id: Long, text: String) =>
-          graft.expr.PdfOps.syntheticPdf(id, text, flate = id % 2 == 1)
-        }
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://pdf."), col("source"), lit(".example.com/d/"),
-            col("doc_id").cast("string"), lit(".pdf")).as("uri"),
-          pdf(col("doc_id"), col("text")).as("body"),
-          lit("application/pdf").as("ct"))
-        ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
-          "ct", out.getAbsolutePath, nFiles = 4)
-        marker.createNewFile()
+    Scratch.once(dir, "warcpdf") { out =>
+      val pdf = udf { (id: Long, text: String) =>
+        graft.expr.PdfOps.syntheticPdf(id, text, flate = id % 2 == 1)
       }
-      out.getAbsolutePath
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://pdf."), col("source"), lit(".example.com/d/"),
+          col("doc_id").cast("string"), lit(".pdf")).as("uri"),
+        pdf(col("doc_id"), col("text")).as("body"),
+        lit("application/pdf").as("ct"))
+      ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
+        "ct", out, nFiles = 4)
     }
 
   /** PDF-extraction oracle, shared verbatim by the direct decode
@@ -1557,97 +1440,81 @@ object SparkEntry {
        |FROM lines GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  /** Write-once-per-process MISLABELED archives: every response's
+  /** MISLABELED archives: every response's
     * Content-Type header deliberately contradicts its payload (PNG as
     * text/html, PDF as image/png, HTML as octet-stream, WAV as
     * text/plain, plain text as application/pdf) — the real-crawl
     * pathology the magic-byte sniffer exists for. */
   private[graft] def warcMimeFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warcmime_"))
-      val out = new java.io.File(tmp, s"graft_warcmime_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val body = udf { (id: Long, text: String) =>
-          (id % 5).toInt match {
-            case 0 => Multimodal.syntheticPngPixelPayload(id)
-            case 1 => graft.expr.PdfOps.syntheticPdf(id, text, flate = true)
-            case 2 => ("<!doctype html>\n<html><body><p>" + text +
-              "</p></body></html>\n")
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            case 3 => Multimodal.syntheticWavPayload(id)
-            case _ => text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          }
+    Scratch.once(dir, "warcmime") { out =>
+      val body = udf { (id: Long, text: String) =>
+        (id % 5).toInt match {
+          case 0 => Multimodal.syntheticPngPixelPayload(id)
+          case 1 => graft.expr.PdfOps.syntheticPdf(id, text, flate = true)
+          case 2 => ("<!doctype html>\n<html><body><p>" + text +
+            "</p></body></html>\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          case 3 => Multimodal.syntheticWavPayload(id)
+          case _ => text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         }
-        val declared = when(col("doc_id") % 5 === 0, "text/html")
-          .when(col("doc_id") % 5 === 1, "image/png")
-          .when(col("doc_id") % 5 === 2, "application/octet-stream")
-          .when(col("doc_id") % 5 === 3, "text/plain")
-          .otherwise("application/pdf")
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://mm."), col("source"), lit(".example.com/r/"),
-            col("doc_id").cast("string")).as("uri"),
-          body(col("doc_id"), col("text")).as("body"),
-          declared.as("ct"))
-        ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
-          "ct", out.getAbsolutePath, nFiles = 4)
-        marker.createNewFile()
       }
-      out.getAbsolutePath
+      val declared = when(col("doc_id") % 5 === 0, "text/html")
+        .when(col("doc_id") % 5 === 1, "image/png")
+        .when(col("doc_id") % 5 === 2, "application/octet-stream")
+        .when(col("doc_id") % 5 === 3, "text/plain")
+        .otherwise("application/pdf")
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://mm."), col("source"), lit(".example.com/r/"),
+          col("doc_id").cast("string")).as("uri"),
+        body(col("doc_id"), col("text")).as("body"),
+        declared.as("ct"))
+      ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
+        "ct", out, nFiles = 4)
     }
 
-  /** Write-once-per-process REDIRECT archives: doc_id % 5 == 3 pages
+  /** REDIRECT archives: doc_id % 5 == 3 pages
     * respond 301 → the mode-0 page three ids back; mode-4 pages respond
     * 302 → the mode-3 page one id back (a two-hop chain 302→301→200);
     * everything else serves the page. The chain targets live in the
     * same archive — the loop a crawler actually has to resolve. */
   private[graft] def warcRedirFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warcredir_"))
-      val out = new java.io.File(tmp, s"graft_warcredir_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val base = t(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("text"))
-        def urlOf(idc: Column, srcc: Column): Column =
-          concat(lit("https://www."), srcc, lit(".example.com/docs/"),
-            idc.cast("string"))
-        val t3 = base.select(col("doc_id").as("t3_id"),
-          col("source").as("t3_src"))
-        val t1 = base.select(col("doc_id").as("t1_id"),
-          col("source").as("t1_src"))
-        val payload = udf { (id: Long, text: String, loc3: String,
-                             loc1: String) =>
-          val ascii = java.nio.charset.StandardCharsets.UTF_8
-          def redirect(code: Int, reason: String, loc: String) =
-            (s"HTTP/1.1 $code $reason\r\nLocation: $loc\r\n" +
-              "Content-Length: 0\r\n\r\n").getBytes(ascii)
-          (id % 5).toInt match {
-            case 3 if loc3 != null => redirect(301, "Moved Permanently", loc3)
-            case 4 if loc1 != null => redirect(302, "Found", loc1)
-            case _ =>
-              val page = ("<html><body><p>" + text.replace("&", "&amp;")
-                .replace("<", "&lt;").replace(">", "&gt;") +
-                "</p></body></html>\n").getBytes(ascii)
-              (s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
-                s"Content-Length: ${page.length}\r\n\r\n").getBytes(ascii) ++ page
-          }
+    Scratch.once(dir, "warcredir") { out =>
+      val base = t(s, dir, "documents")
+        .select(col("doc_id"), col("source"), col("text"))
+      def urlOf(idc: Column, srcc: Column): Column =
+        concat(lit("https://www."), srcc, lit(".example.com/docs/"),
+          idc.cast("string"))
+      val t3 = base.select(col("doc_id").as("t3_id"),
+        col("source").as("t3_src"))
+      val t1 = base.select(col("doc_id").as("t1_id"),
+        col("source").as("t1_src"))
+      val payload = udf { (id: Long, text: String, loc3: String,
+                           loc1: String) =>
+        val ascii = java.nio.charset.StandardCharsets.UTF_8
+        def redirect(code: Int, reason: String, loc: String) =
+          (s"HTTP/1.1 $code $reason\r\nLocation: $loc\r\n" +
+            "Content-Length: 0\r\n\r\n").getBytes(ascii)
+        (id % 5).toInt match {
+          case 3 if loc3 != null => redirect(301, "Moved Permanently", loc3)
+          case 4 if loc1 != null => redirect(302, "Found", loc1)
+          case _ =>
+            val page = ("<html><body><p>" + text.replace("&", "&amp;")
+              .replace("<", "&lt;").replace(">", "&gt;") +
+              "</p></body></html>\n").getBytes(ascii)
+            (s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
+              s"Content-Length: ${page.length}\r\n\r\n").getBytes(ascii) ++ page
         }
-        val docs = base
-          .join(t3, col("doc_id") - 3 === col("t3_id"), "left")
-          .join(t1, col("doc_id") - 1 === col("t1_id"), "left")
-          .select(col("doc_id"),
-            urlOf(col("doc_id"), col("source")).as("uri"),
-            payload(col("doc_id"), col("text"),
-              urlOf(col("t3_id"), col("t3_src")),
-              urlOf(col("t1_id"), col("t1_src"))).as("payload"))
-        ingest.WarcIngest.writeHttpResponsesWarc(s, docs, "doc_id", "uri",
-          "payload", out.getAbsolutePath, nFiles = 4)
-        marker.createNewFile()
       }
-      out.getAbsolutePath
+      val docs = base
+        .join(t3, col("doc_id") - 3 === col("t3_id"), "left")
+        .join(t1, col("doc_id") - 1 === col("t1_id"), "left")
+        .select(col("doc_id"),
+          urlOf(col("doc_id"), col("source")).as("uri"),
+          payload(col("doc_id"), col("text"),
+            urlOf(col("t3_id"), col("t3_src")),
+            urlOf(col("t1_id"), col("t1_src"))).as("payload"))
+      ingest.WarcIngest.writeHttpResponsesWarc(s, docs, "doc_id", "uri",
+        "payload", out, nFiles = 4)
     }
 
   /** The sitemap fixture's parsed url-entries (domain, kind, loc,
@@ -2084,7 +1951,7 @@ object SparkEntry {
       .select(col("p.url").as("url"), col("p.fp").as("fp"))
   }
 
-  /** Write-once-per-process TWO-CRAWL archives for the revisit story:
+  /** TWO-CRAWL archives for the revisit story:
     * crawl 1 (c1/) captures every page; crawl 2 (c2/) stores the
     * unchanged third (doc_id % 3 == 0) as payload-free `revisit`
     * records pointing at the c1 capture via WARC-Refers-To, and
@@ -2092,36 +1959,28 @@ object SparkEntry {
     * ISO 28500 mechanism consecutive crawls use to avoid re-storing the
     * stable majority of the web. */
   private[graft] def warcRevisitFixtureDir(s: SparkSession, dir: String): String =
-    warcFixtureLock.synchronized {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      sweepDeadScratch(tmp, Seq("graft_warcrev_"))
-      val out = new java.io.File(tmp, s"graft_warcrev_${runTag(dir)}")
-      val marker = new java.io.File(out, "_SUCCESS")
-      if (!marker.exists()) {
-        val docs = t(s, dir, "documents").select(col("doc_id"),
-          concat(lit("https://www."), col("source"), lit(".example.com/docs/"),
-            col("doc_id").cast("string")).as("uri"),
-          col("text"))
-        ingest.WarcIngest.writeSyntheticWarc(s,
-          docs.select(col("doc_id"), col("uri"),
-            operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
-              .as("body")),
-          "doc_id", "uri", "body", s"${out.getAbsolutePath}/c1", nFiles = 4)
-        val framed = udf { (id: Long, uri: String, html: Array[Byte]) =>
-          if (id % 3 == 0)
-            ingest.WarcIngest.revisitRecord(id, uri, s"<urn:graft:doc:$id>")
-          else ingest.WarcIngest.responseRecord(id, uri, html,
-            "text/html; charset=utf-8")
-        }
-        ingest.WarcIngest.writeFramedWarc(s,
-          docs.select(col("doc_id"),
-            framed(col("doc_id"), col("uri"),
-              operators.TextExtract.syntheticHtml(col("doc_id"),
-                concat(col("text"), lit(" v2"))).cast("binary")).as("rec")),
-          "doc_id", "rec", s"${out.getAbsolutePath}/c2", nFiles = 4)
-        marker.createNewFile()
+    Scratch.once(dir, "warcrev") { out =>
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://www."), col("source"), lit(".example.com/docs/"),
+          col("doc_id").cast("string")).as("uri"),
+        col("text"))
+      ingest.WarcIngest.writeSyntheticWarc(s,
+        docs.select(col("doc_id"), col("uri"),
+          operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
+            .as("body")),
+        "doc_id", "uri", "body", s"$out/c1", nFiles = 4)
+      val framed = udf { (id: Long, uri: String, html: Array[Byte]) =>
+        if (id % 3 == 0)
+          ingest.WarcIngest.revisitRecord(id, uri, s"<urn:graft:doc:$id>")
+        else ingest.WarcIngest.responseRecord(id, uri, html,
+          "text/html; charset=utf-8")
       }
-      out.getAbsolutePath
+      ingest.WarcIngest.writeFramedWarc(s,
+        docs.select(col("doc_id"),
+          framed(col("doc_id"), col("uri"),
+            operators.TextExtract.syntheticHtml(col("doc_id"),
+              concat(col("text"), lit(" v2"))).cast("binary")).as("rec")),
+        "doc_id", "rec", s"$out/c2", nFiles = 4)
     }
 
   /** Exact sum: decimal arithmetic, double surface. */

@@ -467,10 +467,7 @@ private[graft] object CrawlRegistry extends QueryRegistry {
           operators.RobotsTxt.syntheticRobots(col("domain"), col("k"))
             .as("txt"))
       val rules = operators.RobotsTxt.parseRules(robots, "domain", "txt")
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_crawlwaves_"))
-      val base =
-        s"${System.getProperty("java.io.tmpdir")}/graft_crawlwaves_${runTag(dir)}"
+      val base = Scratch.path(dir, "crawlwaves")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
       val wh = s"$base/warehouse"
       val mf = s"$base/manifest"
@@ -660,10 +657,7 @@ private[graft] object CrawlRegistry extends QueryRegistry {
       val fetched = wave.select(col("dst").as("doc_id"), col("url"),
         operators.TextExtract.syntheticHtml(col("dst"), col("text"))
           .as("body"))
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_crawlloop_"))
-      val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft_crawlloop_${runTag(dir)}"
+      val out = Scratch.path(dir, "crawlloop")
       ingest.WarcIngest.writeSyntheticWarc(s, fetched, "doc_id", "url",
         "body", out, nFiles = 2)
       ingest.WarcIngest.readRecords(s, out)
@@ -902,10 +896,7 @@ private[graft] object CrawlRegistry extends QueryRegistry {
         .withColumn("n_tok",
           TextAnalysis.tokenCount(col("extracted")).cast("long"))
         .filter(col("n_tok") >= 32)
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_crawlout_"))
-      val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft_crawlout_${runTag(dir)}"
+      val out = Scratch.path(dir, "crawlout")
       sink.Jsonl.writeShards(curated, out,
         Seq(col("doc_id"), col("n_tok"), col("extracted")),
         shardKey = col("doc_id"), sortCol = col("doc_id"), nShards = 4)

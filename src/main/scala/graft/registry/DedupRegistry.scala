@@ -337,10 +337,7 @@ private[graft] object DedupRegistry extends QueryRegistry {
     // Shares q_dedup_incremental's oracle verbatim: persistence must be
     // a plan detail, never a semantics change.
     "q_dedup_incremental_indexed" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_ngram_index_"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_ngram_index_${runTag(dir)}"
+      val path = Scratch.path(dir, "ngram_index")
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 10 =!= 9)
       Dedup.saveNgramIndex(

@@ -99,10 +99,7 @@ private[graft] object ParityRegistry extends QueryRegistry {
     // replicated per format.
     "q_source_formats" -> ((s, dir) => {
       val nation = t(s, dir, "nation")
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_formats_rt_"), legacy = Seq("graft_formats_rt"))
-      val base =
-        s"${System.getProperty("java.io.tmpdir")}/graft_formats_rt_${runTag(dir)}"
+      val base = Scratch.path(dir, "formats_rt")
       val perFormat = Seq("orc", "json", "csv").map { f =>
         sources.Formats.roundTrip(nation, f, s"$base/$f")
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"),

@@ -41,10 +41,7 @@ private[graft] object QualityRegistry extends QueryRegistry {
     // verbatim, so the reloaded model must classify hash-identically to
     // the train-fresh one — the "train once, score forever" gate.
     "q_classify_nb_reload" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_nb_model_"))
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_nb_model_${runTag(dir)}"
+      val path = Scratch.path(dir, "nb_model")
       val docs = t(s, dir, "documents")
       operators.Classify.saveModel(
         operators.Classify.trainNaiveBayes(

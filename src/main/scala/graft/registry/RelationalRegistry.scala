@@ -178,10 +178,9 @@ private[graft] object RelationalRegistry extends QueryRegistry {
     "q_join_bucketed" -> ((s, dir) => {
       val orders = t(s, dir, "orders")
       val customer = t(s, dir, "customer")
-      val tag = runTag(dir)
-      warehouseDir(s).foreach(sweepDeadScratch(_,
-        Seq("graft_q_orders_b_", "graft_q_customer_b_"),
-        legacy = Seq("graft_q_orders_b", "graft_q_customer_b")))
+      val tag = Scratch.runTag(dir)
+      Scratch.warehouseDir(s).foreach(Scratch.sweep(_,
+        Seq("graft_q_orders_b_", "graft_q_customer_b_")))
       sink.Warehouse.writeBucketed(
         orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
         s"graft_q_orders_b_$tag", Seq("o_custkey"), numBuckets = 8)

@@ -63,10 +63,7 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
     // ranking above the spec floor — at 100 TB the brute force is the
     // eval-scale baseline and the cell-pruned two-stage path serves.
     "q_rag_pipeline" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_rag_model_"))
-      val modelPath =
-        s"${System.getProperty("java.io.tmpdir")}/graft_rag_model_${runTag(dir)}"
+      val modelPath = Scratch.path(dir, "rag_model")
       val docs = spread(t(s, dir, "documents"))
       // chunk keys pack (doc, chunk) into one numeric total order; the
       // fixture corpus tops out far below 4096 chunks per document
@@ -681,10 +678,7 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
     // load ∘ save must be the identity on doubles. Empty-relation oracle.
     "q_vec_pca_reload_verify" -> ((s, dir) => {
       import s.implicits._
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_pca_model_"))
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_pca_model_${runTag(dir)}"
+      val path = Scratch.path(dir, "pca_model")
       val e = spread(t(s, dir, "embeddings"))
       val (mean, _, comps) = operators.VectorStats.pcaComponents(e, "embedding", 8)
       operators.VectorStats.savePcaBasis(s, mean, comps, path)

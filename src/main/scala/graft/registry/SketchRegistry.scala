@@ -73,10 +73,7 @@ private[graft] object SketchRegistry extends QueryRegistry {
     // ≡ plain full-scan filter — that's the oracle; BloomIndexSpec
     // asserts files were actually skipped.
     "q_bloom_index" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_bloomidx_"))
-      val base =
-        s"${System.getProperty("java.io.tmpdir")}/graft_bloomidx_${runTag(dir)}"
+      val base = Scratch.path(dir, "bloomidx")
       graft.sink.ZoneMap.writeClustered(
         t(s, dir, "lineitem"), base, "l_shipdate", nFiles = 16)
       graft.sink.BloomIndex.buildIndex(s, base, "l_orderkey")

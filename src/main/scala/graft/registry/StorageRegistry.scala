@@ -28,10 +28,7 @@ private[graft] object StorageRegistry extends QueryRegistry {
     // exact reconstruction of Spark's to_json output, plus the shard
     // assignment recovered from the directory layout.
     "q_jsonl_roundtrip" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_jsonl_"))
-      val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_${runTag(dir)}"
+      val out = Scratch.path(dir, "jsonl")
       val docs = t(s, dir, "documents")
       sink.Jsonl.writeShards(docs, out,
         Seq(col("doc_id"), col("lang"), col("n_chars"), col("text")),
@@ -51,10 +48,7 @@ private[graft] object StorageRegistry extends QueryRegistry {
     // silently, never failing the job — and the oracle reconstructs both
     // the clean rows and the exact truncated raw strings.
     "q_jsonl_source" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_jsonlsrc_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_jsonlsrc_${runTag(dir)}"
+      val src = Scratch.path(dir, "jsonlsrc")
       val docs = t(s, dir, "documents")
       docs.select(col("doc_id"),
           to_json(struct(col("doc_id"), col("lang"), col("n_chars")))
@@ -244,9 +238,7 @@ private[graft] object StorageRegistry extends QueryRegistry {
     // manifest + a plain parquet scan of its file list (pruning/pushdown
     // intact).
     "q_table_asof" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_vtable_"))
-      val tbl = s"${System.getProperty("java.io.tmpdir")}/graft_vtable_${runTag(dir)}"
+      val tbl = Scratch.path(dir, "vtable")
       val fsPath = new org.apache.hadoop.fs.Path(tbl)
       val fs = fsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(fsPath, true)
@@ -284,10 +276,7 @@ private[graft] object StorageRegistry extends QueryRegistry {
     // (PartitionFilters in the plan, guarded in PlanSpec), the layout that
     // turns a 100 TB full scan into a directory listing.
     "q_partition_pruning" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_part_orders_"), legacy = Seq("graft_part_orders"))
-      val base =
-        s"${System.getProperty("java.io.tmpdir")}/graft_part_orders_${runTag(dir)}"
+      val base = Scratch.path(dir, "part_orders")
       t(s, dir, "orders").write.mode("overwrite")
         .partitionBy("o_orderpriority").parquet(base)
       s.read.parquet(base)
@@ -307,10 +296,7 @@ private[graft] object StorageRegistry extends QueryRegistry {
     // Result must equal the plain full-scan filter — that's the oracle;
     // ZoneMapSpec asserts files were actually skipped.
     "q_zonemap_skip" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_zonemap_"))
-      val base =
-        s"${System.getProperty("java.io.tmpdir")}/graft_zonemap_${runTag(dir)}"
+      val base = Scratch.path(dir, "zonemap")
       graft.sink.ZoneMap.writeClustered(
         t(s, dir, "lineitem"), base, "l_shipdate", nFiles = 16)
       graft.sink.ZoneMap.readRange(s, base, "l_shipdate",

@@ -44,10 +44,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // function, so the bounded stream shares the batch q_text_extract
     // oracle VERBATIM (full hash gate, no tolerance).
     "q_stream_text_extract" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_tx_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_tx_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "tx_src")
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -60,10 +57,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // micro-batch (per-row projection, exploding): stream ≡ batch
     // VERBATIM, so it shares q_html_links' oracle unchanged.
     "q_stream_links" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_lk_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_lk_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "lk_src")
       t(s, dir, "documents").select(col("doc_id"), col("source"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -75,10 +69,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // STREAMING twin of the pair extraction — per-row projection, so
     // stream ≡ batch VERBATIM and it shares q_image_text_pairs' oracle.
     "q_stream_images" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_im_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_im_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "im_src")
       t(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -94,10 +85,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // the grouped runner's batch-id check fails loudly on a split
     // shard. Shares q_pack_ffd_stats' oracle verbatim.
     "q_stream_ffd" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_ffd_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_ffd_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "ffd_src")
       t(s, dir, "documents")
         .select(col("doc_id"),
           size(filter(split(col("text"), "\\s+"), x => x =!= ""))
@@ -119,10 +107,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // projection, so stream ≡ batch VERBATIM and it shares
     // q_interleaved_docs' oracle.
     "q_stream_interleaved" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_il_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_il_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "il_src")
       t(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -138,10 +123,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // group-complete-file contract of runStreamGroupedBounded). Shares
     // q_sft_assemble's oracle verbatim.
     "q_stream_sft" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_sft_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sft_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "sft_src")
       sftAssembleTurns(s, dir).repartitionByRange(4, col("conv_id"))
         .write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamGroupedBounded(s, src,
@@ -161,10 +143,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // signature frame — runs as the bounded epilogue. Shares
     // q_video_neardup's oracle verbatim.
     "q_stream_video_neardup" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_vnd_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_vnd_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "vnd_src")
       t(s, dir, "documents").select(col("doc_id"))
         .repartition(4).write.mode("overwrite").parquet(src)
       val frames = streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -184,10 +163,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // frame runs as the bounded epilogue. Shares q_bitext_mine's oracle
     // verbatim.
     "q_stream_bitext_mine" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_btm_src_"))
-      val srcPath =
-        s"${System.getProperty("java.io.tmpdir")}/graft_btm_src_${runTag(dir)}"
+      val srcPath = Scratch.path(dir, "btm_src")
       t(s, dir, "embeddings").repartition(4)
         .write.mode("overwrite").parquet(srcPath)
       val srcSide = SimilarityRegistry.bitextSrc(t(s, dir, "embeddings"))
@@ -206,10 +182,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // pairing over the tiny signature frame runs as the bounded
     // epilogue. Shares q_audio_neardup's oracle verbatim.
     "q_stream_audio_neardup" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_and_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_and_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "and_src")
       t(s, dir, "documents").select(col("doc_id"))
         .repartition(4).write.mode("overwrite").parquet(src)
       val sigs = streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -231,10 +204,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // explode — runs as the bounded epilogue. Shares q_interleaved_pack's
     // oracle verbatim.
     "q_stream_interleaved_pack" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_ilp_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_ilp_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "ilp_src")
       t(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(src)
@@ -251,10 +221,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
 
 
     "q_stream_sft_tokens" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_sftt_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_sftt_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "sftt_src")
       sftAssembleTurns(s, dir).repartitionByRange(4, col("conv_id"))
         .write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamGroupedBounded(s, src,
@@ -270,10 +237,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // (runStreamGroupedBounded's batch-id contract check fails loudly
     // otherwise). Shares q_pref_pairs' oracle verbatim.
     "q_stream_pref_pairs" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_pref_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_pref_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "pref_src")
       prefCandidates(s, dir).repartitionByRange(4, col("prompt_id"))
         .write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamGroupedBounded(s, src,
@@ -288,10 +252,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // make the per-batch rank window exact, and the batch-id check
     // fails loudly on a split prompt. Shares q_sft_bon's oracle.
     "q_stream_bon" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_bon_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_bon_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "bon_src")
       prefCandidates(s, dir).repartitionByRange(4, col("prompt_id"))
         .write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamGroupedBounded(s, src,
@@ -304,10 +265,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // STREAMING twin of the markdown rendering — per-row projection,
     // stream ≡ batch VERBATIM, shared oracle.
     "q_stream_markdown" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_md_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_md_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "md_src")
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -320,10 +278,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // micro-batch (pure row map): stream ≡ batch verbatim, shares
     // q_html_tables' oracle unchanged.
     "q_stream_tables" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_tb_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_tb_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "tb_src")
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -351,10 +306,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // cannot matter and the bounded stream shares the batch oracle
     // VERBATIM.
     "q_stream_anchor_texts" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_anchor_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_anchor_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "anchor_src")
       val docs = t(s, dir, "documents")
       val n = docs.count()
       docs.select(col("doc_id").as("src"),
@@ -384,10 +336,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
           operators.RobotsTxt.syntheticRobots(col("domain"), col("k"))
             .as("txt"))
       val rules = operators.RobotsTxt.parseRules(robots, "domain", "txt")
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_rg_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_rg_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "rg_src")
       docs.select(col("doc_id"),
           concat(lit("https://www."), col("source"), lit(".example.com/docs/"),
             (col("doc_id") % 25).cast("string"), lit("/?utm_source="),
@@ -428,10 +377,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
       val crawled = docs.select(concat(lit("https://www."), col("source"),
         lit(".example.com/docs/"), (col("doc_id") % 25).cast("string"))
         .as("url")).distinct()
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_seeds_src_"))
-      val srcPath =
-        s"${System.getProperty("java.io.tmpdir")}/graft_seeds_src_${runTag(dir)}"
+      val srcPath = Scratch.path(dir, "seeds_src")
       feeds.repartition(4).write.mode("overwrite").parquet(srcPath)
       streaming.StreamingIngest.runStreamSeedsBounded(s, srcPath, "xml",
           "domain", crawled, "url")
@@ -447,10 +393,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // pure per-row, so the bounded stream shares the batch
     // q_jsonl_source oracle VERBATIM.
     "q_stream_jsonl_source" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_jsonlstr_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_jsonlstr_${runTag(dir)}"
+      val src = Scratch.path(dir, "jsonlstr")
       t(s, dir, "documents").select(col("doc_id"),
           to_json(struct(col("doc_id"), col("lang"), col("n_chars")))
             .as("value"))
@@ -493,10 +436,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // finalize through the shared CC path — stream ≡ batch verbatim, so
     // this streaming query carries q_er_entities' FULL hash oracle.
     "q_stream_er" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_er_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_er_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "er_src")
       erRecords(s, dir).repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamErBounded(s, src, "rec_id", "name",
           maxDist = 1)
@@ -510,10 +450,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // transitivity), each batch folding through the SAME batch operator
     // code. Stream ≡ batch verbatim ⇒ q_pareto_front's full hash oracle.
     "q_stream_pareto" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_pareto_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_pareto_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "pareto_src")
       t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
           explode(operators.Dedup.cleanTokens(col("text"))).as("__tok"))
@@ -535,10 +472,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // extraction of arriving binary payloads — pure per-row work, so the
     // bounded stream hash-matches the batch oracle verbatim.
     "q_stream_multimodal" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_mm_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_mm_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "mm_src")
       t(s, dir, "documents").select(col("doc_id"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamRowMapBounded(s, src,
@@ -584,12 +518,8 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // which is the oracle. Exactly-once by idempotence — replaying a batch
     // re-merges already-ranked rows (spec-asserted in WarehouseOpsSpec).
     "q_stream_upsert" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_upsert_src_", "graft_upsert_tbl_"))
-      val base = System.getProperty("java.io.tmpdir")
-      val tag = runTag(dir)
-      val src = s"$base/graft_upsert_src_$tag"
-      val tbl = s"$base/graft_upsert_tbl_$tag"
+      val src = Scratch.path(dir, "upsert_src")
+      val tbl = Scratch.path(dir, "upsert_tbl")
       t(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("ts"), col("value"))
         .repartition(4)
@@ -612,10 +542,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // equal the one-shot batch classification, which is the oracle (the
     // exact q_classify_nb SQL).
     "q_stream_classify" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_clf_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_clf_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "clf_src")
       val docs = t(s, dir, "documents")
       docs.filter(col("doc_id") % 5 === 0).repartition(4)
         .write.mode("overwrite").parquet(src)
@@ -631,10 +558,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // frames. Bucket counts are multiset functions → stream ≡ batch, so
     // the batch q_dsir_weights SQL gates this verbatim (full hash).
     "q_stream_dsir" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_dsir_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_dsir_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "dsir_src")
       val docs = t(s, dir, "documents")
       docs.filter(col("lang") =!= "en").select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
@@ -653,10 +577,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // oracle (quality rule + q_dedup_ngram's shingle replay), the same
     // stream ≡ batch discipline as q_stream_classify.
     "q_stream_curate" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_curate_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_curate_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "curate_src")
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamCurateBounded(s, src,
@@ -673,10 +594,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // stream ≡ batch equality sibling below (exact-dedup relatives:
     // q_stream_curate / q_dedup_minhash's own verified family).
     "q_stream_curate_fuzzy" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_curatef_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_curatef_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "curatef_src")
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(src)
       streaming.StreamingIngest.runStreamCurateFuzzyBounded(s, src,
@@ -692,10 +610,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // only a superset, which is why the gate runs uncapped on both
     // sides). Violations only; oracle = empty relation.
     "q_stream_curate_fuzzy_verify" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_curatefv_src_"))
-      val src =
-        s"${System.getProperty("java.io.tmpdir")}/graft_curatefv_src_${runTag(dir)}"
+      val src = Scratch.path(dir, "curatefv_src")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       docs.repartition(4).write.mode("overwrite").parquet(src)
       val streamRes = streaming.StreamingIngest.runStreamCurateFuzzyBounded(
@@ -730,11 +645,8 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // models, index) — no cross-batch state) — round-14 fold; the
     // served lists stay in the API.
     "q_stream_ann" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_ann_src_", "graft_ann_model_"))
-      val tmp = System.getProperty("java.io.tmpdir")
-      val src = s"$tmp/graft_ann_src_${runTag(dir)}"
-      val modelPath = s"$tmp/graft_ann_model_${runTag(dir)}"
+      val src = Scratch.path(dir, "ann_src")
+      val modelPath = Scratch.path(dir, "ann_model")
       t(s, dir, "embeddings").repartition(4).write.mode("overwrite").parquet(src)
       // the runner hands back its checkpointed code index — built from the
       // models as reloaded from modelPath, i.e. the same (livf, lpq) loaded
@@ -764,11 +676,8 @@ private[graft] object StreamRegistry extends QueryRegistry {
     // the batch topKIndexed run under the SAME persisted models exactly,
     // not merely to a recall floor. Violations only; empty oracle.
     "q_stream_ann_verify" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_annv_src_", "graft_annv_model_"))
-      val tmp = System.getProperty("java.io.tmpdir")
-      val src = s"$tmp/graft_annv_src_${runTag(dir)}"
-      val modelPath = s"$tmp/graft_annv_model_${runTag(dir)}"
+      val src = Scratch.path(dir, "annv_src")
+      val modelPath = Scratch.path(dir, "annv_model")
       t(s, dir, "embeddings").repartition(4).write.mode("overwrite").parquet(src)
       val emb = s.read.parquet(src)
       val ivf = operators.IvfIndex.train(emb, "vec_id", "embedding", k = 16)

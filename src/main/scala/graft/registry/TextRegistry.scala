@@ -70,10 +70,7 @@ private[graft] object TextRegistry extends QueryRegistry {
     // verbatim (doubles round-trip parquet bit-exactly), so the reloaded
     // LM must score hash-identically to the train-fresh one.
     "q_text_trigram_reload" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_trigram_model_"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_trigram_model_${runTag(dir)}"
+      val path = Scratch.path(dir, "trigram_model")
       val docs = t(s, dir, "documents")
       TextAnalysis.saveTrigramLm(TextAnalysis.trainTrigramLm(docs, "text"), path)
       TextAnalysis.scoreTrigramLm(TextAnalysis.loadTrigramLm(s, path),

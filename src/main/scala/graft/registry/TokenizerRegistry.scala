@@ -194,10 +194,7 @@ private[graft] object TokenizerRegistry extends QueryRegistry {
     // (piece, cost_milli) and the RELOADED model must reproduce the
     // token stream bit-for-bit — same oracle verbatim.
     "q_unigram_reload" -> ((s, dir) => {
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_unigram_"))
-      val path =
-        s"${System.getProperty("java.io.tmpdir")}/graft_unigram_${runTag(dir)}"
+      val path = Scratch.path(dir, "unigram")
       operators.UnigramTokenizer.saveVocab(s,
         operators.UnigramTokenizer.frozenVocab, path)
       val reloaded = operators.UnigramTokenizer.loadVocab(s, path)
@@ -241,11 +238,9 @@ private[graft] object TokenizerRegistry extends QueryRegistry {
     // any divergent row violates; empty-relation oracle.
     "q_bpe_reload_verify" -> ((s, dir) => {
       implicit val sp: SparkSession = s
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_bpe_model_"))
       operators.BpeTokenizer.reloadViolations(
         t(s, dir, "documents"), "doc_id", "text", numMerges = 200,
-        s"${System.getProperty("java.io.tmpdir")}/graft_bpe_model_${runTag(dir)}")
+        Scratch.path(dir, "bpe_model"))
     }),
 
   )

@@ -228,10 +228,7 @@ private[graft] object WarcRegistry extends QueryRegistry {
     // q_warc_records oracle verbatim.
     "q_warc_incremental" -> ((s, dir) => {
       val warc = warcFixtureDir(s, dir)
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_warcinc_"))
-      val base =
-        s"${System.getProperty("java.io.tmpdir")}/graft_warcinc_${runTag(dir)}"
+      val base = Scratch.path(dir, "warcinc")
       val wh = s"$base/warehouse"
       val mf = s"$base/manifest"
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
@@ -383,10 +380,7 @@ private[graft] object WarcRegistry extends QueryRegistry {
           col("target_uri").as("uri"),
           graft.expr.HtmlExpressions.html_content_text(col("body"))
             .as("extracted"))
-      sweepDeadScratch(new java.io.File(System.getProperty("java.io.tmpdir")),
-        Seq("graft_wet_"))
-      val out =
-        s"${System.getProperty("java.io.tmpdir")}/graft_wet_${runTag(dir)}"
+      val out = Scratch.path(dir, "wet")
       ingest.WarcIngest.writeWet(s, extracted, "doc_id", "uri", "extracted",
         out, nFiles = 4)
       ingest.WarcIngest.readRecords(s, out)

@@ -307,18 +307,20 @@ object StreamingIngest {
   private def streamGlob(parquetPath: String): String =
     if (parquetPath.endsWith("*")) parquetPath else parquetPath + "*"
 
-  /** Bounded parquet file-source stream (see the object scaladoc for the
-    * `maxFilesPerTrigger` rule). One micro-batch is the default for the
-    * batch-count-INVARIANT twins: there the batch count is pure execution
-    * overhead (4 micro-batches cost ~2.4 s of planning and commit per
-    * stream query, on top of 4× the per-batch checkpoint jobs). */
+  /** Bounded file-source stream, parquet unless `format` says otherwise
+    * (see the object scaladoc for the `maxFilesPerTrigger` rule). One
+    * micro-batch is the default for the batch-count-INVARIANT twins: there
+    * the batch count is pure execution overhead (4 micro-batches cost
+    * ~2.4 s of planning and commit per stream query, on top of 4× the
+    * per-batch checkpoint jobs). */
   private def boundedStream(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType,
-      maxFilesPerTrigger: Int): DataFrame = {
-    val r = spark.readStream.schema(schema)
+      maxFilesPerTrigger: Int, format: String = "parquet",
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val r = spark.readStream.format(format).schema(schema).options(options)
     val r2 = if (maxFilesPerTrigger > 0)
       r.option("maxFilesPerTrigger", maxFilesPerTrigger.toString) else r
-    r2.parquet(streamGlob(path))
+    r2.load(streamGlob(path))
   }
 
   /** Run `stream` to the end of its bounded input as an append-mode
@@ -439,10 +441,8 @@ object StreamingIngest {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val table = new org.apache.hadoop.fs.Path(tablePath)
         // Swap-state names carry the WRITER's pid, which separates the two
-        // cases a bare name cannot: leftovers whose pid is ours, dead, or
-        // recycled (the "owner" process STARTED after the leftover was
-        // written — a real owner's start precedes its writes) are crash
-        // debris and SELF-HEAL (a stray tmp is a partial write — discard;
+        // cases a bare name cannot: leftovers whose pid is ours, or whose
+        // owner is gone (Scratch.ownerGone), are crash debris and SELF-HEAL (a stray tmp is a partial write — discard;
         // a bak with no table is the mid-swap crash — restore; a bak with
         // a table is the post-swap crash — superseded, discard); leftovers
         // whose pid is a genuinely LIVE other process are a CONCURRENT
@@ -453,7 +453,7 @@ object StreamingIngest {
         // the table is read — a mid-swap crash would otherwise read as an
         // empty table and drop pre-crash history. All healing is
         // idempotent, so foreachBatch redelivery converges.
-        val mine = ProcessHandle.current().pid()
+        val mine = graft.Scratch.pid
         val pidOf = "_p(\\d+)$".r
         def leftovers(kind: String): Seq[org.apache.hadoop.fs.Path] = {
           val tagged = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
@@ -467,21 +467,11 @@ object StreamingIngest {
             case None => true // bare legacy name: no live writer emits it
             case Some(m) =>
               val pid = m.group(1).toLong
-              if (pid == mine) true
-              else {
-                val h = ProcessHandle.of(pid)
-                if (!h.isPresent) true
-                else {
-                  val started = h.get().info().startInstant()
-                  val mtime = scala.util.Try(
-                    fs.getFileStatus(p).getModificationTime).getOrElse(0L)
-                  val recycled = started.isPresent && mtime > 0 &&
-                    started.get().toEpochMilli > mtime + 60000L
-                  recycled || { throw new java.io.IOException(
-                    s"upsert: live concurrent writer (pid $pid) owns $p — " +
-                      "two processes must not target one table") }
-                }
-              }
+              pid == mine || graft.Scratch.ownerGone(pid, scala.util.Try(
+                fs.getFileStatus(p).getModificationTime).getOrElse(0L)) || {
+                throw new java.io.IOException(
+                  s"upsert: live concurrent writer (pid $pid) owns $p — " +
+                    "two processes must not target one table") }
           }
         leftovers("__upserting").filter(healable).foreach(fs.delete(_, true))
         leftovers("__old").filter(healable).foreach { p =>
@@ -831,14 +821,9 @@ object StreamingIngest {
                             schema: org.apache.spark.sql.types.StructType,
                             maxFilesPerTrigger: Int = 0): DataFrame = {
     import org.apache.spark.sql.types.StringType
-    val reader = spark.readStream
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-    val stream = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      else reader)
-      .json(streamGlob(srcDir))
+    val stream = boundedStream(spark, srcDir,
+      schema.add("_corrupt_record", StringType), maxFilesPerTrigger, "json",
+      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record"))
     collectBatches(stream, "runStreamJsonlBounded")((batch, _) => batch)
   }
 

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.SparkException
 
 /** The engine's one materialization policy ([[Materialize]]) under a lost
-  * checkpoint block, and a source guard that keeps it the only one. */
+  * checkpoint block, and source guards that keep it, the stream drivers
+  * and the scratch-path policy ([[Scratch]]) the only ones. */
 class MaterializeSpec extends SparkSpec {
 
   /** Materialize a small frame, then drop every block persisted since —
@@ -107,6 +108,8 @@ class MaterializeSpec extends SparkSpec {
     """\.(localCheckpoint\(|checkpoint\(|persist\(|cache\(\))""".r
   private val streamDriverCall =
     """processAllAvailable\(|\.foreachBatch|format\("memory"\)""".r
+  private val scratchCall =
+    """System\.getProperty\(|ProcessHandle\.|"_SUCCESS"""".r
 
   test("guard predicate: sees a call in code, not in a comment or a string") {
     val src = Seq(
@@ -122,9 +125,13 @@ class MaterializeSpec extends SparkSpec {
       "// df.cache()",
       "try q.processAllAvailable() finally q.stop()",
       "df.writeStream.foreachBatch { (b: DataFrame, _: Long) => () }",
-      "df.writeStream.format(\"memory\").queryName(n).start()").mkString("\n")
+      "df.writeStream.format(\"memory\").queryName(n).start()",
+      "val tmp = System.getProperty(\"java.io.tmpdir\")",
+      "val mine = ProcessHandle.current().pid()",
+      "val marker = new java.io.File(out, \"_SUCCESS\")").mkString("\n")
     assert(callLines(src, materializeCall) == Seq(1, 6, 7, 8))
     assert(callLines(src, streamDriverCall) == Seq(11, 12, 13))
+    assert(callLines(src, scratchCall) == Seq(14, 15, 16))
   }
 
   private val mainRoot = new java.io.File("src/main/scala")
@@ -169,5 +176,18 @@ class MaterializeSpec extends SparkSpec {
     assert(owners.nonEmpty, "no foreachBatch found: the check is vacuous")
     assert(owners.toSet.subsetOf(Set("eachBatch", "streamingEtl", "streamUpsertToWarehouse")),
       s"foreachBatch outside eachBatch: ${owners.mkString(", ")}")
+  }
+
+  test("guard: only Scratch.scala names scratch paths and their owners") {
+    val (scratch, others) =
+      mainSources().partition(_._1 == new java.io.File(mainRoot, "graft/Scratch.scala"))
+    assert(scratch.exists { case (_, src) => callLines(src, scratchCall).nonEmpty },
+      "graft/Scratch.scala has none of the guarded calls: the check is vacuous")
+    val offenders = for {
+      (f, src) <- others
+      line <- callLines(src, scratchCall)
+    } yield s"${f.getPath}:$line"
+    assert(offenders.isEmpty,
+      s"name scratch paths through graft.Scratch: ${offenders.mkString(", ")}")
   }
 }

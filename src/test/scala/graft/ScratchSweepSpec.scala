@@ -52,7 +52,7 @@ class ScratchSweepSpec extends AnyFunSuite {
       val noPid = mk("graft_scratch_nopid")
       val overflow = mk("graft_scratch_y_p99999999999999999999") // > Long.MaxValue
 
-      SparkEntry.sweepDeadScratch(parent, Seq("graft_scratch_"),
+      Scratch.sweep(parent, Seq("graft_scratch_"),
         legacy = Seq("graft_scratch", "graft_scratch_old_name"))
 
       assert(!dead.exists(), "dead-pid dir must be reclaimed")
