@@ -33,8 +33,11 @@ import graft.views.CountryViews
   *  - the warehouse write, unpartitioned: one file per write task.
   * The warehouse is read back with the schema it was written with, so no
   * footer-read job runs and `COUNTRY` stays a string whatever its values
-  * look like. The views are lazy: registering them plans their cached
-  * latest-row set but fills nothing, so the first view read pays the rank.
+  * look like. The views are lazy: registering them plans their latest-row
+  * set, a [[Materialize.onFirstRead]] checkpoint, with adaptive execution
+  * off, so it starts no job and fills nothing. The first view read ranks
+  * and fills the set in one job; every later lookup is one job of one
+  * stage over the lineage-free set.
   */
 object Pipeline {
 

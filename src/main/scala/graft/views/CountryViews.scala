@@ -1,9 +1,9 @@
 package graft.views
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Per-country analytic views (reference `view_generator.py:4-72` +
   * `main.py:64-139`; operators S6/S7/S8/A1/W1/E4/E5/P9 in SURVEY.md §2).
@@ -29,9 +29,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale: the dedup is one hash-shuffle on `CUST_I` + per-partition sort —
   * the single shuffle this pipeline needs, run once per registration: the
   * per-country views are filters over one latest-row set (base columns
-  * only), cached lazily, so N countries do not mean N shuffles and a
-  * request after the first reads the cache with no shuffle. The as-of
-  * columns are computed over the cached rows per query.
+  * only), a lazy local checkpoint that the first view read fills, so N
+  * countries do not mean N shuffles. A request after the first reads the
+  * checkpoint as a leaf with no lineage: one stage, no shuffle. The as-of
+  * columns are computed over the set per query.
   */
 object CountryViews {
 
@@ -144,42 +145,49 @@ object CountryViews {
     files
   }
 
-  /** The temp view holding the cached latest-row set of the current
-    * registration. */
-  private val LatestRowsView = "__graft_latest_customers"
+  /** One registration: its country views and the RDD its latest-row set
+    * reads. The set's frame is not kept: it would pin the session. */
+  private final case class Registration(views: Seq[String], latest: Option[RDD[_]])
 
-  /** The country views of each session's last registration. */
-  private val registered = new java.util.WeakHashMap[SparkSession, Seq[String]]()
+  /** The last registration of each session. */
+  private val registered = new java.util.WeakHashMap[SparkSession, Registration]()
 
   /** S6+S7: register each country view as a temp view — the Spark-native
     * replacement for generating SQL text files and executing them remotely
     * (`view_generator.py:17-72`, `main.py:107-139`). Views are lazy,
     * mirroring the reference's views-not-tables design (README.md:89-98).
     *
-    * The views share one latest-row set per registration, registered as a
-    * temp view and cached lazily on disk: the first view read ranks the
-    * warehouse and fills the cache, every later read scans it with no
-    * shuffle. It is cached `DISK_ONLY`, so it holds no storage memory. The
-    * as-of columns are computed over the cached rows, so `current_date()`
-    * is still evaluated per query.
-    * Replacing the temp view releases the previous registration's cache
-    * (Spark uncaches a temp view whose plan changes), so a session holds at
-    * most one. The views of the session's previous registration for
-    * countries this one lacks are dropped, so none answers from an earlier
-    * warehouse; temp views this method did not register are left alone. */
+    * The views share one latest-row set per registration, a
+    * [[graft.Materialize.onFirstRead]] checkpoint on disk: registering runs
+    * no job, the first view read ranks the warehouse and fills the blocks
+    * in one job, and every later read is one stage over a lineage-free
+    * leaf, with no shuffle. The set holds no storage memory. It is
+    * executor-local even under a checkpoint dir, because it is a read cache
+    * of the durable warehouse; a lost block therefore fails a view read
+    * loudly instead of recomputing it, and the next registration builds a
+    * new set. The as-of columns are computed over the set per query, so
+    * `current_date()` is still evaluated per query.
+    * Each registration releases the session's previous set, read or not,
+    * so a session holds at most one. The views of the previous
+    * registration for countries this one lacks are dropped, so none
+    * answers from an earlier warehouse; temp views this method did not
+    * register are left alone. */
   def registerCountryViews(spark: SparkSession, warehouse: DataFrame,
                            countries: Seq[String],
                            asOf: Column = current_date()): Seq[String] = {
-    latestRows(warehouse).createOrReplaceTempView(LatestRowsView)
-    spark.catalog.cacheTable(LatestRowsView, StorageLevel.DISK_ONLY)
-    val deduped = withAsOf(spark.table(LatestRowsView), asOf)
+    val latest = graft.Materialize.onFirstRead(latestRows(warehouse))
+    val deduped = withAsOf(latest, asOf)
     val names = countries.sorted.map { c =>
       val name = viewName(c)
       deduped.filter(col("COUNTRY") === lit(c)).createOrReplaceTempView(name)
       name
     }
-    val previous = registered.synchronized(Option(registered.put(spark, names)).getOrElse(Nil))
-    previous.filterNot(names.contains).foreach(spark.catalog.dropTempView)
+    val previous = registered.synchronized(
+      Option(registered.put(spark, Registration(names, graft.Materialize.checkpointOf(latest)))))
+    previous.foreach { p =>
+      p.views.filterNot(names.contains).foreach(spark.catalog.dropTempView)
+      p.latest.foreach(graft.Materialize.release)
+    }
     names
   }
 }

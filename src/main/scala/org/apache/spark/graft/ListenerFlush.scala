@@ -1,6 +1,7 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 
 /** The `private[spark]` doorways the engine needs. Lives in an
   * `org.apache.spark` subpackage solely to reach them; no other internals
@@ -15,11 +16,19 @@ import org.apache.spark.SparkContext
   *    release that loss is the point, so it calls `unpersistRDD` directly:
   *    the same block removal, without the warning. The RDD keeps its
   *    storage-level field, which changes nothing for a checkpoint: a read
-  *    after release fails on the missing blocks either way. */
+  *    after release fails on the missing blocks either way.
+  *  - [[isLocallyCheckpointed]]: whether an RDD is marked for a local
+  *    checkpoint (what `private[rdd] RDD.isLocallyCheckpointed` tells).
+  *    `RDD.isCheckpointed` turns true only once a job has filled the
+  *    blocks, so [[graft.Materialize.release]] needs this to free a lazy
+  *    checkpoint that was never read. */
 object ListenerFlush {
   def flush(sc: SparkContext, timeoutMillis: Long = 60000L): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMillis)
 
   def unpersistQuietly(sc: SparkContext, rddId: Int, blocking: Boolean): Unit =
     sc.unpersistRDD(rddId, blocking)
+
+  def isLocallyCheckpointed(rdd: RDD[_]): Boolean =
+    rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]])
 }

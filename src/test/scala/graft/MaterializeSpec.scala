@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.SparkException
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 
 /** The engine's one materialization policy ([[Materialize]]) under a lost
   * checkpoint block, and source guards that keep it, the stream drivers
@@ -25,12 +27,15 @@ class MaterializeSpec extends SparkSpec {
 
   test("release drops a local checkpoint's blocks") {
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val df = Materialize(spark.range(0, 200, 1, 4).toDF("id"))
-    val held = sc.getPersistentRDDs.keySet -- before
-    assert(held.nonEmpty, "the local checkpoint persisted no RDD")
-    Materialize.release(df)
-    assert((sc.getPersistentRDDs.keySet & held).isEmpty)
+    // an eager checkpoint, and a lazy one that nothing has read yet
+    for (checkpoint <- Seq(Materialize.apply[Row] _, Materialize.onFirstRead[Row] _)) {
+      val before = sc.getPersistentRDDs.keySet
+      val df = checkpoint(spark.range(0, 200, 1, 4).toDF("id"))
+      val held = sc.getPersistentRDDs.keySet -- before
+      assert(held.nonEmpty, "the local checkpoint persisted no RDD")
+      Materialize.release(df)
+      assert((sc.getPersistentRDDs.keySet & held).isEmpty)
+    }
   }
 
   test("lost local checkpoint block: re-reading fails loudly, never returns rows") {
@@ -60,6 +65,36 @@ class MaterializeSpec extends SparkSpec {
       .exists(_.contains("cannot be recomputed")), "the log capture saw nothing")
   }
 
+  test("onFirstRead runs no job; its first read fills it, later reads are one stage") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val counts = spark.range(0, 200, 1, 4).toDF("id")
+      .groupBy(col("id") % 10).count()
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsIn { df = Materialize.onFirstRead(counts) } == 0)
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.size == 1)
+    // the aggregate's shuffle map stage and the filling result stage, then the leaf
+    assert(jobStagesIn(assert(df.collect().map(_.getLong(1)).sum == 200)) == Seq(2))
+    assert(jobStagesIn(assert(df.filter(col("count") === 20).collect().length == 10)) == Seq(1))
+    Materialize.release(df)
+    assert((sc.getPersistentRDDs.keySet & held).isEmpty)
+  }
+
+  test("onFirstRead leaves the session's adaptive-execution setting as it was") {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getAll.get(key)
+    def lazyFrame() = Materialize.release(Materialize.onFirstRead(spark.range(4).toDF("id")))
+    try {
+      spark.conf.unset(key)
+      lazyFrame()
+      assert(spark.conf.getAll.get(key).isEmpty)
+      spark.conf.set(key, "true")
+      lazyFrame()
+      assert(spark.conf.getAll.get(key).contains("true"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** The messages of the WARN-or-worse events logged while `body` runs. */
   private def warnings(body: => Unit): Seq[String] = {
     import org.apache.logging.log4j.Level
@@ -87,16 +122,79 @@ class MaterializeSpec extends SparkSpec {
   }
 
   /** The code of a Scala source, one entry per line: comments and string
-    * literals are blanked first, keeping their line breaks. A literal of
-    * word characters only (`"memory"`) is kept: it can hold no call, and a
+    * literals are blanked, keeping their line breaks. The code inside an
+    * interpolated string's `${...}` stays visible. A plain literal of word
+    * characters only (`"memory"`) is kept: it can hold no call, and a
     * pattern may name it as an argument. */
   private def codeLines(src: String): Seq[String] = {
-    val noise = """(?s)"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*.*?\*/""".r
-    val code = noise.replaceAllIn(src, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        if (m.matched.matches("\"\\w*\"")) m.matched
-        else m.matched.filter(_ == '\n')))
-    code.split("\n", -1).toSeq
+    val out = new StringBuilder
+    var i = 0
+    def at(s: String): Boolean = src.startsWith(s, i)
+    // the line breaks of the skipped text src(from until i)
+    def skipped(from: Int): Unit = out ++= src.substring(from, i).filter(_ == '\n')
+    val charLiteral = """'(?:\\.|[^\\'\n])'""".r
+
+    // code up to the end, or up to (not past) the `}` closing an interpolation
+    def code(closing: Boolean): Unit = {
+      var depth = 0
+      while (i < src.length && !(closing && depth == 0 && src(i) == '}')) {
+        val from = i
+        if (at("//")) {
+          while (i < src.length && src(i) != '\n') i += 1
+          skipped(from)
+        } else if (at("/*")) {
+          var nesting = 1
+          i += 2
+          while (nesting > 0 && i < src.length) {
+            if (at("/*")) { nesting += 1; i += 2 }
+            else if (at("*/")) { nesting -= 1; i += 2 }
+            else i += 1
+          }
+          skipped(from)
+        } else if (src(i) == '"') stringLiteral()
+        else if (src(i) == '\'' &&
+            charLiteral.findPrefixOf(src.subSequence(i, (i + 4) min src.length)).isDefined) {
+          i += (if (src(i + 1) == '\\') 4 else 3)
+        } else {
+          if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1
+          out += src(i)
+          i += 1
+        }
+      }
+    }
+
+    // a string literal, from its opening quote to past its closing one
+    def stringLiteral(): Unit = {
+      val interpolated = i > 0 && (src(i - 1).isLetterOrDigit || src(i - 1) == '_')
+      val triple = at("\"\"\"")
+      val start = i
+      var from = i
+      i += (if (triple) 3 else 1)
+      var open = true
+      while (open && i < src.length) {
+        if (triple && at("\"\"\"")) {
+          while (at("\"\"\"\"")) i += 1
+          i += 3
+          open = false
+        } else if (!triple && src(i) == '"') { i += 1; open = false }
+        else if (!triple && src(i) == '\n') open = false
+        else if (interpolated && at("$$")) i += 2
+        else if (interpolated && at("${")) {
+          i += 2
+          skipped(from)
+          code(closing = true)
+          i = (i + 1) min src.length
+          from = i
+        } else if (!triple && src(i) == '\\') i += 2
+        else i += 1
+      }
+      i = i min src.length
+      if (!interpolated && src.substring(start, i).matches("\"\\w*\"")) out ++= src.substring(start, i)
+      else skipped(from)
+    }
+
+    code(closing = false)
+    out.toString.split("\n", -1).toSeq
   }
 
   /** Lines (1-based) of Scala source whose code matches `call`. */
@@ -105,7 +203,7 @@ class MaterializeSpec extends SparkSpec {
       .collect { case (line, n) if call.findFirstIn(line).isDefined => n + 1 }
 
   private val materializeCall =
-    """\.(localCheckpoint\(|checkpoint\(|persist\(|cache\(\))""".r
+    """\.(localCheckpoint\(|checkpoint\(|persist\(|cache\(\)|cacheTable\()""".r
   private val streamDriverCall =
     """processAllAvailable\(|\.foreachBatch|format\("memory"\)""".r
   private val scratchCall =
@@ -128,10 +226,14 @@ class MaterializeSpec extends SparkSpec {
       "df.writeStream.format(\"memory\").queryName(n).start()",
       "val tmp = System.getProperty(\"java.io.tmpdir\")",
       "val mine = ProcessHandle.current().pid()",
-      "val marker = new java.io.File(out, \"_SUCCESS\")").mkString("\n")
-    assert(callLines(src, materializeCall) == Seq(1, 6, 7, 8))
+      "val marker = new java.io.File(out, \"_SUCCESS\")",
+      "val dir = s\"${System.getProperty(\"java.io.tmpdir\")}/x\"",
+      "val q = '\"'; val g = df.cache()",
+      "val sql = s\"\"\"SELECT ${n}",
+      "  df.cache() \"\"\"").mkString("\n")
+    assert(callLines(src, materializeCall) == Seq(1, 6, 7, 8, 9, 18))
     assert(callLines(src, streamDriverCall) == Seq(11, 12, 13))
-    assert(callLines(src, scratchCall) == Seq(14, 15, 16))
+    assert(callLines(src, scratchCall) == Seq(14, 15, 16, 17))
   }
 
   private val mainRoot = new java.io.File("src/main/scala")

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Window
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import graft.ingest.Harmonizer
@@ -24,7 +26,7 @@ import scala.jdk.CollectionConverters._
 class PipelineSpec extends SparkSpec {
 
   private lazy val dataDir = resourcePath("vaccination")
-  private lazy val outDir = java.nio.file.Files.createTempDirectory("graft-e2e").toString
+  private lazy val outDir = tempDir("graft-e2e")
   private lazy val result =
     Pipeline.run(spark, dataDir, outDir, asOf = lit("2026-08-12").cast("date"))
 
@@ -53,7 +55,7 @@ class PipelineSpec extends SparkSpec {
 
   test("quarantine runs accumulate; empty quarantine writes no artifact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-quarantine").toString
+    val dir = tempDir("graft-quarantine")
     val raw = Harmonizer.loadSourceData(spark, dataDir)
     val v = Validator.validate(raw)
     val p1 = Validator.saveInvalidRecords(v.quarantine, dir, Some("20260812_000001"))
@@ -194,8 +196,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("streaming ETL: micro-batches append warehouse + quarantine with checkpoint") {
-    val inDir = java.nio.file.Files.createTempDirectory("graft-stream-in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-stream-out").toString
+    val inDir = tempDir("graft-stream-in")
+    val outDir = tempDir("graft-stream-out")
     // one layout (the IND header); first file arrives before the stream starts
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(resourcePath("vaccination/IND (1) 1(in).csv")),
@@ -221,7 +223,7 @@ class PipelineSpec extends SparkSpec {
 
   test("generated view SQL files execute and match the DataFrame views") {
     result.warehouse.createOrReplaceTempView("wh_for_sql")
-    val sqlDir = java.nio.file.Files.createTempDirectory("graft-ddl").toString
+    val sqlDir = tempDir("graft-ddl")
     val files = CountryViews.writeViewSqlFiles(result.countries, "wh_for_sql",
       sqlDir, asOfSql = "DATE'2026-08-12'")
     assert(files.map(f => new java.io.File(f).getName).sorted ==
@@ -260,7 +262,7 @@ class PipelineSpec extends SparkSpec {
 
   /** A fresh input directory holding the given golden files and extra files. */
   private def inputDir(golden: Seq[String], extra: (String, String)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-in")
+    val dir = java.nio.file.Paths.get(tempDir("graft-in"))
     val src = new java.io.File(dataDir).listFiles().filter(f => golden.exists(f.getName.startsWith))
     src.foreach(f => java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
     extra.foreach { case (name, text) =>
@@ -270,7 +272,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   private def runAt(in: String): Pipeline.Result = Pipeline.run(spark, in,
-    java.nio.file.Files.createTempDirectory("graft-out").toString,
+    tempDir("graft-out"),
     asOf = lit("2026-08-12").cast("date"))
 
   test("numeric-looking country from a file name stays a string") {
@@ -309,13 +311,18 @@ class PipelineSpec extends SparkSpec {
     assert(threeLayouts <= 6, s"$threeLayouts jobs")
   }
 
-  /** The cached latest-row set a country view reads. */
-  private def latestSet(view: String): InMemoryRelation =
-    spark.table(view).queryExecution.withCachedData
-      .collectFirst { case r: InMemoryRelation => r }
-      .getOrElse(fail(s"$view reads no cached relation"))
+  /** The cached latest-row set a country view reads: its plan's one RDD leaf. */
+  private def latestSet(view: String): LogicalRDD = {
+    val leaves = spark.table(view).queryExecution.optimizedPlan.collect { case r: LogicalRDD => r }
+    assert(leaves.size == 1, s"$view reads ${leaves.size} RDD leaves")
+    leaves.head
+  }
 
   private def persistentRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The partitions of `rdd` that hold a block. */
+  private def filled(rdd: org.apache.spark.rdd.RDD[_]): Int =
+    spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id).map(_.numCachedPartitions).getOrElse(0)
 
   private def names(view: String): Seq[String] =
     spark.table(view).collect().map(_.getAs[String]("NAME")).toSeq.sorted
@@ -323,36 +330,48 @@ class PipelineSpec extends SparkSpec {
   test("two loads in one session keep one cached latest-row set, filled by the first read") {
     val before = persistentRdds
     runAt(dataDir)
-    val first = latestSet("VIEW_AUS")
-    assert(!first.cacheBuilder.isCachedColumnBuffersLoaded, "Pipeline.run filled the cache")
-    assert(persistentRdds -- before == Set.empty)
+    val first = latestSet("VIEW_AUS").rdd
+    assert(filled(first) == 0, "Pipeline.run filled the set")
+    assert(!first.isCheckpointed)
+    assert(persistentRdds -- before == Set(first.id))
 
-    assert(names("VIEW_AUS") == Seq("Cristina"))
-    val firstRdds = persistentRdds -- before
-    assert(firstRdds == Set(first.cacheBuilder.cachedColumnBuffers.id))
+    // the first read ranks the warehouse and fills every block in one job
+    assert(jobsIn(assert(names("VIEW_AUS") == Seq("Cristina"))) == 1)
+    assert(first.isCheckpointed)
+    assert(filled(first) == first.getNumPartitions)
+    assert(persistentRdds -- before == Set(first.id))
 
     // the AUS file alone: ids 1 and 3 no longer lose to IND and USA rows
     runAt(inputDir(Seq("AUS")))
-    val second = latestSet("VIEW_AUS")
-    assert(second ne first)
+    val second = latestSet("VIEW_AUS").rdd
+    assert(second.id != first.id)
+    assert(persistentRdds -- before == Set(second.id))
+    assert(filled(first) == 0)
     assert(names("VIEW_AUS") == Seq("Cristina", "Mike"))
-    assert(persistentRdds -- before == Set(second.cacheBuilder.cachedColumnBuffers.id))
-    assert((firstRdds & persistentRdds).isEmpty)
+    assert(persistentRdds -- before == Set(second.id))
+
+    // a set that no view ever read is released too
+    runAt(dataDir)
+    runAt(dataDir)
+    assert(persistentRdds -- before == Set(latestSet("VIEW_AUS").rdd.id))
   }
 
   test("the cached set holds base columns only; the views equal countryView at their as-of") {
     val r = runAt(dataDir)
-    assert(latestSet("VIEW_IND").output.map(_.name) == Seq("CUST_I", "NAME", "OPEN_DT",
+    val set = latestSet("VIEW_IND")
+    assert(set.output.map(_.name) == Seq("CUST_I", "NAME", "OPEN_DT",
       "CONSUL_DT", "VAC_ID", "DR_NAME", "STATE", "COUNTRY", "DOB", "FLAG"))
     def rows(df: DataFrame) = df.orderBy("CUST_I").collect().map(_.toSeq).toSeq
-    // the same rows under a plan the cache does not match: a fresh rank
+    // the same rows under a plan that does not read the set: a fresh rank
     val copy = spark.createDataFrame(
       spark.sparkContext.parallelize(r.warehouse.collect().toSeq), r.warehouse.schema)
     for (c <- r.countries) {
       val view = spark.table(CountryViews.viewName(c))
       assert(view.columns.takeRight(2).toSeq == Seq("AGE", "DAYS_SINCE_CONSUL_GT_30"))
       val fresh = CountryViews.countryView(copy, c, lit("2026-08-12").cast("date"))
-      assert(!fresh.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]))
+      val plan = fresh.queryExecution.optimizedPlan
+      assert(plan.exists(_.isInstanceOf[Window]), plan)
+      assert(!plan.exists { case l: LogicalRDD => l.rdd.id == set.rdd.id; case _ => false }, plan)
       assert(rows(view) == rows(fresh), s"country $c")
     }
   }
@@ -360,12 +379,28 @@ class PipelineSpec extends SparkSpec {
   test("after the first read a lookup is one job over the cached set, with no exchange") {
     runAt(dataDir)
     spark.table("VIEW_IND").collect()
+    val set = latestSet("VIEW_IND").rdd
     val lookup = spark.table("VIEW_IND").filter(col("CUST_I") === "2")
-    assert(jobsIn(assert(lookup.collect().map(_.getAs[String]("NAME")).toSeq == Seq("Rahul"))) == 1)
+    assert(jobStagesIn(assert(lookup.collect().map(_.getAs[String]("NAME")).toSeq ==
+      Seq("Rahul"))) == Seq(1))
     val plan = lookup.queryExecution.executedPlan
     val nodes = new AdaptiveSparkPlanHelper {}.collect(plan) { case n => n }
-    assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
+    assert(nodes.exists { case s: RDDScanExec => s.rdd.id == set.id; case _ => false }, plan)
     assert(!nodes.exists(_.isInstanceOf[Exchange]), plan)
+  }
+
+  test("a lost block of the cached set fails a view read loudly, never returns rows") {
+    runAt(dataDir)
+    assert(names("VIEW_IND") == Seq("Rahul"))
+    val set = latestSet("VIEW_IND").rdd
+    // what an executor loss does to the set's executor-local blocks
+    spark.sparkContext.getPersistentRDDs(set.id).unpersist(blocking = true)
+    assert(filled(set) == 0)
+    val err = intercept[SparkException](spark.table("VIEW_IND").collect())
+    assert(err.getMessage.contains("Checkpoint block"), err.getMessage)
+    // the next registration builds a new set
+    runAt(dataDir)
+    assert(names("VIEW_IND") == Seq("Rahul"))
   }
 
   test("a reload drops the previous load's views of countries it lacks, and no other temp view") {
@@ -387,7 +422,7 @@ class PipelineSpec extends SparkSpec {
       "1,Ann,ABC,04/05/2022,Dr A,S1,AUS,05/05/2022,1",
       "2,Bo,ABC,04/06/2022,Dr B,S2,IND,05/06/2022,2",
       "3,Cy,XYZ,04/07/2022,Dr C,S3,USA,05/07/2022,3").mkString("", "\n", "\n"))
-    val out = java.nio.file.Files.createTempDirectory("graft-out").toString
+    val out = tempDir("graft-out")
     val r = Pipeline.run(spark, in, out, asOf = lit("2026-08-12").cast("date"))
     assert(r.validByCountry == Map("AUS" -> 1L, "IND" -> 1L, "USA" -> 1L))
     // the write tasks are the input's scan partitions: nothing in between shuffles
@@ -412,7 +447,7 @@ class PipelineSpec extends SparkSpec {
       r.views.map(v => spark.table(v).orderBy("CUST_I").collect().map(_.toSeq).toSeq)
     val local = runAt(dataDir)
     val (localReport, localViews) = (report(local), viewRows(local))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val dir = java.nio.file.Paths.get(tempDir("graft-ckpt"))
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
       val reliable = runAt(dataDir)

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for suites (one per JVM, lazily created). */
 trait SparkSpec extends AnyFunSuite {
@@ -11,23 +13,46 @@ trait SparkSpec extends AnyFunSuite {
     new java.io.File(getClass.getClassLoader.getResource(rel).toURI).getAbsolutePath
 
   /** The number of Spark jobs `body` starts, counted by job group. */
-  def jobsIn(body: => Any): Int = {
+  def jobsIn(body: => Any): Int = jobStagesIn(body).size
+
+  /** The stage count of each Spark job `body` starts, skipped stages
+    * included, in start order, counted by job group. */
+  def jobStagesIn(body: => Any): Seq[Int] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+            e.properties.getProperty("spark.jobGroup.id") == group) stages.add(e.stageInfos.size)
     }
     sc.addSparkListener(listener)
     try {
       sc.setJobGroup(group, "counted")
       try body finally sc.clearJobGroup()
       org.apache.spark.graft.ListenerFlush.flush(sc)
-      jobs.get()
+      stages.asScala.toSeq
     } finally sc.removeSparkListener(listener)
+  }
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A new empty directory under `java.io.tmpdir`, named `prefix` plus a
+    * random suffix. It is deleted, with all it holds, when the suite ends. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(dir)
+    dir.getAbsolutePath
+  }
+
+  override def run(testName: Option[String], args: Args): Status = {
+    val status = super.run(testName, args)
+    status.whenCompleted { _ =>
+      Iterator.continually(tempDirs.poll()).takeWhile(_ != null)
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    }
+    status
   }
 }
 

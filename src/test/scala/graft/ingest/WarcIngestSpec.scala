@@ -9,11 +9,7 @@ import graft.SparkSpec
 
 class WarcIngestSpec extends SparkSpec {
 
-  private def freshDir(name: String): String = {
-    val d = Files.createTempDirectory(s"graft_warcspec_$name").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def freshDir(name: String): String = tempDir(s"graft_warcspec_$name")
 
   test("synthetic archives round-trip: framing, HTTP parse, gzip bucket") {
     import spark.implicits._

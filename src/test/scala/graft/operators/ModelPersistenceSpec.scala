@@ -14,9 +14,7 @@ import org.apache.spark.sql.functions._
   * q_vec_pca_reload_verify) gate the same property against DuckDB. */
 class ModelPersistenceSpec extends SparkSpec {
 
-  private def tmp(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_spec_${name}_" +
-      s"p${ProcessHandle.current().pid()}"
+  private def tmp(name: String): String = s"${tempDir(s"graft_spec_$name")}/model"
 
   private def docs = spark.read
     .parquet(s"${testDataDir("0.001")}/documents.parquet")

@@ -65,8 +65,7 @@ class UnigramTokenizerSpec extends SparkSpec {
   }
 
   test("vocab persistence: load after save is the identity") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_unigram_spec").toString + "/v"
+    val path = tempDir("graft_unigram_spec") + "/v"
     UnigramTokenizer.saveVocab(spark, vocab, path)
     assert(UnigramTokenizer.loadVocab(spark, path) === vocab)
   }

@@ -7,10 +7,7 @@ import graft.expr.BloomBuffer
 class BloomIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_bi_spec_").toString
-    new java.io.File(d).deleteOnExit(); d
-  }
+  private def freshDir(): String = tempDir("graft_bi_spec_")
 
   test("buffer: no false negatives ever; fpp near theory; serde round-trip") {
     val buf = new BloomBuffer(1 << 14, 5)

@@ -9,7 +9,7 @@ class JsonlSpec extends SparkSpec {
   import spark.implicits._
 
   test("writeShards: one file per shard dir, rows sorted, exact lines") {
-    val out = java.nio.file.Files.createTempDirectory("graft_jsonl_spec").toString
+    val out = tempDir("graft_jsonl_spec")
     val df = Seq((3L, "c"), (0L, "a"), (5L, "b"), (2L, "d"))
       .toDF("id", "s")
     Jsonl.writeShards(df, out, Seq(col("id"), col("s")),
@@ -34,7 +34,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("readJsonl: malformed lines survive as corrupt records, clean rows parse") {
-    val src = java.nio.file.Files.createTempDirectory("graft_jsonl_dirty").toString
+    val src = tempDir("graft_jsonl_dirty")
     java.nio.file.Files.write(java.nio.file.Paths.get(src, "a.jsonl"),
       ("""{"id":1,"v":"ok"}""" + "\n" + """{"id":2,"v":"trunc""" + "\n" +
         """not json at all""" + "\n" + """{"id":4,"v":"fine"}""").getBytes)

@@ -6,10 +6,7 @@ import graft.SparkSpec
 class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_zm_spec_").toString
-    new java.io.File(d).deleteOnExit(); d
-  }
+  private def freshDir(): String = tempDir("graft_zm_spec_")
 
   test("range read skips files and equals the full-scan filter exactly") {
     val base = freshDir()

@@ -16,9 +16,7 @@ class GroupedRunnerSpec extends SparkSpec {
   private def groupSum: DataFrame => DataFrame = batch =>
     batch.groupBy("g").agg(sum($"v").as("total"))
 
-  private def tmp(tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_grptest_${tag}_" +
-      s"p${ProcessHandle.current().pid()}"
+  private def tmp(tag: String): String = s"${tempDir(s"graft_grptest_$tag")}/src"
 
   test("range-partitioned source: per-batch aggregates union exactly") {
     val src = tmp("ok")

@@ -19,10 +19,9 @@ class NullSegmentSpec extends SparkSpec {
 
   /** sf0.001 tables with NULLs injected into every column a streaming
     * gate groups, joins, distincts, or aggregates on. Deterministic
-    * (modulus rules on ids), written once per JVM. */
+    * (modulus rules on ids), written once per suite run. */
   private lazy val fixtureDir: String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_nullfix_" +
-      s"p${ProcessHandle.current().pid()}"
+    val dir = tempDir("graft_nullfix")
     val src = testDataDir("0.001")
     spark.read.parquet(s"$src/events.parquet")
       .withColumn("event_type",
