@@ -3,46 +3,6 @@ import org.apache.spark.sql.SparkSession
 
 object Bench {
 
-  /** Per-stage shuffle tallies — the "would this plan survive 100×"
-    * number measured instead of eyeballed: every `groupBy`/`join`/
-    * `repartition` pays here, so a regression that barely moves sf0.1
-    * wall-clock (but would drown a 100 TB run in exchange volume) shows
-    * up as a shuffle-bytes jump in the per-round BENCH json and the
-    * BASELINE.md shuffle table. Stage-aggregated task metrics, summed
-    * between per-query snapshots. */
-  private class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
-    // Per-stageId metrics keyed on the SUCCESSFUL attempt: a retried or
-    // speculatively re-executed stage fires onStageCompleted once per
-    // attempt. Pinning attempt 0 would double-count nothing but, when
-    // attempt 0 FAILS mid-stage, would count its partial metrics while
-    // dropping the retry that did the real shuffle work. So: a completed
-    // attempt with no failureReason always wins (last successful attempt
-    // overwrites); a failed attempt is recorded only when no successful
-    // one exists yet, as a best-effort lower bound. stageIds are unique
-    // per SparkContext, so entries never collide across queries; the map
-    // holds one small tuple per stage for the JVM's lifetime.
-    private val byStage =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Boolean, Long, Long, Long)]
-    override def onStageCompleted(
-        ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = ev.stageInfo.taskMetrics
-      if (m != null) {
-        val ok = ev.stageInfo.failureReason.isEmpty
-        val v = (ok, m.shuffleWriteMetrics.bytesWritten,
-          m.shuffleWriteMetrics.recordsWritten,
-          m.shuffleReadMetrics.totalBytesRead)
-        byStage.merge(ev.stageInfo.stageId, v,
-          (old, nw) => if (nw._1 || !old._1) nw else old)
-        ()
-      }
-    }
-    def snapshot: (Long, Long, Long) = {
-      var w = 0L; var r = 0L; var rd = 0L
-      byStage.values.forEach { case (_, wb, wr, rb) => w += wb; r += wr; rd += rb }
-      (w, r, rd)
-    }
-  }
-
   /** Consume one query through a `noop`-format write (NOT `.count()`: under
     * a count, Catalyst's EliminateSorts removes each query's final orderBy,
     * so a count-based bench under-measures sort-heavy queries; the noop sink
@@ -100,27 +60,27 @@ object Bench {
     val best = scala.collection.mutable.Map.empty[String, Double]
     val worst = scala.collection.mutable.Map.empty[String, Double]
     val failedTime = scala.collection.mutable.Map.empty[String, Double]
-    // shuffle telemetry: (write bytes, write records, read bytes) deltas,
-    // recorded from the run that set the query's min time
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-    val shuffle = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+    // shuffle telemetry (graft.QueryMetrics): the shuffle write bytes,
+    // write records and read bytes of the run that set the query's min
+    // time. Every groupBy/join/repartition pays here, so a plan that barely
+    // moves sf0.1 wall-clock but would drown a 100 TB run in exchange
+    // volume shows up as a shuffle-bytes jump in the BENCH json.
+    val shuffle = scala.collection.mutable.Map.empty[String, QueryMetrics.Report]
     for (_ <- 1 to runs; name <- names) {
       val fn = SparkEntry.queries(name)
-      org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
-      val (wb0, wr0, rb0) = tally.snapshot
       val t0 = System.nanoTime()
       // a failed run must NOT feed the min — a fast failure would silently
       // replace a successful run's real time; it is tracked separately and
       // only reported when the query never succeeds
       try {
-        consume(fn(spark, sfDir))
-        val dt = (System.nanoTime() - t0) / 1e9
+        val (dt, cost) = QueryMetrics.measure(spark) {
+          val t = System.nanoTime()
+          consume(fn(spark, sfDir))
+          (System.nanoTime() - t) / 1e9
+        }
         if (dt < best.getOrElse(name, Double.MaxValue)) {
           best(name) = dt
-          org.apache.spark.graft.ListenerFlush.flush(spark.sparkContext)
-          val (wb1, wr1, rb1) = tally.snapshot
-          shuffle(name) = (wb1 - wb0, wr1 - wr0, rb1 - rb0)
+          shuffle(name) = cost
         }
         worst(name) = math.max(worst.getOrElse(name, 0.0), dt)
       } catch {
@@ -150,11 +110,11 @@ object Bench {
     // placed FIRST on the line (the harness keeps the tail, so the
     // timing contract survives truncation; full tallies live in the
     // quiet-stamp BASELINE.md table)
-    val topShuffle = shuffle.toSeq.sortBy { case (k, (wb, _, _)) => (-wb, k) }
+    val topShuffle = shuffle.toSeq.sortBy { case (k, c) => (-c.shuffleWriteBytes, k) }
       .take(20)
-    val shJson = topShuffle.map { case (k, (wb, wr, rb)) =>
-      s"\"" + k + "\":{\"write_mb\":" + fmt(wb / 1e6) +
-        ",\"write_rows\":" + wr + ",\"read_mb\":" + fmt(rb / 1e6) + "}"
+    val shJson = topShuffle.map { case (k, c) =>
+      s"\"" + k + "\":{\"write_mb\":" + fmt(c.shuffleWriteBytes / 1e6) +
+        ",\"write_rows\":" + c.shuffleWriteRecords + ",\"read_mb\":" + fmt(c.shuffleReadBytes / 1e6) + "}"
     }.mkString("{", ",", "}")
     val total = names.map(timeOf).sum
     val neverSucceeded = names.filterNot(best.contains)

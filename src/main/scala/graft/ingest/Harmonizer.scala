@@ -2,6 +2,7 @@ package graft.ingest
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
@@ -49,7 +50,7 @@ object Harmonizer {
     */
   def harmonize(df: DataFrame, filename: Option[String] = None,
                 strict: Boolean = false): DataFrame =
-    harmonizeWith(df, filename.map(f => lit(f.take(3).toUpperCase)), strict)
+    harmonizeWith(df, filename.map(f => lit(f.take(3).toUpperCase(Locale.ROOT))), strict)
 
   /** Like [[harmonize]] but the country fallback is any Column — at scale the
     * caller passes a per-row `input_file_name()`-derived expression so one

@@ -1,5 +1,6 @@
 package graft.sink
 
+import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.schema.ColumnMappings
@@ -23,7 +24,7 @@ object Warehouse {
     * strip double-quotes (`snowflake_connector.py:203`, `:276`). */
   def normalizeNames(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(
-      _.toUpperCase.replace(' ', '_').replace('-', '_').replace("\"", "")): _*)
+      _.toUpperCase(Locale.ROOT).replace(' ', '_').replace('-', '_').replace("\"", "")): _*)
 
   /** S9+S10: lineage metadata. The rebuild records real per-row lineage
     * where the reference hardcodes a literal (`snowflake_connector.py:299`);
@@ -36,7 +37,7 @@ object Warehouse {
   def withMetadata(df: DataFrame, sourceFile: Option[String] = None): DataFrame = {
     val src: Column = sourceFile.map(lit).getOrElse(input_file_name())
     val withSrc =
-      if (df.columns.map(_.toUpperCase).contains("SOURCE_FILE")) df
+      if (df.columns.map(_.toUpperCase(Locale.ROOT)).contains("SOURCE_FILE")) df
       else df.withColumn("SOURCE_FILE", src)
     withSrc.withColumn("LOAD_DATE", current_timestamp())
   }

@@ -323,6 +323,11 @@ object StreamingIngest {
     r2.load(streamGlob(path))
   }
 
+  /** [[boundedStream]] over parquet, with the schema its files carry. */
+  private def boundedStream(spark: SparkSession, parquetPath: String,
+      maxFilesPerTrigger: Int): DataFrame =
+    boundedStream(spark, parquetPath, spark.read.parquet(parquetPath).schema, maxFilesPerTrigger)
+
   /** Run `stream` to the end of its bounded input as an append-mode
     * `foreachBatch` query, handing `body` each micro-batch and its id. The
     * query is stopped even when a batch fails; the failure reaches the
@@ -518,8 +523,7 @@ object StreamingIngest {
                              tablePath: String, keyCols: Seq[String],
                              orderCols: Seq[org.apache.spark.sql.Column],
                              maxFilesPerTrigger: Int = 0): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = normalizeTs(boundedStream(spark, parquetPath, schema, maxFilesPerTrigger))
+    val stream = normalizeTs(boundedStream(spark, parquetPath, maxFilesPerTrigger))
     val checkpoint = java.nio.file.Files
       .createTempDirectory("graft-upsert-ckpt").toString
     val q = streamUpsertToWarehouse(stream, tablePath, keyCols, orderCols, checkpoint)
@@ -549,8 +553,7 @@ object StreamingIngest {
                                maxFilesPerTrigger: Int = 0): DataFrame = {
     val model = graft.operators.Classify
       .trainNaiveBayes(trainDf, textCol, labelCol).materialize
-    val schema = spark.read.parquet(scoreParquetPath).schema
-    val stream = boundedStream(spark, scoreParquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, scoreParquetPath, maxFilesPerTrigger)
     collectBatches(stream, "runStreamClassifyBounded") { (batch, _) =>
       graft.operators.Classify.scoreNaiveBayes(model, batch, idCol, textCol)
     }.dropDuplicates(idCol)
@@ -599,8 +602,7 @@ object StreamingIngest {
                              threshold: Double = 0.2,
                              maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.Dedup
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     // The standing corpus for batch b is rebuilt as the union of slices
     // with id < b, so a replayed batch sees the same corpus it saw first.
     val statuses = byBatchId()
@@ -662,8 +664,7 @@ object StreamingIngest {
                                   bands: Int = 16, threshold: Double = 0.5,
                                   maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.Dedup
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val statuses = byBatchId()
     val pairLedger = byBatchId()
     val sigSlices = byBatchId()
@@ -766,8 +767,7 @@ object StreamingIngest {
                              build: DataFrame => DataFrame,
                              keyCols: Seq[String],
                              maxFilesPerTrigger: Int = 0): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     collectBatches(stream, "runStreamRowMapBounded")((batch, _) => build(batch))
       .dropDuplicates(keyCols)
   }
@@ -784,8 +784,7 @@ object StreamingIngest {
                               build: DataFrame => DataFrame,
                               keyCols: Seq[String],
                               maxFilesPerTrigger: Int = 0): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     // tag each batch's aggregates with the micro-batch id — the contract
     // check below keys on it
     val unioned = collectBatches(stream, "runStreamGroupedBounded") {
@@ -839,8 +838,7 @@ object StreamingIngest {
     * warehouse table the batch operator reads. */
   def runStreamAnchorsBounded(spark: SparkSession, parquetPath: String,
                               k: Int, maxFilesPerTrigger: Int = 0): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     graft.operators.WebCuration.topAnchors(
       collectBatches(stream, "runStreamAnchorsBounded")((batch, _) => batch),
       "src", "dst", "anchor", k)
@@ -862,8 +860,7 @@ object StreamingIngest {
                             crawled: DataFrame, crawledUrlCol: String,
                             maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.{Feeds, Sitemap}
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val survivors = collectBatches(stream, "runStreamSeedsBounded") { (batch, _) =>
       val entries = Feeds.parseEntries(batch, xmlCol)
         .select(col(domainCol), col("kind").as("feed_kind"),
@@ -887,8 +884,7 @@ object StreamingIngest {
                                  userAgent: String,
                                  maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.RobotsTxt
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     collectBatches(stream, "runStreamRobotsGateBounded") { (batch, _) =>
       RobotsTxt.gate(batch, "url", rules, userAgent)
     }.dropDuplicates(idCol)
@@ -915,8 +911,7 @@ object StreamingIngest {
                          blockChars: Int = 4,
                          maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.EntityResolution
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val keySlices = byBatchId()
     val recordSlices = byBatchId()
     val pairLedger = byBatchId()
@@ -958,8 +953,7 @@ object StreamingIngest {
                              xCol: String, yCol: String,
                              maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.DataSelect
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val fronts = byBatchId()
     eachBatch(stream) { (batch, bid) =>
       val standing = fronts.asScala.toSeq.filter(_._1 < bid)
@@ -987,8 +981,7 @@ object StreamingIngest {
                            target: DataFrame, idCol: String, textCol: String,
                            buckets: Int, maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.DataSelect
-    val schema = spark.read.parquet(rawParquetPath).schema
-    val stream = boundedStream(spark, rawParquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, rawParquetPath, maxFilesPerTrigger)
     val feats = byBatchId()
     val ids = byBatchId()
     eachBatch(stream) { (batch, bid) =>
@@ -1024,8 +1017,7 @@ object StreamingIngest {
   def runStreamHotKeysBounded(spark: SparkSession, parquetPath: String,
                               itemCol: String, capacity: Int,
                               maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     graft.operators.HeavyHitters.itemsFromSummary(memorySnapshot(
       stream
         .select(col(itemCol).cast("long").as("item"))
@@ -1045,8 +1037,7 @@ object StreamingIngest {
   def runStreamDistinctBounded(spark: SparkSession, parquetPath: String,
                                segCol: String, valueCol: String, lgK: Int,
                                maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     // the SAME perSeg + __TOTAL__ derivation as the batch rollup, shared
     // verbatim — the bit-exact stream ≡ batch gate depends on it
     graft.operators.Profiler.rollupFromSketches(memorySnapshot(
@@ -1071,8 +1062,7 @@ object StreamingIngest {
                           fingerprintCol: String, k: Int, minUrls: Int,
                           maxDiversity: Double,
                           maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val sketches = memorySnapshot(
       graft.operators.WebCuration
         .trapKeyed(build(stream), urlCol, col(fingerprintCol))
@@ -1093,8 +1083,7 @@ object StreamingIngest {
   def runStreamOverlapBounded(spark: SparkSession, parquetPath: String,
                               segCol: String, valueCol: String, k: Int,
                               maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     // the SAME pairwise derivation as the batch operator, shared verbatim
     // — the bit-exact stream ≡ batch gate depends on it
     graft.operators.SetSketch.pairOverlapFromSketches(memorySnapshot(
@@ -1118,8 +1107,7 @@ object StreamingIngest {
                           groupExpr: Column, scoreExpr: Column,
                           labelExpr: Column,
                           maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     graft.operators.Eval.aucFromCounts(memorySnapshot(
       stream
         .select(groupExpr.cast("string").as("grp"),
@@ -1146,8 +1134,7 @@ object StreamingIngest {
                                segCol: String, valueExpr: Column, k: Int,
                                ps: Seq[Double],
                                maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val summaries = memorySnapshot(
       stream
         .select(col(segCol).cast("string").as("segment"),
@@ -1174,8 +1161,7 @@ object StreamingIngest {
                            depth: Int, width: Int,
                            maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.operators.FreqSketch
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val grid = memorySnapshot(
       stream.filter(col(itemCol).isNotNull)
         .select(col(itemCol).cast("long").as("item"))
@@ -1202,8 +1188,7 @@ object StreamingIngest {
                           textCol: String, minCount: Long, topK: Int,
                           maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.operators.TextAnalysis
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val counts = memorySnapshot(
       TextAnalysis.bigramPairs(stream, textCol)
         .groupBy(col("w1"), col("w2"))
@@ -1228,8 +1213,7 @@ object StreamingIngest {
                                minCount: Long, topK: Int,
                                maxFilesPerTrigger: Int = 1): DataFrame = {
     import graft.operators.TextAnalysis
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     val counts = memorySnapshot(
       TextAnalysis.classTermTokens(stream, classCol, textCol)
         .groupBy(col("cls"), col("term"))
@@ -1253,8 +1237,7 @@ object StreamingIngest {
                             segCol: String, valueCol: String,
                             numBits: Int, numHashes: Int,
                             maxFilesPerTrigger: Int = 1): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = boundedStream(spark, parquetPath, schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
     memorySnapshot(
       stream.filter(col(valueCol).isNotNull)
         .groupBy(col(segCol).cast("string").as("segment"))
@@ -1296,8 +1279,7 @@ object StreamingIngest {
   /** Run the windowed aggregation over a parquet path as a bounded stream;
     * returns the final result as a batch DataFrame. */
   def runWindowedEventAgg(spark: SparkSession, parquetPath: String): DataFrame = {
-    val schema = spark.read.parquet(parquetPath).schema
-    val stream = normalizeTs(boundedStream(spark, parquetPath, schema, 0))
+    val stream = normalizeTs(boundedStream(spark, parquetPath, 0))
     memorySnapshot(windowedEventAgg(stream), "complete")
   }
 }

@@ -1,5 +1,6 @@
 package graft.views
 
+import java.util.Locale
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -86,7 +87,7 @@ object CountryViews {
 
   /** S6 parity: the view name the reference generates (`view_generator.py:16`). */
   def viewName(country: String): String =
-    s"VIEW_${country.replace(' ', '_').toUpperCase}"
+    s"VIEW_${country.replace(' ', '_').toUpperCase(Locale.ROOT)}"
 
   /** S6: the generated view DDL — the reference's Snowflake template
     * (`view_generator.py:17-65`) re-expressed in Spark SQL over a registered

@@ -7,8 +7,8 @@ import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
   * `org.apache.spark` subpackage solely to reach them; no other internals
   * are touched.
   *
-  *  - [[flush]]: listener events are delivered asynchronously, so the
-  *    bench telemetry's per-query shuffle tallies are only correct after
+  *  - [[flush]]: listener events are delivered asynchronously, so
+  *    [[graft.QueryMetrics]] counts a block's jobs and stages only after
   *    the bus drains (`SparkContext.listenerBus`).
   *  - [[unpersistQuietly]]: `RDD.unpersist` logs a WARN for every locally
   *    checkpointed RDD ("cannot be recomputed after unpersisting") before

@@ -5,8 +5,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 
 /** The engine's one materialization policy ([[Materialize]]) under a lost
-  * checkpoint block, and source guards that keep it, the stream drivers
-  * and the scratch-path policy ([[Scratch]]) the only ones. */
+  * checkpoint block, and source guards that keep it, the stream drivers,
+  * the scratch-path policy ([[Scratch]]) and the query-metrics listener
+  * ([[QueryMetrics]]) the only ones. */
 class MaterializeSpec extends SparkSpec {
 
   /** Materialize a small frame, then drop every block persisted since —
@@ -208,6 +209,8 @@ class MaterializeSpec extends SparkSpec {
     """processAllAvailable\(|\.foreachBatch|format\("memory"\)""".r
   private val scratchCall =
     """System\.getProperty\(|ProcessHandle\.|"_SUCCESS"""".r
+  private val listenerCall =
+    """(?:extends|new) (?:org\.apache\.spark\.scheduler\.)?SparkListener(?:Interface)?\b|addSparkListener\(""".r
 
   test("guard predicate: sees a call in code, not in a comment or a string") {
     val src = Seq(
@@ -230,10 +233,12 @@ class MaterializeSpec extends SparkSpec {
       "val dir = s\"${System.getProperty(\"java.io.tmpdir\")}/x\"",
       "val q = '\"'; val g = df.cache()",
       "val sql = s\"\"\"SELECT ${n}",
-      "  df.cache() \"\"\"").mkString("\n")
+      "  df.cache() \"\"\"",
+      "class T extends SparkListener; sc.addSparkListener(new T) // new SparkListener").mkString("\n")
     assert(callLines(src, materializeCall) == Seq(1, 6, 7, 8, 9, 18))
     assert(callLines(src, streamDriverCall) == Seq(11, 12, 13))
     assert(callLines(src, scratchCall) == Seq(14, 15, 16, 17))
+    assert(callLines(src, listenerCall) == Seq(21))
   }
 
   private val mainRoot = new java.io.File("src/main/scala")
@@ -291,5 +296,18 @@ class MaterializeSpec extends SparkSpec {
     } yield s"${f.getPath}:$line"
     assert(offenders.isEmpty,
       s"name scratch paths through graft.Scratch: ${offenders.mkString(", ")}")
+  }
+
+  test("guard: only QueryMetrics.scala attaches a Spark listener") {
+    val (metrics, others) =
+      mainSources().partition(_._1 == new java.io.File(mainRoot, "graft/QueryMetrics.scala"))
+    assert(metrics.exists { case (_, src) => callLines(src, listenerCall).nonEmpty },
+      "graft/QueryMetrics.scala has none of the guarded calls: the check is vacuous")
+    val offenders = for {
+      (f, src) <- others
+      line <- callLines(src, listenerCall)
+    } yield s"${f.getPath}:$line"
+    assert(offenders.isEmpty,
+      s"measure Spark work through graft.QueryMetrics: ${offenders.mkString(", ")}")
   }
 }

@@ -459,6 +459,30 @@ class PipelineSpec extends SparkSpec {
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
+  test("a load under a Turkish default locale gives the same columns, views and lineage") {
+    // the golden files plus a country whose name holds a lowercase i
+    val in = inputDir(Seq("AUS", "IND", "USA"), "ZZZ india.csv" -> Seq(
+      "ID,Name,DOB,VaccinationType,VaccinationDate,Country",
+      "9,Tui,01/02/1990,ABC,04/05/2022,India").mkString("", "\n", "\n"))
+    def load() = {
+      val r = runAt(in)
+      (r.warehouse.columns.toSeq, r.views,
+        // EtlMain reads each view through an unquoted name
+        r.views.map(v => spark.sql(s"SELECT * FROM $v").count()),
+        r.warehouse.select("SOURCE_FILE").collect().map(_.getString(0)).toSeq.sorted)
+    }
+    val expected = load()
+    assert(expected._2.contains("VIEW_INDIA"))
+    val prev = java.util.Locale.getDefault
+    val turkish =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+        load()
+      } finally java.util.Locale.setDefault(prev)
+    assert(turkish == expected)
+    assert(turkish._4.length == 9 && turkish._4.forall(_.nonEmpty), turkish._4)
+  }
+
   test("warehouse name normalization uppercases and strips") {
     import spark.implicits._
     val df = Seq((1, 2)).toDF("some col", "other-\"col\"")

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for suites (one per JVM, lazily created). */
 trait SparkSpec extends AnyFunSuite {
@@ -12,29 +11,13 @@ trait SparkSpec extends AnyFunSuite {
   def resourcePath(rel: String): String =
     new java.io.File(getClass.getClassLoader.getResource(rel).toURI).getAbsolutePath
 
-  /** The number of Spark jobs `body` starts, counted by job group. */
+  /** The number of Spark jobs `body` starts, scoped as [[QueryMetrics.measure]]. */
   def jobsIn(body: => Any): Int = jobStagesIn(body).size
 
   /** The stage count of each Spark job `body` starts, skipped stages
-    * included, in start order, counted by job group. */
-  def jobStagesIn(body: => Any): Seq[Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group) stages.add(e.stageInfos.size)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      org.apache.spark.graft.ListenerFlush.flush(sc)
-      stages.asScala.toSeq
-    } finally sc.removeSparkListener(listener)
-  }
+    * included, in start order, scoped as [[QueryMetrics.measure]]. */
+  def jobStagesIn(body: => Any): Seq[Int] =
+    QueryMetrics.measure(spark)(body)._2.jobs.map(_.stages)
 
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
 
