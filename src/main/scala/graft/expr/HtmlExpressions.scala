@@ -327,7 +327,7 @@ object HtmlOps {
       var stop = 0
       var w = 0
       while (w < words.length) {
-        if (TextOps.Stopwords.contains(words(w).toLowerCase)) stop += 1
+        if (TextOps.Stopwords.contains(words(w).toLowerCase(java.util.Locale.ROOT))) stop += 1
         w += 1
       }
       val density = if (nw == 0) 0.0 else lk.toDouble / nw
@@ -1304,11 +1304,9 @@ object HtmlExpressions {
   def html_markdown(html: Column): Column =
     ColumnBridge.column(HtmlMarkdown(ColumnBridge.expression(html)))
 
-  def html_interleaved(html: Column,
-                       minLen: Int = HtmlOps.DefaultMinLen,
-                       maxLinkDensity: Double = HtmlOps.DefaultMaxLinkDensity): Column =
+  def html_interleaved(html: Column): Column =
     ColumnBridge.column(HtmlInterleaved(ColumnBridge.expression(html),
-      minLen, maxLinkDensity))
+      HtmlOps.DefaultMinLen, HtmlOps.DefaultMaxLinkDensity))
 
   def html_head(html: Column): Column =
     ColumnBridge.column(HtmlHead(ColumnBridge.expression(html)))

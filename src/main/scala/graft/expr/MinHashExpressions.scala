@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus — the single hottest projection of the 100 TB curation path.
   *
   * HASH-EXACTNESS CONTRACT: both functions reproduce the UDFs bit-for-bit
-  * (same `String.trim.toLowerCase.split("\\s+")` tokenization, same
+  * (same `String.trim.toLowerCase(Locale.ROOT).split("\\s+")` tokenization, same
   * LinkedHashSet first-seen shingle order, same seed-42 permutation
   * sequence, same MurmurHash3.stringHash base hash), property-pinned
   * against the retired UDFs in MinHashExprSpec, so every persisted
@@ -60,7 +60,7 @@ object MinHashOps {
     * array (the UDF's null branch). Byte-identical to `shingleUdf`. */
   def shingles(text: UTF8String, n: Int): ArrayData = {
     if (text == null) return new GenericArrayData(Array.empty[Any])
-    val toks = text.toString.trim.toLowerCase.split("\\s+")
+    val toks = text.toString.trim.toLowerCase(java.util.Locale.ROOT).split("\\s+")
     if (toks.length < n)
       return new GenericArrayData(
         Array[Any](UTF8String.fromString(toks.mkString(" "))))

@@ -42,9 +42,9 @@ object EventTime {
         "(expected LONG nanos, TIMESTAMP_NTZ, or TIMESTAMP)")
   }
 
-  /** Epoch-micros BIGINT column for `df`'s `tsCol`, whatever its encoding. */
-  def micros(df: DataFrame, tsCol: String = "ts"): Column =
-    microsFor(df.schema(tsCol).dataType, tsCol)
+  /** Epoch-micros BIGINT column for `df`'s `ts`, whatever its encoding. */
+  def micros(df: DataFrame): Column =
+    microsFor(df.schema("ts").dataType, "ts")
 
   /** TIMESTAMP (LTZ) column for `tsCol` of physical type `dt` — the shape
     * watermarks and time windows require (`withWatermark` rejects NTZ). */
@@ -58,9 +58,9 @@ object EventTime {
         "(expected LONG nanos, TIMESTAMP_NTZ, or TIMESTAMP)")
   }
 
-  /** TIMESTAMP (LTZ) column for `df`'s `tsCol`, whatever its encoding. */
-  def timestamp(df: DataFrame, tsCol: String = "ts"): Column =
-    timestampFor(df.schema(tsCol).dataType, tsCol)
+  /** TIMESTAMP (LTZ) column for `df`'s `ts`, whatever its encoding. */
+  def timestamp(df: DataFrame): Column =
+    timestampFor(df.schema("ts").dataType, "ts")
 
   /** A literal at `micros` expressed in the SAME physical encoding as `dt` —
     * for synthesized rows (e.g. the bounded-stream watermark sentinel) that

@@ -73,6 +73,11 @@ object WarcIngest {
       body: String,
       body_bytes: Array[Byte])
 
+  /** Fixed bound on one record's `Content-Length` (64 MiB): a malformed
+    * length header fails the parse instead of buffering an unbounded
+    * payload. [[ingestIncremental]] always runs under it. */
+  private val MaxPayloadBytes = 64 << 20
+
   private val CharsetParam =
     """charset\s*=\s*"?([a-zA-Z0-9._:-]+)"?""".r
   private val MetaCharset =
@@ -249,7 +254,7 @@ object WarcIngest {
       var h = readLine()
       while (h != null && h.nonEmpty) {
         val i = h.indexOf(':')
-        if (i > 0) headers(h.substring(0, i).trim.toLowerCase) = h.substring(i + 1).trim
+        if (i > 0) headers(h.substring(0, i).trim.toLowerCase(java.util.Locale.ROOT)) = h.substring(i + 1).trim
         h = readLine()
       }
       val clen = headers.getOrElse("content-length", throw new IllegalArgumentException(
@@ -352,7 +357,7 @@ object WarcIngest {
   /** Read every record of the given archive files — one task per
     * archive, streaming parse, no shuffle. */
   def readRecordFiles(spark: SparkSession, files: Seq[String],
-                      maxPayloadBytes: Int = 64 << 20): DataFrame = {
+                      maxPayloadBytes: Int = MaxPayloadBytes): DataFrame = {
     import spark.implicits._
     if (files.isEmpty) return spark.emptyDataset[WarcRecord].toDF()
     val confSer = new SerializableWritable(spark.sparkContext.hadoopConfiguration)
@@ -373,7 +378,7 @@ object WarcIngest {
   /** Read every record of every archive under `dir` matching `glob`
     * (plain `.warc` and per-record-gzipped `.warc.gz` both accepted). */
   def readRecords(spark: SparkSession, dir: String, glob: String = "*.warc*",
-                  maxPayloadBytes: Int = 64 << 20): DataFrame =
+                  maxPayloadBytes: Int = MaxPayloadBytes): DataFrame =
     readRecordFiles(spark, listArchives(spark, dir, glob), maxPayloadBytes)
 
   /** Manifest-driven incremental ingest — how a crawl warehouse actually
@@ -391,8 +396,7 @@ object WarcIngest {
     * record table carries for exactly this purpose. */
   def ingestIncremental(spark: SparkSession, warcDir: String,
                         warehousePath: String, manifestPath: String,
-                        glob: String = "*.warc*",
-                        maxPayloadBytes: Int = 64 << 20): Seq[String] = {
+                        glob: String = "*.warc*"): Seq[String] = {
     val all = listArchives(spark, warcDir, glob)
     // The manifest is BOUNDED DRIVER METADATA (one row per archive), so it
     // lives as newline-separated text slices read and written driver-side
@@ -425,7 +429,7 @@ object WarcIngest {
       }
     val delta = all.filterNot(seen)
     if (delta.nonEmpty) {
-      readRecordFiles(spark, delta, maxPayloadBytes)
+      readRecordFiles(spark, delta, MaxPayloadBytes)
         .write.mode("append").parquet(warehousePath)
       manifestFs.mkdirs(manifestFsPath)
       val slice = s"m${java.util.UUID.randomUUID().toString.replace("-", "")}"

@@ -24,12 +24,11 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
 object BloomJoin {
 
   /** Semi-join `big` to the distinct keys of `keys`, bloom-prefiltered.
-    * `expectedKeys`/`fpp` size the filter; `expectedKeys <= 0` triggers a
-    * count of `keys` (one cheap aggregate on the small side).
+    * A count of `keys` (one cheap aggregate on the small side) sizes the
+    * filter for a 1% false-positive rate.
     * Key must be integral or string (the bloom filter's put domain). */
   def bloomSemiJoin(big: DataFrame, keys: DataFrame,
-                    bigKey: String, keysKey: String,
-                    expectedKeys: Long = -1L, fpp: Double = 0.01): DataFrame = {
+                    bigKey: String, keysKey: String): DataFrame = {
     // Normalize integral keys to LONG on BOTH sides so the bloom put
     // domain (putLong) and the probe (mightContainLong) always agree.
     val integral = Set[org.apache.spark.sql.types.DataType](
@@ -48,11 +47,9 @@ object BloomJoin {
     require(bigIntegral == integral(keys.schema(keysKey).dataType),
       s"key type mismatch: $bigKey is ${big.schema(bigKey).dataType}, " +
         s"$keysKey is ${keys.schema(keysKey).dataType}")
-    // `expectedKeys` skips the sizing count — strongly recommended at scale
-    // (the count is a full extra pass over the key side per call).
-    val n = if (expectedKeys > 0) expectedKeys else keysNorm.count()
+    val n = keysNorm.count()
     if (n == 0) return big.limit(0)
-    val bf = keysNorm.stat.bloomFilter(keysKey, n, fpp)
+    val bf = keysNorm.stat.bloomFilter(keysKey, n, 0.01)
     val bc = big.sparkSession.sparkContext.broadcast(bf)
     val pred = big.schema(bigKey).dataType match {
       case t if integral(t) =>

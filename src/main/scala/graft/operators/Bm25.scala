@@ -29,9 +29,10 @@ import org.apache.spark.sql.functions._
 object Bm25 {
 
   def score(docs: DataFrame, idCol: String, textCol: String,
-            queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
-            topK: Int = 20): DataFrame = {
+            queryTerms: Seq[String], topK: Int = 20): DataFrame = {
     require(queryTerms.nonEmpty, "BM25 needs at least one query term")
+    val k1 = 1.2
+    val b = 0.75
     val dls = docs.select(col(idCol).as("doc_id"),
       size(Dedup.cleanTokens(col(textCol))).as("dl"))
     // two scalars — the one (bounded, documented) driver materialization

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Scale shape:
   *   - LEARN: word frequencies are ONE distributed (word)-keyed count
   *     (map-side combined — the aggregate is vocabulary-sized, never
-  *     corpus-sized); only the top-`maxWords` (count desc, word) rows are
+  *     corpus-sized); only the top-[[MaxWords]] (count desc, word) rows are
   *     collected — a bounded driver collect, the IvfIndex/ProductQuantize
   *     training precedent. Merge learning is the classic O(merges·vocab)
   *     driver loop over that bounded table.
@@ -40,16 +40,20 @@ object BpeTokenizer {
 
   val EndOfWord = "</w>"
 
+  /** Size of the vocabulary head merges are learned from: the top words
+    * by (count desc, word), the bound on the driver collect. */
+  private val MaxWords = 50000
+
   /** Learn `numMerges` BPE merges from the corpus: distributed word count,
-    * bounded top-`maxWords` collect, driver merge loop. Returns merges in
+    * bounded top-[[MaxWords]] collect, driver merge loop. Returns merges in
     * priority order (rank 0 = first learned = highest priority). */
-  def learnMerges(df: DataFrame, textCol: String, numMerges: Int,
-                  maxWords: Int = 50000): Seq[(String, String)] = {
+  def learnMerges(df: DataFrame, textCol: String,
+                  numMerges: Int): Seq[(String, String)] = {
     val wordCounts = df
       .select(explode(Dedup.cleanTokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w"))
-      .limit(maxWords) // bounded driver collect: vocabulary head only
+      .limit(MaxWords) // bounded driver collect: vocabulary head only
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
       .toSeq
@@ -233,9 +237,8 @@ object BpeTokenizer {
   /** (idCol, pos, token) exploded tokenization of the corpus under
     * corpus-learned merges — the harness surface. */
   def tokenize(df: DataFrame, idCol: String, textCol: String,
-               numMerges: Int, maxWords: Int = 50000): DataFrame =
-    tokenizeWith(df, idCol, textCol,
-      learnMerges(df, textCol, numMerges, maxWords))
+               numMerges: Int): DataFrame =
+    tokenizeWith(df, idCol, textCol, learnMerges(df, textCol, numMerges))
 
   /** Apply-only tokenization under an EXPLICIT merge table — the
     * production shape: the model trains once (or ships frozen) and every
@@ -332,14 +335,14 @@ object BpeTokenizer {
     * encode, and map tokens to ids. Unknown symbols (characters absent
     * from the sampled vocabulary head) map to -1, the explicit UNK id. */
   def tokenizeToIds(df: DataFrame, idCol: String, textCol: String,
-                    numMerges: Int, maxWords: Int = 50000): DataFrame = {
-    val merges = learnMerges(df, textCol, numMerges, maxWords)
+                    numMerges: Int): DataFrame = {
+    val merges = learnMerges(df, textCol, numMerges)
     // base symbols: all single characters of the sampled vocabulary head —
     // the same bounded basis the merges were learned from
     val baseChars = df
       .select(explode(Dedup.cleanTokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("w")).limit(maxWords)
+      .orderBy(col("c").desc, col("w")).limit(MaxWords)
       .collect().flatMap(_.getString(0).map(_.toString)).distinct.toSeq
     val vocab = vocabulary(merges, baseChars)
     val toIds = udf { (toks: Seq[String]) =>
@@ -356,8 +359,8 @@ object BpeTokenizer {
     * cleaned word sequence — an independent builtin-expression path from
     * the UDF that produced the tokens. */
   def roundTripViolations(df: DataFrame, idCol: String, textCol: String,
-                          numMerges: Int, maxWords: Int = 50000): DataFrame = {
-    val merges = learnMerges(df, textCol, numMerges, maxWords)
+                          numMerges: Int): DataFrame = {
+    val merges = learnMerges(df, textCol, numMerges)
     val toks = tokensColumn(merges, col(textCol))
     df.select(col(idCol),
         concat_ws(" ", Dedup.cleanTokens(col(textCol))).as("__want"),

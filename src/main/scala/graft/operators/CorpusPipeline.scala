@@ -30,10 +30,12 @@ import graft.Materialize
   * Output: (doc_id, n_tok) of the curated set. */
 object CorpusPipeline {
 
+  /** Quality floor (whitespace tokens) and fuzzy-dedup shingle size of
+    * every capstone. */
+  private val MinTokens = 30
+  private val Ngram = 3
+
   final case class Config(
-      minTokens: Int = 30,
-      minPunct: Int = 0,
-      ngram: Int = 3,
       jaccardThreshold: Double = 0.2,
       tokenBudget: Long = 10000L,
       urlCol: Option[String] = None,
@@ -57,8 +59,7 @@ object CorpusPipeline {
     }
     val prof = base.withColumn("__p", TextAnalysis.profile(col("text")))
     val quality = prof
-      .filter(col("__p.n_tokens") >= cfg.minTokens &&
-        col("__p.n_punct") >= cfg.minPunct)
+      .filter(col("__p.n_tokens") >= MinTokens && col("__p.n_punct") >= 0)
       .withColumn("key5",
         array_join(slice(split(trim(lower(col("text"))), "\\s+"), 1, 5), " "))
     Dedup.exactDedup(quality, Seq("key5"), "doc_id")
@@ -72,7 +73,7 @@ object CorpusPipeline {
       .withColumn("n_tok", col("__p.n_bpeish").cast("long")))
     val pairs = Dedup.ngramJaccardPairs(
       exactKept.select(col("doc_id"), col("text")), "doc_id", "text",
-      n = cfg.ngram, threshold = cfg.jaccardThreshold)
+      n = Ngram, threshold = cfg.jaccardThreshold)
     val survivors = Dedup.nearDupSurvivors(
       exactKept.select(col("doc_id"), col("n_tok"), col("text")), "doc_id", pairs)
     PrefixSum.selectWithinBudget(
@@ -112,11 +113,9 @@ object CorpusPipeline {
     * Output: (doc_id, n_tok, n_removed) of the curated set — n_tok from
     * the cleaned text, n_removed the substring stage's per-doc audit. */
   def curateV2(docs: DataFrame, embeddings: DataFrame,
-               cfg: Config = Config(),
-               embIdCol: String = "vec_id",
-               embVecCol: String = "embedding"): DataFrame =
+               cfg: Config = Config()): DataFrame =
     PrefixSum.selectWithinBudget(
-      curateV2Survivors(docs, embeddings, cfg, embIdCol, embVecCol),
+      curateV2Survivors(docs, embeddings, cfg),
       "doc_id", "n_tok", cfg.tokenBudget)
 
   /** The [[curateV2]] ladder WITHOUT the final token-budget selection —
@@ -124,9 +123,7 @@ object CorpusPipeline {
     * inserts image dedup here): (doc_id, n_tok, n_removed) of every
     * document that survives URL/exact/substring/quality/fuzzy/semantic. */
   def curateV2Survivors(docs: DataFrame, embeddings: DataFrame,
-                        cfg: Config = Config(),
-                        embIdCol: String = "vec_id",
-                        embVecCol: String = "embedding"): DataFrame = {
+                        cfg: Config = Config()): DataFrame = {
     // feeds the removal's anchor AND token scans once
     val exactKept = Materialize(
       exactStage(docs, cfg).select(col("doc_id"), col("text")))
@@ -135,15 +132,15 @@ object CorpusPipeline {
     // feeds the pair derivation + the survivor join
     val requal = Materialize(cleaned
       .withColumn("__p", TextAnalysis.profile(col("clean_text")))
-      .filter(col("__p.n_tokens") >= cfg.minTokens)
+      .filter(col("__p.n_tokens") >= MinTokens)
       .withColumn("n_tok", col("__p.n_bpeish").cast("long"))
       .select(col("doc_id"), col("clean_text"), col("n_tok"), col("n_removed")))
     val pairs = Dedup.ngramJaccardPairs(
       requal.select(col("doc_id"), col("clean_text")), "doc_id", "clean_text",
-      n = cfg.ngram, threshold = cfg.jaccardThreshold)
+      n = Ngram, threshold = cfg.jaccardThreshold)
     val fuzzyKept = Dedup.nearDupSurvivors(requal, "doc_id", pairs)
-    val emb = embeddings.select(col(embIdCol).as("doc_id"),
-      col(embVecCol).as("__emb"))
+    val emb = embeddings.select(col("vec_id").as("doc_id"),
+      col("embedding").as("__emb"))
     // split into embedded/unembedded consumers
     val joined = Materialize(fuzzyKept.join(emb, Seq("doc_id"), "left"))
     val withE = joined.filter(col("__emb").isNotNull)
@@ -158,27 +155,25 @@ object CorpusPipeline {
     * the same dedup guarantee chain as text: after the text ladder's
     * survivors are known, documents whose attached image is a
     * perceptual-hash near-duplicate of another SURVIVOR's image (banded
-    * pHash pairs, [[Multimodal.phashNearDupPairs]] — exact for
-    * `maxHamming` ≤ 6 by the 7×9-bit pigeonhole — then connected
+    * pHash pairs within Hamming distance 6,
+    * [[Multimodal.phashNearDupPairs]] — exact there by the 7×9-bit
+    * pigeonhole — then connected
     * components, min-id survivor) drop before the token budget, so a
     * re-encoded or resized copy of one image cannot ship twice even
     * when its surrounding text changed enough to clear every text
-    * stage. `imageHashes` is (mediaIdCol = doc id, hashCol = 63-bit
+    * stage. `imageHashes` is (`media_id` = doc id, `phash` = 63-bit
     * dHash); documents with no image row pass through unpaired, the
     * no-embedding discipline. Restricting the pair join to survivors
     * keeps the banding volume proportional to what the ladder kept. */
   def curateMultimodal(docs: DataFrame, embeddings: DataFrame,
-                       imageHashes: DataFrame, cfg: Config = Config(),
-                       mediaIdCol: String = "media_id",
-                       hashCol: String = "phash",
-                       maxHamming: Int = 6): DataFrame = {
+                       imageHashes: DataFrame,
+                       cfg: Config = Config()): DataFrame = {
     // feeds the pair restriction AND the CC survivor join
     val surv = Materialize(curateV2Survivors(docs, embeddings, cfg))
     val hs = imageHashes
-      .select(col(mediaIdCol).as("doc_id"), col(hashCol))
+      .select(col("media_id").as("doc_id"), col("phash"))
       .join(surv.select(col("doc_id")), Seq("doc_id"))
-    val ipairs = Multimodal.phashNearDupPairs(hs, "doc_id", hashCol,
-      maxHamming)
+    val ipairs = Multimodal.phashNearDupPairs(hs, "doc_id", "phash", 6)
     val kept = Dedup.nearDupSurvivors(surv, "doc_id", ipairs)
     PrefixSum.selectWithinBudget(
       kept.select(col("doc_id"), col("n_tok"), col("n_removed")),

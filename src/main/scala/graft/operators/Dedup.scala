@@ -223,7 +223,7 @@ object Dedup {
   private[graft] def shingleUdf(n: Int) = udf { (text: String) =>
     if (text == null) Seq.empty[String]
     else {
-      val toks = text.trim.toLowerCase.split("\\s+")
+      val toks = text.trim.toLowerCase(java.util.Locale.ROOT).split("\\s+")
       if (toks.length < n) Seq(toks.mkString(" "))
       else {
         val out = new scala.collection.mutable.LinkedHashSet[String]
@@ -371,41 +371,27 @@ object Dedup {
     * delta's band rows equi-join the combined band index, so candidate
     * fan-out is linear in the delta for stable bucket statistics.
     *
-    * Stream ≡ batch (uncapped): a qualifying bucket pair is discovered
-    * exactly once — when its later-arriving member lands — and the
+    * Stream ≡ batch: a qualifying bucket pair is discovered exactly
+    * once — when its later-arriving member lands — and the
     * identical-signature star path emits (group-min, member) pairs
     * whenever either side is new, so the UNION of per-batch pair sets
     * equals [[minhashNearDupPairs]]'s pair set over the same documents
-    * regardless of arrival order... PROVIDED no bucket cap fires: a cap
-    * is a function of bucket size AT DISCOVERY TIME, so with finite
-    * `maxBucket` the incremental union is a (duplicate-orientation-safe)
-    * superset of the batch run. The bounded equality gate therefore runs
-    * uncapped; production keeps the cap (recall loss on degenerate
-    * buckets is the documented skew trade, SkewStressSpec).
-    *
-    * Per-batch cost note (same honest model as [[incrementalNgramPairs]]):
-    * with a finite cap the bucket-size table is recomputed over
-    * corpus+delta here; at steady state production maintains bucket
-    * counts incrementally. Uncapped (the gate's mode) no corpus-sized
-    * aggregation runs at all — only the delta-side band join.
+    * regardless of arrival order. That needs the buckets UNCAPPED: a cap
+    * is a function of bucket size AT DISCOVERY TIME, so a capped
+    * incremental union would be a superset of the batch run. Uncapped,
+    * no corpus-sized aggregation runs at all — only the delta-side band
+    * join.
     *
     * `corpusSigs`/`deltaSigs` come from [[minhashSignatures]] (disjoint id
     * spaces). Output: (idA < idB, exact jaccard ≥ threshold). */
   def incrementalMinhashPairs(corpusSigs: DataFrame, deltaSigs: DataFrame,
                               idCol: String, k: Int = 64, bands: Int = 16,
-                              threshold: Double = 0.5,
-                              maxBucket: Int = Int.MaxValue): DataFrame = {
+                              threshold: Double = 0.5): DataFrame = {
     val rows = k / bands
     val all = corpusSigs.unionByName(deltaSigs)
     val allB = bandBuckets(all, "sig", idCol, bands, rows)
     val deltaB = bandBuckets(deltaSigs, "sig", idCol, bands, rows)
-    val probe =
-      if (maxBucket == Int.MaxValue) deltaB
-      else deltaB.join(
-        allB.groupBy("band", "bucket").agg(count(lit(1)).as("__bn"))
-          .filter(col("__bn") <= maxBucket).select("band", "bucket"),
-        Seq("band", "bucket"), "left_semi")
-    val bucketCands = probe
+    val bucketCands = deltaB
       .select(col("band"), col("bucket"), col(idCol).as("__d"))
       .join(allB.select(col("band"), col("bucket"), col(idCol).as("__o")),
         Seq("band", "bucket"))
@@ -693,9 +679,8 @@ object Dedup {
     sig
   }
 
-  def withSimhash(df: DataFrame, textCol: String = "text",
-                  out: String = "simhash"): DataFrame =
-    df.withColumn(out, simhashUdf(tokens(col(textCol))))
+  def withSimhash(df: DataFrame, textCol: String = "text"): DataFrame =
+    df.withColumn("simhash", simhashUdf(tokens(col(textCol))))
 
   /** SimHash near-dup pairs, verified by exact popcount.
     *
@@ -1012,18 +997,17 @@ object Dedup {
     * SCALE RULE (measured, round-13 audit): at FIXED k the candidate
     * volume Σ|cell|² is quadratic in corpus size — 5× data grew the
     * verify shuffle ~25× (plus CC growth on the denser pair graph). k
-    * must grow with the corpus to hold E|cell| constant; `targetCell > 0`
-    * automates that (k = max(k, ⌈n/targetCell⌉), one count job), which
-    * restores near-linear growth at the price of a recall profile that
-    * changes with corpus size (finer cells split more boundary pairs —
-    * raise nprobe to compensate). The oracled fixtures pin k explicitly
-    * for determinism. */
+    * must grow with the corpus to hold E|cell| constant, which restores
+    * near-linear growth at the price of a recall profile that changes
+    * with corpus size (finer cells split more boundary pairs — raise
+    * nprobe to compensate). The oracled fixtures pin k explicitly for
+    * determinism. */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, k: Int = 16, nprobe: Int = 1,
-                    exact: Boolean = false, targetCell: Int = 0): DataFrame = {
+                    exact: Boolean = false): DataFrame = {
     val pairs =
       if (exact) embeddingNearDupPairs(df, idCol, vecCol, threshold, exact = true)
-      else ivfNearDupPairs(df, idCol, vecCol, threshold, k, nprobe, targetCell)
+      else ivfNearDupPairs(df, idCol, vecCol, threshold, k, nprobe)
     connectedComponents(df.select(col(idCol)), pairs.select(col("idA"), col("idB")),
         idCol)
       .select(col("id").as(idCol),
@@ -1042,12 +1026,9 @@ object Dedup {
     * Recall < 1 (pairs split across non-probed cells are missed) —
     * measured against the exact oracle in OperatorsSpec. */
   def ivfNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                      threshold: Double, k: Int = 16, nprobe: Int = 2,
-                      targetCell: Int = 0): DataFrame = {
-    val kEff =
-      if (targetCell <= 0) k
-      else math.max(k, ((df.count() + targetCell - 1) / targetCell).toInt)
-    val model = IvfIndex.train(df, idCol, vecCol, k = kEff)
+                      threshold: Double, k: Int = 16,
+                      nprobe: Int = 2): DataFrame = {
+    val model = IvfIndex.train(df, idCol, vecCol, k = k)
     // feeds probes and both verify sides
     val base = Materialize(
       df.select(col(idCol), col(vecCol).cast("array<float>").as("v"))

@@ -89,17 +89,17 @@ object EntityResolution {
     * Per-batch cost is |delta keys| joined against the standing index —
     * the corpus is never self-joined per batch.
     *
-    * `maxBlock` mirrors [[candidatePairs]]' cap discipline: keys whose
-    * ACCUMULATED block size (standing corpus + this delta) exceeds the
-    * cap are dropped from the per-batch join, so one hot key can never
-    * make a batch quadratic. Equivalence caveat: the batch cap fires on
+    * A fixed bound of 4096 rows per block mirrors [[candidatePairs]]' cap
+    * discipline: keys whose ACCUMULATED block size (standing corpus +
+    * this delta) exceeds the cap are dropped from the per-batch join, so
+    * one hot key can never make a batch quadratic. Equivalence caveat: the batch cap fires on
     * the FINAL block size, the incremental cap on the running size, so
     * stream≡batch equality holds exactly iff no block ever crosses the
     * cap (the harness block sizes guarantee this; the cap is the
     * at-scale cost bound, not a semantics change on in-cap data). */
   def incrementalMatches(corpusKeyed: DataFrame, deltaKeyed: DataFrame,
-                         maxDist: Int = 1,
-                         maxBlock: Int = 4096): DataFrame = {
+                         maxDist: Int = 1): DataFrame = {
+    val maxBlock = 4096
     // Only keys present in THIS delta can emit pairs this batch, so the
     // cap check is semi-joined down to delta keys first: the block-size
     // aggregate (and everything downstream) is proportional to the delta,

@@ -18,7 +18,10 @@ import graft.expr.{CmsEstimate, CmsInnerProduct, CmsMergeAgg, CmsSketchAgg}
   */
 object FreqSketch {
 
-  def cmsSketch(itemCol: Column, depth: Int = 10, width: Int = 2048): Column =
+  private val Depth = 10
+  private val Width = 2048
+
+  def cmsSketch(itemCol: Column, depth: Int = Depth, width: Int = Width): Column =
     ColumnBridge.column(CmsSketchAgg(
       ColumnBridge.expression(itemCol), depth, width).toAggregateExpression())
 
@@ -57,13 +60,13 @@ object FreqSketch {
   /** Gate for [[joinSizeEstimate]] against the true join count:
     *   - UNDERCOUNT: `est < true` is impossible by construction
     *     (colliding keys only ADD to every row's dot product);
-    *   - OVERCOUNT: `est > true + slack·e·nA·nB/width` — the published
+    *   - OVERCOUNT: `est > true + e·nA·nB/width` — the published
     *     bound holds per row with constant probability and the min over
     *     `depth` independent rows misses with ~exp(−depth).
     * Violations only; oracle = empty relation. */
   def joinSizeViolations(dfA: DataFrame, keyA: String, dfB: DataFrame,
-                         keyB: String, depth: Int = 8, width: Int = 8192,
-                         slack: Double = 1.0): DataFrame = {
+                         keyB: String, depth: Int = 8,
+                         width: Int = 8192): DataFrame = {
     val est = joinSizeEstimate(dfA, keyA, dfB, keyB, depth, width)
     val exact = dfA.select(col(keyA).cast("long").as("__k"))
       .filter(col("__k").isNotNull)
@@ -72,7 +75,7 @@ object FreqSketch {
       .agg(count(lit(1)).as("true_size"))
     est.crossJoin(exact)
       .select(col("n_a"), col("n_b"), col("est"), col("true_size"),
-        (col("true_size").cast("double") + lit(slack * math.E / width) *
+        (col("true_size").cast("double") + lit(math.E / width) *
           col("n_a").cast("double") * col("n_b").cast("double")).as("__hi"))
       .select(
         when(col("est") < col("true_size"), lit("undercount"))
@@ -86,11 +89,10 @@ object FreqSketch {
     * the exact counts (deterministic (cnt desc, item) order), the ONE-ROW
     * sketch frame is crossed into it — estimation happens per probe item,
     * never per input row. Output: (item, exact_cnt, est_cnt). */
-  def topItemEstimates(df: DataFrame, itemCol: String, k: Int,
-                       depth: Int = 10, width: Int = 2048): DataFrame = {
+  def topItemEstimates(df: DataFrame, itemCol: String, k: Int): DataFrame = {
     val items = df.filter(col(itemCol).isNotNull)
       .select(col(itemCol).cast("long").as("item"))
-    probeTopK(items, items.agg(cmsSketch(col("item"), depth, width).as("__sk")), k)
+    probeTopK(items, items.agg(cmsSketch(col("item"), Depth, Width).as("__sk")), k)
   }
 
   /** Exact-top-`k` probe of a ONE-ROW (`__sk`) sketch frame. Split out
@@ -109,8 +111,8 @@ object FreqSketch {
     * that is the point of gating the sketch instead of shipping exact):
     *   - UNDERCOUNT: `est < true` is impossible by construction (counters
     *     only ever add) — any hit is a hard bug;
-    *   - OVERCOUNT: `est > true + slack·e·n/width` — the CMS bound holds
-    *     per item with probability 1 − exp(−depth); `slack = 2` pushes the
+    *   - OVERCOUNT: `est > true + 2·e·n/width` — the CMS bound holds
+    *     per item with probability 1 − exp(−depth); the slack of 2 pushes the
     *     residual failure probability far below one expected hit at
     *     fixture scale (Markov on the per-row excess);
     *   - MERGE ≠ DIRECT: per-segment sketches summed must be BYTE-equal to
@@ -118,16 +120,14 @@ object FreqSketch {
     *     commutative, and the carried n adds up) — the mergeability
     *     contract itself, the same gate the HLL lattice carries.
     * Violations only; oracle = empty relation. */
-  def violations(df: DataFrame, itemCol: String, segCol: String,
-                 depth: Int = 10, width: Int = 2048,
-                 slack: Double = 2.0): DataFrame = {
+  def violations(df: DataFrame, itemCol: String, segCol: String): DataFrame = {
     val items = df.filter(col(itemCol).isNotNull)
       .select(col(itemCol).cast("long").as("item"),
         col(segCol).cast("string").as("seg"))
     val exact = items.groupBy(col("item")).agg(count(lit(1)).as("true_cnt"))
-    val direct = items.agg(cmsSketch(col("item"), depth, width).as("__sk"),
+    val direct = items.agg(cmsSketch(col("item"), Depth, Width).as("__sk"),
       count(lit(1)).as("n"))
-    val bound = lit(slack * math.E / width) * col("n").cast("double")
+    val bound = lit(2.0 * math.E / Width) * col("n").cast("double")
     val est = exact.crossJoin(direct)
       .select(col("item"), col("true_cnt"),
         cmsEstimate(col("__sk"), col("item")).as("est_cnt"), bound.as("__b"))
@@ -139,7 +139,7 @@ object FreqSketch {
         .as("issue"))
       .filter(col("issue").isNotNull)
     val merged = items.groupBy(col("seg"))
-      .agg(cmsSketch(col("item"), depth, width).as("__s"))
+      .agg(cmsSketch(col("item"), Depth, Width).as("__s"))
       .agg(cmsMerge(col("__s")).as("__m"))
     // Guard on n > 0: over an empty/all-null input the merged path's global
     // agg sees zero per-segment rows and emits the 16-byte zero-state marker

@@ -26,23 +26,22 @@ import org.apache.spark.sql.functions._
 object Fusion {
 
   /** Fuse ranked lists. Each input must carry `idCol` and a 1-based
-    * `rankCol`; rows beyond `maxRank` are ignored (a guard against an
-    * unbounded producer — fusion quality lives entirely in the head).
+    * `rankCol`; rows beyond rank 1000 are ignored (a fixed guard against
+    * an unbounded producer — fusion quality lives entirely in the head).
+    * Each list contributes `1000000 div (60 + rank)` micro-units per id
+    * (RRF with k = 60).
     *
     * @return (id, rrf, lists): integer-micro-unit fused score and the
     *         number of lists the id appeared in, rrf-descending.
     */
-  def rrfFuse(lists: Seq[DataFrame], idCol: String, rankCol: String,
-              kRrf: Int = 60, base: Long = 1000000L,
-              maxRank: Int = 1000): DataFrame = {
+  def rrfFuse(lists: Seq[DataFrame], idCol: String,
+              rankCol: String): DataFrame = {
     require(lists.nonEmpty, "RRF needs at least one ranked list")
-    require(kRrf >= 0 && base > 0 && maxRank >= 1)
     val contribs = lists.map { df =>
       df.select(col(idCol),
           col(rankCol).cast("long").as("__rank"))
-        .filter(col("__rank").between(1, maxRank))
-        .select(col(idCol),
-          expr(s"${base}L div (${kRrf}L + __rank)").as("__c"))
+        .filter(col("__rank").between(1, 1000))
+        .select(col(idCol), expr("1000000L div (60L + __rank)").as("__c"))
     }.reduce(_ unionAll _)
     contribs.groupBy(col(idCol))
       .agg(sum(col("__c")).as("rrf"), count(lit(1)).as("lists"))

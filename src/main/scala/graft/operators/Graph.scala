@@ -38,9 +38,10 @@ object Graph {
     *
     * new_rank(v) = base·(100−damp)/100  +  damp · Σ_{u→v} (rank(u) div outdeg(u)) div 100
     *
+    * with damp = 85 (the classic 0.85, in percent) and base = 1000000,
+    * the integer mass of rank 1.0 (micro-units).
+    *
     * @param edges  edge list; deduplicated internally (multi-edges count once)
-    * @param damp   damping factor in percent (85 = the classic 0.85)
-    * @param base   integer mass of rank 1.0 (micro-units)
     * @return (node, pr) — one row per node with out-edges, `pr` in micro-units
     */
   /** `edgesDeduped = true` asserts the caller's edge frame is ALREADY
@@ -48,10 +49,11 @@ object Graph {
     * dedup exchange — the output is identical by definition; passing a
     * frame with duplicate edges under the flag corrupts out-degrees. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 3, damp: Long = 85L, base: Long = 1000000L,
-               checkpointEvery: Int = 5,
+               iters: Int = 3, checkpointEvery: Int = 5,
                edgesDeduped: Boolean = false): DataFrame = {
-    require(iters >= 1 && damp >= 0 && damp <= 100 && base > 0)
+    require(iters >= 1)
+    val damp = 85L
+    val base = 1000000L
 
     // Edge list with the source's out-degree attached ONCE — reused by every
     // iteration, so materialize it (the distinct + degree agg should run one
@@ -490,10 +492,12 @@ object Graph {
     * the adjacency frame checkpointed to truncate lineage — the same
     * loop discipline as [[pageRank]] / `Dedup.connectedComponents`. The
     * round count is bounded by the degeneracy ordering depth, small for
-    * real graphs; `maxRounds` is a loud guard, not a silent cap. */
+    * real graphs; a fixed bound of 200 rounds is a loud guard, not a
+    * silent cap. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxRounds: Int = 200, checkpointEvery: Int = 5): DataFrame = {
+            checkpointEvery: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    val maxRounds = 200
 
     val und = canonicalUndirected(edges, srcCol, dstCol)
     // symmetric adjacency among currently-alive nodes
@@ -506,7 +510,7 @@ object Graph {
     var done = false
     while (!done) {
       require(round <= maxRounds,
-        s"kCore: $maxRounds rounds exceeded — raise maxRounds for this graph")
+        s"kCore: $maxRounds rounds exceeded")
       val deg = adj.groupBy(col("a")).agg(count(lit(1)).as("__d"))
       val surviving = deg.filter(col("__d") >= k).select(col("a"))
       // falls = alive nodes NOT surviving (covers degree-0 nodes, which

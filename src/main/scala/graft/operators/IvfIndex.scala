@@ -21,33 +21,14 @@ object IvfIndex {
     def k: Int = centroids.length
   }
 
-  /** Lloyd's k-means on a deterministic sample (first `sampleN` rows by id).
-    * Cosine-metric: vectors and centroids are L2-normalized, so nearest
-    * centroid by dot product == nearest by cosine. */
+  /** [[SampledLloyd]] k-means, cosine metric: vectors and centroids are
+    * L2-normalized, so nearest centroid by dot product == nearest by
+    * cosine. */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
-            k: Int = 16, iters: Int = 5, sampleN: Int = 2048): Model = {
-    // cast like every other entry point — an array<double> corpus would
-    // otherwise throw ClassCastException only at training time
-    val sample = corpus.orderBy(col(idCol)).limit(sampleN)
-      .select(col(vecCol).cast("array<float>")).collect()
-      .map(_.getSeq[Float](0).toArray).map(normalize)
+            k: Int = 16): Model = {
+    val sample = SampledLloyd.sample(corpus, idCol, vecCol).map(normalize)
     require(sample.length >= k, s"sample ${sample.length} < k=$k")
-    var centroids = sample.take(k).map(_.clone())
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(k)(new Array[Double](sample.head.length))
-      val counts = new Array[Int](k)
-      sample.foreach { v =>
-        val c = nearest(centroids, v)
-        counts(c) += 1
-        var i = 0
-        while (i < v.length) { sums(c)(i) += v(i); i += 1 }
-      }
-      centroids = centroids.zipWithIndex.map { case (old, c) =>
-        if (counts(c) == 0) old
-        else normalize(sums(c).map(x => (x / counts(c)).toFloat))
-      }
-    }
-    Model(centroids)
+    Model(SampledLloyd.train(sample, k, nearest, normalize))
   }
 
   private def normalize(v: Array[Float]): Array[Float] = {
@@ -82,11 +63,10 @@ object IvfIndex {
   }
 
   /** Narrow pass: tag each row with its inverted-list id. */
-  def assign(df: DataFrame, vecCol: String, model: Model,
-             out: String = "centroid_id"): DataFrame = {
+  def assign(df: DataFrame, vecCol: String, model: Model): DataFrame = {
     val centroids = model.centroids
     val assignUdf = udf { (v: Seq[Float]) => nearest(centroids, normalize(v.toArray)) }
-    df.withColumn(out, assignUdf(col(vecCol)))
+    df.withColumn("centroid_id", assignUdf(col(vecCol)))
   }
 
   /** Explode each row to its `nprobe` nearest inverted-list ids — the probe
@@ -102,17 +82,17 @@ object IvfIndex {
   }
 
   /** IVF top-k: probe the `nprobe` nearest inverted lists per query, exact
-    * cosine rerank inside them. Output matches [[Similarity.cosineTopK]]. */
+    * cosine rerank inside them. Both sides carry (`vec_id`, `embedding`).
+    * Output matches [[Similarity.cosineTopK]]. */
   def topK(queries: DataFrame, corpus: DataFrame, model: Model, k: Int,
-           nprobe: Int = 4, idCol: String = "vec_id",
-           vecCol: String = "embedding"): DataFrame = {
-    val c = assign(corpus, vecCol, model)
-      .select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<float>").as("cv"), col("centroid_id"))
+           nprobe: Int = 4): DataFrame = {
+    val c = assign(corpus, "embedding", model)
+      .select(col("vec_id").as("neighbor_id"),
+        col("embedding").cast("array<float>").as("cv"), col("centroid_id"))
       .withColumn("cn", Similarity.l2norm(col("cv")))
     val q = withProbes(
-      queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<float>").as("qv"))
+      queries.select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<float>").as("qv"))
         .withColumn("qn", Similarity.l2norm(col("qv"))),
       "qv", model, nprobe)
     // zero-norm vectors have no defined cosine — exclude them rather than

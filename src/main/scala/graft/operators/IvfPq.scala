@@ -28,14 +28,14 @@ import org.apache.spark.sql.functions._
 object IvfPq {
 
   /** One corpus pass at ingest: IVF cell + PQ code per row — the index
-    * frame every later search (and the verify twin) reuses. */
+    * frame every later search (and the verify twin) reuses. Every frame
+    * here carries (`vec_id`, `embedding`). */
   def index(corpus: DataFrame, ivf: IvfIndex.Model,
-            pq: ProductQuantize.Model, idCol: String = "vec_id",
-            vecCol: String = "embedding"): DataFrame =
+            pq: ProductQuantize.Model): DataFrame =
     ProductQuantize.encode(
-      IvfIndex.assign(corpus.select(col(idCol), col(vecCol)), vecCol, ivf),
-      vecCol, pq)
-      .select(col(idCol).as("neighbor_id"), col("centroid_id"),
+      IvfIndex.assign(corpus.select(col("vec_id"), col("embedding")), "embedding", ivf),
+      "embedding", pq)
+      .select(col("vec_id").as("neighbor_id"), col("centroid_id"),
         col("pq_code"))
 
   /** Two-stage top-k: probe `nprobe` cells, ADC-score the probed codes,
@@ -44,23 +44,20 @@ object IvfPq {
     * vector reads exactly like nprobe trades it for code reads. */
   def topK(queries: DataFrame, corpus: DataFrame, ivf: IvfIndex.Model,
            pq: ProductQuantize.Model, k: Int, nprobe: Int = 4,
-           shortlist: Int = 32, idCol: String = "vec_id",
-           vecCol: String = "embedding"): DataFrame =
-    topKIndexed(queries, index(corpus, ivf, pq, idCol, vecCol), corpus,
-      ivf, pq, k, nprobe, shortlist, idCol, vecCol)
+           shortlist: Int = 32): DataFrame =
+    topKIndexed(queries, index(corpus, ivf, pq), corpus,
+      ivf, pq, k, nprobe, shortlist)
 
   /** [[topK]] over an ALREADY-INDEXED corpus (the production codes-at-
     * ingest shape) — `indexed` carries (neighbor_id, centroid_id,
     * pq_code); `corpus` is read only for the short-list re-rank. */
   def topKIndexed(queries: DataFrame, indexed: DataFrame, corpus: DataFrame,
                   ivf: IvfIndex.Model, pq: ProductQuantize.Model, k: Int,
-                  nprobe: Int = 4, shortlist: Int = 32,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
+                  nprobe: Int = 4, shortlist: Int = 32): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
     val q = IvfIndex.withProbes(
-      queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<float>").as("qv")),
+      queries.select(col("vec_id").as("query_id"),
+        col("embedding").cast("array<float>").as("qv")),
       "qv", ivf, nprobe)
     // stage 1+2: cell-pruned candidates, scored from codes only — the
     // raw corpus vector column never reaches this join
@@ -76,8 +73,8 @@ object IvfPq {
       .select(col("query_id"), col("qv"), col("neighbor_id"))
     // stage 3: exact cosine on the short list only (same HOF arithmetic
     // as IvfIndex.topK / Similarity.cosineTopK, so scores verify exactly)
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<float>").as("cv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"),
+        col("embedding").cast("array<float>").as("cv"))
       .withColumn("cn", Similarity.l2norm(col("cv")))
     val rescored = short.join(c, Seq("neighbor_id"))
       .withColumn("qn", Similarity.l2norm(col("qv")))

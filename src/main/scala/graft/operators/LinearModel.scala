@@ -35,6 +35,9 @@ object LinearModel {
         ridge * weights.iterator.map(math.abs).max
   }
 
+  /** Fixed-point scale of the moments [[fit]] solves from. */
+  private val Grid = 1e6
+
   /** The augmented [1, features…, y] vector column. */
   private def augmented(featureCols: Seq[String], yCol: String): Column =
     array((lit(1.0) +: featureCols.map(c => col(c).cast("double")) :+
@@ -44,29 +47,29 @@ object LinearModel {
     * half, exactly [[VectorStats.gramSums]] over [1, x…, y]. Exposed so
     * the harness can oracle the moments the fit consumes. */
   def moments(df: DataFrame, featureCols: Seq[String], yCol: String,
-              grid: Double = 1e6): DataFrame =
+              grid: Double = Grid): DataFrame =
     VectorStats.gramSums(
       df.select(augmented(featureCols, yCol).as("fv")), "fv", grid)
 
   /** Fit w for y ≈ w₀ + Σ wᵢ·xᵢ from the distributed moments. `ridge`
     * adds λ to every feature's (not the intercept's) diagonal entry. */
   def fit(df: DataFrame, featureCols: Seq[String], yCol: String,
-          ridge: Double = 0.0, grid: Double = 1e6): Fit = {
+          ridge: Double = 0.0): Fit = {
     val p = featureCols.length + 1
-    val rows = moments(df, featureCols, yCol, grid).collect()
+    val rows = moments(df, featureCols, yCol, Grid).collect()
     require(rows.nonEmpty, "LinearModel.fit: empty input")
     val n = rows.head.getAs[Long]("n")
     val m = Array.ofDim[Double](p + 1, p + 1) // augmented incl. y slot
     rows.foreach { r =>
       val (i, j) = (r.getAs[Long]("i").toInt, r.getAs[Long]("j").toInt)
-      val v = r.getAs[java.math.BigDecimal]("qsum").doubleValue() / grid
+      val v = r.getAs[java.math.BigDecimal]("qsum").doubleValue() / Grid
       m(i)(j) = v; m(j)(i) = v
     }
     // A = X'X (p×p block), b = X'y (last column's first p entries)
     val a = Array.tabulate(p, p)((i, j) =>
       m(i)(j) + (if (i == j && i > 0) ridge else 0.0))
     val b = Array.tabulate(p)(i => m(i)(p))
-    Fit(solve(a, b), n, grid, ridge)
+    Fit(solve(a, b), n, Grid, ridge)
   }
 
   /** In-place Gaussian elimination with partial pivoting — (p+1)² driver
@@ -111,12 +114,12 @@ object LinearModel {
   /** Score every row: ŷ = w₀ + Σ wᵢ·xᵢ plus the residual — plain codegen
     * arithmetic on literal weights, no shuffle, no UDF. */
   def withPrediction(df: DataFrame, featureCols: Seq[String], yCol: String,
-                     fit: Fit, outCol: String = "y_hat"): DataFrame = {
+                     fit: Fit): DataFrame = {
     val yHat = featureCols.zipWithIndex.foldLeft(lit(fit.weights(0)): Column) {
       case (acc, (c, i)) => acc + lit(fit.weights(i + 1)) * col(c).cast("double")
     }
-    df.withColumn(outCol, yHat)
-      .withColumn("residual", col(yCol).cast("double") - col(outCol))
+    df.withColumn("y_hat", yHat)
+      .withColumn("residual", col(yCol).cast("double") - col("y_hat"))
   }
 
   /** Per-coefficient normal-equation gradient Σ xⱼ·(y − ŷ), re-derived

@@ -1328,10 +1328,10 @@ object Multimodal {
       .map(id => MediaRecord(id, syntheticPayload(id), mimes((id % 3).toInt)))
   }
 
-  /** Frame sampling stub: every `stride` bytes, up to `maxFrames` offsets —
-    * stands in for video keyframe extraction. */
-  def sampleFrameOffsets(nBytes: Int, stride: Int = 100, maxFrames: Int = 8): Seq[Int] =
-    (0 until math.min(maxFrames, math.max(nBytes, 1) / stride + 1)).map(_ * stride)
+  /** Frame sampling stub: every 100 bytes, up to 8 offsets — stands in
+    * for video keyframe extraction. */
+  def sampleFrameOffsets(nBytes: Int): Seq[Int] =
+    (0 until math.min(8, math.max(nBytes, 1) / 100 + 1)).map(_ * 100)
 
   // ------------------------------------------------------- video (ISO BMFF)
 
@@ -1695,15 +1695,15 @@ object Multimodal {
         when(col("__ok"), col("__nt")).as("n_tracks"))
   }
 
-  /** Wrap any table into media records: payload column as binary. For the
-    * `documents` fixture the text bytes stand in for an image payload. */
-  def asMediaRecords(df: DataFrame, idCol: String, payloadCol: String,
-                     mime: String = "application/octet-stream")
+  /** Wrap any table into media records: payload column as binary, mime
+    * `application/octet-stream`. For the `documents` fixture the text
+    * bytes stand in for an image payload. */
+  def asMediaRecords(df: DataFrame, idCol: String, payloadCol: String)
                     (implicit spark: SparkSession): Dataset[MediaRecord] = {
     import spark.implicits._
     df.select(col(idCol).cast("long").as("media_id"),
       col(payloadCol).cast("binary").as("media"),
-      lit(mime).as("mime")).as[MediaRecord]
+      lit("application/octet-stream").as("mime")).as[MediaRecord]
   }
 
   /** Batched partition-parallel feature extraction. `batchSize` models the

@@ -102,8 +102,8 @@ object PrefixSum {
     * budget is excluded). The canonical "fill a token budget by priority"
     * corpus operation. */
   def selectWithinBudget(df: DataFrame, orderCol: String, valueCol: String,
-                         budget: Long, buckets: Int = 32): DataFrame =
-    withPrefixSum(df, orderCol, valueCol, out = "__cumsum", buckets = buckets)
+                         budget: Long): DataFrame =
+    withPrefixSum(df, orderCol, valueCol, out = "__cumsum", buckets = 32)
       .filter(col("__cumsum") <= budget)
       .drop("__cumsum")
 }

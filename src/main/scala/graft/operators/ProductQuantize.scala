@@ -48,15 +48,11 @@ object ProductQuantize {
     }
   }
 
-  /** Per-sub-block Lloyd k-means (L2, raw space) on a deterministic
-    * bounded sample — the same driver-budget pattern as
-    * [[IvfIndex.train]]. Requires dim divisible by m. */
+  /** Per-sub-block [[SampledLloyd]] k-means (L2, raw space) — the same
+    * sample and loop as [[IvfIndex.train]]. Requires dim divisible by m. */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
-            m: Int = 8, k: Int = 16, iters: Int = 5,
-            sampleN: Int = 2048): Model = {
-    val sample = corpus.orderBy(col(idCol)).limit(sampleN)
-      .select(col(vecCol).cast("array<float>")).collect()
-      .map(_.getSeq[Float](0).toArray)
+            m: Int = 8, k: Int = 16): Model = {
+    val sample = SampledLloyd.sample(corpus, idCol, vecCol)
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
@@ -64,22 +60,7 @@ object ProductQuantize {
     val dsub = dim / m
     val codebooks = Array.tabulate(m) { b =>
       val sub = sample.map(v => java.util.Arrays.copyOfRange(v, b * dsub, (b + 1) * dsub))
-      var cents = sub.take(k).map(_.clone())
-      for (_ <- 0 until iters) {
-        val sums = Array.fill(k)(new Array[Double](dsub))
-        val counts = new Array[Int](k)
-        sub.foreach { v =>
-          val c = nearestL2(cents, v)
-          counts(c) += 1
-          var i = 0
-          while (i < dsub) { sums(c)(i) += v(i); i += 1 }
-        }
-        cents = cents.zipWithIndex.map { case (old, c) =>
-          if (counts(c) == 0) old
-          else sums(c).map(x => (x / counts(c)).toFloat)
-        }
-      }
-      cents
+      SampledLloyd.train(sub, k, nearestL2, identity)
     }
     Model(codebooks)
   }
@@ -104,8 +85,7 @@ object ProductQuantize {
     * copyOfRange would otherwise silently zero-pad short vectors into
     * plausible-looking (wrong) codes, while the scorer would throw on the
     * same row only when it happened to be a query. */
-  def encode(df: DataFrame, vecCol: String, model: Model,
-             out: String = "pq_code"): DataFrame = {
+  def encode(df: DataFrame, vecCol: String, model: Model): DataFrame = {
     val cb = model.codebooks
     val dsub = model.dsub
     val dim = model.dim
@@ -116,33 +96,29 @@ object ProductQuantize {
         nearestL2(cb(b), java.util.Arrays.copyOfRange(arr, b * dsub, (b + 1) * dsub))
       }.toSeq
     }
-    df.withColumn(out, encodeUdf(col(vecCol).cast("array<float>")))
+    df.withColumn("pq_code", encodeUdf(col(vecCol).cast("array<float>")))
   }
 
   /** Decoded (reconstructed) vector column from a code column. */
-  def decodeCol(df: DataFrame, codeCol: String, model: Model,
-                out: String = "pq_decoded"): DataFrame = {
+  def decodeCol(df: DataFrame, codeCol: String, model: Model): DataFrame = {
     val broadcastModel = model
     val decodeUdf = udf { (code: Seq[Int]) => broadcastModel.decode(code).toSeq }
-    df.withColumn(out, decodeUdf(col(codeCol)))
+    df.withColumn("pq_decoded", decodeUdf(col(codeCol)))
   }
 
   /** ADC top-k: broadcast the bounded query set against the ENCODED
     * corpus; score = cosine(query, reconstruction), accumulated
     * sub-block-grouped (the verify twin's exact order). Output matches
     * [[Similarity.cosineTopK]]'s shape with `score` in place of
-    * `cosine`. Zero-norm sides are excluded (no defined cosine). */
-  def adcTopK(queries: DataFrame, corpus: DataFrame, model: Model, k: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    * `cosine`. Both sides carry (`vec_id`, `embedding`). Zero-norm sides
+    * are excluded (no defined cosine). */
+  def adcTopK(queries: DataFrame, corpus: DataFrame, model: Model,
+              k: Int): DataFrame =
     adcTopKEncoded(queries,
-      encode(corpus.select(col(idCol), col(vecCol)), vecCol, model)
-        .select(col(idCol).as("neighbor_id"), col("pq_code")),
-      model, k, idCol, vecCol)
+      encode(corpus.select(col("vec_id"), col("embedding")), "embedding", model)
+        .select(col("vec_id").as("neighbor_id"), col("pq_code")),
+      model, k)
 
-  /** [[adcTopK]] over an ALREADY-ENCODED corpus — `encoded` carries
-    * (neighbor_id, pq_code). The production shape: codes are computed once
-    * at ingest and reused across every search (and by the verification
-    * twin), never re-derived per query. */
   /** The ADC scorer as a reusable UDF: cosine(query, reconstruction)
     * accumulated in the fixed sub-block order of the scoring contract.
     * NaN on a zero-norm side (callers filter). Shared by the full-scan
@@ -173,11 +149,14 @@ object ProductQuantize {
     }
   }
 
+  /** [[adcTopK]] over an ALREADY-ENCODED corpus — `encoded` carries
+    * (neighbor_id, pq_code). The production shape: codes are computed once
+    * at ingest and reused across every search (and by the verification
+    * twin), never re-derived per query. */
   def adcTopKEncoded(queries: DataFrame, encoded: DataFrame, model: Model,
-                     k: Int, idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<float>").as("qv"))
+                     k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").cast("array<float>").as("qv"))
     val scoreUdf = adcCosineUdf(model)
     val scored = encoded.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * replicas of the key columns), which is the exact-oracle contract.
   * `exact = false` swaps in HyperLogLog++ `approx_count_distinct`: the
   * Expand disappears, the whole profile becomes one partial-agg pass with
-  * fixed-size sketch state — the 100 TB default, at ±rsd accuracy. */
+  * fixed-size sketch state — the 100 TB default, at ±1% accuracy. */
 object Profiler {
 
   def profile(df: DataFrame, columns: Seq[String] = Nil,
-              exact: Boolean = true, rsd: Double = 0.01): DataFrame = {
+              exact: Boolean = true): DataFrame = {
     val cols = if (columns.nonEmpty) columns else df.columns.toSeq
     require(cols.nonEmpty, "profile: no columns")
     require(cols.forall(df.columns.contains), s"profile: unknown column in $cols")
@@ -32,7 +32,7 @@ object Profiler {
       Seq(
         count(when(col(c).isNull, 1)).as(s"__nn_$i"),
         (if (exact) countDistinct(col(c))
-         else approx_count_distinct(col(c), rsd)).as(s"__nd_$i"),
+         else approx_count_distinct(col(c), 0.01)).as(s"__nd_$i"),
         min(col(c)).cast("string").as(s"__mn_$i"),
         max(col(c)).cast("string").as(s"__mx_$i"))
     } :+ count(lit(1)).as("__n")
@@ -207,14 +207,13 @@ object Profiler {
   }
 
   /** In-engine error gate for [[segmentDistinctRollup]]: every estimate —
-    * per-segment AND the unioned total — must be within `relErr` of the
+    * per-segment AND the unioned total — must be within 5% of the
     * exact distinct count (the default lgConfigK=12 HLL has ~1.6% standard
     * error; 5% is a >3-sigma bound). The exact side pays the full
     * distinct shuffle — affordable at oracle scale, which is the point of
     * gating the sketch instead of shipping exact. Violations only. */
   def segmentDistinctViolations(df: DataFrame, segCol: String,
-                                valueCol: String,
-                                relErr: Double = 0.05): DataFrame = {
+                                valueCol: String): DataFrame = {
     val vals = df.filter(col(valueCol).isNotNull)
       .select(col(segCol).cast("string").as("segment"), col(valueCol).as("v"))
     val exactSeg = vals.groupBy(col("segment"))
@@ -229,7 +228,7 @@ object Profiler {
     est.join(exact, col("e.segment") <=> col("x.segment"), "full_outer")
       .filter(col("e.est_distinct").isNull || col("x.exact").isNull ||
         abs(col("e.est_distinct") - col("x.exact")).cast("double") >
-          lit(relErr) * col("x.exact").cast("double"))
+          lit(0.05) * col("x.exact").cast("double"))
       .select(coalesce(col("e.segment"), col("x.segment")).as("segment"),
         col("e.est_distinct").as("est_distinct"), col("x.exact").as("exact"))
   }
@@ -281,7 +280,7 @@ object Profiler {
 
   /** In-engine gate for [[nativeDistinctRollup]], two properties:
     *   - ERROR BOUND: every estimate (per-segment and merged total) within
-    *     `relErr` of the exact distinct — default 5% is >3σ for lgK=12
+    *     5% of the exact distinct — >3σ for the lgK=12 sketch
     *     (RSE 1.04/√4096 ≈ 1.6%);
     *   - MERGE CONSISTENCY: the union of per-segment sketches must yield
     *     BIT-EXACTLY the estimate of one direct global aggregate —
@@ -290,9 +289,9 @@ object Profiler {
     *     determinism MG summaries don't have, and it is what makes stored
     *     per-segment sketches a trustworthy rollup lattice).
     * Violations only; oracle = empty relation. */
-  def nativeDistinctViolations(df: DataFrame, segCol: String, valueCol: String,
-                               lgK: Int = 12,
-                               relErr: Double = 0.05): DataFrame = {
+  def nativeDistinctViolations(df: DataFrame, segCol: String,
+                               valueCol: String): DataFrame = {
+    val lgK = 12
     val vals = df.filter(col(valueCol).isNotNull)
       .select(col(segCol).cast("string").as("segment"), col(valueCol).as("v"))
     val exactSeg = vals.groupBy(col("segment"))
@@ -309,7 +308,7 @@ object Profiler {
         col("e.segment") <=> col("x.segment"), "full_outer")
       .filter(col("e.est_distinct").isNull || col("x.exact").isNull ||
         abs(col("e.est_distinct") - col("x.exact")).cast("double") >
-          lit(relErr) * col("x.exact").cast("double"))
+          lit(0.05) * col("x.exact").cast("double"))
       .select(coalesce(col("e.segment"), col("x.segment")).as("segment"),
         lit("error_bound").as("issue"))
     val direct = vals.agg(hllSketch(col("v").cast("long"), lgK).as("__g"))

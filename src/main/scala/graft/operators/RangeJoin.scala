@@ -48,15 +48,16 @@ object RangeJoin {
     * additionally requires the bin to be the one containing
     * `max(aStart, bStart)` (the overlap's first bin): each qualifying pair
     * then meets in exactly ONE bin — exact and duplicate-free with no
-    * post-join distinct. Left/right columns are prefixed to disambiguate. */
+    * post-join distinct. Left/right non-key columns are prefixed `l_`/`r_`
+    * to disambiguate. */
   def intervalOverlapJoin(left: DataFrame, right: DataFrame,
                           keyCols: Seq[String],
                           leftStart: String, leftEnd: String,
                           rightStart: String, rightEnd: String,
-                          bucketWidth: Long,
-                          leftPrefix: String = "l_", rightPrefix: String = "r_")
-      : DataFrame = {
+                          bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
+    val leftPrefix = "l_"
+    val rightPrefix = "r_"
     def binned(df: DataFrame, s: String, e: String, prefix: String): DataFrame = {
       val renamed = df.columns.foldLeft(df)((acc, c) =>
         if (keyCols.contains(c)) acc else acc.withColumnRenamed(c, prefix + c))

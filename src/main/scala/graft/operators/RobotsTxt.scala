@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -115,7 +116,7 @@ object RobotsTxt {
     * URL stream. Stream-safe: a static broadcast side for stream-static
     * joins. */
   def decisionTable(rules: DataFrame, userAgent: String): DataFrame = {
-    val ua = userAgent.toLowerCase
+    val ua = userAgent.toLowerCase(Locale.ROOT)
     val dirRules = rules.filter(col("rtype").isin("allow", "disallow") &&
       col("value") =!= "")
     // Group EXISTENCE is judged over the FULL rule table, not just the
@@ -156,7 +157,7 @@ object RobotsTxt {
     * fetched: per origin, URLs queue in deterministic Knuth-hash order
     * and fetch times space out by the origin's crawl-delay (the chosen
     * agent group's delay, falling back to the `*` group's, then to
-    * `defaultDelaySec` — crawl-delay is the de-facto extension most
+    * 1 s — crawl-delay is the de-facto extension most
     * crawlers honor). `fetch_at_ms = pos · delay·1000` — the planning
     * table a fetcher fleet consumes.
     *
@@ -166,9 +167,8 @@ object RobotsTxt {
     * top-k-per-group shuffle class as [[WebCuration.capPerDomain]].
     * Output adds (delay_ms, pos 0-based, fetch_at_ms). */
   def schedule(urls: DataFrame, urlCol: String, idCol: String,
-               rules: DataFrame, userAgent: String,
-               defaultDelaySec: Long = 1L): DataFrame = {
-    val ua = userAgent.toLowerCase
+               rules: DataFrame, userAgent: String): DataFrame = {
+    val ua = userAgent.toLowerCase(Locale.ROOT)
     val delays = rules.filter(col("rtype") === "crawl-delay")
       .groupBy(col("domain"))
       .agg(max(when(col("agent") === ua, col("value").cast("long"))).as("__dua"),
@@ -182,7 +182,7 @@ object RobotsTxt {
       .filter(col("allowed"))
       .join(broadcast(delays), Seq("domain"), "left")
       .withColumn("delay_ms",
-        coalesce(col("__delay_s"), lit(defaultDelaySec)) * 1000L)
+        coalesce(col("__delay_s"), lit(1L)) * 1000L)
       .withColumn("pos", row_number().over(w).cast("long") - 1)
       .withColumn("fetch_at_ms", col("pos") * col("delay_ms"))
       .drop("__delay_s")
@@ -207,9 +207,8 @@ object RobotsTxt {
     * queue_delay_ms) next to schedule's columns. */
   def scheduleByRegistrableDomain(urls: DataFrame, urlCol: String,
                                   idCol: String, rules: DataFrame,
-                                  userAgent: String,
-                                  defaultDelaySec: Long = 1L): DataFrame = {
-    val ua = userAgent.toLowerCase
+                                  userAgent: String): DataFrame = {
+    val ua = userAgent.toLowerCase(Locale.ROOT)
     val delays = rules.filter(col("rtype") === "crawl-delay")
       .groupBy(col("domain"))
       .agg(max(when(col("agent") === ua, col("value").cast("long"))).as("__dua"),
@@ -223,7 +222,7 @@ object RobotsTxt {
       .filter(col("allowed"))
       .join(broadcast(delays), Seq("domain"), "left")
       .withColumn("delay_ms",
-        coalesce(col("__delay_s"), lit(defaultDelaySec)) * 1000L)
+        coalesce(col("__delay_s"), lit(1L)) * 1000L)
       .withColumn("reg_domain",
         graft.expr.UrlExpressions.registrable_domain(col("domain")))
       .withColumn("queue_delay_ms", max(col("delay_ms")).over(byQueue))

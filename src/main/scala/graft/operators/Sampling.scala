@@ -55,13 +55,13 @@ object Sampling {
   }
 
   /** Stratified deterministic sample: `rates` maps stratum value →
-    * keep-rate in per-mille; strata not in the map keep `defaultPerMille`.
+    * keep-rate in per-mille; strata not in the map keep no rows.
     * One narrow filter — no shuffle, no RNG, no driver state. */
   def stratifiedSample(df: DataFrame, idCol: String, stratumCol: String,
-                       rates: Map[String, Int], defaultPerMille: Int = 0): DataFrame = {
-    require((rates.values ++ Seq(defaultPerMille)).forall(r => r >= 0 && r <= 1000),
+                       rates: Map[String, Int]): DataFrame = {
+    require(rates.values.forall(r => r >= 0 && r <= 1000),
       "rates are per-mille: 0..1000")
-    val rate = rates.foldLeft(lit(defaultPerMille)) { case (acc, (stratum, r)) =>
+    val rate = rates.foldLeft(lit(0)) { case (acc, (stratum, r)) =>
       when(col(stratumCol) === stratum, lit(r)).otherwise(acc)
     }
     df.filter(perMilleSlot(col(idCol)) < rate)
@@ -100,10 +100,10 @@ object Sampling {
     * leaking val/test documents into train across pipeline versions).
     * Weights are per-mille and must sum to 1000 — no silently dropped
     * probability mass. Zero-weight splits are legal (weights (900,0,100)
-    * = no val set). One codegen filter-free projection: no shuffle. */
+    * = no val set). The split index lands in `split`. One codegen
+    * filter-free projection: no shuffle. */
   def trainValTestSplit(df: DataFrame, idCol: String,
-                        weightsPerMille: Seq[Int], seed: Long = 0L,
-                        outCol: String = "split"): DataFrame = {
+                        weightsPerMille: Seq[Int], seed: Long = 0L): DataFrame = {
     require(weightsPerMille.nonEmpty && weightsPerMille.forall(_ >= 0) &&
       weightsPerMille.sum == 1000,
       "per-mille split weights must be non-negative and sum to 1000")
@@ -112,7 +112,7 @@ object Sampling {
     val pick = cum.init.zipWithIndex.foldRight(lit(cum.size - 1): Column) {
       case ((bound, i), acc) => when(slot < bound, lit(i)).otherwise(acc)
     }
-    df.withColumn(outCol, pick.cast("long"))
+    df.withColumn("split", pick.cast("long"))
   }
 
   /** Temporal train/test split with an EMBARGO window — the time-series
@@ -123,15 +123,15 @@ object Sampling {
     * cutoff. Rows at or before `cutoffMicros` are `train`; rows strictly
     * after `cutoffMicros + embargoMicros` are `test`; rows inside the gap
     * are labeled `embargo` for the caller to discard (labeled, not
-    * silently dropped — corpus-accounting needs the row count). Pure
+    * silently dropped — corpus-accounting needs the row count). The label
+    * lands in `split`. Pure
     * codegen projection over an epoch-micros column: zero shuffle, and
     * the assignment is a function of the row's own timestamp — invariant
     * to partitioning, retries, and engine. */
   def temporalSplit(df: DataFrame, tsMicrosCol: String,
-                    cutoffMicros: Long, embargoMicros: Long,
-                    outCol: String = "split"): DataFrame = {
+                    cutoffMicros: Long, embargoMicros: Long): DataFrame = {
     require(embargoMicros >= 0, "embargo must be non-negative")
-    df.withColumn(outCol,
+    df.withColumn("split",
       when(col(tsMicrosCol) <= cutoffMicros, lit("train"))
         .when(col(tsMicrosCol) > cutoffMicros + embargoMicros, lit("test"))
         .otherwise(lit("embargo")))

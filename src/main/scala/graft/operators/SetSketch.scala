@@ -112,10 +112,10 @@ object SetSketch {
 
   /** In-engine gate for [[pairOverlap]], two properties:
     *   - ERROR BOUND: every union/intersection/difference estimate within
-    *     `sigmas`·RSE·|A∪B| of exact (absolute error of the θ*-sampled
+    *     6·RSE·|A∪B| of exact (absolute error of the θ*-sampled
     *     counts scales with the UNION size, the sampled domain — an
     *     intersection near 0 still carries union-scale noise), and the
-    *     Jaccard within `sigmas`·½/√k (binomial proportion over the ~k
+    *     Jaccard within 6·½/√k (binomial proportion over the ~k
     *     pooled candidates); +1 slack absorbs the two rounding steps.
     *   - MERGE CONSISTENCY: the union-merge of the per-segment sketches
     *     must be BYTE-IDENTICAL to one direct global sketch — the k
@@ -125,7 +125,8 @@ object SetSketch {
     *     overlap lattice).
     * Violations only; oracle = empty relation. */
   def pairOverlapViolations(df: DataFrame, segCol: String, valueCol: String,
-                            k: Int = 512, sigmas: Double = 6.0): DataFrame = {
+                            k: Int = 512): DataFrame = {
+    val sigmas = 6.0
     val rse = graft.expr.KmvBuffer.rse(k)
     val est = pairOverlap(df, segCol, valueCol, k)
       .withColumnRenamed("jaccard_ppm", "jaccard_est_ppm")

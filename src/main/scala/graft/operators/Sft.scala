@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object Sft {
 
+  /** The role whose turns carry the loss (`train`). */
+  private val TrainRole = "assistant"
+
   /** The frozen chat template (ChatML-style, the de-facto public
     * format): `<|im_start|>ROLE\nTEXT<|im_end|>\n` per turn, turns
     * concatenated in index order. Frozen LITERALS — span offsets are
@@ -38,7 +41,7 @@ object Sft {
     * [start_char, end_char) of its rendered form inside `rendered`,
     * the [content_start, content_end) sub-interval of the turn TEXT
     * alone (what a loss mask actually covers — template scaffolding is
-    * never trained on), and `train` = role == `trainRole`.
+    * never trained on), and `train` = role == `assistant`.
     *
     * Span starts are prefix sums of rendered-turn lengths, computed in
     * ONE O(n) [[PrefixSum.exclusiveArrayOffsets]] pass over `__lens`
@@ -49,8 +52,7 @@ object Sft {
     * helper). Turn indices must be unique per conversation (the sort
     * key). */
   def assemble(turns: DataFrame, convCol: String, idxCol: String,
-               roleCol: String, textCol: String,
-               trainRole: String = "assistant"): DataFrame = {
+               roleCol: String, textCol: String): DataFrame = {
     // a NULL role/text would both vanish from the concatenated render
     // (array_join skips nulls) AND null the length prefix sums — every
     // later span offset in the conversation would silently corrupt. A
@@ -80,7 +82,7 @@ object Sft {
           t.getField("role").as("role"),
           start.as("start_char"), end.as("end_char"),
           cStart.as("content_start"), cEnd.as("content_end"),
-          (t.getField("role") === lit(trainRole)).as("train"))
+          (t.getField("role") === lit(TrainRole)).as("train"))
       }))
       .drop("__lens", "__offs")
   }
@@ -111,8 +113,7 @@ object Sft {
     * n_tokens, spans). */
   def assembleTokenSpans(turns: DataFrame, convCol: String, idxCol: String,
                          roleCol: String, textCol: String,
-                         merges: Seq[(String, String)],
-                         trainRole: String = "assistant"): DataFrame = {
+                         merges: Seq[(String, String)]): DataFrame = {
     // null text reads as "" (zero content tokens, overhead still counts)
     // for the same offset-integrity reason assemble() coalesces
     val nTok = BpeTokenizer.tokenCountColumn(merges,
@@ -141,7 +142,7 @@ object Sft {
           start.as("start_tok"), end.as("end_tok"),
           (start + lit(TurnPrefixTokens)).as("content_start"),
           (end - lit(TurnSuffixTokens)).as("content_end"),
-          (t.getField("role") === lit(trainRole)).as("train"))
+          (t.getField("role") === lit(TrainRole)).as("train"))
       }))
       .drop("__lens", "__offs")
   }

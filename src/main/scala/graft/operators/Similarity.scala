@@ -98,14 +98,14 @@ object Similarity {
   /** Exact top-k cosine neighbors for each query vector.
     * Output: (query_id, rank, neighbor_id, cosine) — cosine rounded to 6dp
     * so double-summation-order differences vs other engines can't flip a
-    * hash comparison. Self-matches excluded. */
-  def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<float>").as("qv"))
+    * hash comparison. Self-matches excluded. Both sides carry (`vec_id`,
+    * `embedding`), as in every search here. */
+  def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").cast("array<float>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<float>").as("cv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"),
+      col("embedding").cast("array<float>").as("cv"))
       .withColumn("cn", l2norm(col("cv")))
     exactTopK(q, c, k, lit(true),
       Seq(col("query_id"), col("rank"), col("neighbor_id"),
@@ -169,13 +169,12 @@ object Similarity {
 
   /** LSH-bucketed approximate top-k: score only bucket-mates. Same output
     * shape as [[cosineTopK]]; recall < 1 by construction, measured in tests. */
-  def lshCosineTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<float>").as("qv"))
+  def lshCosineTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").cast("array<float>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<float>").as("cv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"),
+      col("embedding").cast("array<float>").as("cv"))
       .withColumn("cn", l2norm(col("cv")))
     val qb = withHyperplaneBands(q.select(col("query_id"), col("qv")), "qv", "query_id")
     val cb = withHyperplaneBands(c.select(col("neighbor_id"), col("cv")), "cv", "neighbor_id")
@@ -218,7 +217,8 @@ object Similarity {
     * Fixed-point contract: relevance and pairwise sims are quantized to
     * integer MICRO units (round(cos·10⁶), half away from zero) BEFORE the
     * greedy loop, and the objective is pure integer arithmetic
-    * (`mmr_units = λppm·rel_micro − (10⁶−λppm)·maxsim_micro`), so the
+    * (`mmr_units = λppm·rel_micro − (10⁶−λppm)·maxsim_micro`, λppm =
+    * 700000), so the
     * selection is bit-reproducible and the whole iterative operator is
     * hash-oracled (the oracle replays the greedy as a recursive CTE).
     * Ties break on smaller neighbor_id.
@@ -231,18 +231,15 @@ object Similarity {
     *
     * Output: (query_id, step 1..k, neighbor_id, rel_micro, maxsim_micro,
     * mmr_units). */
-  def mmrRerank(queries: DataFrame, corpus: DataFrame, k: Int, topN: Int,
-                lambdaPpm: Long = 700000L, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
+  def mmrRerank(queries: DataFrame, corpus: DataFrame, k: Int,
+                topN: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(topN >= k, s"topN ($topN) must be >= k ($k)")
-    require(lambdaPpm >= 0 && lambdaPpm <= 1000000L,
-      s"lambdaPpm must be in [0, 1e6], got $lambdaPpm")
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<float>").as("qv"))
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("embedding").cast("array<float>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<float>").as("cv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"),
+      col("embedding").cast("array<float>").as("cv"))
       .withColumn("cn", l2norm(col("cv")))
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -256,8 +253,8 @@ object Similarity {
         round(col("cosine") * 1000000).cast("long").as("rel_micro"),
         col("cv"))
     val kk = k
-    val lam = lambdaPpm
-    val mu = 1000000L - lambdaPpm
+    val lam = 700000L
+    val mu = 1000000L - lam
     val greedy = udf { (rows: Seq[org.apache.spark.sql.Row]) =>
       val cs = rows.map { r =>
         (r.getLong(0), r.getLong(1), r.getSeq[Float](2).toArray)
@@ -315,18 +312,16 @@ object Similarity {
     * exact shape (broadcast bounded query set vs streamed corpus, map-side
     * WindowGroupLimit heaps) plus the label-mismatch predicate applied
     * BEFORE scoring, so same-label rows never pay the dot product.
-    * Output: (query_id, query_label, rank, neighbor_id, neighbor_label,
-    * cosine·6dp). */
-  def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    labelCol: String = "label"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(labelCol).as("query_label"),
-      col(vecCol).cast("array<float>").as("qv"))
+    * Both sides carry `label`. Output: (query_id, query_label, rank,
+    * neighbor_id, neighbor_label, cosine·6dp). */
+  def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("query_id"),
+      col("label").as("query_label"),
+      col("embedding").cast("array<float>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(labelCol).as("neighbor_label"),
-      col(vecCol).cast("array<float>").as("cv"))
+    val c = corpus.select(col("vec_id").as("neighbor_id"),
+      col("label").as("neighbor_label"),
+      col("embedding").cast("array<float>").as("cv"))
       .withColumn("cn", l2norm(col("cv")))
     exactTopK(q, c, k, col("query_label") =!= col("neighbor_label"),
       Seq(col("query_id"), col("query_label"), col("rank"),
@@ -357,13 +352,11 @@ object Similarity {
     * same margin arithmetic over the shortlist frame. Both window
     * rankings and both aggregates ride the one bounded S×T frame; the
     * src side broadcasts. */
-  def bitextMine(src: DataFrame, tgt: DataFrame, k: Int, minMarginPpm: Long,
-                 idCol: String = "vec_id",
-                 vecCol: String = "embedding"): DataFrame = {
+  def bitextMine(src: DataFrame, tgt: DataFrame, k: Int, minMarginPpm: Long): DataFrame = {
     require(k > 0, s"bitextMine: k must be positive, got $k")
     require(minMarginPpm > 0,
       s"bitextMine: minMarginPpm must be positive, got $minMarginPpm")
-    marginMine(bitextScore(src, tgt, idCol, vecCol), k, minMarginPpm)
+    marginMine(bitextScore(src, tgt), k, minMarginPpm)
   }
 
   /** The scoring half of [[bitextMine]]: broadcast the (bounded) src
@@ -373,14 +366,12 @@ object Similarity {
     * other tgt row — which is what lets the streaming twin score
     * micro-batches of the corpus under the row-map contract and leave
     * only [[marginMine]] as the bounded epilogue. */
-  def bitextScore(src: DataFrame, tgt: DataFrame,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    val q = src.select(col(idCol).cast("long").as("src_id"),
-        col(vecCol).cast("array<float>").as("qv"))
+  def bitextScore(src: DataFrame, tgt: DataFrame): DataFrame = {
+    val q = src.select(col("vec_id").cast("long").as("src_id"),
+        col("embedding").cast("array<float>").as("qv"))
       .withColumn("qn", l2norm(col("qv")))
-    val c = tgt.select(col(idCol).cast("long").as("tgt_id"),
-        col(vecCol).cast("array<float>").as("cv"))
+    val c = tgt.select(col("vec_id").cast("long").as("tgt_id"),
+        col("embedding").cast("array<float>").as("cv"))
       .withColumn("cn", l2norm(col("cv")))
     c.crossJoin(broadcast(q))
       .filter(col("qn") > 0 && col("cn") > 0)

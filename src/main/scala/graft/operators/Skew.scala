@@ -133,12 +133,11 @@ object Skew {
     * cannot un-detect them; the occasional near-threshold false positive
     * just costs an extra broadcast-slice entry. Feed the result to
     * [[splitHotKeys]] or use it to size [[saltedAggregate]]'s salts. */
-  def detectHotKeys(df: DataFrame, keyCol: String, threshold: Double,
-                    eps: Double = 0.0001, confidence: Double = 0.99): Seq[Any] = {
+  def detectHotKeys(df: DataFrame, keyCol: String, threshold: Double): Seq[Any] = {
     require(threshold > 0 && threshold <= 1)
     val total = df.count()
     if (total == 0) return Seq.empty
-    val sketch = df.stat.countMinSketch(col(keyCol), eps, confidence, seed = 42)
+    val sketch = df.stat.countMinSketch(col(keyCol), 0.0001, 0.99, seed = 42)
     val sampleRows = math.max(10000.0, 20.0 / threshold)
     val frac = math.min(1.0, sampleRows / total)
     val candidates = df.select(col(keyCol)).na.drop()

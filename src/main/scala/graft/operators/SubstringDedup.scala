@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * in-memory corpus. The distributed equivalent here works at ANCHOR
   * granularity: every k-token "anchor gram" (position i covers tokens
   * [i, i+k-1]) is emitted once, grouped corpus-wide, and kept iff it
-  * occurs >= minOccurrences times. What the construction proves is
+  * occurs at least twice. What the construction proves is
   * per-WINDOW: each surviving anchor's k tokens occur elsewhere. A run of
   * consecutive surviving anchors therefore delimits a maximal region of
   * repeated COVERAGE — every k-window inside it repeats somewhere — but
@@ -31,8 +31,8 @@ import org.apache.spark.sql.functions._
   * into a map-side-combined groupBy whose key space shrinks to the
   * distinct-gram count; the merges are one window over (doc, pos) — one
   * shuffle keyed by doc_id, bounded per-doc state. At 100 TB the gram
-  * STRING is the shuffle cost — `hashKeys = true` swaps it for two
-  * independent xxhash64 salts (128 collision bits: a false merge needs a
+  * STRING is the shuffle cost — [[repeatedSpans]]' `hashKeys = true`
+  * swaps it for two independent xxhash64 salts (128 collision bits: a false merge needs a
   * simultaneous collision in both, ~2^-128 per gram pair) and shuffles 16
   * bytes per anchor regardless of k. The string form is the exact-oracle
   * contract the driver hashes; the spec asserts the two paths agree on
@@ -83,19 +83,18 @@ object SubstringDedup {
   /** Maximal repeated-COVERAGE spans per document:
     * (doc_id, start_tok, end_tok, span_tokens), token offsets 0-based
     * inclusive. Contract: every k-token window inside an emitted span
-    * occurs >= `minOccurrences` times somewhere in the corpus (possibly
+    * occurs at least twice somewhere in the corpus (possibly
     * elsewhere in the same doc), and the span is a maximal consecutive
     * run of such windows. The union text of a span longer than k tokens
     * may itself be unique — witnesses can differ window to window. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                    k: Int = 8, minOccurrences: Int = 2,
-                    hashKeys: Boolean = false): DataFrame = {
+                    k: Int = 8, hashKeys: Boolean = false): DataFrame = {
     require(k >= 2, s"anchor gram needs k >= 2 tokens, got $k")
     val keyed = anchors(df, idCol, textCol, k, hashKeys)
     val repeated = keyed
       .groupBy(col("__g1"), col("__g2"))
       .agg(count(lit(1)).as("__occ"))
-      .filter(col("__occ") >= minOccurrences)
+      .filter(col("__occ") >= 2)
       .select(col("__g1"), col("__g2"))
     // island merge: only CONSECUTIVE surviving anchors extend one span
     // (see object scaladoc — a gap breaks the coverage proof)
@@ -136,15 +135,14 @@ object SubstringDedup {
     * pure per-row HOFs over a bound kept-positions column — no extra
     * shuffle, stays in codegen. */
   def removeRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                          k: Int = 8, minOccurrences: Int = 2,
-                          hashKeys: Boolean = false): DataFrame = {
+                          k: Int = 8): DataFrame = {
     require(k >= 2, s"anchor gram needs k >= 2 tokens, got $k")
     val toks = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__tk"))
-    val keyed = anchors(df, idCol, textCol, k, hashKeys)
+    val keyed = anchors(df, idCol, textCol, k, hashKeys = false)
     val elected = keyed
       .groupBy(col("__g1"), col("__g2"))
       .agg(count(lit(1)).as("__occ"), min(composite).as("__ck"))
-      .filter(col("__occ") >= minOccurrences)
+      .filter(col("__occ") >= 2)
       .select(col("__g1"), col("__g2"), col("__ck"))
     val win = keyed.join(elected, Seq("__g1", "__g2"))
       .withColumn("__is_canon", composite === col("__ck"))

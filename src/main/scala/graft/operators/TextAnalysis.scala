@@ -30,10 +30,11 @@ object TextAnalysis {
 
   /** Quality-scoring columns: length, token counts, punctuation density,
     * stopword ratio, mean token length — the standard heuristic filters for
-    * web-scale corpus cleaning. One projection over ONE fused scan; null
-    * text reproduces the regex columns' null/zero mix exactly. */
-  def withQualityColumns(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val p = profile(col(textCol))
+    * web-scale corpus cleaning, over the `text` column. One projection
+    * over ONE fused scan; null text reproduces the regex columns'
+    * null/zero mix exactly. */
+  def withQualityColumns(df: DataFrame): DataFrame = {
+    val p = profile(col("text"))
     val toks = p.getField("n_tokens")
     df.withColumn("n_chars_actual", p.getField("n_chars"))
       .withColumn("n_tokens", coalesce(toks, lit(0)))
@@ -49,11 +50,11 @@ object TextAnalysis {
     * argmax with deterministic alphabetical tie-break — the `lang` field of
     * the fused single-pass profile (marker tables live as constants inside
     * the expression; no join, no regex). Null text resolves to "de", the
-    * all-zero-tie answer the regex fold produced. */
-  def withLangId(df: DataFrame, textCol: String = "text",
-                 out: String = "lang_pred"): DataFrame =
-    df.withColumn(out,
-      coalesce(profile(col(textCol)).getField("lang"), lit("de")))
+    * all-zero-tie answer the regex fold produced. Reads `text`, writes
+    * `lang_pred`. */
+  def withLangId(df: DataFrame): DataFrame =
+    df.withColumn("lang_pred",
+      coalesce(profile(col("text")).getField("lang"), lit("de")))
 
   /** Canonical form the fingerprint hashes: lowercased, trimmed, whitespace
     * runs collapsed to single spaces. Exposed separately because the
@@ -85,8 +86,8 @@ object TextAnalysis {
   def fingerprint(text: Column): Column =
     graft.expr.TextExpressions.poly_rolling_hash(fingerprintNormalized(text))
 
-  def withFingerprint(df: DataFrame, textCol: String = "text"): DataFrame =
-    df.withColumn("fingerprint", fingerprint(col(textCol)))
+  def withFingerprint(df: DataFrame): DataFrame =
+    df.withColumn("fingerprint", fingerprint(col("text")))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken: "Winnowing:
     * Local Algorithms for Document Fingerprinting", SIGMOD'03): hash every
@@ -157,14 +158,17 @@ object TextAnalysis {
     * re-synchronize after an edit (insert text at the front and all
     * boundaries beyond one chunk stay identical), which is what makes
     * chunk-level dedup robust to shifted content where fixed-size chunking
-    * degrades to no overlap. `mask = 2^b - 1` gives ~2^b expected chunk
-    * size, clamped to [minChunk, maxChunk] (the FastCDC-style bounds).
+    * degrades to no overlap. With a 16-char window, `mask = 0xFF` gives
+    * ~256-char expected chunks, clamped to [64, 1024] (the FastCDC-style
+    * bounds).
     * Per-row tight-loop UDF — string-heavy local work, the same trade as
     * the shingle tokenizer. */
-  def contentDefinedChunks(df: DataFrame, idCol: String, textCol: String,
-                           window: Int = 16, mask: Long = 0xFF,
-                           minChunk: Int = 64, maxChunk: Int = 1024): DataFrame = {
-    require(window > 0 && minChunk >= window && maxChunk > minChunk)
+  def contentDefinedChunks(df: DataFrame, idCol: String,
+                           textCol: String): DataFrame = {
+    val window = 16
+    val mask = 0xFFL
+    val minChunk = 64
+    val maxChunk = 1024
     val chunker = udf { (text: String) =>
       if (text == null) Seq.empty[String]
       else {
@@ -263,27 +267,6 @@ object TextAnalysis {
         coalesce(col("__frac"), lit(0.0)).as("top_bigram_frac"))
   }
 
-  /** Rule thresholds for [[qualityFilter]]. Defaults are tuned to the
-    * C4/Gopher-style heuristics, loosened to the synthetic fixture's
-    * distributions so every rule actually fires somewhere. */
-  final case class QualityRules(minTokens: Long = 20, maxTokens: Long = 100000,
-                                minMeanTokenLen: Double = 3.0,
-                                maxMeanTokenLen: Double = 8.0,
-                                minTypeTokenRatio: Double = 0.35,
-                                maxTopBigramFrac: Double = 0.125,
-                                minStopwordRatio: Double = 0.02,
-                                // Gopher-style structural gates:
-                                maxSymbolToWordRatio: Double = 0.1,
-                                maxBulletLineFrac: Double = 0.9,
-                                maxEllipsisLineFrac: Double = 0.3,
-                                // line-shape rules need line structure to
-                                // judge; short docs pass them vacuously
-                                lineRulesMinLines: Int = 3,
-                                // compression gate: below this deflate/raw
-                                // byte ratio the text is machine-repetitive
-                                minCompressRatio: Double = 0.25,
-                                compressMinBytes: Int = 256)
-
   /** Composite corpus quality filter with EXPLAINABLE decisions — the
     * keep/drop gate of a web-scale cleaning pipeline, with the failing
     * rule names surfaced (alphabetical, comma-joined) so drop-rate
@@ -297,11 +280,13 @@ object TextAnalysis {
     * symbol_ratio ('#'/'...' marks per word — forum markup, keyword
     * stuffing), bullet_lines / ellipsis_lines (line-start bullet and
     * line-end ellipsis fractions — list chrome and truncated teaser
-    * pages; applied only to docs with >= lineRulesMinLines lines, since
-    * line shape is meaningless on one line), and compressible (deflate/
-    * raw byte ratio below minCompressRatio — machine-repetitive text the
+    * pages; applied only to docs with >= 3 lines, since line shape is
+    * meaningless on one line), and compressible (deflate/raw byte ratio
+    * below 0.25 on docs of >= 256 bytes — machine-repetitive text the
     * token stats can miss; bytes-length only, the C4/Gopher zlib
-    * signal).
+    * signal). The thresholds are tuned to the C4/Gopher-style
+    * heuristics, loosened to the synthetic fixture's distributions so
+    * every rule actually fires somewhere.
     *
     * Scale shape: everything except the repetition signal is ONE narrow
     * fused-profile projection (the line fractions are row-local
@@ -313,8 +298,7 @@ object TextAnalysis {
     * DuckDB-oracle-able; the compression rule's oracle story is the
     * exact-regime pin documented at q_quality_filter (natural text sits
     * >= 0.38, the threshold at 0.25, planted repetition at ~0.04). */
-  def qualityFilter(df: DataFrame, idCol: String, textCol: String,
-                    rules: QualityRules = QualityRules()): DataFrame = {
+  def qualityFilter(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val p = profile(col(textCol))
     val toks = coalesce(p.getField("n_tokens"), lit(0)).cast("long")
     val lines = split(col(textCol), "\n")
@@ -336,11 +320,11 @@ object TextAnalysis {
         .otherwise(lit(0.0)).as("__stopr"),
       when(toks > 0, (nHash + nDots).cast("double") / toks)
         .otherwise(lit(0.0)).as("__symr"),
-      when(nLines >= rules.lineRulesMinLines,
+      when(nLines >= 3,
         nBullet.cast("double") / nLines).otherwise(lit(0.0)).as("__bulletf"),
-      when(nLines >= rules.lineRulesMinLines,
+      when(nLines >= 3,
         nEllipsis.cast("double") / nLines).otherwise(lit(0.0)).as("__ellipf"),
-      when(rawBytes >= rules.compressMinBytes,
+      when(rawBytes >= 256,
         graft.expr.TextExpressions.deflate_len(col(textCol)).cast("double") /
           rawBytes).otherwise(lit(1.0)).as("__compr"))
     val withRep = stats.join(
@@ -351,17 +335,16 @@ object TextAnalysis {
     // concat_ws skips NULLs, so reasons is exactly the failing subset in
     // this fixed alphabetical order — byte-identical in ANSI SQL
     val reasons = concat_ws(",",
-      rule("bullet_lines", col("__bulletf") > rules.maxBulletLineFrac),
-      rule("compressible", col("__compr") < rules.minCompressRatio),
-      rule("ellipsis_lines", col("__ellipf") > rules.maxEllipsisLineFrac),
-      rule("low_diversity", col("__ttr") < rules.minTypeTokenRatio),
-      rule("no_stopwords", col("__stopr") < rules.minStopwordRatio),
-      rule("repetitive", col("top_bigram_frac") > rules.maxTopBigramFrac),
-      rule("symbol_ratio", col("__symr") > rules.maxSymbolToWordRatio),
-      rule("token_len", col("__mtl") < rules.minMeanTokenLen ||
-        col("__mtl") > rules.maxMeanTokenLen),
-      rule("too_long", col("__toks") > rules.maxTokens),
-      rule("too_short", col("__toks") < rules.minTokens))
+      rule("bullet_lines", col("__bulletf") > 0.9),
+      rule("compressible", col("__compr") < 0.25),
+      rule("ellipsis_lines", col("__ellipf") > 0.3),
+      rule("low_diversity", col("__ttr") < 0.35),
+      rule("no_stopwords", col("__stopr") < 0.02),
+      rule("repetitive", col("top_bigram_frac") > 0.125),
+      rule("symbol_ratio", col("__symr") > 0.1),
+      rule("token_len", col("__mtl") < 3.0 || col("__mtl") > 8.0),
+      rule("too_long", col("__toks") > 100000L),
+      rule("too_short", col("__toks") < 20L))
     withRep.select(col(idCol), reasons.as("reasons"))
       .withColumn("keep", col("reasons") === "")
   }
@@ -464,7 +447,7 @@ object TextAnalysis {
     *
     *   P(w3|w1,w2) = λ3·c(w1w2w3)/c(w1w2·) + λ2·c(w2w3)/c(w2·) + λ1·c(w3)/N
     *
-    * with integer-percent weights (default 70/20/10). Interpolation is
+    * with integer-percent weights λ3/λ2/λ1 = 70/20/10. Interpolation is
     * what makes a trigram model usable: the raw trigram estimate is
     * sharp but sparse, and backing off through the bigram and unigram
     * estimates smooths it — here every component is ≥ 1 count because
@@ -487,11 +470,8 @@ object TextAnalysis {
     * vocab is corpus-dependent, so AQE decides (broadcast at small SF,
     * shuffle at scale). Output: (idCol, n_trigrams, avg_lp3); docs with
     * < 3 tokens get n_trigrams = 0 and NULL avg_lp3. */
-  def trigramLogProb(df: DataFrame, idCol: String, textCol: String,
-                     lam3: Int = 70, lam2: Int = 20,
-                     lam1: Int = 10): DataFrame =
-    scoreTrigramLm(trainTrigramLm(df, textCol), df, idCol, textCol,
-      lam3, lam2, lam1)
+  def trigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    scoreTrigramLm(trainTrigramLm(df, textCol), df, idCol, textCol)
 
   /** A trained interpolated-trigram LM: the three conditional-probability
     * tables (each one IEEE double division per row — bit-exact to
@@ -568,10 +548,7 @@ object TextAnalysis {
     * is dropped (the self-trained harness never hits this; a held-out
     * scorer would switch these to left joins + smoothing). */
   def scoreTrigramLm(model: TrigramLm, df: DataFrame, idCol: String,
-                     textCol: String, lam3: Int = 70, lam2: Int = 20,
-                     lam1: Int = 10): DataFrame = {
-    require(lam3 > 0 && lam2 > 0 && lam1 > 0 && lam3 + lam2 + lam1 == 100,
-      s"weights must be positive percents summing to 100, got $lam3/$lam2/$lam1")
+                     textCol: String): DataFrame = {
     val TrigramLm(p3, p2, p1) = model
     val tk = Dedup.cleanTokens(col(textCol))
     // spread() the SCORING side only (guide §2.5): the doc scan plans one
@@ -602,8 +579,8 @@ object TextAnalysis {
       .join(p2, col("w2") === col("a") && col("w3") === col("b"))
       .join(p1, col("w3") === col("term"))
       .select(col(idCol),
-        round(log((lit(lam3) * col("p3") + lit(lam2) * col("p2") +
-          lit(lam1) * col("p1")) / lit(100)), 6)
+        round(log((lit(70) * col("p3") + lit(20) * col("p2") +
+          lit(10) * col("p1")) / lit(100)), 6)
           .cast("decimal(18,6)").as("lp"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_trigrams"), sum(col("lp")).as("__slp"))
@@ -689,13 +666,11 @@ object TextAnalysis {
     * Scale shape: scoring is the trigram LM's shape; the threshold is a
     * ONE-ROW percentile frame crossed back in broadcast (the
     * q_vec_outliers pattern); bucketing is a codegen CASE. */
-  def perplexityBuckets(df: DataFrame, idCol: String, textCol: String,
-                        lowPct: Double = 1.0 / 3,
-                        highPct: Double = 2.0 / 3): DataFrame = {
-    require(lowPct > 0 && highPct < 1 && lowPct < highPct)
+  def perplexityBuckets(df: DataFrame, idCol: String,
+                        textCol: String): DataFrame = {
     val scored = trigramLogProb(df, idCol, textCol)
     val thr = scored.filter(col("n_trigrams") > 0)
-      .agg(percentile(col("avg_lp3"), typedlit(Seq(lowPct, highPct))).as("__t"))
+      .agg(percentile(col("avg_lp3"), typedlit(Seq(1.0 / 3, 2.0 / 3))).as("__t"))
     scored.crossJoin(broadcast(thr))
       .select(col(idCol), col("n_trigrams"), col("avg_lp3"),
         when(col("n_trigrams") === 0, lit("unscored"))

@@ -48,20 +48,18 @@ object TextExtract {
         "&#169; 2026 Example Corp</footer>\n</body>\n</html>\n"))
 
   /** (id, extracted) — whole-document main text. */
-  def fromHtml(df: DataFrame, idCol: String, htmlCol: String,
-               minLen: Int = graft.expr.HtmlOps.DefaultMinLen,
-               maxLinkDensity: Double = graft.expr.HtmlOps.DefaultMaxLinkDensity): DataFrame =
+  def fromHtml(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
     df.select(col(idCol),
-      HtmlExpressions.html_content_text(col(htmlCol), minLen, maxLinkDensity)
+      HtmlExpressions.html_content_text(col(htmlCol),
+        graft.expr.HtmlOps.DefaultMinLen, graft.expr.HtmlOps.DefaultMaxLinkDensity)
         .as("extracted"))
 
   /** One row per block: (id, idx, tag, text, n_chars, n_link_chars,
     * n_words, stop_ratio, label). */
-  def blocks(df: DataFrame, idCol: String, htmlCol: String,
-             minLen: Int = graft.expr.HtmlOps.DefaultMinLen,
-             maxLinkDensity: Double = graft.expr.HtmlOps.DefaultMaxLinkDensity): DataFrame =
+  def blocks(df: DataFrame, idCol: String, htmlCol: String): DataFrame =
     df.select(col(idCol),
-        explode(HtmlExpressions.html_blocks(col(htmlCol), minLen, maxLinkDensity))
+        explode(HtmlExpressions.html_blocks(col(htmlCol),
+          graft.expr.HtmlOps.DefaultMinLen, graft.expr.HtmlOps.DefaultMaxLinkDensity))
           .as("b"))
       .select(col(idCol), col("b.idx"), col("b.tag"), col("b.text"),
         col("b.n_chars"), col("b.n_link_chars"), col("b.n_words"),

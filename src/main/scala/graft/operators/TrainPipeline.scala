@@ -30,27 +30,23 @@ import graft.Materialize
   * packing/shard columns null for val/test docs. */
 object TrainPipeline {
 
+  /** An 800/100/100 per-mille split into 8 shards. The two seeds are
+    * distinct: with one seed the shard hash IS the split hash, coupling
+    * shard layout to split membership. */
   def prepare(docs: DataFrame, embeddings: DataFrame,
               cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
-              splitWeightsPerMille: Seq[Int] = Seq(800, 100, 100),
-              splitSeed: Long = 42L,
-              shuffleSeed: Long = 43L,
-              capacity: Long = 2048L,
-              numShards: Int = 8): DataFrame = {
-    require(splitSeed != shuffleSeed,
-      "distinct seeds: with one seed the shard hash IS the split hash, " +
-        "coupling shard layout to split membership")
+              capacity: Long = 2048L): DataFrame = {
     val curated = CorpusPipeline.curateV2(docs, embeddings, cfg)
       .select(col("doc_id"), col("n_tok"))
     // consumed by the train branch AND the final join
     val split = Materialize(Sampling.trainValTestSplit(curated, "doc_id",
-      splitWeightsPerMille, splitSeed))
+      Seq(800, 100, 100), seed = 42L))
     val train = split.filter(col("split") === 0)
       .select(col("doc_id"), col("n_tok"))
     val packed = Packing.packSequences(train, "doc_id", "n_tok", capacity)
     val sharded = Sampling.shuffleIntoShards(
       packed.select(col("doc_id"), col("seq_id"), col("is_split")),
-      "doc_id", numShards, shuffleSeed)
+      "doc_id", 8, seed = 43L)
     split.join(
         sharded.select(col("doc_id"), col("seq_id"), col("is_split"),
           col("shard"), col("pos")),
@@ -79,7 +75,7 @@ object TrainPipeline {
     * Output: (idCol, difficulty, phase 0..phases−1, pos 0-based within
     * phase). */
   def curriculumOrder(df: DataFrame, idCol: String, difficulty: Column,
-                      phases: Int, buckets: Int = 32): DataFrame = {
+                      phases: Int): DataFrame = {
     require(phases >= 1, s"phases must be >= 1, got $phases")
     val keyed = df.select(col(idCol), difficulty.cast("long").as("difficulty"))
       .withColumn("__ck",
@@ -88,7 +84,7 @@ object TrainPipeline {
     require(n > 0, "curriculumOrder: empty input")
     val ranked = PrefixSum.withPrefixSum(
       keyed.withColumn("__one", lit(1L)), "__ck", "__one",
-      out = "__rank", buckets = buckets)
+      out = "__rank", buckets = 32)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("phase"))
       .orderBy(Sampling.knuthSlot32(col(idCol)).asc, col(idCol).asc)

@@ -33,15 +33,14 @@ object VectorQuantize {
     (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
   }
 
-  /** Append `out` = int8 codes (as an int array column) for `vecCol` under
-    * the given codebook. Degenerate dimensions (hi == lo) code to 0. */
+  /** Append `qcode` = int8 codes (as an int array column) for `vecCol`
+    * under the given codebook. Degenerate dimensions (hi == lo) code to 0. */
   def quantize(df: DataFrame, vecCol: String,
-               lo: Array[Double], hi: Array[Double],
-               out: String = "qcode"): DataFrame = {
+               lo: Array[Double], hi: Array[Double]): DataFrame = {
     require(lo.length == hi.length && lo.nonEmpty, "codebook must be non-empty")
     val loC = lit(lo)
     val hiC = lit(hi)
-    df.withColumn(out,
+    df.withColumn("qcode",
       transform(col(vecCol), (v, i) => {
         val l = element_at(loC, i + 1)
         val h = element_at(hiC, i + 1)

@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object VectorStats {
 
+  /** Fixed-point scale of every quantized sum here (`floor(v · Grid)`). */
+  private val Grid = 1e6
+
   /** Element-wise FIXED-POINT sum + member count per (group, 1-based
     * position). Each value is quantized once — `floor(v · grid)` in double
     * arithmetic — and aggregated as a long. Integer addition is associative
@@ -31,15 +34,14 @@ object VectorStats {
     * Output: (group, pos, qsum, n, mean) where `mean = qsum / grid / n`
     * — a fixed operation order on deterministic operands, so the double
     * mean is reproducible too. */
-  def centroidSums(df: DataFrame, groupCol: String, vecCol: String,
-                   grid: Double = 1e6): DataFrame =
+  def centroidSums(df: DataFrame, groupCol: String, vecCol: String): DataFrame =
     df.select(col(groupCol), posexplode(col(vecCol)).as(Seq("__p", "__v")))
       .select(col(groupCol), (col("__p") + 1).cast("long").as("pos"),
-        floor(col("__v").cast("double") * grid).cast("long").as("__q"))
+        floor(col("__v").cast("double") * Grid).cast("long").as("__q"))
       .groupBy(col(groupCol), col("pos"))
       .agg(sum(col("__q")).as("qsum"), count(lit(1)).as("n"))
       .withColumn("mean",
-        col("qsum").cast("double") / grid / col("n").cast("double"))
+        col("qsum").cast("double") / Grid / col("n").cast("double"))
 
   /** Per-group mean vector as `Array[Double]`, assembled back into one row
     * per group (the form IVF seeding / prototype lookup consumes). Plain
@@ -66,7 +68,7 @@ object VectorStats {
     * shuffle is dimension-sized, independent of corpus size. The nested
     * transform runs over a BOUND array column (the HOF re-evaluation
     * trap), entirely in codegen; no UDF. */
-  def gramSums(df: DataFrame, vecCol: String, grid: Double = 1e6): DataFrame = {
+  def gramSums(df: DataFrame, vecCol: String, grid: Double = Grid): DataFrame = {
     val c = col("__v")
     df.select(col(vecCol).as("__v"))
       .select(explode(flatten(transform(sequence(lit(0), size(c) - 1), i =>
@@ -93,13 +95,12 @@ object VectorStats {
     * with `quantile_cont`, and the flags are plain comparisons. One tiny
     * aggregate broadcast back; no shuffle of the vectors themselves. */
   def normOutliers(df: DataFrame, idCol: String, vecCol: String,
-                   lowPct: Double = 0.01, highPct: Double = 0.99,
-                   grid: Double = 1e6): DataFrame = {
+                   lowPct: Double = 0.01, highPct: Double = 0.99): DataFrame = {
     require(lowPct >= 0 && highPct <= 1 && lowPct < highPct)
     val q = df.select(col(idCol),
       aggregate(
         transform(col(vecCol),
-          v => floor(v.cast("double") * v.cast("double") * grid).cast("long")),
+          v => floor(v.cast("double") * v.cast("double") * Grid).cast("long")),
         lit(0L), (acc, x) => acc + x).as("qnorm2"))
     val thr = q.agg(
       percentile(col("qnorm2"), typedlit(Seq(lowPct, highPct))).as("__t"))
@@ -167,11 +168,13 @@ object VectorStats {
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix: rotate away
     * the largest off-diagonal entries until convergence. O(d³) per sweep,
     * fine for d ≤ a few thousand — this runs on the driver over a
-    * dimension-sized matrix, never over data. Returns (eigenvalues,
-    * row-major eigenvectors). */
-  private[operators] def jacobiEigen(m: Array[Array[Double]],
-                                     maxSweeps: Int = 64,
-                                     tol: Double = 1e-12): (Array[Double], Array[Array[Double]]) = {
+    * dimension-sized matrix, never over data. The loop has a fixed bound
+    * of 64 sweeps and a fixed off-diagonal tolerance of 1e-12. Returns
+    * (eigenvalues, row-major eigenvectors). */
+  private[operators] def jacobiEigen(
+      m: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
+    val maxSweeps = 64
+    val tol = 1e-12
     val d = m.length
     val a = m.map(_.clone())
     val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)

@@ -70,16 +70,16 @@ object ZOrder {
     * z-order's 0.8 s at sf0.1). The expression generates one static call
     * to a 16-iteration JIT'd loop, keeping the stage fused and the cost
     * within noise of [[zValue]]. */
-  def hilbertColumn(a: Column, b: Column, bits: Int = 16): Column = {
+  def hilbertColumn(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.expr.HilbertValue(
       ColumnBridge.expression(a.cast("long")),
-      ColumnBridge.expression(b.cast("long")), bits))
+      ColumnBridge.expression(b.cast("long")), 16))
   }
 
   def withHilbertValue(df: DataFrame, aCol: String, bCol: String,
-                       outCol: String, bits: Int = 16): DataFrame =
-    df.withColumn(outCol, hilbertColumn(col(aCol), col(bCol), bits))
+                       outCol: String): DataFrame =
+    df.withColumn(outCol, hilbertColumn(col(aCol), col(bCol)))
 
   /** Reference JVM entry point (specs/driver) — the same loop the
     * expression's generated code calls. */
@@ -132,14 +132,13 @@ object ZOrder {
                   rankBuckets: Int = 256): Unit =
     curveWrite(df, colA, colB, path, numFiles, quantizer, rankBuckets, zValue)
 
-  /** [[zorderWrite]] with the Hilbert curve as the layout order — same
-    * quantizers, same range-partitioned write; files cover tighter
+  /** [[zorderWrite]] with the Hilbert curve as the layout order — the
+    * linear quantizer, the same range-partitioned write; files cover tighter
     * key-space squares because consecutive curve positions are adjacent
     * cells (no Morton diagonal jumps across file boundaries). */
   def hilbertWrite(df: DataFrame, colA: String, colB: String, path: String,
-                   numFiles: Int = 32, quantizer: String = "linear",
-                   rankBuckets: Int = 256): Unit =
-    curveWrite(df, colA, colB, path, numFiles, quantizer, rankBuckets,
+                   numFiles: Int = 32): Unit =
+    curveWrite(df, colA, colB, path, numFiles, "linear", 256,
       hilbertColumn(_, _))
 
   private def curveWrite(df: DataFrame, colA: String, colB: String,

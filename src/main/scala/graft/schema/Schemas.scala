@@ -1,15 +1,13 @@
 package graft.schema
 
 import scala.collection.immutable.ListMap
-import org.apache.spark.sql.types._
 
-/** Canonical + physical schemas and the two column-name maps of the engine.
+/** Canonical column lists and the two column-name maps of the engine.
   *
   * Mirrors the reference's data model (see SURVEY.md §1):
   *  - source→canonical map: reference `src/utils/constants.py:6-36`
-  *  - mandatory/optional split: `constants.py:39-54`
+  *  - mandatory columns: `constants.py:39-43`
   *  - canonical→physical (warehouse) map: `constants.py:57-68`
-  *  - physical DDL: `scripts/ddl/create_intermediate_table.sql:7-41`
   *
   * Order matters: [[ColumnMappings.columnMap]] is a [[ListMap]] because the
   * reference coalesces duplicate-target source columns in *map insertion
@@ -48,11 +46,6 @@ object ColumnMappings {
   /** reference `constants.py:39-43` */
   val mandatoryColumns: Seq[String] = Seq("Customer_Name", "Customer_Id", "Open_Date")
 
-  /** reference `constants.py:46-54` */
-  val optionalColumns: Seq[String] = Seq(
-    "Last_Consulted_Date", "Vaccination_Id", "Dr_Name", "State", "Country",
-    "Post_Code", "DOB")
-
   /** Canonical → physical warehouse name (reference `constants.py:57-68`).
     * Names not present here pass through unchanged. */
   val warehouseColumnMap: ListMap[String, String] = ListMap(
@@ -71,11 +64,6 @@ object ColumnMappings {
 
 object Schemas {
 
-  /** The 8 canonical columns kept as strings (reference `data_validator.py:129-132`). */
-  val stringColumns: Seq[String] = Seq(
-    "Customer_Name", "Customer_Id", "Vaccination_Id", "Dr_Name", "State",
-    "Country", "Post_Code", "Is_Active")
-
   /** Date columns that quarantine the row when invalid (`data_validator.py:135`). */
   val mandatoryDateColumns: Seq[String] = Seq("Open_Date")
 
@@ -93,47 +81,6 @@ object Schemas {
     "Customer_Name", "Customer_Id", "Open_Date", "Last_Consulted_Date",
     "Vaccination_Id", "Dr_Name", "State", "Country", "DOB", "Post_Code",
     "Is_Active")
-
-  /** Post-harmonization schema: everything still a nullable string — the
-    * reference keeps dates as strings until the warehouse write
-    * (`snowflake_connector.py:282-287`); the rebuild types them at the
-    * validation stage instead. */
-  val canonicalRawSchema: StructType =
-    StructType(canonicalColumns.map(StructField(_, StringType, nullable = true)))
-
-  /** Validated canonical schema: date columns typed (parse-once-at-ingest,
-    * SURVEY.md §1.2). */
-  val canonicalSchema: StructType = StructType(canonicalColumns.map { c =>
-    val t = if (dateColumns.contains(c)) DateType else StringType
-    StructField(c, t, nullable = true)
-  })
-
-  /** Physical warehouse schema, mirroring the DDL
-    * (`create_intermediate_table.sql:7-41`) after the connector's
-    * uppercase/underscore name normalization (`snowflake_connector.py:203`):
-    * business columns + `LOAD_DATE` (S10) + `SOURCE_FILE` (S9). */
-  val warehouseSchema: StructType = StructType(Seq(
-    StructField("CUST_I", StringType, nullable = false),
-    StructField("NAME", StringType, nullable = false),
-    StructField("OPEN_DT", DateType, nullable = false),
-    StructField("CONSUL_DT", DateType, nullable = true),
-    StructField("VAC_ID", StringType, nullable = true),
-    StructField("DR_NAME", StringType, nullable = true),
-    StructField("STATE", StringType, nullable = true),
-    StructField("COUNTRY", StringType, nullable = true),
-    StructField("DOB", DateType, nullable = true),
-    StructField("POST_CODE", StringType, nullable = true),
-    StructField("FLAG", StringType, nullable = true),
-    StructField("LOAD_DATE", TimestampType, nullable = true),
-    StructField("SOURCE_FILE", StringType, nullable = true),
-  ))
-
-  /** Quarantine schema = canonical raw columns + error annotation
-    * (`data_validator.py:160-167`). */
-  val quarantineSchema: StructType = StructType(
-    canonicalRawSchema.fields ++ Seq(
-      StructField("Validation_Error", StringType, nullable = true),
-      StructField("Invalid_Field", StringType, nullable = true)))
 
   /** The reference's embedded-header sentinel (`data_validator.py:34`). */
   val expectedHeader: String =

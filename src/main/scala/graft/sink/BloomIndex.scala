@@ -31,14 +31,13 @@ object BloomIndex {
   /** Build the index next to an existing data directory: one grouped pass
     * over `_metadata.file_path` → (file, bloom, n_rows) parquet at
     * `path/bloomindex_<keyCol>`. Stats derive from what is on disk, never
-    * trusted from the writer. Default 2^17 bits / 5 hashes ≈ 16 KB per
+    * trusted from the writer. 2^17 bits / 5 hashes ≈ 16 KB per
     * file, fpp < 1% up to ~18k distinct keys per file. */
-  def buildIndex(spark: SparkSession, path: String, keyCol: String,
-                 numBits: Int = 1 << 17, numHashes: Int = 5): Unit =
+  def buildIndex(spark: SparkSession, path: String, keyCol: String): Unit =
     spark.read.parquet(s"$path/data")
       .filter(col(keyCol).isNotNull)
       .groupBy(col("_metadata.file_path").as("file"))
-      .agg(bloomAgg(col(keyCol).cast("long"), numBits, numHashes).as("bloom"),
+      .agg(bloomAgg(col(keyCol).cast("long"), 1 << 17, 5).as("bloom"),
         count(lit(1)).as("n_rows"))
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$path/bloomindex_$keyCol")

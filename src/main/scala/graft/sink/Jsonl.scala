@@ -46,11 +46,10 @@ object Jsonl {
     * `_corrupt_record` — the crawl-ops contract (never drop silently,
     * never fail the job on one truncated line; quarantine downstream
     * like the reference's invalid-records sink). */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType,
-                corruptCol: String = "_corrupt_record"): DataFrame =
+  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read
-      .schema(schema.add(corruptCol, StringType))
+      .schema(schema.add("_corrupt_record", StringType))
       .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", corruptCol)
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 }

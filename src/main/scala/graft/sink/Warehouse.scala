@@ -27,18 +27,17 @@ object Warehouse {
       _.toUpperCase(Locale.ROOT).replace(' ', '_').replace('-', '_').replace("\"", "")): _*)
 
   /** S9+S10: lineage metadata. The rebuild records real per-row lineage
-    * where the reference hardcodes a literal (`snowflake_connector.py:299`);
-    * pass `sourceFile=Some(lit)` for parity. A `SOURCE_FILE` column already
-    * on the frame is kept: callers take it with `input_file_name()` at the
-    * file scan, as [[graft.Pipeline.run]] and the streaming ETL do. Without
+    * where the reference hardcodes a literal (`snowflake_connector.py:299`).
+    * A `SOURCE_FILE` column already on the frame is kept: callers take it
+    * with `input_file_name()` at the file scan, as [[graft.Pipeline.run]]
+    * and the streaming ETL do. Without
     * one, `input_file_name()` is evaluated here, which gives the file name
     * only when this frame is read straight from files; over a persisted or
     * in-memory frame it is "". */
-  def withMetadata(df: DataFrame, sourceFile: Option[String] = None): DataFrame = {
-    val src: Column = sourceFile.map(lit).getOrElse(input_file_name())
+  def withMetadata(df: DataFrame): DataFrame = {
     val withSrc =
       if (df.columns.map(_.toUpperCase(Locale.ROOT)).contains("SOURCE_FILE")) df
-      else df.withColumn("SOURCE_FILE", src)
+      else df.withColumn("SOURCE_FILE", input_file_name())
     withSrc.withColumn("LOAD_DATE", current_timestamp())
   }
 
@@ -46,8 +45,8 @@ object Warehouse {
     * The reference's string→date normalization step (E3,
     * `snowflake_connector.py:282-287`) is a no-op here because dates are
     * typed `DateType` at validation time (parse-once, SURVEY.md §1.2). */
-  def toWarehouse(df: DataFrame, sourceFile: Option[String] = None): DataFrame =
-    withMetadata(normalizeNames(renameToWarehouse(df)), sourceFile)
+  def toWarehouse(df: DataFrame): DataFrame =
+    withMetadata(normalizeNames(renameToWarehouse(df)))
 
   /** S3: parallel write, unpartitioned like the reference's one table
     * (`snowflake_connector.py:166-246`): each write task writes one file and
@@ -236,40 +235,38 @@ object Warehouse {
 
   /** Persist as a bucketed+sorted managed table: joins and aggregations on
     * `bucketCols` against tables bucketed the same way need NO shuffle (the
-    * co-location strategy for repeated big-big joins at scale). */
+    * co-location strategy for repeated big-big joins at scale). The write
+    * overwrites: it owns the managed location, since a previous JVM (whose
+    * in-memory catalog died with it) can leave the table directory behind,
+    * and saveAsTable then refuses the CREATE — so it drops the catalog
+    * entry AND clears the orphaned location. The location is resolved
+    * through the session catalog (database location + metastore-lowercased
+    * table name), NOT warehouse-dir string concatenation, so db-qualified
+    * and mixed-case names under a non-default current database clean the
+    * right directory. */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                    numBuckets: Int = 16, mode: String = "overwrite"): Unit = {
+                    numBuckets: Int = 16): Unit = {
     val spark = df.sparkSession
-    if (mode == "overwrite") {
-      // overwrite semantics own the managed location: a previous JVM (whose
-      // in-memory catalog died with it) can leave the table directory
-      // behind, and saveAsTable then refuses the CREATE — drop the catalog
-      // entry AND clear the orphaned location. The location is resolved
-      // through the session catalog (database location + metastore-lowercased
-      // table name), NOT warehouse-dir string concatenation, so db-qualified
-      // and mixed-case names under a non-default current database clean the
-      // right directory.
-      val parts = table.split('.')
-      require(parts.length <= 2 && parts.forall(_.nonEmpty),
-        s"writeBucketed: cannot parse table identifier '$table'")
-      val (dbOpt, tbl) =
-        if (parts.length == 2) (Some(parts(0)), parts(1)) else (None, parts(0))
-      val db = dbOpt.getOrElse(spark.catalog.currentDatabase)
-      val quoted = (dbOpt.toSeq :+ tbl).map(p => s"`$p`").mkString(".")
-      spark.sql(s"DROP TABLE IF EXISTS $quoted")
-      // Hadoop Path parses the location string directly (java.net.URI throws
-      // on unencoded characters a database location may legally contain), and
-      // the lowercase must be Locale.ROOT to match the metastore's — default-
-      // locale lowercasing maps 'I' to dotless 'ı' under Turkish locales,
-      // which would check (and delete!) the wrong directory.
-      val dbLoc = new org.apache.hadoop.fs.Path(
-        spark.catalog.getDatabase(db).locationUri)
-      val loc = new org.apache.hadoop.fs.Path(
-        dbLoc, tbl.toLowerCase(java.util.Locale.ROOT))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    df.write.mode(mode)
+    val parts = table.split('.')
+    require(parts.length <= 2 && parts.forall(_.nonEmpty),
+      s"writeBucketed: cannot parse table identifier '$table'")
+    val (dbOpt, tbl) =
+      if (parts.length == 2) (Some(parts(0)), parts(1)) else (None, parts(0))
+    val db = dbOpt.getOrElse(spark.catalog.currentDatabase)
+    val quoted = (dbOpt.toSeq :+ tbl).map(p => s"`$p`").mkString(".")
+    spark.sql(s"DROP TABLE IF EXISTS $quoted")
+    // Hadoop Path parses the location string directly (java.net.URI throws
+    // on unencoded characters a database location may legally contain), and
+    // the lowercase must be Locale.ROOT to match the metastore's — default-
+    // locale lowercasing maps 'I' to dotless 'ı' under Turkish locales,
+    // which would check (and delete!) the wrong directory.
+    val dbLoc = new org.apache.hadoop.fs.Path(
+      spark.catalog.getDatabase(db).locationUri)
+    val loc = new org.apache.hadoop.fs.Path(
+      dbLoc, tbl.toLowerCase(java.util.Locale.ROOT))
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+    df.write.mode("overwrite")
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")

@@ -40,13 +40,13 @@ import graft.Materialize
   */
 object StreamingIngest {
 
-  /** Tumbling-window counts/sums per event type. Returns the *streaming*
-    * DataFrame (caller attaches the sink). */
-  def windowedEventAgg(events: DataFrame, window_ : String = "1 hour",
-                       watermark: String = "2 hours"): DataFrame =
+  /** Tumbling one-hour-window counts/sums per event type, under a
+    * two-hour watermark. Returns the *streaming* DataFrame (caller
+    * attaches the sink). */
+  def windowedEventAgg(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
+      .withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
         cast_sum(col("value")).as("total_value"))
@@ -169,8 +169,9 @@ object StreamingIngest {
         unix_micros(col("last_ev")).as("session_last"),
         col("n_events"))
 
-  /** Drive [[sessionizedEvents]] over a BOUNDED parquet path and return the
-    * final sessions as a batch frame. Bounded-stream finalization: append-
+  /** Drive [[sessionizedEvents]] over a BOUNDED parquet path of events
+    * keyed by `user_id` (LONG) and timed by `ts`, and return the final
+    * sessions as a batch frame. Bounded-stream finalization: append-
     * mode session windows emit only once the watermark passes their end,
     * and a finite stream's watermark stops at its max event time — the
     * tail sessions would be withheld forever. The standard fix: union the
@@ -180,9 +181,9 @@ object StreamingIngest {
     * Production (unbounded) streams need none of this — later events
     * advance the watermark naturally. */
   def runSessionizeBounded(spark: SparkSession, parquetPath: String,
-                           gapMicros: Long,
-                           keyCol: String = "user_id",
-                           tsCol: String = "ts"): DataFrame = {
+                           gapMicros: Long): DataFrame = {
+    val keyCol = "user_id"
+    val tsCol = "ts"
     val ev = spark.read.parquet(parquetPath)
     require(ev.schema(keyCol).dataType ==
       org.apache.spark.sql.types.LongType,
@@ -661,10 +662,9 @@ object StreamingIngest {
   def runStreamCurateFuzzyBounded(spark: SparkSession, parquetPath: String,
                                   idCol: String, textCol: String,
                                   minTokens: Int, n: Int = 3, k: Int = 64,
-                                  bands: Int = 16, threshold: Double = 0.5,
-                                  maxFilesPerTrigger: Int = 0): DataFrame = {
+                                  bands: Int = 16, threshold: Double = 0.5): DataFrame = {
     import graft.operators.Dedup
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 0)
     val statuses = byBatchId()
     val pairLedger = byBatchId()
     val sigSlices = byBatchId()
@@ -709,7 +709,10 @@ object StreamingIngest {
     * arriving queries is scored in foreachBatch against the RELOADED
     * models and the once-built code index — the full production
     * lifecycle (build index → ship artifact → serve stream) inside one
-    * bounded run.
+    * bounded run. The serving settings are fixed: the queries are the
+    * `vec_id < 16` rows, each gets its top 10 through 4 probed cells and
+    * a 32-row shortlist, and the trained models are 16 IVF cells and 16
+    * PQ sub-blocks of 64 codes.
     *
     * Stream ≡ batch EXACTLY: a query's top-k is a pure deterministic
     * function of (query vector, frozen models, frozen index) — no
@@ -734,25 +737,23 @@ object StreamingIngest {
     * (guide §2.4 — share one materialization; the bipartite-edge-cache
     * discipline applied inside a single query). */
   def runStreamAnnBounded(spark: SparkSession, parquetPath: String,
-                          modelPath: String, queryMaxId: Long = 16,
-                          k: Int = 10, nprobe: Int = 4, shortlist: Int = 32,
-                          numCells: Int = 16, m: Int = 16, codes: Int = 64,
-                          maxFilesPerTrigger: Int = 0,
+                          modelPath: String,
                           pretrained: Option[(graft.operators.IvfIndex.Model,
                             graft.operators.ProductQuantize.Model)] = None)
       : (DataFrame, DataFrame) = {
     import graft.operators.{IvfIndex, IvfPq, ProductQuantize}
     val corpus = spark.read.parquet(parquetPath)
     val (ivf0, pq0) = pretrained.getOrElse((
-      IvfIndex.train(corpus, "vec_id", "embedding", k = numCells),
-      ProductQuantize.train(corpus, "vec_id", "embedding", m = m, k = codes)))
+      IvfIndex.train(corpus, "vec_id", "embedding", k = 16),
+      ProductQuantize.train(corpus, "vec_id", "embedding", m = 16, k = 64)))
     IvfPq.saveModels(spark, modelPath, ivf0, pq0)
     val (ivf, pq) = IvfPq.loadModels(spark, modelPath)
     val indexed = Materialize(IvfPq.index(corpus, ivf, pq))
-    val stream = boundedStream(spark, parquetPath, corpus.schema, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, corpus.schema, maxFilesPerTrigger = 0)
     val served = collectBatches(stream, "runStreamAnnBounded") { (batch, _) =>
-      val queries = batch.filter(col("vec_id") < queryMaxId)
-      IvfPq.topKIndexed(queries, indexed, corpus, ivf, pq, k, nprobe, shortlist)
+      val queries = batch.filter(col("vec_id") < 16)
+      IvfPq.topKIndexed(queries, indexed, corpus, ivf, pq,
+        k = 10, nprobe = 4, shortlist = 32)
     }
     (served.dropDuplicates("query_id", "rank"), indexed)
   }
@@ -817,12 +818,12 @@ object StreamingIngest {
     * Parsing is pure per-row ⇒ stream ≡ batch verbatim and the harness
     * gates the twin with the batch oracle. */
   def runStreamJsonlBounded(spark: SparkSession, srcDir: String,
-                            schema: org.apache.spark.sql.types.StructType,
-                            maxFilesPerTrigger: Int = 0): DataFrame = {
+                            schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.types.StringType
     val stream = boundedStream(spark, srcDir,
-      schema.add("_corrupt_record", StringType), maxFilesPerTrigger, "json",
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record"))
+      schema.add("_corrupt_record", StringType), maxFilesPerTrigger = 0,
+      format = "json",
+      options = Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record"))
     collectBatches(stream, "runStreamJsonlBounded")((batch, _) => batch)
   }
 
@@ -837,8 +838,8 @@ object StreamingIngest {
     * pattern; a production deployment would fold slices into the
     * warehouse table the batch operator reads. */
   def runStreamAnchorsBounded(spark: SparkSession, parquetPath: String,
-                              k: Int, maxFilesPerTrigger: Int = 0): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                              k: Int): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 0)
     graft.operators.WebCuration.topAnchors(
       collectBatches(stream, "runStreamAnchorsBounded")((batch, _) => batch),
       "src", "dst", "anchor", k)
@@ -857,10 +858,9 @@ object StreamingIngest {
     * rank, the robots-gate discipline for the join). */
   def runStreamSeedsBounded(spark: SparkSession, parquetPath: String,
                             xmlCol: String, domainCol: String,
-                            crawled: DataFrame, crawledUrlCol: String,
-                            maxFilesPerTrigger: Int = 0): DataFrame = {
+                            crawled: DataFrame, crawledUrlCol: String): DataFrame = {
     import graft.operators.{Feeds, Sitemap}
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 0)
     val survivors = collectBatches(stream, "runStreamSeedsBounded") { (batch, _) =>
       val entries = Feeds.parseEntries(batch, xmlCol)
         .select(col(domainCol), col("kind").as("feed_kind"),
@@ -881,10 +881,9 @@ object StreamingIngest {
     * this twin with the batch query's full hash oracle. */
   def runStreamRobotsGateBounded(spark: SparkSession, parquetPath: String,
                                  idCol: String, rules: DataFrame,
-                                 userAgent: String,
-                                 maxFilesPerTrigger: Int = 0): DataFrame = {
+                                 userAgent: String): DataFrame = {
     import graft.operators.RobotsTxt
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 0)
     collectBatches(stream, "runStreamRobotsGateBounded") { (batch, _) =>
       RobotsTxt.gate(batch, "url", rules, userAgent)
     }.dropDuplicates(idCol)
@@ -908,7 +907,6 @@ object StreamingIngest {
     * of slices with id < b — identical on first delivery and on replay. */
   def runStreamErBounded(spark: SparkSession, parquetPath: String,
                          idCol: String, nameCol: String, maxDist: Int = 1,
-                         blockChars: Int = 4,
                          maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.EntityResolution
     val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
@@ -917,7 +915,7 @@ object StreamingIngest {
     val pairLedger = byBatchId()
     eachBatch(stream) { (batch, bid) =>
       val deltaKeyed = Materialize(EntityResolution
-        .blockKeys(batch, idCol, nameCol, blockChars))
+        .blockKeys(batch, idCol, nameCol, blockChars = 4))
       val corpusKeyed = keySlices.asScala.toSeq
         .filter(_._1 < bid).map(_._2)
         .reduceOption(_ unionByName _)
@@ -1015,9 +1013,8 @@ object StreamingIngest {
     * ([[graft.operators.HeavyHitters.violationsAgainst]]) instead of a
     * hash oracle. */
   def runStreamHotKeysBounded(spark: SparkSession, parquetPath: String,
-                              itemCol: String, capacity: Int,
-                              maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                              itemCol: String, capacity: Int): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     graft.operators.HeavyHitters.itemsFromSummary(memorySnapshot(
       stream
         .select(col(itemCol).cast("long").as("item"))
@@ -1035,9 +1032,8 @@ object StreamingIngest {
     * matter how the replay batches — the harness gates that equality, a
     * stronger claim than MG's arrival-order-dependent bounds. */
   def runStreamDistinctBounded(spark: SparkSession, parquetPath: String,
-                               segCol: String, valueCol: String, lgK: Int,
-                               maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                               segCol: String, valueCol: String, lgK: Int): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     // the SAME perSeg + __TOTAL__ derivation as the batch rollup, shared
     // verbatim — the bit-exact stream ≡ batch gate depends on it
     graft.operators.Profiler.rollupFromSketches(memorySnapshot(
@@ -1060,9 +1056,8 @@ object StreamingIngest {
   def runStreamTrapLedger(spark: SparkSession, parquetPath: String,
                           build: DataFrame => DataFrame, urlCol: String,
                           fingerprintCol: String, k: Int, minUrls: Int,
-                          maxDiversity: Double,
-                          maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                          maxDiversity: Double): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     val sketches = memorySnapshot(
       graft.operators.WebCuration
         .trapKeyed(build(stream), urlCol, col(fingerprintCol))
@@ -1081,9 +1076,8 @@ object StreamingIngest {
     * the streaming pair-overlap must equal the batch one BIT-EXACTLY no
     * matter how the replay batches — the harness gates that equality. */
   def runStreamOverlapBounded(spark: SparkSession, parquetPath: String,
-                              segCol: String, valueCol: String, k: Int,
-                              maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                              segCol: String, valueCol: String, k: Int): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     // the SAME pairwise derivation as the batch operator, shared verbatim
     // — the bit-exact stream ≡ batch gate depends on it
     graft.operators.SetSketch.pairOverlapFromSketches(memorySnapshot(
@@ -1105,9 +1099,8 @@ object StreamingIngest {
     * quantized scores, same contract as the batch operator. */
   def runStreamAucBounded(spark: SparkSession, parquetPath: String,
                           groupExpr: Column, scoreExpr: Column,
-                          labelExpr: Column,
-                          maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                          labelExpr: Column): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     graft.operators.Eval.aucFromCounts(memorySnapshot(
       stream
         .select(groupExpr.cast("string").as("grp"),
@@ -1132,9 +1125,8 @@ object StreamingIngest {
     * stream ≡ batch equality. */
   def runStreamQuantileBounded(spark: SparkSession, parquetPath: String,
                                segCol: String, valueExpr: Column, k: Int,
-                               ps: Seq[Double],
-                               maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                               ps: Seq[Double]): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     val summaries = memorySnapshot(
       stream
         .select(col(segCol).cast("string").as("segment"),
@@ -1158,10 +1150,9 @@ object StreamingIngest {
     * matter how the replay batched; the harness gates that equality. */
   def runStreamFreqBounded(spark: SparkSession, parquetPath: String,
                            itemCol: String, k: Int,
-                           depth: Int, width: Int,
-                           maxFilesPerTrigger: Int = 1): DataFrame = {
+                           depth: Int, width: Int): DataFrame = {
     import graft.operators.FreqSketch
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     val grid = memorySnapshot(
       stream.filter(col(itemCol).isNotNull)
         .select(col(itemCol).cast("long").as("item"))
@@ -1185,10 +1176,9 @@ object StreamingIngest {
     * q_stream_anomalies / q_stream_auc, the strongest streaming claim
     * the harness can make. */
   def runStreamPmiBounded(spark: SparkSession, parquetPath: String,
-                          textCol: String, minCount: Long, topK: Int,
-                          maxFilesPerTrigger: Int = 1): DataFrame = {
+                          textCol: String, minCount: Long, topK: Int): DataFrame = {
     import graft.operators.TextAnalysis
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     val counts = memorySnapshot(
       TextAnalysis.bigramPairs(stream, textCol)
         .groupBy(col("w1"), col("w2"))
@@ -1210,10 +1200,9 @@ object StreamingIngest {
     * [[runStreamPmiBounded]]. */
   def runStreamKeywordsBounded(spark: SparkSession, parquetPath: String,
                                classCol: String, textCol: String,
-                               minCount: Long, topK: Int,
-                               maxFilesPerTrigger: Int = 1): DataFrame = {
+                               minCount: Long, topK: Int): DataFrame = {
     import graft.operators.TextAnalysis
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     val counts = memorySnapshot(
       TextAnalysis.classTermTokens(stream, classCol, textCol)
         .groupBy(col("cls"), col("term"))
@@ -1235,9 +1224,8 @@ object StreamingIngest {
     * Output: (segment, bloom). */
   def runStreamBloomBounded(spark: SparkSession, parquetPath: String,
                             segCol: String, valueCol: String,
-                            numBits: Int, numHashes: Int,
-                            maxFilesPerTrigger: Int = 1): DataFrame = {
-    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
+                            numBits: Int, numHashes: Int): DataFrame = {
+    val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 1)
     memorySnapshot(
       stream.filter(col(valueCol).isNotNull)
         .groupBy(col(segCol).cast("string").as("segment"))

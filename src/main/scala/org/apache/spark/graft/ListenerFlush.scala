@@ -9,7 +9,8 @@ import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
   *
   *  - [[flush]]: listener events are delivered asynchronously, so
   *    [[graft.QueryMetrics]] counts a block's jobs and stages only after
-  *    the bus drains (`SparkContext.listenerBus`).
+  *    the bus drains (`SparkContext.listenerBus`). The wait has a fixed
+  *    bound of 60 s.
   *  - [[unpersistQuietly]]: `RDD.unpersist` logs a WARN for every locally
   *    checkpointed RDD ("cannot be recomputed after unpersisting") before
   *    it calls `SparkContext.unpersistRDD`. For [[graft.Materialize]]'s
@@ -23,8 +24,8 @@ import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
   *    blocks, so [[graft.Materialize.release]] needs this to free a lazy
   *    checkpoint that was never read. */
 object ListenerFlush {
-  def flush(sc: SparkContext, timeoutMillis: Long = 60000L): Unit =
-    sc.listenerBus.waitUntilEmpty(timeoutMillis)
+  def flush(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 
   def unpersistQuietly(sc: SparkContext, rddId: Int, blocking: Boolean): Unit =
     sc.unpersistRDD(rddId, blocking)

@@ -310,4 +310,23 @@ class MaterializeSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"measure Spark work through graft.QueryMetrics: ${offenders.mkString(", ")}")
   }
+
+  test("guard: every String case conversion in src/main/scala names its locale") {
+    // a no-argument toLowerCase/toUpperCase takes the JVM default locale
+    val defaultCase = """\.to(?:Lower|Upper)Case\b(?!\s*\()|\.to(?:Lower|Upper)Case\s*\(\s*\)""".r
+    val probe = Seq(
+      "val a = s.toLowerCase",
+      "val b = names.map(_.toUpperCase)",
+      "val c = s.trim.toLowerCase().split(\" \")",
+      "val d = s.toLowerCase(Locale.ROOT)",
+      "val e = Character.toLowerCase(ch)",
+      "// s.toUpperCase").mkString("\n")
+    assert(callLines(probe, defaultCase) == Seq(1, 2, 3))
+    val offenders = for {
+      (f, src) <- mainSources()
+      line <- callLines(src, defaultCase)
+    } yield s"${f.getPath}:$line"
+    assert(offenders.isEmpty,
+      s"pass Locale.ROOT to every String case conversion: ${offenders.mkString(", ")}")
+  }
 }
