@@ -1288,8 +1288,8 @@ object HtmlExpressions {
     ColumnBridge.column(HtmlContentText(ColumnBridge.expression(html), minLen, maxLinkDensity))
 
   def html_blocks(html: Column,
-                  minLen: Int = HtmlOps.DefaultMinLen,
-                  maxLinkDensity: Double = HtmlOps.DefaultMaxLinkDensity): Column =
+                  minLen: Int,
+                  maxLinkDensity: Double): Column =
     ColumnBridge.column(HtmlBlocks(ColumnBridge.expression(html), minLen, maxLinkDensity))
 
   def html_table_cells(html: Column): Column =

@@ -447,6 +447,25 @@ object WarcIngest {
 
   private def crlf(sb: StringBuilder): StringBuilder = sb.append("\r\n")
 
+  /** The one WARC record framer: the `WARC/1.0` line, `fields` as
+    * `name: value` header lines, `Content-Length` (the octet count of
+    * `payload`), a blank line, the payload parts, and the closing
+    * CRLF CRLF. */
+  private def warcRecord(fields: (String, String)*)
+                        (payload: Array[Byte]*): Array[Byte] = {
+    val n = payload.map(_.length).sum
+    val warc = new StringBuilder(256)
+    crlf(warc.append("WARC/1.0"))
+    fields.foreach { case (k, v) => crlf(warc.append(k).append(": ").append(v)) }
+    crlf(warc.append("Content-Length: ").append(n))
+    crlf(warc)
+    val head = warc.toString.getBytes(UTF_8)
+    val out = new ByteArrayOutputStream(head.length + n + 4)
+    out.write(head); payload.foreach(p => out.write(p))
+    out.write("\r\n\r\n".getBytes(UTF_8))
+    out.toByteArray
+  }
+
   /** Per-partition bucket-file writer with a task-commit protocol: each
     * task attempt streams its buckets into ATTEMPT-UNIQUE temp names and
     * renames them into place only after the whole partition succeeded.
@@ -509,26 +528,43 @@ object WarcIngest {
     open.keySet.toSet
   }
 
-  /** Run the bucketed write as ONE job and backfill warcinfo-only files
-    * for the buckets no row hashed to: the prepared frame (already
-    * bucket-keyed, repartitioned and sorted by the caller) streams through
-    * [[writeBucketPartition]] via `mapPartitions`, and the collect()ed
-    * per-task bucket sets (≤ nFiles longs each) replace the former
-    * SEPARATE `distinct().collect()` presence probe — which re-evaluated
-    * the whole upstream frame per write call (for the crawl-loop
-    * capstones: the frontier windows + robots schedule, recomputed once
-    * per wave just to list bucket ids; guide §1.2 step 1). Empty buckets
-    * still get their warcinfo-only file so per-bucket rollups are total. */
-  private def writeBucketsOnePass(prepared: org.apache.spark.sql.DataFrame,
-      outDir: String, conf: SerializableWritable[org.apache.hadoop.conf.Configuration],
-      fsDriver: org.apache.hadoop.fs.FileSystem, nFiles: Int,
-      fileName: Long => String,
-      record: org.apache.spark.sql.Row => Array[Byte],
-      bucketOf: org.apache.spark.sql.Row => Long): Unit = {
-    val present = prepared.rdd.mapPartitions { rows =>
-      writeBucketPartition(outDir, conf.value, fileName, rows, record,
-        bucketOf).iterator
-    }.collect().toSet
+  /** The bucketed write every archive writer shares, as ONE job: clear
+    * and recreate `outDir`; project the id (cast to long) and `cols`
+    * (each cast to its type); key rows by `id % nFiles`, hash-partition
+    * and id-sort each bucket; and stream each partition through
+    * [[writeBucketPartition]] into `<prefix>-<bucket>.warc` files, bucket
+    * 0 gzipped. `record` frames one projected row: the id at 0, then
+    * `cols` in order. The collect()ed per-task bucket sets (≤ nFiles
+    * longs each) replace the former SEPARATE `distinct().collect()`
+    * presence probe — which re-evaluated the whole upstream frame per
+    * write call (for the crawl-loop capstones: the frontier windows +
+    * robots schedule, recomputed once per wave just to list bucket ids;
+    * guide §1.2 step 1). Buckets no row hashed to still get their
+    * warcinfo-only file so per-bucket rollups are total. */
+  private def writeBuckets(spark: SparkSession, docs: DataFrame,
+      idCol: String, cols: Seq[(String, String)], outDir: String,
+      nFiles: Int, prefix: String,
+      record: org.apache.spark.sql.Row => Array[Byte]): Unit = {
+    import org.apache.spark.sql.functions._
+    require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
+    val outPath = new Path(outDir)
+    val fsDriver = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fsDriver.exists(outPath)) fsDriver.delete(outPath, true)
+    fsDriver.mkdirs(outPath)
+    val conf = new SerializableWritable(spark.sparkContext.hadoopConfiguration)
+    val fileName = (b: Long) =>
+      if (b == 0L) s"$prefix-$b.warc.gz" else s"$prefix-$b.warc"
+    val bucketAt = cols.size + 1
+    val present = docs.select(col(idCol).cast("long") +:
+        cols.map { case (c, t) => col(c).cast(t) }: _*)
+      .withColumn("__b", pmod(col(idCol), lit(nFiles.toLong)))
+      .repartition(nFiles, col("__b"))
+      .sortWithinPartitions(col(idCol))
+      .select((idCol +: cols.map(_._1) :+ "__b").map(col): _*)
+      .rdd.mapPartitions { rows =>
+        writeBucketPartition(outDir, conf.value, fileName, rows, record,
+          _.getLong(bucketAt)).iterator
+      }.collect().toSet
     (0L until nFiles.toLong).filterNot(present).foreach { b =>
       val gz = b == 0L
       val name = fileName(b)
@@ -550,73 +586,32 @@ object WarcIngest {
     crlf(http.append("Content-Type: ").append(contentType))
     crlf(http.append("Content-Length: ").append(htmlBody.length))
     crlf(http)
-    val httpHead = http.toString.getBytes(UTF_8)
-    val clen = httpHead.length + htmlBody.length
-    val warc = new StringBuilder(192)
-    crlf(warc.append("WARC/1.0"))
-    crlf(warc.append("WARC-Type: response"))
-    crlf(warc.append("WARC-Record-ID: <urn:graft:doc:").append(docId).append(">"))
-    crlf(warc.append("WARC-Date: 2026-01-01T00:00:00Z"))
-    crlf(warc.append("WARC-Target-URI: ").append(uri))
-    crlf(warc.append("Content-Type: application/http; msgtype=response"))
-    crlf(warc.append("Content-Length: ").append(clen))
-    crlf(warc)
-    val head = warc.toString.getBytes(UTF_8)
-    val out = new ByteArrayOutputStream(head.length + clen + 4)
-    out.write(head); out.write(httpHead); out.write(htmlBody)
-    out.write("\r\n\r\n".getBytes(UTF_8))
-    out.toByteArray
+    rawHttpRecord(docId, uri, http.toString.getBytes(UTF_8), htmlBody)
   }
 
   /** Frame one response record around a CALLER-BUILT HTTP message —
     * the fixture hook for wire-format variants (chunked transfer
     * framing, gzip/deflate content codings, exotic headers) that
-    * [[responseRecord]]'s fixed head can't express. The payload goes in
-    * verbatim; Content-Length is its exact octet count. */
+    * [[responseRecord]]'s fixed head can't express. The payload parts go
+    * in verbatim, in order; Content-Length is their exact octet count. */
   private[ingest] def rawHttpRecord(docId: Long, uri: String,
-                                    httpPayload: Array[Byte]): Array[Byte] = {
-    val warc = new StringBuilder(192)
-    crlf(warc.append("WARC/1.0"))
-    crlf(warc.append("WARC-Type: response"))
-    crlf(warc.append("WARC-Record-ID: <urn:graft:doc:").append(docId).append(">"))
-    crlf(warc.append("WARC-Date: 2026-01-01T00:00:00Z"))
-    crlf(warc.append("WARC-Target-URI: ").append(uri))
-    crlf(warc.append("Content-Type: application/http; msgtype=response"))
-    crlf(warc.append("Content-Length: ").append(httpPayload.length))
-    crlf(warc)
-    val head = warc.toString.getBytes(UTF_8)
-    val out = new ByteArrayOutputStream(head.length + httpPayload.length + 4)
-    out.write(head); out.write(httpPayload)
-    out.write("\r\n\r\n".getBytes(UTF_8))
-    out.toByteArray
-  }
+                                    parts: Array[Byte]*): Array[Byte] =
+    warcRecord("WARC-Type" -> "response",
+      "WARC-Record-ID" -> s"<urn:graft:doc:$docId>",
+      "WARC-Date" -> "2026-01-01T00:00:00Z",
+      "WARC-Target-URI" -> uri,
+      "Content-Type" -> "application/http; msgtype=response")(parts: _*)
 
   /** [[writeResponsesWarc]] for pre-framed HTTP payload bytes: each row's
     * `payloadCol` is written verbatim as one response record's payload —
     * same bucketed layout, warcinfo-led files, bucket 0 gzipped. */
   def writeHttpResponsesWarc(spark: SparkSession, docs: DataFrame,
                              idCol: String, uriCol: String, payloadCol: String,
-                             outDir: String, nFiles: Int = 4): Unit = {
-    import org.apache.spark.sql.functions._
-    require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val outPath = new Path(outDir)
-    val fsDriver = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fsDriver.exists(outPath)) fsDriver.delete(outPath, true)
-    fsDriver.mkdirs(outPath)
-    val confSer = new SerializableWritable(spark.sparkContext.hadoopConfiguration)
-    val n = nFiles
-    writeBucketsOnePass(
-      docs.select(col(idCol).cast("long"), col(uriCol).cast("string"),
-          col(payloadCol).cast("binary"))
-        .withColumn("__b", pmod(col(idCol), lit(n.toLong)))
-        .repartition(n, col("__b"))
-        .sortWithinPartitions(col(idCol))
-        .select(col(idCol), col(uriCol), col(payloadCol), col("__b")),
-      outDir, confSer, fsDriver, n,
-      b => if (b == 0L) s"warc-$b.warc.gz" else s"warc-$b.warc",
+                             outDir: String, nFiles: Int): Unit = {
+    writeBuckets(spark, docs, idCol,
+      Seq(uriCol -> "string", payloadCol -> "binary"), outDir, nFiles, "warc",
       r => rawHttpRecord(r.getLong(0), r.getString(1),
-        r.getAs[Array[Byte]](2)),
-      _.getLong(3))
+        r.getAs[Array[Byte]](2)))
   }
 
   /** Frame one `revisit` record (ISO 28500 §6.7.2 — the
@@ -625,48 +620,23 @@ object WarcIngest {
     * via WARC-Refers-To — how consecutive crawls avoid re-storing the
     * stable majority of the web. */
   private[graft] def revisitRecord(docId: Long, uri: String,
-                                   refersTo: String): Array[Byte] = {
-    val warc = new StringBuilder(256)
-    crlf(warc.append("WARC/1.0"))
-    crlf(warc.append("WARC-Type: revisit"))
-    crlf(warc.append("WARC-Record-ID: <urn:graft:doc:").append(docId).append(">"))
-    crlf(warc.append("WARC-Refers-To: ").append(refersTo))
-    crlf(warc.append("WARC-Date: 2026-02-01T00:00:00Z"))
-    crlf(warc.append("WARC-Target-URI: ").append(uri))
-    crlf(warc.append("WARC-Profile: " +
-      "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest"))
-    crlf(warc.append("Content-Length: 0"))
-    crlf(warc)
-    val out = new ByteArrayOutputStream(320)
-    out.write(warc.toString.getBytes(UTF_8))
-    out.write("\r\n\r\n".getBytes(UTF_8))
-    out.toByteArray
-  }
+                                   refersTo: String): Array[Byte] =
+    warcRecord("WARC-Type" -> "revisit",
+      "WARC-Record-ID" -> s"<urn:graft:doc:$docId>",
+      "WARC-Refers-To" -> refersTo,
+      "WARC-Date" -> "2026-02-01T00:00:00Z",
+      "WARC-Target-URI" -> uri,
+      "WARC-Profile" ->
+        "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest")()
 
   /** Bucketed writer of PRE-FRAMED record bytes — the fixture hook for
     * record types the response framers don't cover (revisit pointers,
     * mixed-type archives). Same layout contract as the other writers. */
   def writeFramedWarc(spark: SparkSession, docs: DataFrame, idCol: String,
                       framedCol: String, outDir: String,
-                      nFiles: Int = 4): Unit = {
-    import org.apache.spark.sql.functions._
-    require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val outPath = new Path(outDir)
-    val fsDriver = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fsDriver.exists(outPath)) fsDriver.delete(outPath, true)
-    fsDriver.mkdirs(outPath)
-    val confSer = new SerializableWritable(spark.sparkContext.hadoopConfiguration)
-    val n = nFiles
-    writeBucketsOnePass(
-      docs.select(col(idCol).cast("long"), col(framedCol).cast("binary"))
-        .withColumn("__b", pmod(col(idCol), lit(n.toLong)))
-        .repartition(n, col("__b"))
-        .sortWithinPartitions(col(idCol))
-        .select(col(idCol), col(framedCol), col("__b")),
-      outDir, confSer, fsDriver, n,
-      b => if (b == 0L) s"warc-$b.warc.gz" else s"warc-$b.warc",
-      r => r.getAs[Array[Byte]](1),
-      _.getLong(2))
+                      nFiles: Int): Unit = {
+    writeBuckets(spark, docs, idCol, Seq(framedCol -> "binary"), outDir,
+      nFiles, "warc", r => r.getAs[Array[Byte]](1))
   }
 
   /** Resolve a crawl SNAPSHOT's revisit records against a reference
@@ -699,21 +669,12 @@ object WarcIngest {
   /** Frame one WET-style `conversion` record (Common Crawl's extracted-
     * text archives): the payload is the bare text — no HTTP wrapper. */
   private[ingest] def conversionRecord(docId: Long, uri: String,
-                                       textBody: Array[Byte]): Array[Byte] = {
-    val warc = new StringBuilder(192)
-    crlf(warc.append("WARC/1.0"))
-    crlf(warc.append("WARC-Type: conversion"))
-    crlf(warc.append("WARC-Record-ID: <urn:graft:doc:").append(docId).append(">"))
-    crlf(warc.append("WARC-Date: 2026-01-01T00:00:00Z"))
-    crlf(warc.append("WARC-Target-URI: ").append(uri))
-    crlf(warc.append("Content-Type: text/plain"))
-    crlf(warc.append("Content-Length: ").append(textBody.length))
-    crlf(warc)
-    val out = new ByteArrayOutputStream(256 + textBody.length)
-    out.write(warc.toString.getBytes(UTF_8)); out.write(textBody)
-    out.write("\r\n\r\n".getBytes(UTF_8))
-    out.toByteArray
-  }
+                                       textBody: Array[Byte]): Array[Byte] =
+    warcRecord("WARC-Type" -> "conversion",
+      "WARC-Record-ID" -> s"<urn:graft:doc:$docId>",
+      "WARC-Date" -> "2026-01-01T00:00:00Z",
+      "WARC-Target-URI" -> uri,
+      "Content-Type" -> "text/plain")(textBody)
 
   /** Write extracted text as WET archives — the Common Crawl convention
     * for the extraction stage's OUTPUT: `conversion` records (bare
@@ -723,44 +684,20 @@ object WarcIngest {
     * (non-HTTP payload ⇒ HTTP columns null, body = the text). */
   def writeWet(spark: SparkSession, docs: DataFrame, idCol: String,
                uriCol: String, textCol: String, outDir: String,
-               nFiles: Int = 4): Unit = {
-    import org.apache.spark.sql.functions._
-    require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val outPath = new Path(outDir)
-    val fsDriver = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fsDriver.exists(outPath)) fsDriver.delete(outPath, true)
-    fsDriver.mkdirs(outPath)
-    val confSer = new SerializableWritable(spark.sparkContext.hadoopConfiguration)
-    val n = nFiles
-    writeBucketsOnePass(
-      docs.select(col(idCol).cast("long"), col(uriCol).cast("string"),
-          col(textCol).cast("binary"))
-        .withColumn("__b", pmod(col(idCol), lit(n.toLong)))
-        .repartition(n, col("__b"))
-        .sortWithinPartitions(col(idCol))
-        .select(col(idCol), col(uriCol), col(textCol), col("__b")),
-      outDir, confSer, fsDriver, n,
-      b => if (b == 0L) s"wet-$b.warc.gz" else s"wet-$b.warc",
+               nFiles: Int): Unit = {
+    writeBuckets(spark, docs, idCol,
+      Seq(uriCol -> "string", textCol -> "binary"), outDir, nFiles, "wet",
       r => conversionRecord(r.getLong(0), r.getString(1),
-        r.getAs[Array[Byte]](2)),
-      _.getLong(3))
+        r.getAs[Array[Byte]](2)))
   }
 
   /** Frame one file-leading warcinfo record. */
   private[ingest] def warcinfoRecord(bucket: Long): Array[Byte] = {
     val body = s"software: graft-warc/1.0\r\nbucket: $bucket\r\n".getBytes(UTF_8)
-    val warc = new StringBuilder(160)
-    crlf(warc.append("WARC/1.0"))
-    crlf(warc.append("WARC-Type: warcinfo"))
-    crlf(warc.append("WARC-Record-ID: <urn:graft:warcinfo:").append(bucket).append(">"))
-    crlf(warc.append("WARC-Date: 2026-01-01T00:00:00Z"))
-    crlf(warc.append("Content-Type: application/warc-fields"))
-    crlf(warc.append("Content-Length: ").append(body.length))
-    crlf(warc)
-    val out = new ByteArrayOutputStream(256)
-    out.write(warc.toString.getBytes(UTF_8)); out.write(body)
-    out.write("\r\n\r\n".getBytes(UTF_8))
-    out.toByteArray
+    warcRecord("WARC-Type" -> "warcinfo",
+      "WARC-Record-ID" -> s"<urn:graft:warcinfo:$bucket>",
+      "WARC-Date" -> "2026-01-01T00:00:00Z",
+      "Content-Type" -> "application/warc-fields")(body)
   }
 
   /** One gzip member per record (the Common Crawl convention — a reader
@@ -786,7 +723,7 @@ object WarcIngest {
     * target filesystem. */
   def writeSyntheticWarc(spark: SparkSession, docs: DataFrame, idCol: String,
                          uriCol: String, bodyCol: String, outDir: String,
-                         nFiles: Int = 4,
+                         nFiles: Int,
                          contentType: String = "text/html; charset=utf-8"): Unit = {
     import org.apache.spark.sql.functions._
     writeResponsesWarc(spark,
@@ -801,28 +738,13 @@ object WarcIngest {
     * rename protocol. */
   def writeResponsesWarc(spark: SparkSession, docs: DataFrame, idCol: String,
                          uriCol: String, bodyCol: String, ctCol: String,
-                         outDir: String, nFiles: Int = 4): Unit = {
-    import org.apache.spark.sql.functions._
-    require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val outPath = new Path(outDir)
-    val fsDriver = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fsDriver.exists(outPath)) fsDriver.delete(outPath, true)
-    fsDriver.mkdirs(outPath)
-    val confSer = new SerializableWritable(spark.sparkContext.hadoopConfiguration)
-    val n = nFiles
+                         outDir: String, nFiles: Int): Unit = {
     // body cast to BINARY: string bodies become their UTF-8 bytes, binary
     // bodies (images, media, legacy-charset pages) pass through byte-exact
-    writeBucketsOnePass(
-      docs.select(col(idCol).cast("long"), col(uriCol).cast("string"),
-          col(bodyCol).cast("binary"), col(ctCol).cast("string"))
-        .withColumn("__b", pmod(col(idCol), lit(n.toLong)))
-        .repartition(n, col("__b"))
-        .sortWithinPartitions(col(idCol))
-        .select(col(idCol), col(uriCol), col(bodyCol), col(ctCol), col("__b")),
-      outDir, confSer, fsDriver, n,
-      b => if (b == 0L) s"warc-$b.warc.gz" else s"warc-$b.warc",
+    writeBuckets(spark, docs, idCol,
+      Seq(uriCol -> "string", bodyCol -> "binary", ctCol -> "string"),
+      outDir, nFiles, "warc",
       r => responseRecord(r.getLong(0), r.getString(1),
-        r.getAs[Array[Byte]](2), r.getString(3)),
-      _.getLong(4))
+        r.getAs[Array[Byte]](2), r.getString(3)))
   }
 }

@@ -113,7 +113,7 @@ object CorpusPipeline {
     * Output: (doc_id, n_tok, n_removed) of the curated set — n_tok from
     * the cleaned text, n_removed the substring stage's per-doc audit. */
   def curateV2(docs: DataFrame, embeddings: DataFrame,
-               cfg: Config = Config()): DataFrame =
+               cfg: Config): DataFrame =
     PrefixSum.selectWithinBudget(
       curateV2Survivors(docs, embeddings, cfg),
       "doc_id", "n_tok", cfg.tokenBudget)
@@ -123,7 +123,7 @@ object CorpusPipeline {
     * inserts image dedup here): (doc_id, n_tok, n_removed) of every
     * document that survives URL/exact/substring/quality/fuzzy/semantic. */
   def curateV2Survivors(docs: DataFrame, embeddings: DataFrame,
-                        cfg: Config = Config()): DataFrame = {
+                        cfg: Config): DataFrame = {
     // feeds the removal's anchor AND token scans once
     val exactKept = Materialize(
       exactStage(docs, cfg).select(col("doc_id"), col("text")))
@@ -167,7 +167,7 @@ object CorpusPipeline {
     * keeps the banding volume proportional to what the ladder kept. */
   def curateMultimodal(docs: DataFrame, embeddings: DataFrame,
                        imageHashes: DataFrame,
-                       cfg: Config = Config()): DataFrame = {
+                       cfg: Config): DataFrame = {
     // feeds the pair restriction AND the CC survivor join
     val surv = Materialize(curateV2Survivors(docs, embeddings, cfg))
     val hs = imageHashes

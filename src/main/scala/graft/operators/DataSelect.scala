@@ -62,7 +62,7 @@ object DataSelect {
     * (idCol, n_feat, logw) — docs with no features keep n_feat = 0 and a
     * NULL weight. `target` needs only its text column. */
   def dsirWeights(raw: DataFrame, target: DataFrame, idCol: String,
-                  textCol: String, buckets: Int = 4096): DataFrame =
+                  textCol: String, buckets: Int): DataFrame =
     weightsFromFeatures(
       // read twice: raw bucket counts + scoring
       Materialize(featureBuckets(raw, idCol, textCol, buckets)),
@@ -109,7 +109,7 @@ object DataSelect {
     * sampler is one extra column away; top-k is what hash-oracles).
     * Featureless docs are excluded (no evidence either way). */
   def dsirSelect(raw: DataFrame, target: DataFrame, idCol: String,
-                 textCol: String, k: Int, buckets: Int = 4096): DataFrame =
+                 textCol: String, k: Int, buckets: Int): DataFrame =
     dsirWeights(raw, target, idCol, textCol, buckets)
       .filter(col("n_feat") > 0)
       .orderBy(col("logw").desc, col(idCol))

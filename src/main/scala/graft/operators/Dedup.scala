@@ -180,8 +180,8 @@ object Dedup {
     * key the aggregate on `xxhash64(chunk)` first and re-attach text for
     * the tiny surviving-dup set — same plan shape, 8-byte shuffle keys. */
   def chunkDups(df: DataFrame, idCol: String, textCol: String,
-                chunkChars: Int = 512, overlap: Int = 64,
-                minCount: Int = 2): DataFrame = {
+                chunkChars: Int, overlap: Int,
+                minCount: Int): DataFrame = {
     val ch = TextAnalysis.chunkDocuments(df, idCol, textCol, chunkChars, overlap)
       // the guard lives INSIDE the used expression so it cannot be pruned:
       // a >=2^20-chunk document (~0.5 GB), a negative id, or an id >= 2^43
@@ -240,7 +240,7 @@ object Dedup {
     }
   }
 
-  def shingles(text: Column, n: Int = 3): Column =
+  def shingles(text: Column, n: Int): Column =
     graft.expr.MinHashExpressions.shingle_array(text, n)
 
   /** Exact n-gram Jaccard similarity between two shingle-array columns. */
@@ -265,7 +265,7 @@ object Dedup {
     * the hot path in favor of the codegen twin
     * [[graft.expr.MinHashSignature]]; kept `private[graft]` as the
     * reference implementation MinHashExprSpec property-pins against. */
-  private[graft] def minhashSignatureUdf(k: Int = 64) = {
+  private[graft] def minhashSignatureUdf(k: Int) = {
     val ps = perms(k)
     udf { (shingles: Seq[String]) =>
       val sig = Array.fill(k)(Long.MaxValue)
@@ -301,7 +301,7 @@ object Dedup {
     * degenerate buckets (skew guard) — capped buckets are counted in the
     * `lsh_capped_buckets` accumulator-free metric column of logs. */
   def candidatePairs(buckets: DataFrame, idCol: String,
-                     maxBucket: Int = 1000): DataFrame = {
+                     maxBucket: Int): DataFrame = {
     val sized = buckets.groupBy("band", "bucket")
       .agg(collect_list(col(idCol)).as("ids"))
       .filter(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
@@ -339,7 +339,7 @@ object Dedup {
     * without it the O(shingles × k) signature UDF re-runs per subtree. */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           n: Int = 3, k: Int = 64, bands: Int = 16,
-                          threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
+                          threshold: Double, maxBucket: Int = 1000): DataFrame = {
     val rows = k / bands
     val withSig = Materialize(df.select(col(idCol), shingles(col(textCol), n).as("sh"))
       .withColumn("sig", graft.expr.MinHashExpressions.minhash_signature(col("sh"), k)))
@@ -360,7 +360,7 @@ object Dedup {
     * every later batch (signatures are pure per-doc functions of the text
     * under the fixed permutation seed, so cached frames never go stale). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, k: Int = 64): DataFrame =
+                        n: Int, k: Int): DataFrame =
     df.select(col(idCol), shingles(col(textCol), n).as("sh"))
       .withColumn("sig", graft.expr.MinHashExpressions.minhash_signature(col("sh"), k))
 
@@ -385,8 +385,8 @@ object Dedup {
     * `corpusSigs`/`deltaSigs` come from [[minhashSignatures]] (disjoint id
     * spaces). Output: (idA < idB, exact jaccard ≥ threshold). */
   def incrementalMinhashPairs(corpusSigs: DataFrame, deltaSigs: DataFrame,
-                              idCol: String, k: Int = 64, bands: Int = 16,
-                              threshold: Double = 0.5): DataFrame = {
+                              idCol: String, k: Int, bands: Int,
+                              threshold: Double): DataFrame = {
     val rows = k / bands
     val all = corpusSigs.unionByName(deltaSigs)
     val allB = bandBuckets(all, "sig", idCol, bands, rows)
@@ -492,7 +492,7 @@ object Dedup {
   }
 
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, threshold: Double = 0.5): DataFrame = {
+                        n: Int, threshold: Double): DataFrame = {
     require(threshold > 0, "threshold must be positive for index completeness")
     val withSh = hashedShingleSets(df, idCol, textCol, n)
     val prefix = prefixPostings(withSh, threshold)
@@ -526,7 +526,7 @@ object Dedup {
     * are ordered idA < idB, same contract as [[ngramJaccardPairs]]. */
   def incrementalNgramPairs(corpus: DataFrame, delta: DataFrame,
                             idCol: String, textCol: String,
-                            n: Int = 3, threshold: Double = 0.5): DataFrame =
+                            n: Int, threshold: Double): DataFrame =
     // bare (un-checkpointed) set frames: FromSets materializes the
     // combined index ONCE, and its only other read of the delta frame is
     // the id projection, which column-pruning answers without running
@@ -545,7 +545,7 @@ object Dedup {
     * (only the cheap long-keyed df/prefix derivation re-runs, which the
     * equality gate requires to stay on ONE consistent global order). */
   def hashedShingles(df: DataFrame, idCol: String, textCol: String,
-                     n: Int = 3): DataFrame =
+                     n: Int): DataFrame =
     df.select(col(idCol).as("id"), shingles(col(textCol), n).as("shs"))
       .select(col("id"),
         sort_array(array_distinct(transform(col("shs"), s => xxhash64(s)))).as("sh"))
@@ -624,7 +624,7 @@ object Dedup {
     * modulo 64-bit shingle-hash collisions, same contract as
     * [[ngramJaccardPairs]]. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-                       n: Int = 3, threshold: Double = 0.5): DataFrame = {
+                       n: Int, threshold: Double): DataFrame = {
     require(threshold > 0, "threshold must be positive for index completeness")
     val withSh = hashedShingleSets(df, idCol, textCol, n)
     val probe = prefixPostings(withSh, threshold)
@@ -650,7 +650,7 @@ object Dedup {
   /** Brute-force n-gram Jaccard pairs (reference/oracle path; quadratic —
     * only for validation and small frames). */
   def bruteJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, threshold: Double = 0.5): DataFrame = {
+                        n: Int, threshold: Double): DataFrame = {
     val withSh = df.select(col(idCol), shingles(col(textCol), n).as("sh"))
     val a = withSh.select(col(idCol).as("idA"), col("sh").as("shA"))
     val b = withSh.select(col(idCol).as("idB"), col("sh").as("shB"))
@@ -707,7 +707,7 @@ object Dedup {
     * to the corpus), and the `hamming ≤ maxHamming` cut runs BEFORE the
     * pair-dedup shuffle so only verified near-dups are ever exchanged. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                          maxHamming: Int = 6, maxBucket: Int = 1000): DataFrame = {
+                          maxHamming: Int, maxBucket: Int = 1000): DataFrame = {
     val sigs = withSimhash(df.select(col(idCol), col(textCol)), textCol)
       .select(col(idCol), col("simhash"))
     val widths = Seq(10, 9, 9, 9, 9, 9, 9)
@@ -948,7 +948,7 @@ object Dedup {
     * Delegates candidate generation to the similarity module's hyperplane-LSH
     * buckets when `exact=false`; `exact=true` is the quadratic oracle path. */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                            threshold: Double, exact: Boolean = true): DataFrame = {
+                            threshold: Double, exact: Boolean): DataFrame = {
     val base = df.select(col(idCol), col(vecCol).cast("array<float>").as("v"))
       .withColumn("norm", Similarity.l2norm(col("v")))
     val a = base.select(col(idCol).as("idA"), col("v").as("vA"), col("norm").as("nA"))
@@ -1026,8 +1026,8 @@ object Dedup {
     * Recall < 1 (pairs split across non-probed cells are missed) —
     * measured against the exact oracle in OperatorsSpec. */
   def ivfNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                      threshold: Double, k: Int = 16,
-                      nprobe: Int = 2): DataFrame = {
+                      threshold: Double, k: Int,
+                      nprobe: Int): DataFrame = {
     val model = IvfIndex.train(df, idCol, vecCol, k = k)
     // feeds probes and both verify sides
     val base = Materialize(

@@ -40,7 +40,7 @@ object EntityResolution {
     * record, one per pass. Shared by the batch path and the streaming
     * twin so both sides provably block identically. */
   def blockKeys(records: DataFrame, idCol: String, nameCol: String,
-                blockChars: Int = 4): DataFrame = {
+                blockChars: Int): DataFrame = {
     require(blockChars >= 1, s"blockChars must be >= 1, got $blockChars")
     records.select(col(idCol).as("__id"),
         col(nameCol).cast("string").as("__name"))
@@ -71,7 +71,7 @@ object EntityResolution {
   /** Matched pairs: candidates within `maxDist` edits —
     * (idA, idB, dist). */
   def blockedMatches(records: DataFrame, idCol: String, nameCol: String,
-                     maxDist: Int = 1, blockChars: Int = 4,
+                     maxDist: Int, blockChars: Int = 4,
                      maxBlock: Int = 4096): DataFrame =
     candidatePairs(records, idCol, nameCol, blockChars, maxBlock)
       .withColumn("dist",
@@ -98,7 +98,7 @@ object EntityResolution {
     * cap (the harness block sizes guarantee this; the cap is the
     * at-scale cost bound, not a semantics change on in-cap data). */
   def incrementalMatches(corpusKeyed: DataFrame, deltaKeyed: DataFrame,
-                         maxDist: Int = 1): DataFrame = {
+                         maxDist: Int): DataFrame = {
     val maxBlock = 4096
     // Only keys present in THIS delta can emit pairs this batch, so the
     // cap check is semi-joined down to delta keys first: the block-size

@@ -21,7 +21,7 @@ object FreqSketch {
   private val Depth = 10
   private val Width = 2048
 
-  def cmsSketch(itemCol: Column, depth: Int = Depth, width: Int = Width): Column =
+  def cmsSketch(itemCol: Column, depth: Int, width: Int): Column =
     ColumnBridge.column(CmsSketchAgg(
       ColumnBridge.expression(itemCol), depth, width).toAggregateExpression())
 

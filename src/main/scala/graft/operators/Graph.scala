@@ -49,7 +49,7 @@ object Graph {
     * dedup exchange — the output is identical by definition; passing a
     * frame with duplicate edges under the flag corrupts out-degrees. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 3, checkpointEvery: Int = 5,
+               iters: Int, checkpointEvery: Int = 5,
                edgesDeduped: Boolean = false): DataFrame = {
     require(iters >= 1)
     val damp = 85L
@@ -253,7 +253,7 @@ object Graph {
       .bitwiseAND(lit(4294967295L)) % lit(100L)
 
   def triangleEstimate(edges: DataFrame, srcCol: String, dstCol: String,
-                       pPct: Int = 50): DataFrame = {
+                       pPct: Int): DataFrame = {
     require(pPct > 0 && pPct <= 100, s"pPct must be in (0,100], got $pPct")
     val und = canonicalUndirected(edges, srcCol, dstCol)
     val sampled = und.filter(
@@ -303,7 +303,7 @@ object Graph {
     * internal canonicalize + re-symmetrize + checkpoint reproduces the
     * input exactly, so skipping it is identity, not approximation. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int = 3, checkpointEvery: Int = 5,
+                       iters: Int, checkpointEvery: Int = 5,
                        edgesSymmetricDeduped: Boolean = false): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
 
@@ -614,7 +614,7 @@ object Graph {
     * full exact wedge join per consumer plus the sampled one — measured
     * ~2× the cost of the exact query it gates. */
   def triangleEstimateViolations(edges: DataFrame, srcCol: String,
-                                 dstCol: String, pPct: Int = 50): DataFrame = {
+                                 dstCol: String, pPct: Int): DataFrame = {
     require(pPct > 0 && pPct <= 100, s"pPct must be in (0,100], got $pPct")
     val tris = Materialize(
       triangleRowsOf(canonicalUndirected(edges, srcCol, dstCol)))

@@ -25,7 +25,7 @@ object IvfIndex {
     * L2-normalized, so nearest centroid by dot product == nearest by
     * cosine. */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
-            k: Int = 16): Model = {
+            k: Int): Model = {
     val sample = SampledLloyd.sample(corpus, idCol, vecCol).map(normalize)
     require(sample.length >= k, s"sample ${sample.length} < k=$k")
     Model(SampledLloyd.train(sample, k, nearest, normalize))
@@ -85,15 +85,13 @@ object IvfIndex {
     * cosine rerank inside them. Both sides carry (`vec_id`, `embedding`).
     * Output matches [[Similarity.cosineTopK]]. */
   def topK(queries: DataFrame, corpus: DataFrame, model: Model, k: Int,
-           nprobe: Int = 4): DataFrame = {
+           nprobe: Int): DataFrame = {
     val c = assign(corpus, "embedding", model)
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").cast("array<float>").as("cv"), col("centroid_id"))
       .withColumn("cn", Similarity.l2norm(col("cv")))
     val q = withProbes(
-      queries.select(col("vec_id").as("query_id"),
-        col("embedding").cast("array<float>").as("qv"))
-        .withColumn("qn", Similarity.l2norm(col("qv"))),
+      Similarity.normed(queries, col("vec_id").as("query_id"), "q"),
       "qv", model, nprobe)
     // zero-norm vectors have no defined cosine — exclude them rather than
     // emit null-cosine rows (Spark Divide yields null on a 0 divisor)

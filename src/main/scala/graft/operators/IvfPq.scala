@@ -53,7 +53,7 @@ object IvfPq {
     * pq_code); `corpus` is read only for the short-list re-rank. */
   def topKIndexed(queries: DataFrame, indexed: DataFrame, corpus: DataFrame,
                   ivf: IvfIndex.Model, pq: ProductQuantize.Model, k: Int,
-                  nprobe: Int = 4, shortlist: Int = 32): DataFrame = {
+                  nprobe: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
     val q = IvfIndex.withProbes(
       queries.select(col("vec_id").as("query_id"),
@@ -73,9 +73,7 @@ object IvfPq {
       .select(col("query_id"), col("qv"), col("neighbor_id"))
     // stage 3: exact cosine on the short list only (same HOF arithmetic
     // as IvfIndex.topK / Similarity.cosineTopK, so scores verify exactly)
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").cast("array<float>").as("cv"))
-      .withColumn("cn", Similarity.l2norm(col("cv")))
+    val c = Similarity.normed(corpus, col("vec_id").as("neighbor_id"), "c")
     val rescored = short.join(c, Seq("neighbor_id"))
       .withColumn("qn", Similarity.l2norm(col("qv")))
       .filter(col("qn") > 0 && col("cn") > 0)

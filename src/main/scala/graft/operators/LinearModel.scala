@@ -29,7 +29,7 @@ object LinearModel {
     * not ~0 — the bound carries the λ·max|w| term so the gate stays valid
     * for ridged fits too. */
   final case class Fit(weights: Array[Double], n: Long, grid: Double,
-                       ridge: Double = 0.0) {
+                       ridge: Double) {
     def gradientBound: Double =
       n / grid * (1.0 + weights.iterator.map(math.abs).sum) +
         ridge * weights.iterator.map(math.abs).max

@@ -1050,7 +1050,7 @@ object Multimodal {
     * cross-engine. Non-WAV payloads yield no frames (left to the
     * clip-level surface to flag). */
   def audioFrames(df: DataFrame, idCol: String, payloadCol: String,
-                  frameSize: Int = 16)
+                  frameSize: Int)
                  (implicit spark: SparkSession): DataFrame = {
     require(frameSize > 0, "audioFrames: frameSize must be positive")
     import spark.implicits._
@@ -1278,7 +1278,7 @@ object Multimodal {
     // query at sf0.1). A round-robin repartition of (vid, lo, hi) rows is
     // a few KB per signature and a no-op on any frame already planned at
     // defaultParallelism or wider.
-    val sigs = graft.SparkEntry.spread(
+    val sigs = Skew.spread(
       Materialize(frames.filter(col(loCol).isNotNull && col(hiCol).isNotNull)
         .select(col(vidCol).cast("long").as("vid"),
           col(loCol).cast("long").as("lo"), col(hiCol).cast("long").as("hi"))

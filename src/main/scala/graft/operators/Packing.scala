@@ -61,7 +61,7 @@ object Packing {
     * does for its range buckets; the demo keeps the direct window form the
     * oracle can mirror. */
   def lengthBucketedBatches(df: DataFrame, idCol: String, tokenCol: String,
-                            numBuckets: Int = 8, batchDocs: Int = 32): DataFrame = {
+                            numBuckets: Int, batchDocs: Int): DataFrame = {
     require(numBuckets > 1 && batchDocs > 0)
     import org.apache.spark.sql.expressions.Window
     val probs = (1 until numBuckets).map(_.toDouble / numBuckets)
@@ -207,7 +207,7 @@ object Packing {
     * (doc_id, n_tok, shard, bin, fill_after, oversize) — bin ids are
     * shard-local. */
   def ffdPack(df: DataFrame, idCol: String, tokenCol: String,
-              capacity: Long, shards: Int = 32): DataFrame = {
+              capacity: Long, shards: Int): DataFrame = {
     require(capacity > 0, "capacity must be positive")
     require(shards > 0, "shards must be positive")
     val spark = df.sparkSession

@@ -51,7 +51,7 @@ object ProductQuantize {
   /** Per-sub-block [[SampledLloyd]] k-means (L2, raw space) — the same
     * sample and loop as [[IvfIndex.train]]. Requires dim divisible by m. */
   def train(corpus: DataFrame, idCol: String, vecCol: String,
-            m: Int = 8, k: Int = 16): Model = {
+            m: Int, k: Int): Model = {
     val sample = SampledLloyd.sample(corpus, idCol, vecCol)
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length

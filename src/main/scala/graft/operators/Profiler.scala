@@ -149,7 +149,7 @@ object Profiler {
     * engine-specific, so the harness row is rows-only and driver-gated by
     * [[approxQuantileViolations]]. */
   def approxQuantiles(df: DataFrame, valueCol: String, ps: Seq[Double],
-                      accuracy: Int = 1000): DataFrame = {
+                      accuracy: Int): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0 && p <= 1),
       "approxQuantiles: probabilities must be in [0,1]")
     val v = col(valueCol).cast("double")
@@ -166,7 +166,7 @@ object Profiler {
     * Violations-only output (empty relation when the sketch honors its
     * contract). */
   def approxQuantileViolations(df: DataFrame, valueCol: String,
-      ps: Seq[Double], accuracy: Int = 1000): DataFrame = {
+      ps: Seq[Double], accuracy: Int): DataFrame = {
     val v = col(valueCol).cast("double")
     val vals = df.filter(v.isNotNull).select(v.as("x"))
     val apx = approxQuantiles(df, valueCol, ps, accuracy)
@@ -239,7 +239,7 @@ object Profiler {
   import org.apache.spark.sql.graftbridge.ColumnBridge
 
   /** Sketch-building aggregate: BIGINT values → BINARY sketch. */
-  def hllSketch(valueCol: Column, lgK: Int = 12): Column =
+  def hllSketch(valueCol: Column, lgK: Int): Column =
     ColumnBridge.column(graft.expr.HllSketchAgg(
       ColumnBridge.expression(valueCol), lgK).toAggregateExpression())
 

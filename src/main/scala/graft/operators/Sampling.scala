@@ -81,7 +81,7 @@ object Sampling {
     * naive `orderBy(hash)` would do is avoided — training order only needs
     * to be fixed WITHIN a shard, and shard assignment is already hashed). */
   def shuffleIntoShards(df: DataFrame, idCol: String, numShards: Int,
-                        seed: Long = 0L): DataFrame = {
+                        seed: Long): DataFrame = {
     require(numShards > 0, "numShards must be positive")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("shard")).orderBy(col("__sk"), col(idCol))
@@ -103,7 +103,7 @@ object Sampling {
     * = no val set). The split index lands in `split`. One codegen
     * filter-free projection: no shuffle. */
   def trainValTestSplit(df: DataFrame, idCol: String,
-                        weightsPerMille: Seq[Int], seed: Long = 0L): DataFrame = {
+                        weightsPerMille: Seq[Int], seed: Long): DataFrame = {
     require(weightsPerMille.nonEmpty && weightsPerMille.forall(_ >= 0) &&
       weightsPerMille.sum == 1000,
       "per-mille split weights must be non-negative and sum to 1000")
@@ -172,7 +172,7 @@ object Sampling {
     * orderBy+limit = TakeOrderedAndProject (per-partition heaps, no
     * global sort, no one-partition window). */
   def prioritySample(df: DataFrame, idCol: String, weightCol: String,
-                     k: Int, seed: Long = 0L): DataFrame = {
+                     k: Int, seed: Long): DataFrame = {
     require(k > 0, "k must be positive")
     val u1 = (seededSlot32(col(idCol), seed) + 1).cast("double")
     val q = col(weightCol).cast("double") * lit(4294967296.0) / u1

@@ -22,7 +22,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 object SetSketch {
 
   /** Sketch-building aggregate: BIGINT values → BINARY sketch. */
-  def kmvSketch(valueCol: Column, k: Int = 512): Column =
+  def kmvSketch(valueCol: Column, k: Int): Column =
     ColumnBridge.column(graft.expr.KmvSketchAgg(
       ColumnBridge.expression(valueCol), k).toAggregateExpression())
 
@@ -44,7 +44,7 @@ object SetSketch {
 
   /** One KMV sketch per segment: (segment, __sk). */
   def segmentSketches(df: DataFrame, segCol: String, valueCol: String,
-                      k: Int = 512): DataFrame =
+                      k: Int): DataFrame =
     df.filter(col(valueCol).isNotNull)
       .groupBy(col(segCol).cast("string").as("segment"))
       .agg(kmvSketch(col(valueCol).cast("long"), k).as("__sk"))
@@ -76,7 +76,7 @@ object SetSketch {
   /** Estimated union/intersection/difference/Jaccard for every ordered
     * segment pair (seg_a < seg_b). */
   def pairOverlap(df: DataFrame, segCol: String, valueCol: String,
-                  k: Int = 512): DataFrame =
+                  k: Int): DataFrame =
     pairOverlapFromSketches(segmentSketches(df, segCol, valueCol, k))
 
   /** Exact oracled sibling, same shape. Jaccard in ppm via pure INTEGER
@@ -125,7 +125,7 @@ object SetSketch {
     *     overlap lattice).
     * Violations only; oracle = empty relation. */
   def pairOverlapViolations(df: DataFrame, segCol: String, valueCol: String,
-                            k: Int = 512): DataFrame = {
+                            k: Int): DataFrame = {
     val sigmas = 6.0
     val rse = graft.expr.KmvBuffer.rse(k)
     val est = pairOverlap(df, segCol, valueCol, k)

@@ -36,6 +36,15 @@ object Similarity {
   /** Cosine similarity between two array<float> columns. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
+  /** The one scoring projection of a (`vec_id`, `embedding`) side: the
+    * id as `id`, then `extra`, then the embedding as `array<float>`
+    * named `<side>v` and its L2 norm named `<side>n`. */
+  private[operators] def normed(df: DataFrame, id: Column, side: String,
+                                extra: Column*): DataFrame =
+    df.select((id +: extra :+
+        col("embedding").cast("array<float>").as(s"${side}v")): _*)
+      .withColumn(s"${side}n", l2norm(col(s"${side}v")))
+
   /** Shared exact-scoring core: broadcast the (bounded) projected query
     * frame against the streamed corpus frame, score surviving pairs, rank
     * per query, keep top-k. `q`/`c` must already carry qv/qn resp. cv/cn;
@@ -101,12 +110,8 @@ object Similarity {
     * hash comparison. Self-matches excluded. Both sides carry (`vec_id`,
     * `embedding`), as in every search here. */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<float>").as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").cast("array<float>").as("cv"))
-      .withColumn("cn", l2norm(col("cv")))
+    val q = normed(queries, col("vec_id").as("query_id"), "q")
+    val c = normed(corpus, col("vec_id").as("neighbor_id"), "c")
     exactTopK(q, c, k, lit(true),
       Seq(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("cosine"), 6).as("cosine")))
@@ -170,12 +175,8 @@ object Similarity {
   /** LSH-bucketed approximate top-k: score only bucket-mates. Same output
     * shape as [[cosineTopK]]; recall < 1 by construction, measured in tests. */
   def lshCosineTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<float>").as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").cast("array<float>").as("cv"))
-      .withColumn("cn", l2norm(col("cv")))
+    val q = normed(queries, col("vec_id").as("query_id"), "q")
+    val c = normed(corpus, col("vec_id").as("neighbor_id"), "c")
     val qb = withHyperplaneBands(q.select(col("query_id"), col("qv")), "qv", "query_id")
     val cb = withHyperplaneBands(c.select(col("neighbor_id"), col("cv")), "cv", "neighbor_id")
     // Dedup multi-band collisions on the ID PAIR ALONE, then join the
@@ -235,12 +236,8 @@ object Similarity {
                 topN: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(topN >= k, s"topN ($topN) must be >= k ($k)")
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<float>").as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      col("embedding").cast("array<float>").as("cv"))
-      .withColumn("cn", l2norm(col("cv")))
+    val q = normed(queries, col("vec_id").as("query_id"), "q")
+    val c = normed(corpus, col("vec_id").as("neighbor_id"), "c")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col("neighbor_id"))
       .filter(col("qn") > 0 && col("cn") > 0)
@@ -315,14 +312,10 @@ object Similarity {
     * Both sides carry `label`. Output: (query_id, query_label, rank,
     * neighbor_id, neighbor_label, cosine·6dp). */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("label").as("query_label"),
-      col("embedding").cast("array<float>").as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      col("label").as("neighbor_label"),
-      col("embedding").cast("array<float>").as("cv"))
-      .withColumn("cn", l2norm(col("cv")))
+    val q = normed(queries, col("vec_id").as("query_id"), "q",
+      col("label").as("query_label"))
+    val c = normed(corpus, col("vec_id").as("neighbor_id"), "c",
+      col("label").as("neighbor_label"))
     exactTopK(q, c, k, col("query_label") =!= col("neighbor_label"),
       Seq(col("query_id"), col("query_label"), col("rank"),
         col("neighbor_id"), col("neighbor_label"),
@@ -367,12 +360,8 @@ object Similarity {
     * micro-batches of the corpus under the row-map contract and leave
     * only [[marginMine]] as the bounded epilogue. */
   def bitextScore(src: DataFrame, tgt: DataFrame): DataFrame = {
-    val q = src.select(col("vec_id").cast("long").as("src_id"),
-        col("embedding").cast("array<float>").as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val c = tgt.select(col("vec_id").cast("long").as("tgt_id"),
-        col("embedding").cast("array<float>").as("cv"))
-      .withColumn("cn", l2norm(col("cv")))
+    val q = normed(src, col("vec_id").cast("long").as("src_id"), "q")
+    val c = normed(tgt, col("vec_id").cast("long").as("tgt_id"), "c")
     c.crossJoin(broadcast(q))
       .filter(col("qn") > 0 && col("cn") > 0)
       .withColumn("c_ppm",

@@ -15,6 +15,40 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
+  /** Scale-ADAPTIVE scan spreader (guide §2.5 "one huge unsplittable
+    * file → repartition immediately after the read"): the bench SF dirs
+    * ship each table as ONE parquet file with ONE row group, so every
+    * query's pre-exchange stage plans a SINGLE task regardless of core
+    * count — per-row decode, payload synthesis, tokenization and HOF
+    * chains all ran single-threaded. Round-robin repartition to
+    * `defaultParallelism` (cores locally, cluster width on a real
+    * deployment) restores stage-1 parallelism for the price of one
+    * exchange of the frame's bytes.
+    *
+    * Applied SELECTIVELY at measured per-row-HEAVY stages, not blanket
+    * in `QueryRegistry.t`: an A/B of the blanket form showed multi-stage ladders
+    * (q_curate_multimodal 6.7 → 12.0 s) losing more to ×cores task
+    * scheduling across their ~15 tiny stages than the wide scan gains,
+    * while decode/synthesis stages win big (q_pdf_unicode −80%). Call
+    * it where one row costs real CPU.
+    *
+    * Adaptive, not constant-tuned: the probe fires ONLY when the frame
+    * plans FEWER partitions than the session's parallelism — on a real
+    * multi-row-group / multi-file table (any production layout, any
+    * 100 TB run) the scan is already wide and this is a literal no-op,
+    * so no query pays a corpus-wide reshuffle at scale. The explicit
+    * partition COUNT pins the shuffle's origin as REPARTITION_BY_NUM,
+    * which AQE's small-partition coalescing deliberately leaves alone —
+    * otherwise the kilobyte-scale frame would be coalesced straight
+    * back to one partition. Row-level semantics are unchanged (same
+    * multiset; every consumer is partitioning-invariant by the
+    * engine's oracle contract). */
+  def spread(df: DataFrame): DataFrame = {
+    val want = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions >= want) df
+    else df.repartition(want)
+  }
+
   /** Algebraic aggregate spec: function name, input column, output alias.
     * Supported: sum, count, min, max (the decomposable aggregates — avg
     * callers compose sum/count). */

@@ -88,7 +88,7 @@ object SubstringDedup {
     * run of such windows. The union text of a span longer than k tokens
     * may itself be unique — witnesses can differ window to window. */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                    k: Int = 8, hashKeys: Boolean = false): DataFrame = {
+                    k: Int, hashKeys: Boolean = false): DataFrame = {
     require(k >= 2, s"anchor gram needs k >= 2 tokens, got $k")
     val keyed = anchors(df, idCol, textCol, k, hashKeys)
     val repeated = keyed
@@ -135,7 +135,7 @@ object SubstringDedup {
     * pure per-row HOFs over a bound kept-positions column — no extra
     * shuffle, stays in codegen. */
   def removeRepeatedSpans(df: DataFrame, idCol: String, textCol: String,
-                          k: Int = 8): DataFrame = {
+                          k: Int): DataFrame = {
     require(k >= 2, s"anchor gram needs k >= 2 tokens, got $k")
     val toks = df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("__tk"))
     val keyed = anchors(df, idCol, textCol, k, hashKeys = false)

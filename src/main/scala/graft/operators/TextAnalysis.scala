@@ -100,7 +100,7 @@ object TextAnalysis {
     * partial-overlap-detection analogue of the whole-document fingerprint:
     * index it invertedly (like the shingle index) to find documents that
     * share long passages rather than whole-text similarity. */
-  def winnowingFingerprints(text: Column, k: Int = 8, w: Int = 4): Column = {
+  def winnowingFingerprints(text: Column, k: Int, w: Int): Column = {
     val fp = udf { (s: String) =>
       if (s == null) Seq.empty[Long]
       else {
@@ -218,7 +218,7 @@ object TextAnalysis {
     * `overlap` chars shared between neighbors. Pure codegen (sequence +
     * explode + substr): no UDF, no shuffle, linear in output size. */
   def chunkDocuments(df: DataFrame, idCol: String, textCol: String,
-                     chunkChars: Int = 512, overlap: Int = 64): DataFrame = {
+                     chunkChars: Int, overlap: Int): DataFrame = {
     val stride = chunkChars - overlap
     require(stride > 0, "overlap must be smaller than chunkChars")
     val limit = greatest(length(col(textCol)) - overlap, lit(1))
@@ -562,7 +562,7 @@ object TextAnalysis {
     // already planned at defaultParallelism or wider. Spread BEFORE the
     // tokenize so the split itself runs wide too (raw text crosses the
     // exchange; the token array would be the same bytes).
-    val toks = graft.SparkEntry.spread(df.select(col(idCol), col(textCol)))
+    val toks = Skew.spread(df.select(col(idCol), col(textCol)))
       .select(col(idCol), tk.as("__tk"))
     val tg = toks
       .select(col(idCol), explode(when(size(col("__tk")) >= 3,

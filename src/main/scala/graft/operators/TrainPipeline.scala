@@ -34,8 +34,8 @@ object TrainPipeline {
     * distinct: with one seed the shard hash IS the split hash, coupling
     * shard layout to split membership. */
   def prepare(docs: DataFrame, embeddings: DataFrame,
-              cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
-              capacity: Long = 2048L): DataFrame = {
+              cfg: CorpusPipeline.Config,
+              capacity: Long): DataFrame = {
     val curated = CorpusPipeline.curateV2(docs, embeddings, cfg)
       .select(col("doc_id"), col("n_tok"))
     // consumed by the train branch AND the final join

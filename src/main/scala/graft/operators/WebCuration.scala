@@ -187,7 +187,7 @@ object WebCuration {
     * approx_count_distinct without changing the contract — the flag
     * needs one significant digit, not an exact ledger. */
   def crawlTraps(pages: DataFrame, urlCol: String, fingerprint: Column,
-                 minUrls: Int = 10, maxDiversity: Double = 0.2): DataFrame = {
+                 minUrls: Int, maxDiversity: Double): DataFrame = {
     require(minUrls >= 1, s"minUrls must be >= 1, got $minUrls")
     require(maxDiversity > 0 && maxDiversity <= 1,
       s"maxDiversity must be in (0,1], got $maxDiversity")
@@ -221,8 +221,8 @@ object WebCuration {
     * oracles pin that equality; beyond k the standard KMV error bound
     * applies and the flag needs one significant digit anyway. */
   def crawlTrapsSketch(pages: DataFrame, urlCol: String,
-                       fingerprint: Column, k: Int = 4096, minUrls: Int = 10,
-                       maxDiversity: Double = 0.2): DataFrame =
+                       fingerprint: Column, k: Int, minUrls: Int,
+                       maxDiversity: Double): DataFrame =
     trapLedgerFromSketches(
       trapKeyed(pages, urlCol, fingerprint)
         .groupBy(col("template"))
@@ -269,7 +269,7 @@ object WebCuration {
     * need resolving most. `final_url` is therefore the canonical landing
     * key by construction, ready for url-keyed accounting downstream. */
   def resolveRedirects(df: DataFrame, urlCol: String, statusCol: String,
-                       locationCol: String, maxHops: Int = 4): DataFrame = {
+                       locationCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     import graft.expr.UrlExpressions.url_canonicalize
     val hops = df.filter(isRedirect(col(statusCol)) &&

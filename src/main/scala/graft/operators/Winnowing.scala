@@ -111,7 +111,7 @@ object Winnowing {
   /** Per-document winnowed fingerprints: one row per selected gram —
     * (id, pos, fp_hash). Shuffle-free (narrow UDF + explode). */
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
-                   k: Int = 4, w: Int = 4): DataFrame = {
+                   k: Int, w: Int): DataFrame = {
     val fpUdf = udf { (text: String) => winnow(tokensOf(text), k, w) }
     df.select(col(idCol), explode(fpUdf(col(textCol))).as("__fp"))
       .select(col(idCol), col("__fp._1").as("pos"), col("__fp._2").as("fp_hash"))
@@ -128,8 +128,8 @@ object Winnowing {
     * fingerprints cannot produce false pairs (only reduce recall on
     * passages that ubiquitous), and the oracle applies the same cap. */
   def passageOverlapPairs(df: DataFrame, idCol: String, textCol: String,
-                          k: Int = 4, w: Int = 4, minShared: Int = 2,
-                          maxDocFreq: Int = 50): DataFrame = {
+                          k: Int, w: Int, minShared: Int,
+                          maxDocFreq: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val fp = fingerprints(df, idCol, textCol, k, w)
       .select(col(idCol).as("id"), col("fp_hash")).distinct()
@@ -184,9 +184,9 @@ object Winnowing {
     * the split join adds two broadcastable (id, split) projections derived
     * without any extra scan of the text. */
   def splitLeakagePairs(df: DataFrame, idCol: String, textCol: String,
-                        weightsPerMille: Seq[Int], seed: Long = 0L,
-                        k: Int = 4, w: Int = 4, minShared: Int = 2,
-                        maxDocFreq: Int = 50): DataFrame = {
+                        weightsPerMille: Seq[Int], seed: Long,
+                        k: Int, w: Int, minShared: Int,
+                        maxDocFreq: Int): DataFrame = {
     val split = Sampling.trainValTestSplit(
       df.select(col(idCol)), idCol, weightsPerMille, seed)
     passageOverlapPairs(df, idCol, textCol, k, w, minShared, maxDocFreq)
@@ -201,8 +201,8 @@ object Winnowing {
     * winnowed fingerprint SET — the frame both the exact overlap matrix
     * and its KMV sketch sibling consume. */
   def sourceFingerprints(df: DataFrame, idCol: String, textCol: String,
-                         sourceCol: String, k: Int = 4, w: Int = 4,
-                         maxDocFreq: Int = 50): DataFrame = {
+                         sourceCol: String, k: Int, w: Int,
+                         maxDocFreq: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val fp = fingerprints(df, idCol, textCol, k, w)
       .select(col(idCol).as("id"), col("fp_hash")).distinct()
@@ -215,8 +215,8 @@ object Winnowing {
   }
 
   def sourceOverlapMatrix(df: DataFrame, idCol: String, textCol: String,
-                          sourceCol: String, k: Int = 4, w: Int = 4,
-                          maxDocFreq: Int = 50): DataFrame = {
+                          sourceCol: String, k: Int, w: Int,
+                          maxDocFreq: Int): DataFrame = {
     val srcFp = sourceFingerprints(df, idCol, textCol, sourceCol, k, w,
       maxDocFreq)
     val sizes = srcFp.groupBy(col("src")).agg(count(lit(1)).as("nfp"))

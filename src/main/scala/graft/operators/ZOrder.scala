@@ -128,7 +128,7 @@ object ZOrder {
     *    square locality survives arbitrarily skewed monotone domains
     *    (ZOrderSpec asserts it on an exponentially-skewed fixture). */
   def zorderWrite(df: DataFrame, colA: String, colB: String, path: String,
-                  numFiles: Int = 32, quantizer: String = "linear",
+                  numFiles: Int, quantizer: String = "linear",
                   rankBuckets: Int = 256): Unit =
     curveWrite(df, colA, colB, path, numFiles, quantizer, rankBuckets, zValue)
 
@@ -137,7 +137,7 @@ object ZOrder {
     * key-space squares because consecutive curve positions are adjacent
     * cells (no Morton diagonal jumps across file boundaries). */
   def hilbertWrite(df: DataFrame, colA: String, colB: String, path: String,
-                   numFiles: Int = 32): Unit =
+                   numFiles: Int): Unit =
     curveWrite(df, colA, colB, path, numFiles, "linear", 256,
       hilbertColumn(_, _))
 

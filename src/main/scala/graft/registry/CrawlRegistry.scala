@@ -7,17 +7,310 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import WarcRegistry.{warcFixtureDir, warcHtmlSqlExpr}
 
 /** Crawl query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object CrawlRegistry extends QueryRegistry {
+
+  /** Crawl-trap ledger oracle, shared verbatim by the exact
+    * (q_crawl_traps), sketch (q_crawl_traps_sketch — KMV k=4096 exact
+    * regime), and streaming (q_stream_traps) forms: the three fixture
+    * shapes collapse to three templates per source by construction, so
+    * the ledger rebuilds from per-source counts alone. */
+  private[registry] lazy val crawlTrapsOracleSql: String =
+    """WITH per AS (
+      |  SELECT source, CAST(count(*) AS BIGINT) AS n,
+      |    CAST(count(DISTINCT text) AS BIGINT) AS nt,
+      |    CAST(count(DISTINCT doc_id % 40) AS BIGINT) AS np
+      |  FROM documents GROUP BY source),
+      |t AS (
+      |  SELECT 'https://www.' || source || '.example.com/article/#-#'
+      |      AS template, n AS n_urls, nt AS n_content FROM per
+      |  UNION ALL
+      |  SELECT 'https://www.' || source || '.example.com/cal/#/#/#?sid',
+      |    n, 1 FROM per
+      |  UNION ALL
+      |  SELECT 'https://www.' || source || '.example.com/list?page&ref',
+      |    n, np FROM per)
+      |SELECT template, n_urls, n_content,
+      |  CAST(n_content AS DOUBLE) / n_urls AS diversity,
+      |  (n_urls >= 10 AND CAST(n_content AS DOUBLE) / n_urls <= 0.2)
+      |    AS is_trap
+      |FROM t ORDER BY template""".stripMargin
+
+  /** sitemap-seeds oracle, shared verbatim by the text-path query
+    * (q_sitemap_seeds) and the gzipped/mixed binary path
+    * (q_sitemap_gz — codec transparency is the gate). */
+  private val sitemapSeedsOracleSql: String =
+      """WITH src AS (
+        |  SELECT DISTINCT source, source || '.example.com' AS domain,
+        |    CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 25 AS k
+        |  FROM documents),
+        |ent AS (
+        |  SELECT s.domain,
+        |    'https://www.' || s.domain || '/docs/' ||
+        |      CAST((s.k + ii.i) % 25 AS VARCHAR) AS loc,
+        |    CAST('2026-01-' ||
+        |      lpad(CAST((s.k + ii.i) % 28 + 1 AS VARCHAR), 2, '0') AS DATE)
+        |      AS lastmod
+        |  FROM src s CROSS JOIN (SELECT unnest(range(10)) AS i) ii),
+        |crawled AS (
+        |  SELECT DISTINCT 'https://www.' || source || '.example.com/docs/' ||
+        |    CAST(doc_id % 25 AS VARCHAR) AS loc
+        |  FROM documents),
+        |seeds AS (
+        |  SELECT e.domain, e.loc, e.lastmod FROM ent e
+        |  LEFT JOIN crawled c ON c.loc = e.loc WHERE c.loc IS NULL)
+        |SELECT domain, loc, lastmod,
+        |  CAST(row_number() OVER (PARTITION BY domain
+        |    ORDER BY lastmod DESC, loc ASC) AS BIGINT) AS seed_rank
+        |FROM seeds ORDER BY domain, seed_rank""".stripMargin
+
+  /** The raw sitemap DOCUMENT frame (domain, url, xml): every domain's
+    * /sitemap.xml (even-k: a direct urlset; odd-k: a sitemapindex) plus
+    * the odd-k domains' two child urlsets at their own URLs. */
+  private def sitemapDocs(s: SparkSession, dir: String): DataFrame = {
+    val src = t(s, dir, "documents").select(col("source")).distinct()
+      .withColumn("domain", concat(col("source"), lit(".example.com")))
+      .withColumn("k",
+        regexp_extract(col("source"), "(\\d+)", 1).cast("long") % 25)
+    val roots = src.select(col("domain"),
+      concat(lit("https://www."), col("domain"), lit("/sitemap.xml"))
+        .as("url"),
+      when(col("k") % 2 === 0,
+        operators.Sitemap.syntheticUrlset(col("domain"), col("k"), 0, 10))
+        .otherwise(operators.Sitemap.syntheticIndex(col("domain")))
+        .as("xml"))
+    val children = src.select(col("domain"),
+        concat(lit("https://www."), col("domain"), lit("/sitemap-1.xml"))
+          .as("url"),
+        operators.Sitemap.syntheticUrlset(col("domain"), col("k"), 0, 5)
+          .as("xml"))
+      .unionByName(src.select(col("domain"),
+        concat(lit("https://www."), col("domain"), lit("/sitemap-2.xml"))
+          .as("url"),
+        operators.Sitemap.syntheticUrlset(col("domain"), col("k"), 5, 10)
+          .as("xml")))
+      .filter(regexp_extract(col("domain"), "(\\d+)", 1).cast("long")
+        % 25 % 2 === 1)
+    roots.unionByName(children)
+  }
+
+  /** Binary sitemap fixture: the [[sitemapDocs]] documents as BYTES
+    * with a deterministic codec mix — roots of k%3!=0 domains and every
+    * sitemap-1 child are GZIPPED (so gzipped `<urlset>`, gzipped
+    * `<sitemapindex>`, and gzipped children all carry rows), the rest
+    * plain UTF-8. Same URLs as the text fixture (no `.gz` suffix —
+    * detection must be by magic, the wild serves gzip under plain
+    * names), so the index→child join is unchanged and codec
+    * transparency is the only variable under test. */
+  private def sitemapDocsGz(s: SparkSession, dir: String): DataFrame = {
+    val gz = udf { (xml: String, doGz: Boolean) =>
+      if (!doGz) xml.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      else {
+        val bos = new java.io.ByteArrayOutputStream(xml.length / 2 + 64)
+        val g = new java.util.zip.GZIPOutputStream(bos)
+        g.write(xml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        g.close()
+        bos.toByteArray
+      }
+    }
+    val k = regexp_extract(col("domain"), "(\\d+)", 1).cast("long") % 25
+    val doGz = when(col("url").endsWith("/sitemap.xml"), k % 3 =!= 0)
+      .when(col("url").endsWith("/sitemap-1.xml"), lit(true))
+      .otherwise(lit(false))
+    sitemapDocs(s, dir).select(col("domain"), col("url"),
+      gz(col("xml"), doGz).as("bytes"))
+  }
+
+  /** The fixture's parsed url-entries (domain, kind, loc, lastmod) from
+    * a given set of ROOT sitemap documents: index→child resolution via
+    * the join on the child's own URL. Shared by seeds / recrawl-plan /
+    * the robots-chain query. */
+  private def sitemapEntriesFrom(s: SparkSession, dir: String,
+                                 roots: DataFrame): DataFrame = {
+    val xmls = sitemapDocs(s, dir)
+    val rootEntries = operators.Sitemap.parseEntries(roots, "xml")
+    val childEntries = operators.Sitemap.parseEntries(
+      xmls.join(broadcast(rootEntries.filter(col("kind") === "sitemap")
+        .select(col("loc").as("url"))), Seq("url")), "xml")
+    rootEntries.filter(col("kind") === "url")
+      .select(col("domain"), col("kind"), col("loc"), col("lastmod"),
+        col("changefreq"), col("priority"))
+      .unionByName(childEntries.filter(col("kind") === "url")
+        .select(col("domain"), col("kind"), col("loc"), col("lastmod"),
+          col("changefreq"), col("priority")))
+  }
+
+  /** The sitemap fixture's parsed url-entries (domain, kind, loc,
+    * lastmod), index→child resolution included — shared by the seeds
+    * and recrawl-plan queries: even-k domains publish one direct
+    * urlset, odd-k domains a sitemapindex whose two children are only
+    * reachable through the index join. */
+  private def sitemapUrlEntries(s: SparkSession, dir: String): DataFrame =
+    sitemapEntriesFrom(s, dir, sitemapDocs(s, dir)
+      .filter(col("url").endsWith("/sitemap.xml")))
+
+  /** Head-directive fixture page: a `<base>` on every third document,
+    * a `rel=canonical` onto a shared /docs/c<id%5> target on evens, a
+    * robots `<meta>` rotating noindex+nofollow / nofollow / explicit
+    * index,follow / absent by id%4, and a two-anchor body (one rooted,
+    * one relative) for the gate's link-vote count. */
+  private[registry] def headFixtureHtml: Column = {
+    val host = concat(lit("https://www."), col("source"),
+      lit(".example.com"))
+    concat(
+      lit("<html><head><title>d</title>"),
+      when(pmod(col("doc_id"), lit(3)) === 0,
+        lit("<base href=\"/assets/\">")).otherwise(lit("")),
+      when(pmod(col("doc_id"), lit(2)) === 0,
+        concat(lit("<link rel=\"canonical\" href=\""), host,
+          lit("/docs/c"), pmod(col("doc_id"), lit(5)), lit("\">")))
+        .otherwise(lit("")),
+      when(pmod(col("doc_id"), lit(4)) === 0,
+        lit("<meta name=\"robots\" content=\"noindex, nofollow\">"))
+        .when(pmod(col("doc_id"), lit(4)) === 1,
+          lit("<meta name=\"robots\" content=\"nofollow\">"))
+        .when(pmod(col("doc_id"), lit(4)) === 2,
+          lit("<meta name=\"robots\" content=\"index, follow\">"))
+        .otherwise(lit("")),
+      lit("</head><body><p>Body.</p>" +
+        "<a href=\"/l1\">One</a><a href=\"l2\">Two</a></body></html>"))
+  }
+
+  /** Crawl-trap fixture pages — three URL shapes per document on its
+    * source's host: a unique-content /article/<id>-<id%97>, an
+    * infinite-calendar /cal/2026/<m>/<d>?sid=<hex12> whose content is
+    * ONE boilerplate page per source, and a /list?page=<p>&ref=<id>
+    * paginator cycling 40 content variants. Pure Column ops so the
+    * streaming twin applies it to the document STREAM unchanged. */
+  private[registry] lazy val trapFixturePages: DataFrame => DataFrame = docs => {
+    val host = concat(lit("https://www."), col("source"),
+      lit(".example.com"))
+    docs.select(explode(array(
+        struct(
+          concat(host, lit("/article/"), col("doc_id"), lit("-"),
+            pmod(col("doc_id"), lit(97))).as("url"),
+          xxhash64(col("text")).as("fp")),
+        struct(
+          concat(host, lit("/cal/2026/"),
+            pmod(col("doc_id"), lit(12)) + 1, lit("/"),
+            pmod(col("doc_id"), lit(28)) + 1, lit("?sid="),
+            lower(lpad(hex(col("doc_id")), 12, "0"))).as("url"),
+          xxhash64(concat(col("source"), lit("#cal"))).as("fp")),
+        struct(
+          concat(host, lit("/list?page="), pmod(col("doc_id"), lit(40)),
+            lit("&ref="), col("doc_id")).as("url"),
+          xxhash64(concat(col("source"), lit("#page"),
+            pmod(col("doc_id"), lit(40)))).as("fp")))).as("p"))
+      .select(col("p.url").as("url"), col("p.fp").as("fp"))
+  }
+
+  /** Anchor-aggregation oracle — shared verbatim by the batch query and
+    * its streaming twin (anchor stats are pure aggregates of the link
+    * set, so arrival order cannot matter). */
+  private[registry] lazy val anchorOracleSql: String =
+    """WITH n AS (SELECT count(*) AS n FROM documents),
+      |links AS (
+      |  SELECT doc_id AS src,
+      |    array_to_string(list_slice(string_split(text, ' '), 1, 3), ' ') AS anchor,
+      |    (doc_id * 7 + j * 11) % n.n AS dst
+      |  FROM documents, n, (SELECT unnest([0, 1, 2]) AS j)
+      |  WHERE (doc_id * 7 + j * 11) % n.n <> doc_id),
+      |freqs AS (
+      |  SELECT dst, anchor, CAST(count(*) AS BIGINT) AS freq,
+      |    CAST(count(DISTINCT src) AS BIGINT) AS n_srcs
+      |  FROM links GROUP BY dst, anchor),
+      |ranked AS (
+      |  SELECT dst, anchor, freq, n_srcs,
+      |    CAST(row_number() OVER (PARTITION BY dst
+      |      ORDER BY freq DESC, anchor ASC) AS BIGINT) AS rank,
+      |    CAST(sum(freq) OVER (PARTITION BY dst) AS BIGINT) AS n_inlinks
+      |  FROM freqs)
+      |SELECT dst, rank, anchor, freq, n_srcs, n_inlinks
+      |FROM ranked WHERE rank <= 2
+      |ORDER BY dst, rank""".stripMargin
+
+  /** feed-seeds oracle — shared verbatim by the batch discovery query
+    * (q_feed_seeds) and its bounded streaming twin (q_stream_seeds):
+    * the per-batch anti-join is stream-static and the seed rank is a
+    * pure window over the accumulated survivors, so arrival order
+    * cannot matter. */
+  private[registry] lazy val feedSeedsOracleSql: String =
+    """WITH src AS (
+      |  SELECT DISTINCT source, source || '.example.com' AS domain,
+      |    CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 25 AS k
+      |  FROM documents),
+      |ent AS (
+      |  SELECT s.source, s.domain,
+      |    CASE WHEN s.k % 2 = 0 THEN 'rss' ELSE 'atom' END AS feed_kind,
+      |    'https://www.' || s.domain || '/docs/' ||
+      |      CAST((s.k + ii.i) % 25 AS VARCHAR) AS loc,
+      |    CAST('2026-03-' ||
+      |      lpad(CAST((s.k + ii.i) % 28 + 1 AS VARCHAR), 2, '0') AS DATE)
+      |      AS lastmod
+      |  FROM src s CROSS JOIN (SELECT unnest(range(6)) AS i) ii),
+      |crawled AS (
+      |  SELECT DISTINCT 'https://www.' || source || '.example.com/docs/' ||
+      |    CAST(doc_id % 25 AS VARCHAR) AS loc
+      |  FROM documents),
+      |seeds AS (
+      |  SELECT e.domain, e.feed_kind, e.loc, e.lastmod FROM ent e
+      |  LEFT JOIN crawled c ON c.loc = e.loc WHERE c.loc IS NULL)
+      |SELECT domain, feed_kind, loc, lastmod,
+      |  CAST(row_number() OVER (PARTITION BY domain
+      |    ORDER BY lastmod DESC, loc ASC) AS BIGINT) AS seed_rank
+      |FROM seeds ORDER BY domain, seed_rank""".stripMargin
+
+  /** robots-gate oracle — shared verbatim by the batch gate
+    * (q_robots_gate) and its bounded streaming twin: the graftbot
+    * group's rules rebuilt from the template, longest-prefix/Allow-tie
+    * winner via lexicographic struct-max per URL. */
+  private[registry] lazy val robotsGateOracleSql: String =
+    """WITH src AS (
+      |  SELECT DISTINCT source, source || '.example.com' AS domain,
+      |    CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT) % 25 AS k
+      |  FROM documents),
+      |rules AS (
+      |  SELECT domain, r.rtype, replace(r.value, '<K>', CAST(k AS VARCHAR)) AS rule_path
+      |  FROM src, UNNEST([
+      |    {'rtype': 'allow', 'value': '/docs/'},
+      |    {'rtype': 'disallow', 'value': '/docs/<K>/'},
+      |    {'rtype': 'disallow', 'value': '/tmp/'}
+      |  ]) AS t(r)
+      |  UNION ALL
+      |  SELECT domain, 'disallow', '/' FROM src WHERE k % 5 = 0),
+      |urls AS (
+      |  SELECT doc_id,
+      |    'https://www.' || source || '.example.com/docs/' ||
+      |      CAST(doc_id % 25 AS VARCHAR) || '/?utm_source=' || lang AS url,
+      |    source || '.example.com' AS domain,
+      |    '/docs/' || CAST(doc_id % 25 AS VARCHAR) || '/?utm_source=' || lang AS path
+      |  FROM documents
+      |  UNION ALL
+      |  SELECT -1 - CAST(regexp_extract(source, '(\d+)', 1) AS BIGINT),
+      |    'https://www.' || source || '.example.com', domain, '/'
+      |  FROM src),
+      |won AS (
+      |  SELECT u.doc_id, u.url, u.domain, u.path,
+      |    max(CASE WHEN starts_with(u.path, r.rule_path) THEN
+      |      {'l': strlen(r.rule_path), 'a': CASE WHEN r.rtype = 'allow' THEN 1 ELSE 0 END,
+      |       'p': r.rule_path, 't': r.rtype} END) AS win
+      |  FROM urls u LEFT JOIN rules r USING (domain)
+      |  GROUP BY u.doc_id, u.url, u.domain, u.path)
+      |SELECT doc_id, url, domain, path,
+      |  coalesce(win.t <> 'disallow', TRUE) AS allowed,
+      |  win.p AS matched_path,
+      |  CASE WHEN win IS NOT NULL THEN win.t = 'allow' END AS matched_allow
+      |FROM won ORDER BY doc_id""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -7,17 +7,219 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import graft.operators.Skew.spread
+import CrawlRegistry.headFixtureHtml
+import MultimodalRegistry.phashCteSql
+import SimilarityRegistry.builtinCosine
+import TrainPrepRegistry.corpusLadderCoreCtes
 
 /** Dedup query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object DedupRegistry extends QueryRegistry {
+
+  /** Entity-resolution fixture: parts < 300 as clean records plus one
+    * deliberately corrupted twin each (id + 100000) — one character
+    * replaced by '#' at a key-derived position that alternates between
+    * the first three and the last three characters, so BOTH blocking
+    * passes get exercised while the two-pass completeness bound
+    * (EntityResolution object doc) provably covers every planted edit:
+    * the corruption never lands on the one central position where the
+    * length-7 windows overlap. The oracle replays the same synthesis. */
+  private[registry] def erRecords(s: SparkSession, dir: String): DataFrame = {
+    val p = t(s, dir, "part").filter(col("p_partkey") < 300)
+      .select(col("p_partkey"), col("p_name"))
+    val pos = when(pmod(col("p_partkey"), lit(2)) === 0,
+        lit(1) + pmod(col("p_partkey"), lit(3)))
+      .otherwise(length(col("p_name")) - pmod(col("p_partkey"), lit(3)))
+      .cast("int")
+    val clean = p.select(col("p_partkey").cast("long").as("rec_id"),
+      col("p_name").as("name"))
+    val dirty = p.select((col("p_partkey") + 100000L).cast("long").as("rec_id"),
+      concat(col("p_name").substr(lit(1), pos - 1), lit("#"),
+        col("p_name").substr(pos + 1, lit(64))).as("name"))
+    clean.unionAll(dirty)
+  }
+
+  // ---- independent recompute paths for the *_verify property queries ----
+  // Each approximate query (q_dedup_minhash/_simhash/_embedding,
+  // q_sim_topk_ivf) has a sibling that re-derives every emitted pair's
+  // EXACT similarity through a different implementation (pure built-in
+  // expression HOFs, no graft UDF/expression) and emits only violations —
+  // candidates are approximate, the verification property is exact. The
+  // DuckDB oracle for such a query is the same-schema EMPTY relation, so a
+  // single below-threshold or mis-scored emitted pair turns the driver's
+  // row-count compare red.
+  /** Tokenization for the jaccard recompute — same rule as
+    * [[Dedup.tokens]]: lower/trim/whitespace split. Callers must BIND this
+    * to a column (`.withColumn`) before feeding [[builtinNgramJaccard]]:
+    * a HOF lambda over the raw split expression re-tokenizes the text for
+    * every element access — the O(tokens²) trap measured and fixed in
+    * bigramLogProb (12.9s → 1.8s). The alias survives CollapseProject
+    * because it is referenced more than once.
+    *
+    * The empty-token filter inside [[Dedup.cleanTokens]] is load-bearing
+    * here: without it, a doc with leading/trailing tab/newline grows a
+    * stray "" token, shifts every n-gram, and raises a FALSE verify
+    * violation (see cleanTokens' scaladoc for the Spark-vs-Java split
+    * semantics). */
+  private def builtinTokens(text: Column): Column = Dedup.cleanTokens(text)
+
+  /** Word n-gram jaccard over BOUND token-array columns with built-ins
+    * only (sequence/slice/array_join/array_distinct/array_intersect/
+    * array_union) — independent of [[Dedup.shingles]]'s UDF and of the
+    * hashed-set verify path, but the same semantics: docs shorter than n
+    * collapse to one whole-text shingle. */
+  private def builtinNgramJaccard(toksA: Column, toksB: Column, n: Int): Column = {
+    def grams(toks: Column): Column =
+      when(size(toks) < n, array(array_join(toks, " ")))
+        .otherwise(array_distinct(transform(
+          sequence(lit(0), size(toks) - n),
+          i => array_join(slice(toks, i + 1, lit(n)), " "))))
+    val (ga, gb) = (grams(toksA), grams(toksB))
+    size(array_intersect(ga, gb)).cast("double") /
+      size(array_union(ga, gb)).cast("double")
+  }
+
+  /** Brute-force entity resolution replayed in SQL — all-pairs edit
+    * distance over the synthesized records, then min-label propagation
+    * to a fixpoint. Shared VERBATIM by the batch query and its
+    * streaming twin (stream ≡ batch exactly). */
+  private[registry] lazy val erEntitiesOracleSql: String =
+    """WITH RECURSIVE recs AS (
+      |  SELECT CAST(p_partkey AS BIGINT) AS rec_id, p_name AS name
+      |  FROM part WHERE p_partkey < 300
+      |  UNION ALL
+      |  SELECT CAST(p_partkey + 100000 AS BIGINT),
+      |    substr(p_name, 1, pos - 1) || '#' || substr(p_name, pos + 1)
+      |  FROM (SELECT p_partkey, p_name,
+      |      CASE WHEN p_partkey % 2 = 0 THEN 1 + (p_partkey % 3)
+      |        ELSE length(p_name) - (p_partkey % 3) END AS pos
+      |    FROM part WHERE p_partkey < 300) c),
+      |pairs AS (
+      |  SELECT a.rec_id AS idA, b.rec_id AS idB
+      |  FROM recs a JOIN recs b ON a.rec_id < b.rec_id
+      |  WHERE levenshtein(a.name, b.name) <= 1),
+      |edges AS (SELECT idA AS src, idB AS dst FROM pairs
+      |  UNION ALL SELECT idB AS src, idA AS dst FROM pairs),
+      |cc(id, label) AS (
+      |  SELECT rec_id, rec_id FROM recs
+      |  UNION
+      |  SELECT e.dst, cc.label FROM edges e JOIN cc ON cc.id = e.src
+      |)
+      |SELECT id AS rec_id, CAST(MIN(label) AS BIGINT) AS entity_id,
+      |  (MIN(label) = id) AS canonical
+      |FROM cc GROUP BY id ORDER BY rec_id""".stripMargin
+
+  /** Multimodal-curation oracle: the full text ladder
+    * ([[corpusLadderCoreCtes]]) + the pHash synthesis
+    * ([[phashCteSql]]'s body) + the image near-dup stage over the
+    * ladder's survivors (brute hamming pairs — the oracle's quadratic
+    * sibling of the banded join) + the budget window over what remains.
+    * `lazy`: [[phashCteSql]] is declared later in this object, and a
+    * strict val here would read it as null during object init. */
+  private lazy val curateMultimodalOracleSql: String =
+    corpusLadderCoreCtes + ",\n" +
+      phashCteSql.stripPrefix("WITH ") + """,
+        |ihs AS (
+        |  SELECT p.media_id AS doc_id, p.phash
+        |  FROM ph p JOIN ssurv s ON s.doc_id = p.media_id),
+        |ipairs AS (
+        |  SELECT a.doc_id AS idA, b.doc_id AS idB FROM ihs a JOIN ihs b
+        |  ON a.doc_id < b.doc_id
+        |  WHERE bit_count(xor(a.phash, b.phash)) <= 6),
+        |iedges AS (SELECT idA AS src, idB AS dst FROM ipairs
+        |  UNION ALL SELECT idB, idA FROM ipairs),
+        |icc(id, label) AS (
+        |  SELECT doc_id, doc_id FROM ssurv
+        |  UNION
+        |  SELECT e.dst, icc.label FROM iedges e JOIN icc ON icc.id = e.src),
+        |isurv AS (
+        |  SELECT x.doc_id, x.n_tok, x.n_removed FROM ssurv x
+        |  JOIN (SELECT id, MIN(label) AS lab FROM icc GROUP BY id) m2
+        |    ON m2.id = x.doc_id AND m2.lab = x.doc_id),
+        |icum AS (SELECT doc_id, n_tok, n_removed,
+        |  SUM(n_tok) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM isurv)
+        |SELECT doc_id, n_tok, n_removed FROM icum WHERE cum <= 10000
+        |ORDER BY doc_id""".stripMargin
+
+  private val substringSpansOracleSql: String =
+    """WITH toks AS (
+        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS tk
+        |  FROM documents),
+        |grams0 AS (
+        |  SELECT doc_id, tk, UNNEST(range(1, len(tk) - 8 + 2)) AS i
+        |  FROM toks WHERE len(tk) >= 8),
+        |grams AS (
+        |  SELECT doc_id, i - 1 AS pos, array_to_string(tk[i:i+7], ' ') AS gram FROM grams0),
+        |rep AS (SELECT gram FROM grams GROUP BY gram HAVING COUNT(*) >= 2),
+        |marked AS (SELECT g.doc_id, g.pos FROM grams g JOIN rep USING (gram)),
+        |isl AS (
+        |  SELECT doc_id, pos,
+        |    SUM(CASE WHEN prev IS NULL OR pos > prev + 1 THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        |  FROM (SELECT doc_id, pos, LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev FROM marked) z)
+        |SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS start_tok,
+        |  CAST(MAX(pos) + 8 - 1 AS BIGINT) AS end_tok,
+        |  CAST(MAX(pos) + 8 - MIN(pos) AS BIGINT) AS span_tokens
+        |FROM isl GROUP BY doc_id, island
+        |ORDER BY doc_id, start_tok""".stripMargin
+
+  /** Delta-touching ngram-jaccard pair slice — shared verbatim by the
+    * in-memory incremental path (q_dedup_incremental) and the
+    * persisted-index twin (q_dedup_incremental_indexed). */
+  private val incrementalNgramOracleSql: String =
+    """WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents),
+      |sh AS (
+      |  SELECT DISTINCT doc_id, list_extract(tk, i) || ' ' || list_extract(tk, i+1) || ' ' || list_extract(tk, i+2) AS s
+      |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk)-1)) AS i) r
+      |  WHERE len(tk) >= 3
+      |  UNION
+      |  SELECT DISTINCT doc_id, array_to_string(tk, ' ') AS s FROM toks WHERE len(tk) < 3
+      |),
+      |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      |common AS (
+      |  SELECT x.doc_id AS idA, y.doc_id AS idB, count(*) AS c
+      |  FROM sh x JOIN sh y USING (s) WHERE x.doc_id < y.doc_id
+      |  GROUP BY 1, 2)
+      |SELECT idA, idB, ROUND(CAST(c AS DOUBLE) / (na.n_sh + nb.n_sh - c), 6) AS jaccard
+      |FROM common
+      |JOIN sizes na ON na.doc_id = idA
+      |JOIN sizes nb ON nb.doc_id = idB
+      |WHERE CAST(c AS DOUBLE) / (na.n_sh + nb.n_sh - c) >= 0.2
+      |  AND (idA % 10 = 9 OR idB % 10 = 9)
+      |ORDER BY idA, idB""".stripMargin
+
+  /** Exact trigram-jaccard pairs over the WHOLE corpus (threshold 0.2) —
+    * q_dedup_ngram's oracle, shared verbatim by q_dedup_minhash (whose
+    * banded pair set provably equals it on this fixture). */
+  private val incrementalNgramAllPairsSql: String =
+    """WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents),
+      |sh AS (
+      |  SELECT DISTINCT doc_id, list_extract(tk, i) || ' ' || list_extract(tk, i+1) || ' ' || list_extract(tk, i+2) AS s
+      |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk)-1)) AS i) r
+      |  WHERE len(tk) >= 3
+      |  UNION
+      |  SELECT DISTINCT doc_id, array_to_string(tk, ' ') AS s FROM toks WHERE len(tk) < 3
+      |),
+      |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+      |common AS (
+      |  SELECT x.doc_id AS idA, y.doc_id AS idB, count(*) AS c
+      |  FROM sh x JOIN sh y USING (s) WHERE x.doc_id < y.doc_id
+      |  GROUP BY 1, 2)
+      |SELECT idA, idB, ROUND(CAST(c AS DOUBLE) / (na.n_sh + nb.n_sh - c), 6) AS jaccard
+      |FROM common
+      |JOIN sizes na ON na.doc_id = idA
+      |JOIN sizes nb ON nb.doc_id = idB
+      |WHERE CAST(c AS DOUBLE) / (na.n_sh + nb.n_sh - c) >= 0.2
+      |ORDER BY idA, idB""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -693,26 +895,7 @@ private[graft] object DedupRegistry extends QueryRegistry {
         |FROM final ORDER BY doc_id""".stripMargin,
 
 
-    "q_dedup_ngram" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS tk FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, list_extract(tk, i) || ' ' || list_extract(tk, i+1) || ' ' || list_extract(tk, i+2) AS s
-        |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk)-1)) AS i) r
-        |  WHERE len(tk) >= 3
-        |  UNION
-        |  SELECT DISTINCT doc_id, array_to_string(tk, ' ') AS s FROM toks WHERE len(tk) < 3
-        |),
-        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-        |common AS (
-        |  SELECT x.doc_id AS idA, y.doc_id AS idB, count(*) AS c
-        |  FROM sh x JOIN sh y USING (s) WHERE x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT idA, idB, ROUND(CAST(c AS DOUBLE) / (na.n_sh + nb.n_sh - c), 6) AS jaccard
-        |FROM common
-        |JOIN sizes na ON na.doc_id = idA
-        |JOIN sizes nb ON nb.doc_id = idB
-        |WHERE CAST(c AS DOUBLE) / (na.n_sh + nb.n_sh - c) >= 0.2
-        |ORDER BY idA, idB""".stripMargin,
+    "q_dedup_ngram" -> incrementalNgramAllPairsSql,
 
 
     // Containment: same shingle derivation as q_dedup_ngram, but the pair

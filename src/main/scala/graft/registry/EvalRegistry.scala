@@ -7,17 +7,36 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
 
 /** Eval query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object EvalRegistry extends QueryRegistry {
+
+  /** Shared retrieval-eval fixture: the %25==7 vectors query the rest of
+    * the embeddings via exact cosine top-10; graded relevance is label
+    * proximity (3 − |Δlabel|, clamped at 0). Feeds both the nDCG and the
+    * binary rank-metric queries so the two metric families provably
+    * score the SAME ranking. */
+  private def retrievalEvalRanked(s: SparkSession, dir: String): DataFrame = {
+    val emb = t(s, dir, "embeddings")
+    val isQ = pmod(col("vec_id"), lit(25)) === 7
+    val qLab = emb.filter(isQ).select(col("vec_id").as("query"),
+      col("label").cast("long").as("__ql"))
+    val cLab = emb.filter(!isQ).select(col("vec_id").as("neighbor_id"),
+      col("label").cast("long").as("__cl"))
+    Similarity.cosineTopK(emb.filter(isQ), emb.filter(!isQ), k = 10)
+      .select(col("query_id").as("query"), col("rank"), col("neighbor_id"))
+      .join(broadcast(qLab), "query").join(broadcast(cLab), "neighbor_id")
+      .withColumn("rel",
+        greatest(lit(0L), lit(3L) - abs(col("__ql") - col("__cl"))))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

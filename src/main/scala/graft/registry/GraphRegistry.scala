@@ -7,17 +7,56 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
 
 /** Graph query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object GraphRegistry extends QueryRegistry {
+
+  /** k-core (k = 30) peel replayed by bounded unroll: alive₀ = every
+    * co-purchase node; round i removes alive nodes with fewer than k
+    * alive neighbors; survivors after the last unrolled round are the
+    * core (round −1). Six rounds is 6× the fixture's measured depth; a
+    * deeper graph mislabels survivors and FAILS the hash — loud, never a
+    * silent pass. */
+  private lazy val kcoreOracleSql: String = {
+    val rounds = 6
+    val sb = new StringBuilder(4096)
+    sb.append(
+      """WITH pe AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem),
+        |co AS (SELECT DISTINCT x.p AS u, y.p AS v
+        |  FROM pe x JOIN pe y ON x.ok = y.ok AND x.p < y.p),
+        |adj AS (SELECT u AS a, v AS b FROM co UNION ALL SELECT v AS a, u AS b FROM co),
+        |alive0 AS (SELECT DISTINCT a FROM adj),
+        |""".stripMargin)
+    for (i <- 0 until rounds) {
+      sb.append(
+        s"""deg$i AS (
+           |  SELECT adj.a AS a, count(*) AS d FROM adj
+           |  JOIN alive$i x ON adj.a = x.a
+           |  JOIN alive$i y ON adj.b = y.a
+           |  GROUP BY adj.a),
+           |alive${i + 1} AS (SELECT a FROM deg$i WHERE d >= 30),
+           |rem$i AS (SELECT a FROM alive$i EXCEPT SELECT a FROM alive${i + 1}),
+           |""".stripMargin)
+    }
+    val removed = (0 until rounds)
+      .map(i => s"SELECT a, CAST($i AS INTEGER) AS round FROM rem$i")
+      .mkString("\n  UNION ALL ")
+    sb.append(
+      s"""lastd AS (SELECT 1)
+         |SELECT a AS node, round FROM (
+         |  $removed
+         |  UNION ALL SELECT a, CAST(-1 AS INTEGER) AS round FROM alive$rounds
+         |) ORDER BY node""".stripMargin)
+    sb.toString
+  }
 
   /** The part co-purchase edge frame (canonical src < dst), built ONCE
     * per (session, dir) and materialized: FIVE queries — the

@@ -7,17 +7,488 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import graft.operators.Skew.spread
+import CrawlRegistry.headFixtureHtml
+import TextRegistry.altFixtureHtml
 
 /** Multimodal query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object MultimodalRegistry extends QueryRegistry {
+
+  /** Header-parsed features of each document's synthetic media payload,
+    * as long columns — the one projection q_multimodal_features and its
+    * streaming twin share. */
+  private[registry] def syntheticMediaFeatures(docs: DataFrame): DataFrame = {
+    implicit val sp: SparkSession = docs.sparkSession
+    operators.Multimodal.extractFeatures(
+        operators.Multimodal.syntheticMediaRecords(docs, "doc_id")).toDF()
+      .select(col("media_id"),
+        col("n_bytes").cast("long").as("n_bytes"),
+        col("width").cast("long").as("width"),
+        col("height").cast("long").as("height"),
+        col("channels").cast("long").as("channels"),
+        size(col("frame_offsets")).cast("long").as("n_frames"))
+  }
+
+  /** PDF-extraction oracle, shared verbatim by the direct decode
+    * (q_pdf_extract) and the decode-out-of-the-WARC chain (q_warc_pdf):
+    * the synthetic page lays `text` out 8 words per line, so extraction
+    * must return exactly that regrouping — rebuilt here from the words
+    * alone (uncompressed and FlateDecode streams must land identically,
+    * and the TJ kerning split must be invisible). */
+  private[registry] lazy val pdfExtractOracleSql: String =
+    """WITH w AS (
+      |  SELECT doc_id, i - 1 AS wi, lst[i] AS w
+      |  FROM (SELECT doc_id,
+      |          list_filter(string_split(text, ' '), x -> x <> '') AS lst
+      |        FROM documents),
+      |       LATERAL (SELECT unnest(range(1, len(lst) + 1)) AS i) r),
+      |lines AS (
+      |  SELECT doc_id, wi // 8 AS g, string_agg(w, ' ' ORDER BY wi) AS line
+      |  FROM w GROUP BY doc_id, wi // 8)
+      |SELECT doc_id, string_agg(line, chr(10) ORDER BY g) AS extracted
+      |FROM lines GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
+  /** html-links oracle, shared verbatim by the batch extraction
+    * and its streaming twin (per-row purity => stream = batch). */
+  private[registry] lazy val htmlLinksOracleSql: String =
+        """WITH u AS (
+      |  SELECT doc_id, source,
+      |    'https://www.' || source || '.example.com' AS host,
+      |    CAST(doc_id % 25 AS VARCHAR) AS slot,
+      |    CAST(doc_id AS VARCHAR) AS id,
+      |    CAST(doc_id % 7 AS VARCHAR) AS m7,
+      |    CAST(doc_id % 5 AS VARCHAR) AS m5,
+      |    CAST(doc_id % 4 AS VARCHAR) AS m4,
+      |    CAST(doc_id % 3 AS VARCHAR) AS m3,
+      |    CAST(doc_id % 6 AS VARCHAR) AS m6,
+      |    CAST(doc_id % 2 AS VARCHAR) AS m2
+      |  FROM documents),
+      |l AS (
+      |  SELECT doc_id, 0 AS idx, host || '/article/' || id AS href,
+      |    host || '/article/' || id AS resolved,
+      |    'Read more' AS anchor, FALSE AS nofollow FROM u
+      |  UNION ALL SELECT doc_id, 1, 'sub/page-' || m7,
+      |    host || '/docs/' || slot || '/sub/page-' || m7, 'Sub page',
+      |    FALSE FROM u
+      |  UNION ALL SELECT doc_id, 2, '../up-' || m5,
+      |    host || '/docs/up-' || m5, 'Up one', FALSE FROM u
+      |  UNION ALL SELECT doc_id, 3, '/top-' || m3, host || '/top-' || m3,
+      |    'Top', FALSE FROM u
+      |  UNION ALL SELECT doc_id, 4,
+      |    '//cdn.' || source || '.example.com/lib-' || m4,
+      |    'https://cdn.' || source || '.example.com/lib-' || m4, 'CDN',
+      |    FALSE FROM u
+      |  UNION ALL SELECT doc_id, 5, '?page=' || m6,
+      |    host || '/docs/' || slot || '/?page=' || m6, 'Next', FALSE FROM u
+      |  UNION ALL SELECT doc_id, 6, '#sec',
+      |    host || '/docs/' || slot || '/', 'Same page', FALSE FROM u
+      |  UNION ALL SELECT doc_id, 7,
+      |    'mailto:info@' || source || '.example.com',
+      |    'mailto:info@' || source || '.example.com', 'Mail', FALSE FROM u
+      |  UNION ALL SELECT doc_id, 8, '/out-' || m2, host || '/out-' || m2,
+      |    'Ad & out', TRUE FROM u)
+      |SELECT doc_id, CAST(idx AS BIGINT) AS idx, href, resolved, anchor,
+      |  nofollow
+      |FROM l ORDER BY doc_id, idx""".stripMargin
+
+  /** image-text-pairs oracle, shared verbatim by the batch extraction
+    * (q_image_text_pairs) and its streaming twin: the three fixture
+    * images rebuilt per document, with the figure src routed through
+    * the /media/ base on every third document. The trim() mirrors the
+    * scanner's whitespace normalization when a document's first-3-words
+    * slice comes back empty. */
+  private[registry] lazy val htmlImagePairsOracleSql: String =
+        """WITH u AS (
+      |  SELECT doc_id, source,
+      |    'https://www.' || source || '.example.com' AS host,
+      |    CAST(doc_id % 25 AS VARCHAR) AS slot,
+      |    CAST(doc_id AS VARCHAR) AS id,
+      |    array_to_string(list_slice(
+      |      list_filter(string_split(text, ' '), x -> x <> ''), 1, 3), ' ')
+      |      AS w3
+      |  FROM documents),
+      |l AS (
+      |  SELECT doc_id, 0 AS idx, 'img/' || id || '.png' AS src,
+      |    CASE WHEN doc_id % 3 = 0
+      |      THEN host || '/media/img/' || id || '.png'
+      |      ELSE host || '/docs/' || slot || '/img/' || id || '.png'
+      |      END AS resolved,
+      |    'fig-' || CAST(doc_id % 13 AS VARCHAR) AS alt,
+      |    't' || CAST(doc_id % 7 AS VARCHAR) AS title,
+      |    trim('Figure ' || slot || ': ' || w3) AS caption
+      |  FROM u
+      |  UNION ALL SELECT doc_id, 1,
+      |    '/abs/' || CAST(doc_id % 9 AS VARCHAR) || '.jpg',
+      |    host || '/abs/' || CAST(doc_id % 9 AS VARCHAR) || '.jpg',
+      |    'inline-' || CAST(doc_id % 5 AS VARCHAR) || ' & co', '',
+      |    'Context before context after.' FROM u
+      |  UNION ALL SELECT doc_id, 2,
+      |    '//cdn.' || source || '.example.com/c' ||
+      |      CAST(doc_id % 4 AS VARCHAR) || '.webp',
+      |    'https://cdn.' || source || '.example.com/c' ||
+      |      CAST(doc_id % 4 AS VARCHAR) || '.webp',
+      |    '', '', '' FROM u)
+      |SELECT doc_id, CAST(idx AS BIGINT) AS idx, src, resolved, alt,
+      |  title, caption
+      |FROM l ORDER BY doc_id, idx""".stripMargin
+
+  /** html-markdown oracle, shared verbatim by the batch rendering and
+    * its streaming twin: the rendered string rebuilt character by
+    * character. */
+  private[registry] lazy val htmlMarkdownOracleSql: String =
+        """WITH u AS (
+      |  SELECT doc_id, CAST(doc_id AS VARCHAR) AS id,
+      |    array_to_string(list_slice(
+      |      list_filter(string_split(text, ' '), x -> x <> ''), 1, 2),
+      |      ' ') AS w2,
+      |    array_to_string(list_slice(
+      |      list_filter(string_split(text, ' '), x -> x <> ''), 1, 3),
+      |      ' ') AS w3
+      |  FROM documents)
+      |SELECT doc_id,
+      |  '# Doc ' || id || chr(10) || chr(10) ||
+      |  'Intro **' || w2 || '** and [link ' ||
+      |    CAST(doc_id % 5 AS VARCHAR) || '](/l/' ||
+      |    CAST(doc_id % 7 AS VARCHAR) || ').' || chr(10) || chr(10) ||
+      |  '- item ' || CAST(doc_id % 3 AS VARCHAR) || chr(10) || chr(10) ||
+      |  '- item b' || chr(10) || chr(10) ||
+      |  '> note ' || w3 || chr(10) || chr(10) ||
+      |  '![pic ' || CAST(doc_id % 9 AS VARCHAR) || '](/img/' || id ||
+      |    '.png)' AS markdown
+      |FROM u ORDER BY doc_id""".stripMargin
+
+  /** image-pair-quality oracle: the alt/caption word and char gates
+    * replayed over the pair construction. */
+  private val imagePairQualityOracleSql: String =
+        """WITH u AS (
+      |  SELECT doc_id, source,
+      |    CAST(doc_id % 25 AS VARCHAR) AS slot,
+      |    array_to_string(list_slice(
+      |      list_filter(string_split(text, ' '), x -> x <> ''), 1, 3), ' ')
+      |      AS w3
+      |  FROM documents),
+      |l AS (
+      |  SELECT doc_id, 0 AS idx,
+      |    'fig-' || CAST(doc_id % 13 AS VARCHAR) AS alt,
+      |    trim('Figure ' || slot || ': ' || w3) AS caption
+      |  FROM u
+      |  UNION ALL SELECT doc_id, 1,
+      |    'inline-' || CAST(doc_id % 5 AS VARCHAR) || ' & co',
+      |    'Context before context after.' FROM u
+      |  UNION ALL SELECT doc_id, 2, '', '' FROM u),
+      |q AS (
+      |  SELECT doc_id, idx,
+      |    len(list_filter(string_split(alt, ' '), x -> x <> '')) AS aw,
+      |    length(alt) AS al,
+      |    len(list_filter(string_split(caption, ' '), x -> x <> '')) AS cw
+      |  FROM l)
+      |SELECT doc_id, CAST(idx AS BIGINT) AS idx,
+      |  (aw BETWEEN 2 AND 32 AND al BETWEEN 5 AND 200) AS alt_ok,
+      |  (cw >= 3) AS caption_ok,
+      |  ((aw BETWEEN 2 AND 32 AND al BETWEEN 5 AND 200) OR cw >= 3)
+      |    AS keep
+      |FROM q ORDER BY doc_id, idx""".stripMargin
+
+  /** png-metadata-strip oracle: decode checksums from the pixel
+    * formula, emitted twice and thereby pinned EQUAL (the lossless
+    * contract), plus the exact removed-chunk byte arithmetic
+    * (3 × 12 framing + the two planted text payloads + tIME's 7). */
+  private val imageStripMetaOracleSql: String =
+    """WITH m AS (
+      |  SELECT doc_id, 16 + doc_id % 17 AS w, 16 + (doc_id * 3) % 13 AS h
+      |  FROM documents),
+      |px AS (
+      |  SELECT doc_id,
+      |    CASE doc_id % 4
+      |      WHEN 0 THEN (doc_id * 7 + i * 13) % 251
+      |      WHEN 3 THEN (77 * ((doc_id + 3 * i) % 256)
+      |        + 150 * (((doc_id + 3 * i) % 256) * 7 % 256)
+      |        + 29 * (((doc_id + 3 * i) % 256) * 13 % 256)) // 256
+      |      ELSE (77 * ((doc_id + 2 * i) % 256)
+      |        + 150 * ((doc_id * 3 + 5 * i) % 256)
+      |        + 29 * ((doc_id * 5 + 7 * i) % 256)) // 256
+      |    END AS lum
+      |  FROM m, LATERAL (SELECT unnest(range(0, w * h)) AS i) r),
+      |agg AS (
+      |  SELECT doc_id, CAST(SUM(lum) AS BIGINT) AS lum
+      |  FROM px GROUP BY doc_id)
+      |SELECT m.doc_id AS media_id, CAST(m.w AS BIGINT) AS width,
+      |  CAST(m.h AS BIGINT) AS height,
+      |  a.lum AS lum_before, a.lum AS lum_after,
+      |  CAST(3 AS BIGINT) AS n_removed,
+      |  CAST(36 + (12 + length(CAST(m.doc_id % 50 AS VARCHAR)))
+      |    + (13 + length(CAST(m.doc_id % 180 - 90 AS VARCHAR) || '.0,' ||
+      |        CAST(m.doc_id % 360 - 180 AS VARCHAR) || '.0'))
+      |    + 7 AS BIGINT) AS bytes_saved,
+      |  TRUE AS lossless
+      |FROM m JOIN agg a USING (doc_id) ORDER BY media_id""".stripMargin
+
+  /** html-tables oracle, shared verbatim by the batch extraction and
+    * its streaming twin. */
+  private[registry] lazy val htmlTablesOracleSql: String =
+        """WITH d AS (
+      |  SELECT doc_id,
+      |    least(len(list_filter(string_split(text, ' '), x -> x <> '')),
+      |      6) AS nw
+      |  FROM documents),
+      |w AS (
+      |  SELECT doc_id, i - 1 AS wi, lst[i] AS w
+      |  FROM (SELECT doc_id,
+      |          list_filter(string_split(text, ' '), x -> x <> '') AS lst
+      |        FROM documents),
+      |       LATERAL (SELECT unnest(range(1, least(len(lst), 6) + 1)) AS i) r),
+      |cells AS (
+      |  SELECT doc_id, 0 AS t, 0 AS r, h.cc AS c, TRUE AS header,
+      |    h.cell AS cell
+      |  FROM d, (VALUES (0, 'Idx'), (1, 'Word'), (2, 'Len'),
+      |           (3, 'Note')) AS h(cc, cell)
+      |  UNION ALL
+      |  SELECT doc_id, 0, wi + 1, k.cc, FALSE,
+      |    CASE k.cc WHEN 0 THEN CAST(wi AS VARCHAR)
+      |              WHEN 1 THEN w
+      |              WHEN 2 THEN CAST(len(w) AS VARCHAR)
+      |              ELSE 'a&b' END
+      |  FROM w, (VALUES (0), (1), (2), (3)) AS k(cc)
+      |  UNION ALL
+      |  SELECT doc_id, 1, 0, k.cc, FALSE,
+      |    CASE k.cc WHEN 0 THEN 'total' ELSE CAST(nw AS VARCHAR) END
+      |  FROM d, (VALUES (0), (1)) AS k(cc))
+      |SELECT doc_id, CAST(t AS BIGINT) AS t, CAST(r AS BIGINT) AS r,
+      |  CAST(c AS BIGINT) AS c, header, cell
+      |FROM cells ORDER BY doc_id, t, r, c""".stripMargin
+
+  /** Font-decoding oracle (q_pdf_unicode): the unicode fixture shows
+    * line i through font i%3 (WinAnsi / MacRoman+Differences /
+    * Identity-H+ToUnicode) with [[graft.expr.PdfOps.unicodeSuffix]]
+    * appended — the expected suffixes are interpolated from the SAME
+    * Scala constants the generator encodes through its inverse tables,
+    * so engine and oracle agree by construction and any byte the
+    * decoder maps wrong breaks the hash. */
+  private val pdfUnicodeOracleSql: String = {
+    val sfx0 = graft.expr.PdfOps.WinSuffix
+    val sfx1 = graft.expr.PdfOps.DiffSuffix
+    val sfx2 = graft.expr.PdfOps.CidSuffix
+    s"""WITH w AS (
+       |  SELECT doc_id, i - 1 AS wi, lst[i] AS w
+       |  FROM (SELECT doc_id,
+       |          list_filter(string_split(text, ' '), x -> x <> '') AS lst
+       |        FROM documents),
+       |       LATERAL (SELECT unnest(range(1, len(lst) + 1)) AS i) r),
+       |lines AS (
+       |  SELECT doc_id, wi // 8 AS g, string_agg(w, ' ' ORDER BY wi) AS line
+       |  FROM w GROUP BY doc_id, wi // 8)
+       |SELECT doc_id,
+       |  string_agg(line || CASE g % 3 WHEN 0 THEN '$sfx0'
+       |                                WHEN 1 THEN '$sfx1'
+       |                                ELSE '$sfx2' END,
+       |             chr(10) ORDER BY g) AS extracted
+       |FROM lines GROUP BY doc_id ORDER BY doc_id""".stripMargin
+  }
+
+  /** The q_html_tables computation (fixture page → typed cell rows) as
+    * a pure per-row projection over a (doc_id, text) frame — shared
+    * verbatim by the batch query and its streaming twin. */
+  private[registry] lazy val htmlTableRows: DataFrame => DataFrame = docs => {
+      val words6 = slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 6)
+    val dataRows = transform(words6, (w, i) => concat(
+      lit("<tr><td>"), i, lit("</td><td><b>"), w,
+      lit("</b></td><td>"), length(w),
+      lit("</td><td>a&amp;b</td></tr>")))
+    val html = concat(
+      lit("<html><body><p>intro prose outside any table</p>" +
+        "<table><tr><th>Idx</th><th> Word </th><th>Len</th>" +
+        "<th>Note</th></tr>"),
+      array_join(dataRows, ""),
+      lit("</table><table><tr><td>total</td><td>"), size(words6),
+      lit("</td></tr></table></body></html>"))
+    docs.select(col("doc_id"),
+        explode(graft.expr.HtmlExpressions.html_table_cells(html))
+          .as("cell"))
+      .select(col("doc_id"), col("cell.t").cast("long").as("t"),
+        col("cell.r").cast("long").as("r"),
+        col("cell.c").cast("long").as("c"),
+        col("cell.header").as("header"), col("cell.cell").as("cell"))
+  }
+
+  /** The q_html_links computation (fixture page → extracted, resolved,
+    * canonicalized link rows) as a pure per-row projection over a
+    * (doc_id, source) frame — shared verbatim by the batch query and
+    * its streaming twin. */
+  private[registry] lazy val htmlLinksRows: DataFrame => DataFrame = docs => {
+    val slot = pmod(col("doc_id"), lit(25)).cast("string")
+    val id = col("doc_id").cast("string")
+    val pageUrl = concat(lit("https://www."), col("source"),
+      lit(".example.com/docs/"), slot, lit("/"))
+    val html = concat(
+      lit("<html><body><p>Intro text.</p>"),
+      lit("<a href=\"https://www."), col("source"),
+      lit(".example.com/article/"), id, lit("\">Read <b>more</b></a>"),
+      lit("<a href=\"sub/page-"), pmod(col("doc_id"), lit(7)),
+      lit("\">Sub page</a>"),
+      lit("<a href=\"../up-"), pmod(col("doc_id"), lit(5)),
+      lit("\">Up one</a>"),
+      lit("<a href=\"/top-"), pmod(col("doc_id"), lit(3)),
+      lit("\">Top</a>"),
+      lit("<a href=\"//cdn."), col("source"), lit(".example.com/lib-"),
+      pmod(col("doc_id"), lit(4)), lit("\">CDN</a>"),
+      lit("<a href=\"?page="), pmod(col("doc_id"), lit(6)),
+      lit("\">Next</a>"),
+      lit("<a href=\"#sec\">Same page</a>"),
+      lit("<a href=\"mailto:info@"), col("source"),
+      lit(".example.com\">Mail</a>"),
+      lit("<a rel=\"nofollow\" href=\"/out-"), pmod(col("doc_id"), lit(2)),
+      lit("\">Ad &amp; out</a>"),
+      lit("</body></html>"))
+    docs.select(col("doc_id"), pageUrl.as("page_url"),
+        posexplode(graft.expr.HtmlExpressions.html_links(html))
+          .as(Seq("idx", "l")))
+      .select(col("doc_id"), col("idx").cast("long").as("idx"),
+        col("l.href").as("href"),
+        graft.expr.UrlExpressions.url_canonicalize(
+          graft.expr.UrlExpressions.url_resolve(col("page_url"),
+            col("l.href"))).as("resolved"),
+        col("l.anchor").as("anchor"), col("l.nofollow").as("nofollow"))
+  }
+
+  /** The q_image_text_pairs computation (fixture page → extracted,
+    * base-resolved, canonicalized image-text pairs) as a pure per-row
+    * projection over a (doc_id, source, text) frame — shared verbatim
+    * by the batch query and its streaming twin. Three `<img>` shapes
+    * per document: a figure image (relative src, figcaption caption),
+    * an inline image (rooted src, surrounding-block caption, entity in
+    * the alt), and a bare protocol-relative image (no alt/title/text —
+    * the empty-signal control). Every third document carries a
+    * `<base href="/media/">`, so resolution must route through the
+    * head parse, not the page URL alone. */
+  private[registry] lazy val htmlImageRows: DataFrame => DataFrame = docs => {
+    val slot = pmod(col("doc_id"), lit(25)).cast("string")
+    val id = col("doc_id").cast("string")
+    val pageUrl = concat(lit("https://www."), col("source"),
+      lit(".example.com/docs/"), slot, lit("/"))
+    val words3 = array_join(slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 3), " ")
+    val html = concat(
+      lit("<html><head>"),
+      when(pmod(col("doc_id"), lit(3)) === 0,
+        lit("<base href=\"/media/\">")).otherwise(lit("")),
+      lit("</head><body>"),
+      lit("<figure><img src=\"img/"), id,
+      lit(".png\" alt=\"fig-"), pmod(col("doc_id"), lit(13)),
+      lit("\" title=\"t"), pmod(col("doc_id"), lit(7)), lit("\">"),
+      lit("<figcaption>Figure "), slot, lit(": "), words3,
+      lit("</figcaption></figure>"),
+      lit("<p>Context before <img src=\"/abs/"),
+      pmod(col("doc_id"), lit(9)),
+      lit(".jpg\" alt=\"inline-"), pmod(col("doc_id"), lit(5)),
+      lit(" &amp; co\"> context after.</p>"),
+      lit("<p><img src=\"//cdn."), col("source"),
+      lit(".example.com/c"), pmod(col("doc_id"), lit(4)),
+      lit(".webp\"></p>"),
+      lit("</body></html>"))
+    val head = graft.expr.HtmlExpressions.html_head(html).as("h")
+    docs.select(col("doc_id"), pageUrl.as("page_url"), head,
+        posexplode(graft.expr.HtmlExpressions.html_images(html))
+          .as(Seq("idx", "im")))
+      .select(col("doc_id"), col("idx").cast("long").as("idx"),
+        col("im.src").as("src"),
+        graft.expr.UrlExpressions.url_canonicalize(
+          graft.expr.UrlExpressions.url_resolve(
+            when(col("h.base").isNotNull,
+              graft.expr.UrlExpressions.url_resolve(col("page_url"),
+                col("h.base"))).otherwise(col("page_url")),
+            col("im.src"))).as("resolved"),
+        col("im.alt").as("alt"), col("im.title").as("title"),
+        col("im.caption").as("caption"))
+  }
+
+  /** The q_html_markdown computation (fixture page → rendered markdown)
+    * as a pure per-row projection over a (doc_id, text) frame — shared
+    * verbatim by the batch query and its streaming twin. */
+  private[registry] lazy val htmlMarkdownRows: DataFrame => DataFrame = docs => {
+    val id = col("doc_id").cast("string")
+    val words2 = array_join(slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 2), " ")
+    val words3 = array_join(slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 3), " ")
+    val html = concat(
+      lit("<html><body><h1>Doc "), id, lit("</h1>"),
+      lit("<p>Intro <b>"), words2, lit("</b> and <a href=\"/l/"),
+      pmod(col("doc_id"), lit(7)), lit("\">link "),
+      pmod(col("doc_id"), lit(5)), lit("</a>.</p>"),
+      lit("<ul><li>item "), pmod(col("doc_id"), lit(3)),
+      lit("</li><li>item b</li></ul>"),
+      lit("<blockquote>note "), words3, lit("</blockquote>"),
+      lit("<p><img src=\"/img/"), id, lit(".png\" alt=\"pic "),
+      pmod(col("doc_id"), lit(9)), lit("\"></p>"),
+      lit("</body></html>"))
+    docs.select(col("doc_id"),
+      graft.expr.HtmlExpressions.html_markdown(html).as("markdown"))
+  }
+
+  private[registry] lazy val multimodalFeaturesSql: String =
+    """SELECT CAST(doc_id AS BIGINT) AS media_id,
+      |  CAST(CASE doc_id % 3 WHEN 0 THEN 33 WHEN 1 THEN 13 ELSE 44 END + doc_id % 100 AS BIGINT) AS n_bytes,
+      |  CAST(CASE doc_id % 3 WHEN 0 THEN 64 + doc_id % 512 WHEN 1 THEN 32 + doc_id % 256 ELSE 8000 + (doc_id % 8) * 1000 END AS BIGINT) AS width,
+      |  CAST(CASE doc_id % 3 WHEN 0 THEN 64 + (doc_id * 31) % 512 WHEN 1 THEN 32 + (doc_id * 7) % 256 ELSE 16 END AS BIGINT) AS height,
+      |  CAST(CASE doc_id % 3 WHEN 0 THEN 3 WHEN 1 THEN 3 ELSE 1 + doc_id % 2 END AS BIGINT) AS channels,
+      |  CAST(LEAST(8, (CASE doc_id % 3 WHEN 0 THEN 33 WHEN 1 THEN 13 ELSE 44 END + doc_id % 100) // 100 + 1) AS BIGINT) AS n_frames
+      |FROM documents ORDER BY media_id""".stripMargin
+
+  /** PNG pixel-decode oracle — the plane checksums recomputed from the
+    * pixel formulas alone; shared verbatim by the direct decode
+    * (q_image_decode) and the decode-out-of-the-WARC chain
+    * (q_warc_image_decode), because binary payloads round-trip the
+    * archive byte-exact. */
+  private[registry] lazy val imageDecodeOracleSql: String =
+    """WITH m AS (
+      |  SELECT doc_id, 16 + doc_id % 17 AS w, 16 + (doc_id * 3) % 13 AS h
+      |  FROM documents),
+      |px AS (
+      |  SELECT doc_id, w, h, i,
+      |    CASE doc_id % 4
+      |      WHEN 0 THEN (doc_id * 7 + i * 13) % 251
+      |      WHEN 3 THEN (77 * ((doc_id + 3 * i) % 256)
+      |        + 150 * (((doc_id + 3 * i) % 256) * 7 % 256)
+      |        + 29 * (((doc_id + 3 * i) % 256) * 13 % 256)) // 256
+      |      ELSE (77 * ((doc_id + 2 * i) % 256)
+      |        + 150 * ((doc_id * 3 + 5 * i) % 256)
+      |        + 29 * ((doc_id * 5 + 7 * i) % 256)) // 256
+      |    END AS lum
+      |  FROM m, LATERAL (SELECT unnest(range(0, w * h)) AS i) r)
+      |SELECT CAST(doc_id AS BIGINT) AS media_id,
+      |  CAST(MAX(w) AS BIGINT) AS width, CAST(MAX(h) AS BIGINT) AS height,
+      |  CAST(COUNT(*) AS BIGINT) AS n_pixels,
+      |  CAST(SUM(lum) AS BIGINT) AS lum_sum,
+      |  CAST(SUM(lum * (i % 97 + 1)) AS BIGINT) AS lum_wsum
+      |FROM px GROUP BY doc_id ORDER BY media_id""".stripMargin
+
+  private[registry] lazy val phashCteSql: String =
+    """WITH m AS (
+      |  SELECT doc_id,
+      |    CASE doc_id % 3 WHEN 0 THEN 64 + doc_id % 512 WHEN 1 THEN 32 + doc_id % 256 ELSE 8000 + (doc_id % 8) * 1000 END AS w,
+      |    CASE doc_id % 3 WHEN 0 THEN 64 + (doc_id * 31) % 512 WHEN 1 THEN 32 + (doc_id * 7) % 256 ELSE 16 END AS h,
+      |    doc_id % 100 AS blen
+      |  FROM documents),
+      |ph AS (
+      |  SELECT doc_id AS media_id,
+      |    CASE WHEN blen = 0 THEN 0
+      |    ELSE CAST(list_sum(flatten(list_transform(range(0, 7), gy ->
+      |      list_transform(range(0, 9), gx ->
+      |        CASE WHEN
+      |          (doc_id * 7 + ((((gy * h) // 7) * w + ((gx + 1) * w) // 10) % blen) * 13) % 251
+      |          > (doc_id * 7 + ((((gy * h) // 7) * w + (gx * w) // 10) % blen) * 13) % 251
+      |        THEN (CAST(1 AS BIGINT) << (gy * 9 + gx)) ELSE 0 END)))) AS BIGINT)
+      |    END AS phash
+      |  FROM m)""".stripMargin
 
   /** The video near-dup corpus: every base video (80×56 frames — the
     * fully-informative dHash geometry) plus, for doc_id % 5 == 0, a

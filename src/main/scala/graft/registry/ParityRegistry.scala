@@ -7,17 +7,40 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
 
 /** Parity query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object ParityRegistry extends QueryRegistry {
+
+  private val asOf: Column = lit("1998-12-01").cast("date")
+
+  private def latestOrderPerCustomer(o: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
+    o.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+  }
+
+  private def flagship(spark: SparkSession, dir: String): DataFrame = {
+    val latest = latestOrderPerCustomer(t(spark, dir, "orders"))
+    latest
+      .join(broadcast(t(spark, dir, "customer")),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(t(spark, dir, "nation")),
+        col("c_nationkey") === col("n_nationkey"))
+      .filter(col("n_name") === "NATION_3")
+      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("n_name"),
+        (year(asOf) - year(col("o_orderdate"))).cast("long").as("age_years"),
+        when(datediff(asOf, col("o_orderdate").cast("date")) > 30, true)
+          .otherwise(false).as("stale"))
+      .orderBy(col("o_custkey"))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- parity operators (SURVEY.md §2) ----

@@ -7,17 +7,101 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
 
 /** Quality query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object QualityRegistry extends QueryRegistry {
+
+  /** Regression feature frame for the LinearModel queries: predict text
+    * LENGTH from token/stopword counts (profile-derived, ONE fused scan)
+    * — the fitted weights are interpretable (≈ mean word length, and the
+    * chars-shorter-than-average stopword discount). n_punct and n_bpeish
+    * are deliberately absent: this corpus has no punctuation, so the
+    * former is identically zero (singular column) and the latter equals
+    * n_tokens (collinear). Null text filtered on both sides — a null
+    * feature row would silently drop out of the moment sums while still
+    * counting in n. */
+  private def regFeatures(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .withColumn("__p", TextAnalysis.profile(col("text")))
+      .select(
+        coalesce(col("__p.n_tokens"), lit(0)).cast("double").as("f_tokens"),
+        col("__p.n_stopwords").cast("double").as("f_stop"),
+        col("__p.n_chars").cast("double").as("y_chars"))
+
+  /** The generalize-to-k oracle, parameterized by k (base bucket 500,
+    * maxLevels 20, fixed quasi = segment — the harness configuration). */
+  private def kanonGeneralizeSql(k: Int): String =
+    s"""WITH g0 AS (
+       |  SELECT c_mktsegment, CAST(FLOOR(c_acctbal / 500) AS BIGINT) AS b0,
+       |    COUNT(*) AS n
+       |  FROM customer GROUP BY 1, 2),
+       |lv AS (SELECT unnest(range(0, 21)) AS level),
+       |sizes AS (
+       |  SELECT c_mktsegment, level,
+       |    CAST(FLOOR(b0 / CAST((1 << level) AS DOUBLE)) AS BIGINT) AS bucket,
+       |    CAST(SUM(n) AS BIGINT) AS group_size
+       |  FROM g0, lv GROUP BY 1, 2, 3),
+       |chosen AS (
+       |  SELECT COALESCE(MIN(level) FILTER (mn >= $k), 20) AS gen_level
+       |  FROM (SELECT level, MIN(group_size) AS mn FROM sizes GROUP BY level))
+       |SELECT c_mktsegment, bucket, group_size, (group_size < $k) AS suppressed,
+       |  CAST(gen_level AS BIGINT) AS gen_level
+       |FROM sizes JOIN chosen ON level = gen_level
+       |ORDER BY c_mktsegment, bucket""".stripMargin
+
+  // Multinomial NB (train on doc_id%5<>0 by lang, classify the held-out
+  // fifth) — shared verbatim by q_classify_nb (batch) and
+  // q_stream_classify (streaming inference must converge to the batch
+  // result). 6dp-round-then-decimal-sum contract throughout; the completed
+  // term×label grid gives unseen-for-label tokens the Laplace-smoothed
+  // mass; argmax tie-breaks on label.
+  private[registry] lazy val nbOracleSql: String =
+    """WITH trtok AS (
+      |  SELECT lang AS label, t.term FROM documents,
+      |    UNNEST(string_split_regex(trim(lower(text)), '\s+')) AS t(term)
+      |  WHERE doc_id % 5 <> 0 AND t.term <> ''),
+      |counts AS (SELECT label, term, COUNT(*) AS c FROM trtok GROUP BY 1, 2),
+      |ltot AS (SELECT label, SUM(c) AS n_l FROM counts GROUP BY 1),
+      |v AS (SELECT COUNT(DISTINCT term) AS v FROM counts),
+      |grid AS (SELECT t.term, l.label, l.n_l
+      |         FROM (SELECT DISTINCT term FROM counts) t CROSS JOIN ltot l),
+      |lp AS (
+      |  SELECT g.term, g.label,
+      |    CAST(ROUND(LN((COALESCE(c.c, 0) + 1.0) / (CAST(g.n_l AS DOUBLE) + v.v)), 6)
+      |      AS DECIMAL(18,6)) AS lp
+      |  FROM grid g CROSS JOIN v
+      |  LEFT JOIN counts c ON c.term = g.term AND c.label = g.label),
+      |ndocs AS (SELECT COUNT(*) AS n FROM documents WHERE doc_id % 5 <> 0),
+      |prior AS (
+      |  SELECT lang AS label,
+      |    CAST(ROUND(LN(CAST(COUNT(*) AS DOUBLE) / n.n), 6) AS DECIMAL(18,6)) AS prior_lp
+      |  FROM documents, ndocs n WHERE doc_id % 5 <> 0 GROUP BY lang, n.n),
+      |sctok AS (
+      |  SELECT doc_id, t.term FROM documents,
+      |    UNNEST(string_split_regex(trim(lower(text)), '\s+')) AS t(term)
+      |  WHERE doc_id % 5 = 0 AND t.term <> ''),
+      |perlab AS (
+      |  SELECT doc_id, label, SUM(lp) AS slp, COUNT(*) AS n_in_vocab
+      |  FROM sctok JOIN lp USING (term) GROUP BY 1, 2),
+      |scored AS (
+      |  SELECT a.doc_id, a.label,
+      |    a.prior_lp + COALESCE(pl.slp, CAST(0 AS DECIMAL(18,6))) AS score,
+      |    COALESCE(pl.n_in_vocab, 0) AS n_in_vocab
+      |  FROM (SELECT d.doc_id, p.label, p.prior_lp
+      |        FROM documents d CROSS JOIN prior p WHERE d.doc_id % 5 = 0) a
+      |  LEFT JOIN perlab pl ON a.doc_id = pl.doc_id AND a.label = pl.label)
+      |SELECT doc_id, label AS predicted, CAST(score AS DOUBLE) AS score, n_in_vocab
+      |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+      |        ORDER BY score DESC, label) AS rn FROM scored) z
+      |WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

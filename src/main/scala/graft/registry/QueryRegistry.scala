@@ -9,4 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 private[graft] trait QueryRegistry {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracles: Map[String, String]
+
+  /** The fixture table `name` of the tables dir `dir`. */
+  protected def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.parquet(s"$dir/$name.parquet")
 }

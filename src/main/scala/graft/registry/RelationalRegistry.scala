@@ -7,17 +7,51 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
 
 /** Relational query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object RelationalRegistry extends QueryRegistry {
+
+  /** Exact sum: decimal arithmetic, double surface. */
+  private[registry] def dsum(c: Column, scale: Int = 2): Column =
+    sum(c.cast(s"decimal(18,$scale)")).cast("double")
+
+  /** Shared by q_rate_anomalies and its streaming twin: exact integer
+    * counts make the two engines' flagged sets bit-identical. */
+  private[registry] lazy val rateAnomalySql: String =
+    """WITH c AS (
+      |  SELECT CAST(event_type AS VARCHAR) AS key,
+      |    epoch_us(ts) // 3600000000 AS bucket, CAST(count(*) AS BIGINT) AS cnt
+      |  FROM events GROUP BY 1, 2),
+      |span AS (SELECT min(bucket) AS mn, max(bucket) AS mx FROM c),
+      |grid AS (
+      |  SELECT k.key, g.bucket
+      |  FROM (SELECT DISTINCT key FROM c) k, span,
+      |    LATERAL (SELECT unnest(range(span.mn, span.mx + 1)) AS bucket) g),
+      |f AS (
+      |  SELECT grid.key, grid.bucket, COALESCE(c.cnt, 0) AS cnt
+      |  FROM grid LEFT JOIN c ON c.key = grid.key AND c.bucket = grid.bucket),
+      |r AS (
+      |  SELECT key, bucket, cnt,
+      |    SUM(cnt) OVER win AS trail_sum,
+      |    SUM(cnt * cnt) OVER win AS trail_sumsq,
+      |    COUNT(*) OVER win AS np
+      |  FROM f WINDOW win AS (PARTITION BY key ORDER BY bucket
+      |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
+      |SELECT key, bucket, cnt, CAST(trail_sum AS BIGINT) AS trail_sum,
+      |  CAST(trail_sumsq AS BIGINT) AS trail_sumsq
+      |FROM r
+      |WHERE np = 24
+      |  AND (24 * cnt - trail_sum) * (24 * cnt - trail_sum)
+      |      > 9 * (24 * trail_sumsq - trail_sum * trail_sum)
+      |ORDER BY key, bucket""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -581,6 +615,24 @@ private[graft] object RelationalRegistry extends QueryRegistry {
 
   )
 
+  /** q_pareto_front's dominance-definition oracle, shared verbatim by
+    * its streaming twin q_stream_pareto (mergeable dominance). */
+  private[registry] lazy val paretoFrontOracleSql: String =
+    """WITH toks AS (
+      |  SELECT doc_id, n_chars,
+      |    unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS tok
+      |  FROM documents),
+      |pts AS (
+      |  SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
+      |    CAST((1000000 * COUNT(DISTINCT tok)) // COUNT(*) AS BIGINT) AS diversity_ppm
+      |  FROM toks GROUP BY 1, 2)
+      |SELECT doc_id, n_chars, diversity_ppm FROM pts p
+      |WHERE NOT EXISTS (
+      |  SELECT 1 FROM pts q
+      |  WHERE q.n_chars >= p.n_chars AND q.diversity_ppm >= p.diversity_ppm
+      |    AND (q.n_chars > p.n_chars OR q.diversity_ppm > p.diversity_ppm))
+      |ORDER BY doc_id""".stripMargin
+
   def oracles: Map[String, String] = Map(
 
     "q_agg_pricing_summary" ->
@@ -667,21 +719,7 @@ private[graft] object RelationalRegistry extends QueryRegistry {
     // The dominance DEFINITION as the oracle: a row is on the front iff
     // no row beats it weakly in both coordinates and strictly in one —
     // NOT a replay of the window derivation.
-    "q_pareto_front" ->
-      """WITH toks AS (
-        |  SELECT doc_id, n_chars,
-        |    unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS tok
-        |  FROM documents),
-        |pts AS (
-        |  SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-        |    CAST((1000000 * COUNT(DISTINCT tok)) // COUNT(*) AS BIGINT) AS diversity_ppm
-        |  FROM toks GROUP BY 1, 2)
-        |SELECT doc_id, n_chars, diversity_ppm FROM pts p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM pts q
-        |  WHERE q.n_chars >= p.n_chars AND q.diversity_ppm >= p.diversity_ppm
-        |    AND (q.n_chars > p.n_chars OR q.diversity_ppm > p.diversity_ppm))
-        |ORDER BY doc_id""".stripMargin,
+    "q_pareto_front" -> paretoFrontOracleSql,
 
 
     // Per-group dominance definition, grouped by source.

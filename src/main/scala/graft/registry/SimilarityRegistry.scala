@@ -7,17 +7,235 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import graft.operators.Skew.spread
 
 /** Similarity query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object SimilarityRegistry extends QueryRegistry {
+
+  /** text-chunks oracle: the same window-start generation, redundancy
+    * filter, tail arithmetic, and slice rebuild in SQL. */
+  private val textChunksOracleSql: String =
+        """WITH tk AS (
+      |  SELECT doc_id,
+      |    list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tk
+      |  FROM documents),
+      |st AS (
+      |  SELECT doc_id, tk, len(tk) AS n,
+      |    unnest(range(0, len(tk), 24)) AS s
+      |  FROM tk WHERE len(tk) > 0),
+      |keep AS (
+      |  SELECT doc_id, tk, n, s,
+      |    row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1
+      |      AS chunk_id
+      |  FROM st WHERE s = 0 OR s - 24 + 32 < n)
+      |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
+      |  CAST(s AS BIGINT) AS start_tok,
+      |  CAST(least(32, n - s) AS BIGINT) AS n_tok,
+      |  array_to_string(tk[s+1:s+32], ' ') AS chunk_text
+      |FROM keep ORDER BY doc_id, chunk_id""".stripMargin
+
+  /** rag-pipeline oracle: the full chain replayed — 32/24 sliding
+    * chunks, the fixed-arithmetic hashed embedding (integer components,
+    * so the double cosine is bit-identical cross-engine), exact top-10
+    * with (cosine desc, neighbor) ties, the key-derived relevance
+    * grades, and the frozen-ppm nDCG table. ann_ok replays TRUE — the
+    * engine-side IVF-PQ persistence + recall gate must hold or the hash
+    * fails. */
+  private val ragPipelineOracleSql: String =
+        """WITH tk AS (
+      |  SELECT doc_id, source,
+      |    list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS tk
+      |  FROM documents),
+      |ch AS (
+      |  SELECT doc_id, source, CAST(j AS BIGINT) AS chunk_id,
+      |    list_transform(
+      |      tk[24*j + 1:least(24*j + 32, len(tk))], w -> lower(w)) AS ctk
+      |  FROM tk, LATERAL (SELECT unnest(range(0, ((len(tk) - 1) // 24) + 1)) AS j) r
+      |  WHERE len(tk) > 0 AND (j = 0 OR 24*j + 8 < len(tk))),
+      |emb AS (
+      |  SELECT doc_id, source, chunk_id,
+      |    doc_id * 4096 + chunk_id AS vec_id,
+      |    list_transform(range(0, 16), b ->
+      |      list_sum(list_transform(ctk, t ->
+      |        CASE WHEN (3*length(t) + 7*unicode(t)
+      |                   + 13*unicode(substring(t, length(t), 1))) % 16 = b
+      |          THEN CASE WHEN (length(t) + unicode(t)) % 2 = 0
+      |               THEN 1.0 ELSE -1.0 END
+      |          ELSE 0.0 END))) AS v
+      |  FROM ch),
+      |scored AS (
+      |  SELECT q.vec_id AS query, q.doc_id AS qdoc, q.source AS qsrc,
+      |    c.vec_id AS neighbor_id, c.doc_id AS cdoc,
+      |    c.chunk_id AS cchunk, c.source AS csrc,
+      |    list_sum(list_transform(list_zip(q.v, c.v),
+      |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(q.v, x -> x * x)))
+      |         * sqrt(list_sum(list_transform(c.v, x -> x * x)))) AS cos
+      |  FROM emb q JOIN emb c
+      |    ON NOT (c.doc_id % 25 = 7 AND c.chunk_id = 0)
+      |  WHERE q.doc_id % 25 = 7 AND q.chunk_id = 0
+      |    AND list_sum(list_transform(q.v, x -> x * x)) > 0
+      |    AND list_sum(list_transform(c.v, x -> x * x)) > 0),
+      |ranked AS (
+      |  SELECT query, rank, rel FROM (
+      |    SELECT query, neighbor_id,
+      |      ROW_NUMBER() OVER (PARTITION BY query
+      |        ORDER BY cos DESC, neighbor_id) AS rank,
+      |      CASE WHEN qdoc = cdoc THEN
+      |             (CASE WHEN cchunk = 1 THEN 3 ELSE 2 END)
+      |           WHEN qsrc = csrc THEN 1 ELSE 0 END AS rel
+      |    FROM scored) t
+      |  WHERE rank <= 10),
+      |disc(r, d) AS (VALUES (1, 1000000), (2, 630930), (3, 500000),
+      |  (4, 430677), (5, 386853), (6, 356207), (7, 333333), (8, 315465),
+      |  (9, 301030), (10, 289065)),
+      |ideal AS (
+      |  SELECT query, rank, rel,
+      |    ROW_NUMBER() OVER (PARTITION BY query
+      |      ORDER BY rel DESC, rank ASC) AS irank
+      |  FROM ranked),
+      |agg AS (
+      |  SELECT query, COUNT(*) AS n_ranked,
+      |    CAST(SUM(rel * ds.d) AS BIGINT) AS dcg_ppm,
+      |    CAST(SUM(rel * di.d) AS BIGINT) AS idcg_ppm
+      |  FROM ideal JOIN disc ds ON ds.r = rank JOIN disc di ON di.r = irank
+      |  GROUP BY query)
+      |SELECT query, n_ranked, dcg_ppm, idcg_ppm,
+      |  CASE WHEN idcg_ppm > 0
+      |    THEN CAST((1000000 * dcg_ppm) // idcg_ppm AS BIGINT)
+      |    ELSE NULL END AS ndcg_ppm,
+      |  TRUE AS ann_ok
+      |FROM agg ORDER BY query""".stripMargin
+
+  /** The rank-shape half of the retrieval contract, shared by the ANN
+    * verify siblings and the round-14 headliner folds: scores
+    * non-increasing in rank, ranks contiguous AND distinct (min==1 &&
+    * max==count alone would pass a duplicate-plus-gap pattern like
+    * {1,2,2,4}). Violations frame (query_id, rank, issue). */
+  private def rankShapeViolations(res: DataFrame, scoreCol: String): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("rank"))
+    val badOrder = res
+      .withColumn("__prev", lag(col(scoreCol), 1).over(w))
+      .filter(col("__prev").isNotNull && col(scoreCol) > col("__prev"))
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        lit("rank_not_monotone").as("issue"))
+    val badSeq = res.groupBy(col("query_id"))
+      .agg(count(lit(1)).as("__n"), min(col("rank")).as("__lo"),
+        max(col("rank")).as("__hi"), countDistinct(col("rank")).as("__d"))
+      .filter(!(col("__lo") === 1 && col("__hi") === col("__n") &&
+        col("__d") === col("__n")))
+      .select(col("query_id"), lit(null).cast("long").as("rank"),
+        lit("rank_gap").as("issue"))
+    badOrder.unionByName(badSeq)
+  }
+
+  /** Round-14 ANN headliner fold: per query, the result count plus
+    * "no contract violation touched this query" — WHICH neighbors the
+    * probes reach stays engine-internal (and in the API); what the
+    * driver gates is the deterministic retrieval contract. */
+  private def annContract(res: DataFrame, viol: DataFrame): DataFrame =
+    res.groupBy(col("query_id")).agg(count(lit(1)).as("n_results"))
+      .join(viol.select(col("query_id")).distinct()
+        .withColumn("__bad", lit(true)), Seq("query_id"), "left")
+      .select(col("query_id"), col("n_results"),
+        col("__bad").isNull.as("contract_ok"))
+      .orderBy(col("query_id"))
+
+  /** Cosine over float-array columns with built-in HOFs (zip_with +
+    * aggregate, left-to-right double accumulation — the same order as the
+    * native FloatVecDot expression, so results are bit-identical). */
+  private[registry] def builtinCosine(a: Column, b: Column): Column = {
+    def dot(x: Column, y: Column): Column = aggregate(
+      zip_with(x, y, (p, q) => p.cast("double") * q.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    def norm(x: Column): Column = sqrt(aggregate(
+      transform(x, p => p.cast("double") * p.cast("double")),
+      lit(0.0), (acc, v) => acc + v))
+    dot(a, b) / (norm(a) * norm(b))
+  }
+
+  /** SUB-BLOCK-GROUPED cosine with built-in HOFs — the exact accumulation
+    * order of [[operators.ProductQuantize.adcTopK]]'s scorer (flat
+    * left-to-right within each dsub block, blocks added in order), so the
+    * recompute is bit-identical to the UDF's doubles. A flat whole-vector
+    * fold would differ in the last ulp (float addition is non-associative)
+    * and flip 6dp rounding on boundary values. */
+  private def builtinBlockCosine(a: Column, b: Column, m: Int, dsub: Int): Column = {
+    def blockDot(i: Int, x: Column, y: Column): Column = aggregate(
+      zip_with(slice(x, i * dsub + 1, dsub), slice(y, i * dsub + 1, dsub),
+        (p, q) => p.cast("double") * q.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+    val num = (0 until m).map(i => blockDot(i, a, b)).reduce(_ + _)
+    val qn = (0 until m).map(i => blockDot(i, a, a)).reduce(_ + _)
+    val cn = (0 until m).map(i => blockDot(i, b, b)).reduce(_ + _)
+    num / (sqrt(qn) * sqrt(cn))
+  }
+
+  /** Double-precision cosine between two embedding columns in DuckDB list
+    * math — the exact sequential-accumulation form that is bit-identical to
+    * the Spark native expression (NOT list_cosine_similarity: float32). */
+  private def cosineSql(a: String, b: String): String =
+    s"""list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+       |      / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+       |         * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
+
+  /** Full SQL re-derivation of the hyperplane-LSH top-k: the seed-7 gaussian
+    * planes are data-INDEPENDENT constants, so the oracle embeds them as
+    * literals and recomputes signature bits, band buckets, candidate join,
+    * and the exact cosine rerank — an independent DuckDB implementation of
+    * the whole approximate pipeline, hash-compared end-to-end. Sign bits
+    * agree because the dot products are bit-identical doubles. */
+  private lazy val lshTopkOracleSql: String = {
+    val planes = operators.Similarity.hyperplanesFor(64)
+    val bits = operators.Similarity.SignatureBits
+    val bands = operators.Similarity.Bands
+    val rows = bits / bands
+    val mask = (1 << rows) - 1
+    val sigTerms = planes.zipWithIndex.map { case (p, i) =>
+      val arr = p.mkString("[", ", ", "]")
+      s"(CASE WHEN list_sum(list_transform(list_zip(embedding, $arr), x -> CAST(x[1] AS DOUBLE) * x[2])) > 0 THEN ${1 << i} ELSE 0 END)"
+    }.mkString("\n      + ")
+    s"""WITH sigs AS (
+       |  SELECT vec_id, $sigTerms AS sig FROM embeddings
+       |),
+       |bucketed AS (
+       |  SELECT vec_id, b.band, (sig >> (b.band * $rows)) & $mask AS bucket
+       |  FROM sigs, (SELECT unnest(range(0, $bands)) AS band) b
+       |),
+       |cand AS (
+       |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+       |  FROM bucketed q JOIN bucketed c ON q.band = c.band AND q.bucket = c.bucket
+       |  WHERE q.vec_id < 16 AND q.vec_id <> c.vec_id
+       |),
+       |scored AS (
+       |  SELECT query_id, neighbor_id,
+       |    ${cosineSql("q.embedding", "c.embedding")} AS cosine
+       |  FROM cand
+       |  JOIN embeddings q ON q.vec_id = query_id
+       |  JOIN embeddings c ON c.vec_id = neighbor_id
+       |)
+       |SELECT query_id, rank, neighbor_id, ROUND(cosine, 6) AS cosine FROM (
+       |  SELECT query_id, neighbor_id, cosine,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
+       |  FROM scored) t
+       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+  }
+
+  /** Retrieval contract frame: the 16 fixture queries, k = 10 results
+    * each, contract clean — shared by the three approximate-ANN folds
+    * and (as `stream_eq_batch`) the serving twin. */
+  private[registry] def annContractOracleSql(flagName: String): String =
+    s"""SELECT vec_id AS query_id, CAST(10 AS BIGINT) AS n_results,
+      |  TRUE AS $flagName
+      |FROM embeddings WHERE vec_id < 16 ORDER BY query_id""".stripMargin
 
   /** The bitext "source language" side: a sampled, deterministically
     * perturbed copy of the embedding corpus — component vec_id % dim
@@ -756,6 +974,23 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
         |  COALESCE(margin_ppm >= 1050000, FALSE) AS accepted
         |FROM best WHERE pick = 1 ORDER BY src_id""".stripMargin
 
+  /** Exact-cosine top-10 of the 16 fixture queries — q_sim_topk's
+    * oracle, shared verbatim by q_sim_topk_ivf_full (probing every list
+    * is provably exact). */
+  private val simTopkOracleSql: String =
+    """SELECT query_id, rank, neighbor_id, cosine FROM (
+      |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |    ROUND(list_sum(list_transform(list_zip(q.embedding, c.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine,
+      |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
+      |      list_sum(list_transform(list_zip(q.embedding, c.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+      |      / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+      |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC, c.vec_id) AS rank
+      |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
+      |  WHERE q.vec_id < 16) t
+      |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+
   def oracles: Map[String, String] = Map(
 
     // RRF: the full BM25 chain and the cosine rank chain replayed, fused
@@ -844,19 +1079,7 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
         |WHERE FALSE""".stripMargin,
 
 
-    "q_sim_topk" ->
-      """SELECT query_id, rank, neighbor_id, cosine FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    ROUND(list_sum(list_transform(list_zip(q.embedding, c.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        |      list_sum(list_transform(list_zip(q.embedding, c.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        |  WHERE q.vec_id < 16) t
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+    "q_sim_topk" -> simTopkOracleSql,
 
 
     // MMR oracle: the greedy replayed as a recursive CTE. Each query
@@ -920,19 +1143,7 @@ private[graft] object SimilarityRegistry extends QueryRegistry {
 
     // nprobe = k probes all lists ⇒ provably identical to exact top-k, so
     // the exact-cosine oracle applies verbatim.
-    "q_sim_topk_ivf_full" ->
-      """SELECT query_id, rank, neighbor_id, cosine FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    ROUND(list_sum(list_transform(list_zip(q.embedding, c.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6) AS cosine,
-        |    ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-        |      list_sum(list_transform(list_zip(q.embedding, c.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC, c.vec_id) AS rank
-        |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        |  WHERE q.vec_id < 16) t
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+    "q_sim_topk_ivf_full" -> simTopkOracleSql,
 
 
     "q_sim_topk_lsh" -> lshTopkOracleSql,

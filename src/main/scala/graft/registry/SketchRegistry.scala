@@ -7,17 +7,44 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
 
 /** Sketch query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object SketchRegistry extends QueryRegistry {
+
+  /** Misra–Gries summary claim: exact stream length, capacity, zero
+    * guarantee violations — shared by the batch and streaming MG folds. */
+  private[registry] lazy val mgSummaryOracleSql: String =
+    """SELECT CAST(32 AS BIGINT) AS capacity, COUNT(*) AS n,
+      |  CAST(0 AS BIGINT) AS n_violations
+      |FROM events WHERE user_id IS NOT NULL""".stripMargin
+
+  /** Exact top-25 user frequencies with est = exact (the CMS
+    * collision-free regime) — shared by the batch probe and its
+    * bit-exact streaming twin. */
+  private[registry] lazy val cmsExactRegimeSql: String =
+    """SELECT user_id AS item, COUNT(*) AS exact_cnt, COUNT(*) AS est_cnt
+      |FROM events WHERE user_id IS NOT NULL
+      |GROUP BY user_id ORDER BY exact_cnt DESC, item LIMIT 25""".stripMargin
+
+  /** Exact distinct rollup in the native-HLL output shape (n_rows +
+    * est_distinct, small-range-exact regime) — shared by the batch
+    * rollup and its bit-exact streaming twin. */
+  private[registry] lazy val hllNativeExactRegimeSql: String =
+    """SELECT CAST(event_type AS VARCHAR) AS segment,
+      |  COUNT(*) AS n_rows, COUNT(DISTINCT user_id) AS est_distinct
+      |FROM events WHERE user_id IS NOT NULL GROUP BY 1
+      |UNION ALL
+      |SELECT '__TOTAL__', COUNT(*), COUNT(DISTINCT user_id)
+      |FROM events WHERE user_id IS NOT NULL
+      |ORDER BY segment""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -7,17 +7,113 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import RelationalRegistry.dsum
 
 /** Storage query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object StorageRegistry extends QueryRegistry {
+
+  /** The Hilbert xy2d ladder unrolled into generated SQL: one CTE per
+    * level carrying (x, y, d), the exact mirror of
+    * [[graft.operators.ZOrder.hilbertValue]]'s expression tree. */
+  private val hilbertOracleSql: String = {
+    val levels = (0 until 16).map { i =>
+      val s = 1L << (15 - i)
+      s"""h${i + 1} AS (SELECT l_orderkey, l_linenumber,
+         |  CASE WHEN (y & $s) = 0 THEN
+         |    CASE WHEN (x & $s) > 0 THEN ${s - 1} - y ELSE y END
+         |  ELSE x END AS x,
+         |  CASE WHEN (y & $s) = 0 THEN
+         |    CASE WHEN (x & $s) > 0 THEN ${s - 1} - x ELSE x END
+         |  ELSE y END AS y,
+         |  d + ${s * s} * xor(3 * (CASE WHEN (x & $s) > 0 THEN 1 ELSE 0 END),
+         |                     CASE WHEN (y & $s) > 0 THEN 1 ELSE 0 END) AS d
+         |  FROM h$i)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH h0 AS (SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
+       |  l_orderkey & 65535 AS x, l_partkey & 65535 AS y, CAST(0 AS BIGINT) AS d
+       |  FROM lineitem),
+       |$levels
+       |SELECT l_orderkey, l_linenumber, CAST(d AS BIGINT) AS hval
+       |FROM h16 ORDER BY hval, l_orderkey, l_linenumber""".stripMargin
+  }
+
+  /** Shared by q_cdc_apply and q_table_asof (time travel to v1 must equal
+    * replaying exactly one CDC batch): ROW_NUMBER winner per key by
+    * (seq DESC, op DESC), anti-join + final non-delete rows. */
+  private val cdcApplySql: String =
+    """WITH base AS (
+      |  SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders),
+      |u AS (SELECT o_orderkey, o_orderpriority, o_totalprice + 5 AS o_totalprice,
+      |        CAST(1 AS BIGINT) AS seq, 'U' AS op FROM base WHERE o_orderkey % 7 = 0),
+      |d AS (SELECT o_orderkey, o_orderpriority, o_totalprice,
+      |        CAST(2 AS BIGINT) AS seq, 'D' AS op FROM base WHERE o_orderkey % 11 = 0),
+      |i AS (SELECT o_orderkey + 10000000 AS o_orderkey, o_orderpriority, o_totalprice,
+      |        CAST(1 AS BIGINT) AS seq, 'I' AS op FROM base WHERE o_orderkey % 13 = 0),
+      |cdc AS (SELECT * FROM u UNION ALL SELECT * FROM d UNION ALL SELECT * FROM i),
+      |latest AS (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderkey
+      |    ORDER BY seq DESC, op DESC) AS rn FROM cdc),
+      |fin AS (SELECT o_orderkey, o_orderpriority, o_totalprice, op
+      |        FROM latest WHERE rn = 1)
+      |SELECT b.o_orderkey, b.o_orderpriority, b.o_totalprice FROM base b
+      |WHERE NOT EXISTS (SELECT 1 FROM fin f WHERE f.o_orderkey = b.o_orderkey)
+      |UNION ALL
+      |SELECT o_orderkey, o_orderpriority, o_totalprice FROM fin WHERE op <> 'D'
+      |ORDER BY o_orderkey""".stripMargin
+
+  /** Oracle for q_incr_agg: the FULL recompute of the post-CDC table —
+    * the touched-group refresh must be indistinguishable from it. */
+  private val incrAggSql: String =
+    """WITH base AS (
+      |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
+      |u AS (SELECT o_orderkey, o_custkey, o_totalprice + 5 AS o_totalprice,
+      |        CAST(1 AS BIGINT) AS seq, 'U' AS op FROM base WHERE o_orderkey % 49 = 0),
+      |d AS (SELECT o_orderkey, o_custkey, o_totalprice,
+      |        CAST(2 AS BIGINT) AS seq, 'D' AS op FROM base WHERE o_orderkey % 121 = 0),
+      |i AS (SELECT o_orderkey + 10000000 AS o_orderkey, o_custkey, o_totalprice,
+      |        CAST(1 AS BIGINT) AS seq, 'I' AS op FROM base WHERE o_orderkey % 169 = 0),
+      |cdc AS (SELECT * FROM u UNION ALL SELECT * FROM d UNION ALL SELECT * FROM i),
+      |latest AS (
+      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderkey
+      |    ORDER BY seq DESC, op DESC) AS rn FROM cdc),
+      |fin AS (SELECT o_orderkey, o_custkey, o_totalprice, op
+      |        FROM latest WHERE rn = 1),
+      |after AS (
+      |  SELECT b.o_orderkey, b.o_custkey, b.o_totalprice FROM base b
+      |  WHERE NOT EXISTS (SELECT 1 FROM fin f WHERE f.o_orderkey = b.o_orderkey)
+      |  UNION ALL
+      |  SELECT o_orderkey, o_custkey, o_totalprice FROM fin WHERE op <> 'D')
+      |SELECT o_custkey, COUNT(*) AS n_orders,
+      |  CAST(SUM(CAST(FLOOR(o_totalprice) AS BIGINT)) AS BIGINT) AS total_units
+      |FROM after GROUP BY o_custkey ORDER BY o_custkey""".stripMargin
+
+  /** Dirty-JSONL oracle — shared verbatim by the batch read
+    * (q_jsonl_source) and its streaming twin: clean rows parse to their
+    * fields; the deterministically truncated lines come back all-NULL
+    * with the exact truncated raw string. */
+  private[registry] lazy val jsonlSourceOracleSql: String =
+    """WITH lines AS (
+      |  SELECT doc_id AS rec_id, lang, n_chars,
+      |    '{"doc_id":' || doc_id || ',"lang":"' || lang || '","n_chars":' ||
+      |      n_chars || '}' AS full_line,
+      |    doc_id % 50 = 13 AS corrupt
+      |  FROM documents)
+      |SELECT rec_id,
+      |  CASE WHEN corrupt THEN NULL ELSE rec_id END AS doc_id,
+      |  CASE WHEN corrupt THEN NULL ELSE lang END AS lang,
+      |  CASE WHEN corrupt THEN NULL ELSE n_chars END AS n_chars,
+      |  corrupt AS is_corrupt,
+      |  CASE WHEN corrupt
+      |    THEN substring(full_line, 1, length(full_line) - 8) END AS raw
+      |FROM lines ORDER BY rec_id""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

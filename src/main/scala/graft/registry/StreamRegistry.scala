@@ -7,15 +7,35 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import CrawlRegistry.{crawlTrapsOracleSql, trapFixturePages, anchorOracleSql,
+  feedSeedsOracleSql, robotsGateOracleSql}
+import DedupRegistry.{erRecords, erEntitiesOracleSql}
+import MultimodalRegistry.{syntheticMediaFeatures, htmlLinksOracleSql,
+  htmlImagePairsOracleSql, htmlMarkdownOracleSql, htmlTablesOracleSql,
+  htmlTableRows, htmlLinksRows, htmlImageRows, htmlMarkdownRows,
+  multimodalFeaturesSql}
+import QualityRegistry.nbOracleSql
+import RelationalRegistry.{rateAnomalySql, paretoFrontOracleSql}
+import SimilarityRegistry.annContractOracleSql
+import SketchRegistry.{mgSummaryOracleSql, cmsExactRegimeSql,
+  hllNativeExactRegimeSql}
+import StorageRegistry.jsonlSourceOracleSql
+import TextRegistry.{syntheticPageText, textExtractOracleSql,
+  textKeywordsOracleSql, textPmiOracleSql}
+import TrainPrepRegistry.{interleavedDocsOracleSql, interleavedPackOracleSql,
+  sftAssembleOracleSql, sftAssembleTokensOracleSql, packFfdStatsOracleSql,
+  sftBonOracleSql, prefPairsOracleSql, htmlInterleavedRows, sftAssembleTurns,
+  prefCandidates, sftAssembleProjected, sftTokenAssembleProjected,
+  dsirWeightsOracleSql}
 
 /** Stream query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object StreamRegistry extends QueryRegistry {
 
@@ -1151,56 +1171,12 @@ private[graft] object StreamRegistry extends QueryRegistry {
 
     // Streaming PMI: exact integer pair counts make stream ≡ batch, so
     // the batch SQL gates the streaming query verbatim (full hash).
-    "q_stream_pmi" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-        |                             t -> t <> '') AS tk
-        |  FROM documents),
-        |bg AS (
-        |  SELECT list_extract(tk, i) AS w1, list_extract(tk, i + 1) AS w2
-        |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk))) AS i) r
-        |  WHERE len(tk) >= 2),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |n2 AS (SELECT CAST(SUM(c12) AS BIGINT) AS n2 FROM c12),
-        |heads AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1h FROM c12 GROUP BY 1),
-        |tails AS (SELECT w2, CAST(SUM(c12) AS BIGINT) AS c2t FROM c12 GROUP BY 1)
-        |SELECT c.w1, c.w2, c.c12,
-        |  CAST((CAST(c.c12 AS HUGEINT) * 1000000 * n2.n2)
-        |       // (CAST(h.c1h AS HUGEINT) * t.c2t) AS BIGINT) AS pmi_ppm
-        |FROM c12 c
-        |JOIN heads h ON h.w1 = c.w1
-        |JOIN tails t ON t.w2 = c.w2
-        |CROSS JOIN n2
-        |WHERE c.c12 >= 5
-        |ORDER BY pmi_ppm DESC, c.c12 DESC, c.w1, c.w2
-        |LIMIT 100""".stripMargin,
+    "q_stream_pmi" -> textPmiOracleSql,
 
 
     // Streaming keywords: exact integer counts make stream ≡ batch, so
     // the batch SQL gates the streaming query verbatim (full hash).
-    "q_stream_keywords" ->
-      """WITH toks AS (
-        |  SELECT CAST(lang AS VARCHAR) AS cls, t.term
-        |  FROM documents,
-        |    UNNEST(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-        |                       x -> x <> '')) AS t(term)),
-        |a AS (SELECT cls, term, COUNT(*) AS a FROM toks GROUP BY 1, 2),
-        |ct AS (SELECT term, CAST(SUM(a) AS BIGINT) AS ct FROM a GROUP BY 1),
-        |nc AS (SELECT cls, CAST(SUM(a) AS BIGINT) AS nc FROM a GROUP BY 1),
-        |n AS (SELECT CAST(SUM(a) AS BIGINT) AS n FROM a),
-        |scored AS (
-        |  SELECT a.cls, a.term, a.a,
-        |    CAST(((CAST(a.a AS HUGEINT) + 1)
-        |           * (n.n - nc.nc - (ct.ct - a.a) + 1) * 1000000)
-        |      // ((CAST(ct.ct AS HUGEINT) - a.a + 1)
-        |           * (nc.nc - a.a + 1)) AS BIGINT) AS odds_ppm
-        |  FROM a JOIN ct ON ct.term = a.term JOIN nc ON nc.cls = a.cls
-        |  CROSS JOIN n
-        |  WHERE a.a >= 5)
-        |SELECT cls, term, a, odds_ppm FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY cls
-        |  ORDER BY odds_ppm DESC, a DESC, term ASC) <= 20
-        |ORDER BY cls, odds_ppm DESC, a DESC, term""".stripMargin,
+    "q_stream_keywords" -> textKeywordsOracleSql,
 
 
     // The BATCH derivation verbatim — exact integer counts make the
@@ -1240,21 +1216,7 @@ private[graft] object StreamRegistry extends QueryRegistry {
 
     // Stream ≡ batch verbatim (mergeable dominance) ⇒ the batch
     // dominance-definition oracle applies unchanged.
-    "q_stream_pareto" ->
-      """WITH toks AS (
-        |  SELECT doc_id, n_chars,
-        |    unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '')) AS tok
-        |  FROM documents),
-        |pts AS (
-        |  SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
-        |    CAST((1000000 * COUNT(DISTINCT tok)) // COUNT(*) AS BIGINT) AS diversity_ppm
-        |  FROM toks GROUP BY 1, 2)
-        |SELECT doc_id, n_chars, diversity_ppm FROM pts p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM pts q
-        |  WHERE q.n_chars >= p.n_chars AND q.diversity_ppm >= p.diversity_ppm
-        |    AND (q.n_chars > p.n_chars OR q.diversity_ppm > p.diversity_ppm))
-        |ORDER BY doc_id""".stripMargin,
+    "q_stream_pareto" -> paretoFrontOracleSql,
 
 
     // The streaming twin converges to the batch entities identically

@@ -7,17 +7,116 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import graft.operators.Skew.spread
 
 /** Text query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object TextRegistry extends QueryRegistry {
+
+  /** The extracted text of each document's synthetic HTML page — the one
+    * projection q_text_extract and its streaming twin share. */
+  private[registry] def syntheticPageText(docs: DataFrame): DataFrame =
+    operators.TextExtract.fromHtml(
+      docs.select(col("doc_id"),
+        operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
+          .as("html")),
+      "doc_id", "html")
+
+  /** Mojibake-fixture suffixes (clean forms): one CP1252-repairable,
+    * one Greek (latin-1-fallback path), one symbol pair — shared by the
+    * query's corruption/repair chain and the oracle's clean rebuild. */
+  private val MojiSuffixes: Seq[String] =
+    Seq(" – café «ß»", " αβγδ", " ©2026 ™")
+
+  /** Mojibake oracle: repair must restore the CLEAN construction for
+    * every row — corrupted rows (UTF-8 bytes mis-decoded latin-1) must
+    * come back exactly, and the uncorrupted control rows (id%5==0) must
+    * pass through untouched (the strict-decode false-positive guard). */
+  private val mojibakeOracleSql: String =
+    s"""SELECT doc_id, text || CASE doc_id % 3
+       |    WHEN 0 THEN '${MojiSuffixes(0)}'
+       |    WHEN 1 THEN '${MojiSuffixes(1)}'
+       |    ELSE '${MojiSuffixes(2)}' END AS fixed
+       |FROM documents ORDER BY doc_id""".stripMargin
+
+  /** Hreflang fixture page: en/de alternates on every document, fr on
+    * evens, and an x-default naming the cluster representative (the
+    * slot page's English variant) — so pages sharing doc_id%25 within a
+    * source form one language cluster. */
+  private[registry] def altFixtureHtml: Column = {
+    val host = concat(lit("https://www."), col("source"),
+      lit(".example.com"))
+    val slot = pmod(col("doc_id"), lit(25)).cast("string")
+    concat(
+      lit("<html><head>"),
+      lit("<link rel=\"alternate\" hreflang=\"en\" href=\""), host,
+      lit("/en/"), slot, lit("\">"),
+      lit("<link rel=\"alternate\" hreflang=\"de\" href=\""), host,
+      lit("/de/"), slot, lit("\">"),
+      when(pmod(col("doc_id"), lit(2)) === 0,
+        concat(lit("<link rel=\"alternate\" hreflang=\"fr\" href=\""),
+          host, lit("/fr/"), slot, lit("\">"))).otherwise(lit("")),
+      lit("<link rel=\"alternate\" hreflang=\"x-default\" href=\""), host,
+      lit("/en/"), slot, lit("\">"),
+      lit("</head><body><p>Body.</p></body></html>"))
+  }
+
+  /** Expected extraction of the synthetic crawl page — shared verbatim by
+    * the batch (q_text_extract) and streaming (q_stream_text_extract)
+    * paths: extraction is a pure per-row function, so stream ≡ batch. */
+  private[registry] lazy val textExtractOracleSql: String =
+    """SELECT doc_id,
+      |  'Corpus document from the synthetic crawl corpus' || chr(10) ||
+      |  text || chr(10) || upper(text) AS extracted
+      |FROM documents ORDER BY doc_id""".stripMargin
+
+  private val trigramLpSql: String =
+    """WITH toks AS (
+      |  SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+      |                             t -> t <> '') AS tk
+      |  FROM documents),
+      |tg AS (
+      |  SELECT doc_id, list_extract(tk, i) AS w1, list_extract(tk, i + 1) AS w2,
+      |         list_extract(tk, i + 2) AS w3
+      |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk) - 1)) AS i) r
+      |  WHERE len(tk) >= 3),
+      |bg AS (
+      |  SELECT list_extract(tk, i) AS a, list_extract(tk, i + 1) AS b
+      |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk))) AS i) r
+      |  WHERE len(tk) >= 2),
+      |un AS (SELECT t.term FROM toks, UNNEST(tk) AS t(term)),
+      |c3 AS (SELECT w1, w2, w3, COUNT(*) AS c3 FROM tg GROUP BY 1, 2, 3),
+      |c12 AS (SELECT w1, w2, CAST(SUM(c3) AS BIGINT) AS c12 FROM c3 GROUP BY 1, 2),
+      |c2 AS (SELECT a, b, COUNT(*) AS c2 FROM bg GROUP BY 1, 2),
+      |c1h AS (SELECT a, CAST(SUM(c2) AS BIGINT) AS c1h FROM c2 GROUP BY 1),
+      |c1 AS (SELECT term, COUNT(*) AS c FROM un GROUP BY 1),
+      |n AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM c1),
+      |lp AS (
+      |  SELECT tg.doc_id,
+      |    CAST(ROUND(LN((70 * (CAST(c3.c3 AS DOUBLE) / CAST(c12.c12 AS DOUBLE))
+      |                 + 20 * (CAST(c2.c2 AS DOUBLE) / CAST(c1h.c1h AS DOUBLE))
+      |                 + 10 * (CAST(c1.c AS DOUBLE) / CAST(n.n AS DOUBLE))) / 100), 6)
+      |      AS DECIMAL(18,6)) AS lp
+      |  FROM tg
+      |  JOIN c3 USING (w1, w2, w3)
+      |  JOIN c12 USING (w1, w2)
+      |  JOIN c2 ON c2.a = tg.w2 AND c2.b = tg.w3
+      |  JOIN c1h ON c1h.a = tg.w2
+      |  JOIN c1 ON c1.term = tg.w3
+      |  CROSS JOIN n),
+      |pd AS (SELECT doc_id, COUNT(*) AS n_trigrams, SUM(lp) AS slp
+      |       FROM lp GROUP BY 1)
+      |SELECT d.doc_id, COALESCE(pd.n_trigrams, 0) AS n_trigrams,
+      |  CAST(pd.slp AS DOUBLE) / CAST(pd.n_trigrams AS DOUBLE) AS avg_lp3
+      |FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id
+      |ORDER BY d.doc_id""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -463,6 +562,58 @@ private[graft] object TextRegistry extends QueryRegistry {
 
   )
 
+  /** q_text_keywords' oracle, shared verbatim by its streaming twin
+    * q_stream_keywords (exact integer counts make stream ≡ batch). */
+  private[registry] lazy val textKeywordsOracleSql: String =
+    """WITH toks AS (
+      |  SELECT CAST(lang AS VARCHAR) AS cls, t.term
+      |  FROM documents,
+      |    UNNEST(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+      |                       x -> x <> '')) AS t(term)),
+      |a AS (SELECT cls, term, COUNT(*) AS a FROM toks GROUP BY 1, 2),
+      |ct AS (SELECT term, CAST(SUM(a) AS BIGINT) AS ct FROM a GROUP BY 1),
+      |nc AS (SELECT cls, CAST(SUM(a) AS BIGINT) AS nc FROM a GROUP BY 1),
+      |n AS (SELECT CAST(SUM(a) AS BIGINT) AS n FROM a),
+      |scored AS (
+      |  SELECT a.cls, a.term, a.a,
+      |    CAST(((CAST(a.a AS HUGEINT) + 1)
+      |           * (n.n - nc.nc - (ct.ct - a.a) + 1) * 1000000)
+      |      // ((CAST(ct.ct AS HUGEINT) - a.a + 1)
+      |           * (nc.nc - a.a + 1)) AS BIGINT) AS odds_ppm
+      |  FROM a JOIN ct ON ct.term = a.term JOIN nc ON nc.cls = a.cls
+      |  CROSS JOIN n
+      |  WHERE a.a >= 5)
+      |SELECT cls, term, a, odds_ppm FROM scored
+      |QUALIFY row_number() OVER (PARTITION BY cls
+      |  ORDER BY odds_ppm DESC, a DESC, term ASC) <= 20
+      |ORDER BY cls, odds_ppm DESC, a DESC, term""".stripMargin
+
+  /** q_text_pmi's oracle, shared verbatim by its streaming twin
+    * q_stream_pmi (exact integer pair counts make stream ≡ batch). */
+  private[registry] lazy val textPmiOracleSql: String =
+    """WITH toks AS (
+      |  SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+      |                             t -> t <> '') AS tk
+      |  FROM documents),
+      |bg AS (
+      |  SELECT list_extract(tk, i) AS w1, list_extract(tk, i + 1) AS w2
+      |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk))) AS i) r
+      |  WHERE len(tk) >= 2),
+      |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
+      |n2 AS (SELECT CAST(SUM(c12) AS BIGINT) AS n2 FROM c12),
+      |heads AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1h FROM c12 GROUP BY 1),
+      |tails AS (SELECT w2, CAST(SUM(c12) AS BIGINT) AS c2t FROM c12 GROUP BY 1)
+      |SELECT c.w1, c.w2, c.c12,
+      |  CAST((CAST(c.c12 AS HUGEINT) * 1000000 * n2.n2)
+      |       // (CAST(h.c1h AS HUGEINT) * t.c2t) AS BIGINT) AS pmi_ppm
+      |FROM c12 c
+      |JOIN heads h ON h.w1 = c.w1
+      |JOIN tails t ON t.w2 = c.w2
+      |CROSS JOIN n2
+      |WHERE c.c12 >= 5
+      |ORDER BY pmi_ppm DESC, c.c12 DESC, c.w1, c.w2
+      |LIMIT 100""".stripMargin
+
   def oracles: Map[String, String] = Map(
 
     "q_text_stats" ->
@@ -805,29 +956,7 @@ private[graft] object TextRegistry extends QueryRegistry {
     // Class keywords: the same (cls, term) counts and smoothed odds ratio
     // in BIGINT floor division; per-class cut via QUALIFY under the
     // identical total order.
-    "q_text_keywords" ->
-      """WITH toks AS (
-        |  SELECT CAST(lang AS VARCHAR) AS cls, t.term
-        |  FROM documents,
-        |    UNNEST(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-        |                       x -> x <> '')) AS t(term)),
-        |a AS (SELECT cls, term, COUNT(*) AS a FROM toks GROUP BY 1, 2),
-        |ct AS (SELECT term, CAST(SUM(a) AS BIGINT) AS ct FROM a GROUP BY 1),
-        |nc AS (SELECT cls, CAST(SUM(a) AS BIGINT) AS nc FROM a GROUP BY 1),
-        |n AS (SELECT CAST(SUM(a) AS BIGINT) AS n FROM a),
-        |scored AS (
-        |  SELECT a.cls, a.term, a.a,
-        |    CAST(((CAST(a.a AS HUGEINT) + 1)
-        |           * (n.n - nc.nc - (ct.ct - a.a) + 1) * 1000000)
-        |      // ((CAST(ct.ct AS HUGEINT) - a.a + 1)
-        |           * (nc.nc - a.a + 1)) AS BIGINT) AS odds_ppm
-        |  FROM a JOIN ct ON ct.term = a.term JOIN nc ON nc.cls = a.cls
-        |  CROSS JOIN n
-        |  WHERE a.a >= 5)
-        |SELECT cls, term, a, odds_ppm FROM scored
-        |QUALIFY row_number() OVER (PARTITION BY cls
-        |  ORDER BY odds_ppm DESC, a DESC, term ASC) <= 20
-        |ORDER BY cls, odds_ppm DESC, a DESC, term""".stripMargin,
+    "q_text_keywords" -> textKeywordsOracleSql,
 
 
     // PMI collocations: same bigram derivation as q_text_bigram_lp kept
@@ -836,29 +965,7 @@ private[graft] object TextRegistry extends QueryRegistry {
     // side: DECIMAL(38,0)) so neither engine can wrap/abort at large
     // corpus counts, then floor-divides back to BIGINT — positive
     // operands, so truncate ≡ floor.
-    "q_text_pmi" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-        |                             t -> t <> '') AS tk
-        |  FROM documents),
-        |bg AS (
-        |  SELECT list_extract(tk, i) AS w1, list_extract(tk, i + 1) AS w2
-        |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk))) AS i) r
-        |  WHERE len(tk) >= 2),
-        |c12 AS (SELECT w1, w2, COUNT(*) AS c12 FROM bg GROUP BY 1, 2),
-        |n2 AS (SELECT CAST(SUM(c12) AS BIGINT) AS n2 FROM c12),
-        |heads AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1h FROM c12 GROUP BY 1),
-        |tails AS (SELECT w2, CAST(SUM(c12) AS BIGINT) AS c2t FROM c12 GROUP BY 1)
-        |SELECT c.w1, c.w2, c.c12,
-        |  CAST((CAST(c.c12 AS HUGEINT) * 1000000 * n2.n2)
-        |       // (CAST(h.c1h AS HUGEINT) * t.c2t) AS BIGINT) AS pmi_ppm
-        |FROM c12 c
-        |JOIN heads h ON h.w1 = c.w1
-        |JOIN tails t ON t.w2 = c.w2
-        |CROSS JOIN n2
-        |WHERE c.c12 >= 5
-        |ORDER BY pmi_ppm DESC, c.c12 DESC, c.w1, c.w2
-        |LIMIT 100""".stripMargin,
+    "q_text_pmi" -> textPmiOracleSql,
 
 
     // Character entropy: EXACT integer pieces only — the LN-derived value

@@ -7,17 +7,201 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import graft.operators.Skew.spread
 
 /** Tokenizer query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object TokenizerRegistry extends QueryRegistry {
+
+  /** The literalized frozen-merge VALUES table — one source of truth
+    * (the engine's [[operators.BpeTokenizer.frozenMerges]]) shared by
+    * every oracle that replays the BPE fixpoint. */
+  private[registry] def frozenMergeValues: String = {
+    def q(s: String): String = s.replace("'", "''")
+    operators.BpeTokenizer.frozenMerges.zipWithIndex
+      .map { case ((x, y), r) => s"($r, '${q(x)}', '${q(y)}')" }.mkString(", ")
+  }
+
+  /** The frozen-BPE WORD-COUNT CTE pair: given `mg(r, x, y)` and a
+    * `dw(word)` CTE of distinct words in scope, emits `enc` (the
+    * rank-ordered replace-to-fixpoint recursion) and `wtok(word, ntk)`
+    * — the per-word token counts every token-budget oracle reuses. */
+  private[registry] def bpeWordCountCtes: String = {
+    val maxRank = operators.BpeTokenizer.frozenMerges.size
+    s"""enc AS (
+       |  SELECT word,
+       |    chr(1) || array_to_string(list_transform(range(1, length(word) + 1),
+       |      i -> substring(word, i, 1) ||
+       |        CASE WHEN i = length(word) THEN '</w>' ELSE '' END), chr(1))
+       |      || chr(1) AS seq,
+       |    0 AS r
+       |  FROM dw
+       |  UNION ALL
+       |  SELECT word,
+       |    CASE WHEN np <> seq THEN np ELSE seq END,
+       |    CASE WHEN np <> seq THEN r ELSE r + 1 END
+       |  FROM (
+       |    SELECT e.word, e.seq, e.r,
+       |      replace(replace(e.seq,
+       |        chr(1) || m.x || chr(1) || m.y || chr(1),
+       |        chr(1) || m.x || m.y || chr(2)), chr(2), chr(1)) AS np
+       |    FROM enc e JOIN mg m ON m.r = e.r) s),
+       |wtok AS (
+       |  SELECT word,
+       |    CAST(len(list_filter(string_split(seq, chr(1)), q -> q <> ''))
+       |      AS BIGINT) AS ntk
+       |  FROM enc WHERE r = $maxRank)""".stripMargin
+  }
+
+  /** bpe-fertility oracle: the frozen-BPE fixpoint per distinct
+    * word, token counts joined back to word instances, per-source sums,
+    * and the two ppm fixed-point ratios. */
+  private def bpeFertilityOracleSql: String = {
+    s"""WITH RECURSIVE
+       |mg(r, x, y) AS (SELECT * FROM (VALUES $frozenMergeValues) v(r, x, y)),
+       |toks AS (
+       |  SELECT doc_id, source,
+       |    list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+       |                t -> t <> '') AS tk
+       |  FROM documents),
+       |w AS (
+       |  SELECT doc_id, source, list_extract(tk, i) AS word
+       |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk) + 1)) AS i) r),
+       |dw AS (SELECT DISTINCT word FROM w),
+       |""".stripMargin + bpeWordCountCtes + s""",
+       |pw AS (
+       |  SELECT w.source, CAST(COUNT(*) AS BIGINT) AS n_words,
+       |    CAST(SUM(t.ntk) AS BIGINT) AS n_tokens,
+       |    CAST(SUM(length(w.word)) AS BIGINT) AS n_chars
+       |  FROM w JOIN wtok t USING (word) GROUP BY w.source),
+       |nd AS (
+       |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+       |  FROM documents GROUP BY source)
+       |SELECT nd.source, nd.n_docs,
+       |  COALESCE(pw.n_words, 0) AS n_words,
+       |  COALESCE(pw.n_tokens, 0) AS n_tokens,
+       |  COALESCE(pw.n_chars, 0) AS n_chars,
+       |  CASE WHEN COALESCE(pw.n_words, 0) = 0 THEN NULL
+       |    ELSE CAST((1000000 * pw.n_tokens) // pw.n_words AS BIGINT) END
+       |    AS fertility_ppm,
+       |  CASE WHEN COALESCE(pw.n_tokens, 0) = 0 THEN NULL
+       |    ELSE CAST((1000000 * pw.n_chars) // pw.n_tokens AS BIGINT) END
+       |    AS chars_per_token_ppm
+       |FROM nd LEFT JOIN pw ON pw.source = nd.source
+       |ORDER BY nd.source""".stripMargin
+  }
+
+  /** Unigram-tokenizer oracle, shared verbatim by q_unigram_tokenize and
+    * the persistence twin: the frozen (piece → cost_milli) vocabulary is
+    * LITERALIZED into a DuckDB MAP (the frozen-BPE-merges idiom), the
+    * Viterbi DP runs forward over DISTINCT words as a recursive CTE
+    * (struct-min of ('c', 'nl' = −L) = min cost then longest piece — the
+    * exact Scala tie-break), a second recursion walks the backpointers to
+    * reconstruct pieces, and segmentations join back to word instances. */
+  private lazy val unigramOracleSql: String =
+    unigramSqlWith(
+      """SELECT words.doc_id, words.widx, CAST(j - 1 AS BIGINT) AS pidx, seg.pieces[j] AS piece,
+        |  coalesce(vocab.m[seg.pieces[j]][1], CAST(20000 AS BIGINT)) AS score_milli
+        |FROM words JOIN seg USING (w) CROSS JOIN vocab,
+        |     LATERAL (SELECT unnest(range(1, len(seg.pieces) + 1)) AS j) r
+        |ORDER BY doc_id, widx, pidx""".stripMargin)
+
+  /** The unigram Viterbi machinery (words / vocab / vit / recon / seg
+    * CTEs) with a caller-chosen final SELECT — the token stream and the
+    * per-document LM-cost rollup share it. */
+  private def unigramSqlWith(finalSelect: String): String = {
+    val m = operators.UnigramTokenizer.frozenVocab
+      .map { case (p, c) => s"'$p': $c" }.mkString("MAP {", ", ", "}")
+    s"""WITH RECURSIVE words AS (
+      |  SELECT doc_id, i - 1 AS widx, lst[i] AS w
+      |  FROM (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS lst FROM documents),
+      |       LATERAL (SELECT unnest(range(1, len(lst) + 1)) AS i) r),
+      |vocab AS (SELECT $m AS m),
+      |dw AS (SELECT DISTINCT w FROM words),
+      |vit AS (
+      |  SELECT w, 0 AS i, CAST([0] AS BIGINT[]) AS best, CAST([] AS BIGINT[]) AS bp FROM dw
+      |  UNION ALL
+      |  SELECT w, i + 1, list_append(best, ch.c), list_append(bp, ch.l)
+      |  FROM (
+      |    SELECT v.w, v.i, v.best, v.bp, list_min(list_append(
+      |      [{'c': v.best[v.i - L + 2] + vocab.m[substr(v.w, CAST(v.i - L + 2 AS INTEGER), CAST(L AS INTEGER))][1],
+      |        'nl': -L, 'l': L}
+      |       for L in range(2, least(6, v.i + 1) + 1)
+      |       if len(vocab.m[substr(v.w, CAST(v.i - L + 2 AS INTEGER), CAST(L AS INTEGER))]) > 0],
+      |      {'c': v.best[v.i + 1] + coalesce(vocab.m[substr(v.w, CAST(v.i + 1 AS INTEGER), 1)][1],
+      |         CAST(${operators.UnigramTokenizer.UnknownCostMilli} AS BIGINT)),
+      |       'nl': CAST(-1 AS BIGINT), 'l': CAST(1 AS BIGINT)})) AS ch
+      |    FROM vit v CROSS JOIN vocab WHERE v.i < len(v.w)) s),
+      |recon AS (
+      |  SELECT w, bp, CAST(len(w) AS BIGINT) AS i, CAST([] AS VARCHAR[]) AS pieces
+      |  FROM vit WHERE i = len(w)
+      |  UNION ALL
+      |  SELECT w, bp, i - bp[i],
+      |    list_prepend(substr(w, CAST(i - bp[i] + 1 AS INTEGER), CAST(bp[i] AS INTEGER)), pieces)
+      |  FROM recon WHERE i > 0),
+      |seg AS (SELECT w, pieces FROM recon WHERE i = 0)
+      |""".stripMargin + finalSelect
+  }
+
+  /** The frozen-BPE oracle: a recursive CTE applying the LITERAL
+    * [[operators.BpeTokenizer.frozenMerges]] table (interpolated here, so
+    * the two engines share one source of truth) in rank order, each rank
+    * replaced to fixpoint. See the q_bpe_tokenize oracle comment. */
+  private def bpeFrozenSql: String = {
+    // SQL-escape merge symbols (doubled single quote) so a future seed
+    // vocabulary containing an apostrophe still literalizes correctly.
+    def q(s: String): String = s.replace("'", "''")
+    val vals = operators.BpeTokenizer.frozenMerges.zipWithIndex
+      .map { case ((x, y), r) => s"($r, '${q(x)}', '${q(y)}')" }.mkString(", ")
+    val maxRank = operators.BpeTokenizer.frozenMerges.size
+    s"""WITH RECURSIVE
+       |mg(r, x, y) AS (SELECT * FROM (VALUES $vals) v(r, x, y)),
+       |toks AS (
+       |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+       |                             t -> t <> '') AS tk
+       |  FROM documents),
+       |w AS (
+       |  SELECT doc_id, i AS wpos, list_extract(tk, i) AS word
+       |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk) + 1)) AS i) r),
+       |dw AS (SELECT DISTINCT word FROM w),
+       |enc AS (
+       |  SELECT word,
+       |    chr(1) || array_to_string(list_transform(range(1, length(word) + 1),
+       |      i -> substring(word, i, 1) ||
+       |        CASE WHEN i = length(word) THEN '</w>' ELSE '' END), chr(1))
+       |      || chr(1) AS seq,
+       |    0 AS r
+       |  FROM dw
+       |  UNION ALL
+       |  SELECT word,
+       |    CASE WHEN np <> seq THEN np ELSE seq END,
+       |    CASE WHEN np <> seq THEN r ELSE r + 1 END
+       |  FROM (
+       |    SELECT e.word, e.seq, e.r,
+       |      replace(replace(e.seq,
+       |        chr(1) || m.x || chr(1) || m.y || chr(1),
+       |        chr(1) || m.x || m.y || chr(2)), chr(2), chr(1)) AS np
+       |    FROM enc e JOIN mg m ON m.r = e.r) s),
+       |tok AS (
+       |  SELECT word, list_filter(string_split(seq, chr(1)), t -> t <> '') AS toks
+       |  FROM enc WHERE r = $maxRank),
+       |wt AS (
+       |  SELECT doc_id, wpos, toks, len(toks) AS n,
+       |    SUM(len(toks)) OVER (PARTITION BY doc_id ORDER BY wpos
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS off
+       |  FROM w JOIN tok USING (word))
+       |SELECT doc_id, CAST(COALESCE(off, 0) + i - 1 AS BIGINT) AS pos,
+       |  list_extract(toks, i) AS token
+       |FROM wt, LATERAL (SELECT unnest(range(1, n + 1)) AS i) r
+       |ORDER BY doc_id, pos""".stripMargin
+  }
 
   /** The multilingual BYTE-FALLBACK fixture: the document's first three
     * cleaned words plus one genuinely non-ASCII word keyed by lang —

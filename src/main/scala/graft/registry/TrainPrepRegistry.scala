@@ -7,17 +7,884 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import TokenizerRegistry.{frozenMergeValues, bpeWordCountCtes}
 
 /** TrainPrep query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object TrainPrepRegistry extends QueryRegistry {
+
+  /** The interleaved-page fixture replay (`u` + `l` CTEs) — ONE source
+    * of truth for the planted 4-item page shape, shared by all three
+    * interleaved oracles (extraction, packing, token packing).
+    * `withMedia` adds the src/alt columns only the extraction oracle
+    * reads. */
+  private def interleavedFixtureCtes(withMedia: Boolean): String = {
+    val mediaCols0 =
+      if (withMedia) ",\n    CAST(NULL AS VARCHAR) AS src, CAST(NULL AS VARCHAR) AS alt"
+      else ""
+    val media1 =
+      if (withMedia) ",\n    '/img/' || id || '.png',\n    'one-' || CAST(doc_id % 13 AS VARCHAR)"
+      else ""
+    val media2 =
+      if (withMedia) ",\n    '//cdn.' || source || '.example.com/m' ||\n      CAST(doc_id % 7 AS VARCHAR) || '.webp', ''"
+      else ""
+    val media3 = if (withMedia) ", NULL, NULL" else ""
+    s"""u AS (
+      |  SELECT doc_id, source, CAST(doc_id AS VARCHAR) AS id,
+      |    array_to_string(list_slice(
+      |      list_filter(string_split(text, ' '), x -> x <> ''), 1, 5), ' ')
+      |      AS w5,
+      |    array_to_string(list_slice(
+      |      list_filter(string_split(text, ' '), x -> x <> ''), 1, 3), ' ')
+      |      AS w3
+      |  FROM documents),
+      |l AS (
+      |  SELECT doc_id, 0 AS pos, 'text' AS kind,
+      |    'Opening paragraph for document ' || id || ' about ' || w5 ||
+      |      ' with enough length.' AS text$mediaCols0
+      |  FROM u
+      |  UNION ALL SELECT doc_id, 1, 'image', NULL$media1 FROM u
+      |  UNION ALL SELECT doc_id, 2, 'image', NULL$media2 FROM u
+      |  UNION ALL SELECT doc_id, 3, 'text',
+      |    'Closing paragraph reciting ' || w3 ||
+      |      ' once more for position four.'$media3 FROM u)""".stripMargin
+  }
+
+  /** interleaved-docs oracle: the four emitted positions per document
+    * (content, image, image, content) — the nav run and its short
+    * successor must NOT appear at any position. */
+  private[registry] def interleavedDocsOracleSql: String =
+    "WITH " + interleavedFixtureCtes(withMedia = true) + """
+      |SELECT doc_id, CAST(pos AS BIGINT) AS pos, kind, text, src, alt
+      |FROM l ORDER BY doc_id, pos""".stripMargin
+
+  /** interleaved-packing oracle: the q_interleaved_docs item
+    * construction + the cost rule (image → 64, text → whitespace token
+    * count) + in-document and cross-document prefix sums + the
+    * capacity-512 division — the q_sft_pack chain re-based onto
+    * multimodal items. */
+  private[registry] def interleavedPackOracleSql: String =
+    "WITH " + interleavedFixtureCtes(withMedia = false) + """,
+      |c AS (
+      |  SELECT doc_id, pos, kind,
+      |    CAST(CASE WHEN kind = 'image' THEN 64
+      |         ELSE len(list_filter(string_split_regex(text, '\s+'),
+      |                   x -> x <> ''))
+      |    END AS BIGINT) AS n_tok
+      |  FROM l),
+      |doc AS (
+      |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_items,
+      |    CAST(SUM(n_tok) AS BIGINT) AS n_tokens
+      |  FROM c GROUP BY doc_id),
+      |packed AS (
+      |  SELECT doc_id, n_items, n_tokens,
+      |    SUM(n_tokens) OVER (ORDER BY doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
+      |      AS g0,
+      |    SUM(n_tokens) OVER (ORDER BY doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM doc),
+      |it AS (
+      |  SELECT doc_id, pos, kind, n_tok,
+      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY doc_id ORDER BY pos
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS BIGINT) AS st
+      |  FROM c)
+      |SELECT p.doc_id, p.n_items, p.n_tokens,
+      |  CAST(p.g0 // 512 AS BIGINT) AS seq_id,
+      |  (p.n_tokens > 0 AND (p.cum - 1) // 512 <> p.g0 // 512) AS is_split,
+      |  CAST(i.pos AS BIGINT) AS pos, i.kind, i.n_tok,
+      |  CAST(p.g0 + i.st AS BIGINT) AS g_start,
+      |  CAST(p.g0 + i.st + i.n_tok AS BIGINT) AS g_end
+      |FROM packed p JOIN it i USING (doc_id)
+      |ORDER BY p.doc_id, i.pos""".stripMargin
+
+  /** sft-assembly oracle: the frozen ChatML template's length
+    * arithmetic replayed per turn — prefix-sum starts, whole-turn and
+    * content-only intervals, assistant-span train flags. The 12/1/11
+    * literals are length("<|im_start|>"), the "\n" after the role, and
+    * length("<|im_end|>\n") — frozen with the template. */
+  private[registry] lazy val sftAssembleOracleSql: String =
+        """WITH tu AS (
+      |  SELECT doc_id // 4 AS conversation_id, doc_id % 4 AS turn_idx,
+      |    CASE WHEN doc_id % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+      |    'Turn ' || CAST(doc_id % 4 AS VARCHAR) || ': ' ||
+      |      array_to_string(list_slice(
+      |        list_filter(string_split(text, ' '), x -> x <> ''), 1, 4),
+      |        ' ') AS t
+      |  FROM documents),
+      |r AS (
+      |  SELECT conversation_id, turn_idx, role,
+      |    CAST(length('<|im_start|>' || role || chr(10) || t ||
+      |      '<|im_end|>' || chr(10)) AS BIGINT) AS rlen
+      |  FROM tu),
+      |sp AS (
+      |  SELECT conversation_id, turn_idx, role, rlen,
+      |    CAST(COALESCE(SUM(rlen) OVER (PARTITION BY conversation_id
+      |      ORDER BY turn_idx
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS BIGINT) AS start_char,
+      |    CAST(COUNT(*) OVER (PARTITION BY conversation_id) AS BIGINT)
+      |      AS n_turns,
+      |    CAST(SUM(rlen) OVER (PARTITION BY conversation_id) AS BIGINT)
+      |      AS rendered_len
+      |  FROM r)
+      |SELECT CAST(conversation_id AS BIGINT) AS conversation_id, n_turns,
+      |  rendered_len, CAST(turn_idx AS BIGINT) AS turn_idx, role,
+      |  start_char, start_char + rlen AS end_char,
+      |  start_char + 12 + length(role) + 1 AS content_start,
+      |  start_char + rlen - 11 AS content_end,
+      |  role = 'assistant' AS train
+      |FROM sp ORDER BY conversation_id, turn_idx""".stripMargin
+
+  /** sft-packing oracle: template lengths → conversation prefix sums →
+    * capacity-512 packing division → per-span global offset shifts, all
+    * replayed from the shared turn construction. */
+  private val sftPackOracleSql: String =
+        """WITH tu AS (
+      |  SELECT doc_id // 4 AS conversation_id, doc_id % 4 AS turn_idx,
+      |    CASE WHEN doc_id % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+      |    'Turn ' || CAST(doc_id % 4 AS VARCHAR) || ': ' ||
+      |      array_to_string(list_slice(
+      |        list_filter(string_split(text, ' '), x -> x <> ''), 1, 4),
+      |        ' ') AS t
+      |  FROM documents),
+      |r AS (
+      |  SELECT conversation_id, turn_idx, role,
+      |    CAST(length('<|im_start|>' || role || chr(10) || t ||
+      |      '<|im_end|>' || chr(10)) AS BIGINT) AS rlen
+      |  FROM tu),
+      |conv AS (
+      |  SELECT conversation_id, CAST(SUM(rlen) AS BIGINT) AS n_chars
+      |  FROM r GROUP BY conversation_id),
+      |packed AS (
+      |  SELECT conversation_id, n_chars,
+      |    SUM(n_chars) OVER (ORDER BY conversation_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_chars
+      |      AS g0,
+      |    SUM(n_chars) OVER (ORDER BY conversation_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM conv),
+      |sp AS (
+      |  SELECT conversation_id, turn_idx, role, rlen,
+      |    CAST(COALESCE(SUM(rlen) OVER (PARTITION BY conversation_id
+      |      ORDER BY turn_idx
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS BIGINT) AS start_char
+      |  FROM r)
+      |SELECT p.conversation_id, p.n_chars,
+      |  CAST(p.g0 // 512 AS BIGINT) AS seq_id,
+      |  (p.n_chars > 0 AND (p.cum - 1) // 512 <> p.g0 // 512) AS is_split,
+      |  CAST(s.turn_idx AS BIGINT) AS turn_idx, s.role,
+      |  CAST(p.g0 + s.start_char AS BIGINT) AS g_start,
+      |  CAST(p.g0 + s.start_char + s.rlen AS BIGINT) AS g_end,
+      |  CAST(p.g0 + s.start_char + 12 + length(s.role) + 1 AS BIGINT)
+      |    AS g_content_start,
+      |  CAST(p.g0 + s.start_char + s.rlen - 11 AS BIGINT) AS g_content_end,
+      |  s.role = 'assistant' AS train
+      |FROM packed p JOIN sp s USING (conversation_id)
+      |ORDER BY p.conversation_id, s.turn_idx""".stripMargin
+
+  /** Per-turn frozen-BPE token lengths: given `mg` and a
+    * `tu(conversation_id, turn_idx, role, t)` CTE in scope, emits
+    * `r2(conversation_id, turn_idx, role, rlen)` — rlen = content
+    * tokens + the frozen ChatML overhead of 5. Shared by the packing
+    * and assembly oracle tails. */
+  private def turnTokenLenCtes: String =
+    s"""ttk AS (
+       |  SELECT conversation_id, turn_idx,
+       |    list_filter(string_split_regex(trim(lower(t)), '\\s+'),
+       |                x -> x <> '') AS tk
+       |  FROM tu),
+       |tw AS (
+       |  SELECT conversation_id, turn_idx, list_extract(tk, i) AS word
+       |  FROM ttk, LATERAL (SELECT unnest(range(1, len(tk) + 1)) AS i) r),
+       |dw AS (SELECT DISTINCT word FROM tw),
+       |""".stripMargin + bpeWordCountCtes + s""",
+       |tn AS (
+       |  SELECT conversation_id, turn_idx, CAST(SUM(ntk) AS BIGINT) AS k
+       |  FROM tw JOIN wtok USING (word) GROUP BY 1, 2),
+       |r2 AS (
+       |  SELECT tu.conversation_id, tu.turn_idx, tu.role,
+       |    COALESCE(tn.k, 0) + 5 AS rlen
+       |  FROM tu LEFT JOIN tn USING (conversation_id, turn_idx))""".stripMargin
+
+  /** Token-space ASSEMBLY oracle tail (no packing): per-conversation
+    * span intervals in token units — the q_sft_assemble arithmetic
+    * re-based onto [[turnTokenLenCtes]]' rlen. */
+  private def tokenAssembleOracleTail: String =
+    turnTokenLenCtes + s""",
+       |nt AS (
+       |  SELECT conversation_id, CAST(COUNT(*) AS BIGINT) AS n_turns,
+       |    CAST(SUM(rlen) AS BIGINT) AS n_tokens
+       |  FROM r2 GROUP BY conversation_id),
+       |sp AS (
+       |  SELECT conversation_id, turn_idx, role, rlen,
+       |    CAST(COALESCE(SUM(rlen) OVER (PARTITION BY conversation_id
+       |      ORDER BY turn_idx
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS BIGINT) AS start_tok
+       |  FROM r2)
+       |SELECT CAST(s.conversation_id AS BIGINT) AS conversation_id,
+       |  n.n_turns, n.n_tokens,
+       |  CAST(s.turn_idx AS BIGINT) AS turn_idx, s.role, s.start_tok,
+       |  CAST(s.start_tok + s.rlen AS BIGINT) AS end_tok,
+       |  CAST(s.start_tok + 3 AS BIGINT) AS content_start,
+       |  CAST(s.start_tok + s.rlen - 2 AS BIGINT) AS content_end,
+       |  s.role = 'assistant' AS train
+       |FROM sp s JOIN nt n USING (conversation_id)
+       |ORDER BY conversation_id, turn_idx""".stripMargin
+
+  /** The shared BPE-fixpoint + ChatML token-PACKING oracle tail: given
+    * `mg(r, x, y)` (the frozen merges) and a
+    * `tu(conversation_id, turn_idx, role, t)` turn CTE already in
+    * scope, tokenizes every turn under the merges (via
+    * [[turnTokenLenCtes]]), applies the per-conversation prefix sums
+    * and the `capacity` packing division. `extraCols` appends
+    * engine-side gate columns (e.g. `, TRUE AS span_text_ok`). Shared
+    * verbatim by q_sft_pack_tokens and the q_sft_pipeline capstone. */
+  private def tokenPackOracleTail(capacity: Int, extraCols: String): String = {
+    turnTokenLenCtes + s""",
+       |conv AS (
+       |  SELECT conversation_id, CAST(SUM(rlen) AS BIGINT) AS n_tokens
+       |  FROM r2 GROUP BY conversation_id),
+       |packed AS (
+       |  SELECT conversation_id, n_tokens,
+       |    SUM(n_tokens) OVER (ORDER BY conversation_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
+       |      AS g0,
+       |    SUM(n_tokens) OVER (ORDER BY conversation_id
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+       |  FROM conv),
+       |sp AS (
+       |  SELECT conversation_id, turn_idx, role, rlen,
+       |    CAST(COALESCE(SUM(rlen) OVER (PARTITION BY conversation_id
+       |      ORDER BY turn_idx
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |      AS BIGINT) AS start_tok
+       |  FROM r2)
+       |SELECT CAST(p.conversation_id AS BIGINT) AS conversation_id,
+       |  p.n_tokens,
+       |  CAST(p.g0 // $capacity AS BIGINT) AS seq_id,
+       |  (p.n_tokens > 0 AND (p.cum - 1) // $capacity <> p.g0 // $capacity)
+       |    AS is_split,
+       |  CAST(s.turn_idx AS BIGINT) AS turn_idx, s.role,
+       |  CAST(p.g0 + s.start_tok AS BIGINT) AS g_start,
+       |  CAST(p.g0 + s.start_tok + s.rlen AS BIGINT) AS g_end,
+       |  CAST(p.g0 + s.start_tok + 3 AS BIGINT) AS g_content_start,
+       |  CAST(p.g0 + s.start_tok + s.rlen - 2 AS BIGINT) AS g_content_end,
+       |  s.role = 'assistant' AS train$extraCols
+       |FROM packed p JOIN sp s USING (conversation_id)
+       |ORDER BY p.conversation_id, s.turn_idx""".stripMargin
+  }
+
+  /** The token oracles' shared head: the frozen merges `mg` and the
+    * turn fixture `tu(conversation_id, turn_idx, role, t)` that
+    * [[turnTokenLenCtes]] reads. */
+  private def sftTurnTokensHead: String =
+    s"""WITH RECURSIVE
+       |mg(r, x, y) AS (SELECT * FROM (VALUES $frozenMergeValues) v(r, x, y)),
+       |tu AS (
+       |  SELECT doc_id // 4 AS conversation_id, doc_id % 4 AS turn_idx,
+       |    CASE WHEN doc_id % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+       |    'Turn ' || CAST(doc_id % 4 AS VARCHAR) || ': ' ||
+       |      array_to_string(list_slice(
+       |        list_filter(string_split(text, ' '), x -> x <> ''), 1, 4),
+       |        ' ') AS t
+       |  FROM documents),
+       |""".stripMargin
+
+  /** token-exact sft-packing oracle: the frozen-BPE recursive-CTE
+    * fixpoint (the q_bpe_tokenize oracle's engine, same literalized
+    * merge table) run over the TURN texts for per-turn token counts,
+    * composed with the q_sft_pack prefix-sum / packing-division chain
+    * in token units. The +5/+3/−2 literals are the frozen ChatML token
+    * overhead ([[operators.Sft.TurnOverheadTokens]] and its halves);
+    * span_text_ok replays as TRUE — the engine-side cross-path identity
+    * (packed token-span width == independent re-tokenization of the
+    * char-span substring, detokenization == cleaned words) must hold on
+    * every row or the hash fails. */
+  private def sftPackTokensOracleSql: String =
+    sftTurnTokensHead + tokenPackOracleTail(256, ",\n  TRUE AS span_text_ok")
+
+  /** token-space assembly oracle: the shared turn fixture fed through
+    * [[tokenAssembleOracleTail]] — per-turn token-span intervals, no
+    * packing. Shared verbatim by the batch query and its streaming
+    * twin. */
+  private[registry] def sftAssembleTokensOracleSql: String =
+    sftTurnTokensHead + tokenAssembleOracleTail
+
+  /** token-exact interleaved-packing oracle: the q_interleaved_pack
+    * chain with TEXT costs from the frozen-BPE fixpoint instead of
+    * whitespace counts (images keep the constant 64-token placeholder
+    * budget). */
+  private def interleavedPackTokensOracleSql: String =
+    s"""WITH RECURSIVE
+      |mg(r, x, y) AS (SELECT * FROM (VALUES $frozenMergeValues) v(r, x, y)),
+      |""".stripMargin + interleavedFixtureCtes(withMedia = false) + s""",
+      |it0 AS (
+      |  SELECT doc_id, pos, kind,
+      |    CASE WHEN kind = 'text' THEN
+      |      list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+      |                  x -> x <> '') END AS tk
+      |  FROM l),
+      |tw AS (
+      |  SELECT doc_id, pos, list_extract(tk, i) AS word
+      |  FROM it0, LATERAL (SELECT unnest(range(1, len(tk) + 1)) AS i) r
+      |  WHERE tk IS NOT NULL),
+      |dw AS (SELECT DISTINCT word FROM tw),
+      |""".stripMargin + bpeWordCountCtes + s""",
+      |tcost AS (
+      |  SELECT doc_id, pos, CAST(SUM(ntk) AS BIGINT) AS c
+      |  FROM tw JOIN wtok USING (word) GROUP BY 1, 2),
+      |c AS (
+      |  SELECT i.doc_id, i.pos, i.kind,
+      |    CAST(CASE WHEN i.kind = 'image' THEN 64
+      |         ELSE COALESCE(t.c, 0) END AS BIGINT) AS n_tok
+      |  FROM it0 i LEFT JOIN tcost t USING (doc_id, pos)),
+      |doc AS (
+      |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_items,
+      |    CAST(SUM(n_tok) AS BIGINT) AS n_tokens
+      |  FROM c GROUP BY doc_id),
+      |packed AS (
+      |  SELECT doc_id, n_items, n_tokens,
+      |    SUM(n_tokens) OVER (ORDER BY doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
+      |      AS g0,
+      |    SUM(n_tokens) OVER (ORDER BY doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM doc),
+      |it AS (
+      |  SELECT doc_id, pos, kind, n_tok,
+      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY doc_id ORDER BY pos
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |      AS BIGINT) AS st
+      |  FROM c)
+      |SELECT p.doc_id, p.n_items, p.n_tokens,
+      |  CAST(p.g0 // 512 AS BIGINT) AS seq_id,
+      |  (p.n_tokens > 0 AND (p.cum - 1) // 512 <> p.g0 // 512) AS is_split,
+      |  CAST(i.pos AS BIGINT) AS pos, i.kind, i.n_tok,
+      |  CAST(p.g0 + i.st AS BIGINT) AS g_start,
+      |  CAST(p.g0 + i.st + i.n_tok AS BIGINT) AS g_end
+      |FROM packed p JOIN it i USING (doc_id)
+      |ORDER BY p.doc_id, i.pos""".stripMargin
+
+  /** ffd-packing oracle: the whole per-shard first-fit-decreasing fold
+    * replayed — Knuth shard hash (the q_corpus_shuffle formula), docs
+    * ranked (tokens desc, id) per shard, and a recursive CTE whose
+    * state is the bin-fills LIST: each step first-fits via
+    * list_position over the fills, appending a new bin when nothing
+    * (including an oversize doc) can take the item. Every document's
+    * bin index and running fill hash-match the engine's fold. */
+  private val packFfdOracleSql: String =
+        """WITH RECURSIVE
+      |toks AS (
+      |  SELECT doc_id,
+      |    CAST(len(list_filter(string_split_regex(text, '\s+'),
+      |      x -> x <> '')) AS BIGINT) AS n,
+      |    ((doc_id % 4294967296 // 65536 * 2654435761) % 65536 * 65536
+      |     + (doc_id % 65536) * 2654435761) % 4294967296 % 8 AS shard
+      |  FROM documents),
+      |d AS (
+      |  SELECT doc_id, n, shard,
+      |    ROW_NUMBER() OVER (PARTITION BY shard ORDER BY n DESC, doc_id)
+      |      AS rn
+      |  FROM toks),
+      |f AS (
+      |  SELECT shard, 0 AS rn, CAST(NULL AS BIGINT) AS doc_id,
+      |    CAST(NULL AS BIGINT) AS n, CAST(NULL AS BIGINT) AS bin,
+      |    CAST(NULL AS BIGINT) AS fill_after,
+      |    CAST([] AS BIGINT[]) AS fills
+      |  FROM (SELECT DISTINCT shard FROM toks)
+      |  UNION ALL
+      |  SELECT f.shard, d.rn, d.doc_id, d.n,
+      |    CAST(CASE WHEN l.ix IS NULL OR l.ix = 0 THEN len(f.fills)
+      |         ELSE l.ix - 1 END AS BIGINT),
+      |    CAST(CASE WHEN l.ix IS NULL OR l.ix = 0 THEN d.n
+      |         ELSE f.fills[l.ix] + d.n END AS BIGINT),
+      |    CASE WHEN l.ix IS NULL OR l.ix = 0 THEN list_append(f.fills, d.n)
+      |         ELSE list_transform(range(1, len(f.fills) + 1),
+      |                i -> CASE WHEN i = l.ix THEN f.fills[i] + d.n
+      |                     ELSE f.fills[i] END) END
+      |  FROM f JOIN d ON d.shard = f.shard AND d.rn = f.rn + 1,
+      |  LATERAL (SELECT list_position(
+      |    list_transform(f.fills, x -> x + d.n <= 256), true) AS ix) l)
+      |SELECT doc_id, n AS n_tok, shard, bin, fill_after,
+      |  n > 256 AS oversize
+      |FROM f WHERE rn > 0 ORDER BY doc_id""".stripMargin
+
+  /** ffd-manifest oracle: the full fold replay grouped per (shard,
+    * bin). `packFfdOracleSql` is reused verbatim as a subquery. */
+  private[registry] def packFfdStatsOracleSql: String =
+    s"""SELECT shard, bin, CAST(COUNT(*) AS BIGINT) AS n_docs,
+       |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
+       |  bool_or(oversize) AS oversize,
+       |  CAST(CASE WHEN bool_or(oversize) THEN 0
+       |       ELSE 256 - SUM(n_tok) END AS BIGINT) AS waste
+       |FROM ($packFfdOracleSql) p
+       |GROUP BY shard, bin ORDER BY shard, bin""".stripMargin
+
+  /** sft-pipeline capstone oracle: the survivor set replays the planted
+    * fixture's structure (the sftDedupFuzzyOracleSql discipline —
+    * each stage's OPERATOR is independently hash-gated by
+    * q_sft_dedup / q_sft_decontam; the capstone gates their
+    * COMPOSITION): per planted group of three conversations, the
+    * case-variant copy v1 exact-dedups away (min-id survivor v0), and
+    * any group containing a benchmark conversation (cid % 11 == 0)
+    * drops whole — group-keyed tokens make its three conversations
+    * shingle-overlap the benchmark text and nothing else. Survivors
+    * then run the REAL frozen-BPE token assembly + capacity-256 packing
+    * tail shared with q_sft_pack_tokens. */
+  private def sftPipelineOracleSql: String =
+    s"""WITH RECURSIVE
+       |mg(r, x, y) AS (SELECT * FROM (VALUES $frozenMergeValues) v(r, x, y)),
+       |convs AS (SELECT DISTINCT doc_id // 4 AS cid FROM documents),
+       |surv AS (
+       |  SELECT cid FROM convs c
+       |  WHERE cid % 3 <> 1
+       |    AND NOT EXISTS (SELECT 1 FROM convs b
+       |                    WHERE b.cid % 11 = 0 AND b.cid // 3 = c.cid // 3)),
+       |tu AS (
+       |  SELECT doc_id // 4 AS conversation_id, doc_id % 4 AS turn_idx,
+       |    CASE WHEN doc_id % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+       |    'sft' || CAST((doc_id // 4) // 3 AS VARCHAR) || 'a sft' ||
+       |      CAST((doc_id // 4) // 3 AS VARCHAR) || 'b sft' ||
+       |      CAST((doc_id // 4) // 3 AS VARCHAR) || 'c turn' ||
+       |      CAST(doc_id % 4 AS VARCHAR) ||
+       |      CASE WHEN (doc_id // 4) % 3 = 2 AND doc_id % 4 = 3
+       |        THEN ' extra' ELSE '' END AS t
+       |  FROM documents JOIN surv ON surv.cid = doc_id // 4),
+       |""".stripMargin +
+      tokenPackOracleTail(256, "")
+
+  /** best-of-n oracle: rank + lead + min/max windows over the shared
+    * candidate construction; top-3 ranks, flat-spread prompts emit
+    * nothing, margin_next NULL for each prompt's last scored
+    * candidate. */
+  private[registry] lazy val sftBonOracleSql: String =
+        """WITH c AS (
+      |  SELECT doc_id // 5 AS prompt_id, doc_id AS cand_id,
+      |    'Cand ' || CAST(doc_id % 5 AS VARCHAR) || ': ' ||
+      |      array_to_string(list_slice(
+      |        list_filter(string_split(text, ' '), x -> x <> ''), 1, 5),
+      |        ' ') AS t,
+      |    CAST(CASE WHEN (doc_id // 5) % 10 = 0 THEN 50
+      |         ELSE (doc_id * 37) % 100 END AS BIGINT) AS s
+      |  FROM documents),
+      |r AS (
+      |  SELECT prompt_id, cand_id, t, s,
+      |    row_number() OVER (PARTITION BY prompt_id
+      |      ORDER BY s DESC, cand_id DESC) AS rk,
+      |    lead(s) OVER (PARTITION BY prompt_id
+      |      ORDER BY s DESC, cand_id DESC) AS nxt,
+      |    min(s) OVER (PARTITION BY prompt_id) AS smin,
+      |    max(s) OVER (PARTITION BY prompt_id) AS smax,
+      |    count(*) OVER (PARTITION BY prompt_id) AS n
+      |  FROM c)
+      |SELECT CAST(prompt_id AS BIGINT) AS prompt_id,
+      |  CAST(rk AS BIGINT) AS "rank", cand_id, t AS text, s AS score,
+      |  s - nxt AS margin_next, s - smin AS margin_worst,
+      |  CAST(n AS BIGINT) AS n_candidates
+      |FROM r WHERE rk <= 3 AND smax > smin
+      |ORDER BY prompt_id, "rank"""".stripMargin
+
+  /** preference-pairs oracle: argmax/argmin per prompt via rank
+    * windows over the candidate construction; flat-spread prompts
+    * (every tenth) filtered — they must emit nothing. */
+  private[registry] lazy val prefPairsOracleSql: String =
+        """WITH c AS (
+      |  SELECT doc_id // 5 AS prompt_id, doc_id AS cand_id,
+      |    'Cand ' || CAST(doc_id % 5 AS VARCHAR) || ': ' ||
+      |      array_to_string(list_slice(
+      |        list_filter(string_split(text, ' '), x -> x <> ''), 1, 5),
+      |        ' ') AS t,
+      |    CAST(CASE WHEN (doc_id // 5) % 10 = 0 THEN 50
+      |         ELSE (doc_id * 37) % 100 END AS BIGINT) AS s
+      |  FROM documents),
+      |r AS (
+      |  SELECT prompt_id, cand_id, t, s,
+      |    row_number() OVER (PARTITION BY prompt_id
+      |      ORDER BY s DESC, cand_id DESC) AS rmax,
+      |    row_number() OVER (PARTITION BY prompt_id
+      |      ORDER BY s ASC, cand_id ASC) AS rmin,
+      |    count(*) OVER (PARTITION BY prompt_id) AS n,
+      |    max(s) OVER (PARTITION BY prompt_id) AS smax,
+      |    min(s) OVER (PARTITION BY prompt_id) AS smin
+      |  FROM c)
+      |SELECT a.prompt_id, CAST(a.n AS BIGINT) AS n_candidates,
+      |  a.cand_id AS chosen_id, a.t AS chosen_text, a.s AS chosen_score,
+      |  b.cand_id AS rejected_id, b.t AS rejected_text,
+      |  b.s AS rejected_score
+      |FROM r a JOIN r b ON a.prompt_id = b.prompt_id
+      |WHERE a.rmax = 1 AND b.rmin = 1 AND a.smax > a.smin
+      |ORDER BY a.prompt_id""".stripMargin
+
+  /** sft-decontamination oracle: the q_decontaminate shingle chain over
+    * each conversation's concatenated (lowercased) assistant turns vs
+    * the benchmark slice's shingle set. */
+  private val sftDecontamOracleSql: String =
+        """WITH tu AS (
+      |  SELECT doc_id // 4 AS cid, doc_id % 4 AS k,
+      |    array_to_string(list_slice(
+      |      list_filter(string_split(text, ' '), x -> x <> ''), 1, 8),
+      |      ' ') AS t
+      |  FROM documents WHERE doc_id % 2 = 1),
+      |conv AS (
+      |  SELECT cid, lower(string_agg(t, ' ' ORDER BY k)) AS text
+      |  FROM tu GROUP BY cid),
+      |ctk AS (
+      |  SELECT cid, regexp_split_to_array(trim(text), '\s+') AS tk
+      |  FROM conv),
+      |csh AS (
+      |  SELECT DISTINCT cid,
+      |    list_extract(tk, i) || ' ' || list_extract(tk, i+1) || ' ' ||
+      |    list_extract(tk, i+2) || ' ' || list_extract(tk, i+3) || ' ' ||
+      |    list_extract(tk, i+4) AS s
+      |  FROM ctk, LATERAL (SELECT unnest(range(1, len(tk)-3)) AS i) r
+      |  WHERE len(tk) >= 5
+      |  UNION
+      |  SELECT DISTINCT cid, array_to_string(tk, ' ') AS s
+      |  FROM ctk WHERE len(tk) < 5),
+      |etk AS (
+      |  SELECT regexp_split_to_array(trim(lower(text)), '\s+') AS tk
+      |  FROM documents WHERE doc_id % 97 = 0),
+      |esh AS (
+      |  SELECT DISTINCT
+      |    list_extract(tk, i) || ' ' || list_extract(tk, i+1) || ' ' ||
+      |    list_extract(tk, i+2) || ' ' || list_extract(tk, i+3) || ' ' ||
+      |    list_extract(tk, i+4) AS s
+      |  FROM etk, LATERAL (SELECT unnest(range(1, len(tk)-3)) AS i) r
+      |  WHERE len(tk) >= 5
+      |  UNION
+      |  SELECT DISTINCT array_to_string(tk, ' ') AS s
+      |  FROM etk WHERE len(tk) < 5)
+      |SELECT cid AS conversation_id, CAST(count(*) AS BIGINT) AS n_hits
+      |FROM csh JOIN esh USING (s) GROUP BY 1
+      |ORDER BY conversation_id""".stripMargin
+
+  /** sft-exact-dedup oracle: rendered conversations rebuilt in SQL and
+    * grouped — min-id survivor, copy count, 256-bit fingerprint. */
+  private val sftDedupOracleSql: String =
+        """WITH tu AS (
+      |  SELECT doc_id // 4 AS cid, doc_id % 4 AS k,
+      |    CASE WHEN doc_id % 2 = 0 THEN 'user' ELSE 'assistant' END AS role,
+      |    'sft' || CAST((doc_id // 4) // 3 AS VARCHAR) || 'a sft' ||
+      |      CAST((doc_id // 4) // 3 AS VARCHAR) || 'b sft' ||
+      |      CAST((doc_id // 4) // 3 AS VARCHAR) || 'c turn' ||
+      |      CAST(doc_id % 4 AS VARCHAR) ||
+      |      CASE WHEN (doc_id // 4) % 3 = 2 AND doc_id % 4 = 3
+      |        THEN ' extra' ELSE '' END AS t
+      |  FROM documents),
+      |r AS (
+      |  SELECT cid, string_agg('<|im_start|>' || role || chr(10) || t ||
+      |    '<|im_end|>' || chr(10), '' ORDER BY k) AS rendered
+      |  FROM tu GROUP BY cid)
+      |SELECT sha256(rendered) AS fp, CAST(MIN(cid) AS BIGINT)
+      |    AS conversation_id,
+      |  CAST(COUNT(*) AS BIGINT) AS n_convs
+      |FROM r GROUP BY rendered ORDER BY conversation_id""".stripMargin
+
+  /** sft-fuzzy-dedup oracle: within each planted group of three
+    * full conversations, the lowercase-identical pair scores 1.0 and
+    * the one-token-appended sibling scores 11/12 against each — the
+    * banding must surface exactly these pairs and the exact re-score
+    * exactly these values. */
+  private val sftDedupFuzzyOracleSql: String =
+        """WITH convs AS (
+      |  SELECT doc_id // 4 AS cid FROM documents
+      |  GROUP BY 1 HAVING COUNT(*) = 4),
+      |g AS (SELECT cid, cid // 3 AS grp, cid % 3 AS v FROM convs)
+      |SELECT a.cid AS idA, b.cid AS idB,
+      |  CASE WHEN (a.v = 2) = (b.v = 2) THEN 1.0
+      |       ELSE round(11.0 / 12.0, 6) END AS jaccard
+      |FROM g a JOIN g b ON a.grp = b.grp AND a.cid < b.cid
+      |ORDER BY idA, idB""".stripMargin
+
+  /** The q_interleaved_docs computation (fixture page → ordered
+    * text/image item sequence) as a pure per-row projection — shared
+    * verbatim by the batch query and its streaming twin. The fixture
+    * alternates content paragraphs, image slots, a fully-linked nav
+    * run (boilerplate — dropped), and a short trailing run that
+    * inherits the boilerplate label (dropped), so the emitted sequence
+    * exercises every classification branch while staying replayable:
+    * positions 0..3 = text, image, image, text. */
+  private[registry] lazy val htmlInterleavedRows: DataFrame => DataFrame = docs => {
+    val id = col("doc_id").cast("string")
+    val words5 = array_join(slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 5), " ")
+    val words3 = array_join(slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 3), " ")
+    val html = concat(
+      lit("<html><body>"),
+      lit("<p>Opening paragraph for document "), id, lit(" about "),
+      words5, lit(" with enough length.</p>"),
+      lit("<img src=\"/img/"), id, lit(".png\" alt=\"one-"),
+      pmod(col("doc_id"), lit(13)), lit("\">"),
+      lit("<p><a href=\"/nav\">site navigation menu</a></p>"),
+      lit("<img src=\"//cdn."), col("source"), lit(".example.com/m"),
+      pmod(col("doc_id"), lit(7)), lit(".webp\">"),
+      lit("<p>Tail.</p>"),
+      lit("<p>Closing paragraph reciting "), words3,
+      lit(" once more for position four.</p>"),
+      lit("</body></html>"))
+    docs.select(col("doc_id"),
+        explode(graft.expr.HtmlExpressions.html_interleaved(html))
+          .as("it"))
+      .select(col("doc_id"), col("it.pos").cast("long").as("pos"),
+        col("it.kind").as("kind"), col("it.text").as("text"),
+        col("it.src").as("src"), col("it.alt").as("alt"))
+  }
+
+  /** SFT-assembly turn fixture: conversations of four turns (doc_id/4),
+    * alternating user/assistant roles, turn text from each document's
+    * first four words — shared by the assembly query and the packing
+    * capstone so the oracle's length arithmetic is derived once. */
+  private[registry] def sftAssembleTurns(s: SparkSession, dir: String): DataFrame = {
+    val words4 = array_join(slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 4), " ")
+    t(s, dir, "documents").select(
+      floor(col("doc_id") / 4).cast("long").as("conv_id"),
+      pmod(col("doc_id"), lit(4)).cast("long").as("turn_idx"),
+      when(pmod(col("doc_id"), lit(2)) === 0, "user")
+        .otherwise("assistant").as("role"),
+      concat(lit("Turn "), pmod(col("doc_id"), lit(4)).cast("string"),
+        lit(": "), words4).as("text"))
+  }
+
+  /** Preference-candidate fixture: five scored candidates per prompt
+    * (doc_id/5), candidate text from each document's first five words,
+    * score = (doc_id·37) mod 100 — except every tenth prompt, whose
+    * candidates all score a FLAT 50 (the no-signal contract probe).
+    * Shared by the pair query, its streaming twin, and the best-of-n
+    * export so all three provably rank the same candidates. */
+  private[registry] def prefCandidates(s: SparkSession, dir: String): DataFrame = {
+    val words5 = array_join(slice(filter(split(col("text"), " "),
+      w => length(w) > 0), 1, 5), " ")
+    val promptId = floor(col("doc_id") / 5).cast("long")
+    t(s, dir, "documents").select(promptId.as("prompt_id"),
+      col("doc_id").as("cand_id"),
+      concat(lit("Cand "), pmod(col("doc_id"), lit(5)).cast("string"),
+        lit(": "), words5).as("text"),
+      when(pmod(promptId, lit(10)) === 0, lit(50L))
+        .otherwise(pmod(col("doc_id") * 37, lit(100)))
+        .cast("long").as("score"))
+  }
+
+  /** The q_sft_assemble computation (turns → per-turn span rows) as a
+    * projection over a turn frame — shared verbatim by the batch query
+    * and its streaming twin (conversation-complete micro-batches make
+    * the per-batch aggregate exact). */
+  private[registry] lazy val sftAssembleProjected: DataFrame => DataFrame = turns =>
+    operators.Sft.assemble(turns, "conv_id", "turn_idx", "role", "text")
+      .select(col("conversation_id"), col("n_turns"),
+        length(col("rendered")).cast("long").as("rendered_len"),
+        explode(col("spans")).as("sp"))
+      .select(col("conversation_id"), col("n_turns"), col("rendered_len"),
+        col("sp.turn_idx").as("turn_idx"), col("sp.role").as("role"),
+        col("sp.start_char").as("start_char"),
+        col("sp.end_char").as("end_char"),
+        col("sp.content_start").as("content_start"),
+        col("sp.content_end").as("content_end"),
+        col("sp.train").as("train"))
+
+  /** The q_sft_assemble_tokens computation (turns → per-turn TOKEN-span
+    * rows under the frozen BPE) as a projection over a turn frame —
+    * shared verbatim by the batch query and its streaming twin (the
+    * grouped-runner contract makes the per-batch aggregate exact). */
+  private[registry] lazy val sftTokenAssembleProjected: DataFrame => DataFrame = turns =>
+    operators.Sft.assembleTokenSpans(turns, "conv_id", "turn_idx", "role",
+        "text", operators.BpeTokenizer.frozenMerges)
+      .select(col("conversation_id"), col("n_turns"), col("n_tokens"),
+        explode(col("spans")).as("sp"))
+      .select(col("conversation_id"), col("n_turns"), col("n_tokens"),
+        col("sp.turn_idx").as("turn_idx"), col("sp.role").as("role"),
+        col("sp.start_tok").as("start_tok"),
+        col("sp.end_tok").as("end_tok"),
+        col("sp.content_start").as("content_start"),
+        col("sp.content_end").as("content_end"),
+        col("sp.train").as("train"))
+
+  /** SFT-dedup turn fixture: conversations of four turns (doc_id/4),
+    * grouped three-by-three (conv_id/3) onto a shared group-keyed token
+    * text, so each group plants one dedup cluster: conversations 0 and
+    * 1 of the group carry identical words (conversation 1 UPPERCASED
+    * when `caseVariant` — the normalization probe), conversation 2
+    * appends one trailing token to its last turn (the near-dup probe:
+    * 11 of 12 trigram shingles shared). Token streams are group-keyed
+    * in every 3-gram window, so cross-group shingle overlap is zero by
+    * construction. */
+  private def sftDedupTurns(s: SparkSession, dir: String,
+                            caseVariant: Boolean): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val convId = floor(col("doc_id") / 4).cast("long")
+    val k = pmod(col("doc_id"), lit(4))
+    val grp = floor(convId / 3).cast("long").cast("string")
+    val v = pmod(convId, lit(3))
+    val base = concat(lit("sft"), grp, lit("a sft"), grp, lit("b sft"),
+      grp, lit("c turn"), k.cast("string"),
+      when(v === 2 && k === 3, lit(" extra")).otherwise(lit("")))
+    val text = if (caseVariant) when(v === 1, upper(base)).otherwise(base)
+      else base
+    docs.select(convId.as("conv_id"), k.cast("long").as("turn_idx"),
+      when(pmod(col("doc_id"), lit(2)) === 0, "user")
+        .otherwise("assistant").as("role"),
+      text.as("text"))
+  }
+
+  // The full dedup-ladder CTE chain (stats .. cum) shared by the
+  // corpus capstone and the train-prep capstone — one definition, so
+  // the two oracles cannot drift. Consumers append their own final
+  // SELECT (or further CTEs after a comma).
+  private[registry] lazy val corpusLadderCoreCtes: String =
+    """WITH RECURSIVE
+        |stats AS (SELECT doc_id, text,
+        |  CASE WHEN trim(text) = '' OR text IS NULL THEN 0 ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS n_tokens,
+        |  length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS n_punct
+        |  FROM documents),
+        |quality AS (SELECT doc_id, text FROM stats WHERE n_tokens >= 30 AND n_punct >= 0),
+        |keyed AS (SELECT doc_id, text, array_to_string(list_slice(regexp_split_to_array(trim(lower(text)), '\s+'), 1, 5), ' ') AS key5 FROM quality),
+        |exact AS (SELECT doc_id, text FROM (
+        |  SELECT doc_id, text, ROW_NUMBER() OVER (PARTITION BY key5 ORDER BY doc_id) AS rn FROM keyed) k
+        |  WHERE rn = 1),
+        |toks0 AS (
+        |  SELECT doc_id, list_filter(string_split_regex(trim(lower(text)), '\s+'), t -> t <> '') AS tk
+        |  FROM exact),
+        |grams0 AS (
+        |  SELECT doc_id, tk, UNNEST(range(1, len(tk) - 4 + 2)) AS i
+        |  FROM toks0 WHERE len(tk) >= 4),
+        |grams AS (
+        |  SELECT doc_id, i - 1 AS pos, array_to_string(tk[i:i+3], ' ') AS gram FROM grams0),
+        |occ AS (
+        |  SELECT doc_id, pos,
+        |    COUNT(*) OVER (PARTITION BY gram) AS c,
+        |    MIN(doc_id * 1048576 + pos) OVER (PARTITION BY gram) AS canon
+        |  FROM grams),
+        |rep AS (
+        |  SELECT doc_id, pos, (doc_id * 1048576 + pos = canon) AS is_canon
+        |  FROM occ WHERE c >= 2),
+        |wins AS (
+        |  SELECT doc_id,
+        |    list(struct_pack(s := pos, e := pos + 3)) FILTER (WHERE is_canon) AS can,
+        |    list(struct_pack(s := pos, e := pos + 3)) FILTER (WHERE NOT is_canon) AS red
+        |  FROM rep GROUP BY doc_id),
+        |final AS (
+        |  SELECT t.doc_id, t.tk,
+        |    CASE WHEN w.red IS NULL THEN NULL
+        |      ELSE list_filter(range(0, len(t.tk)), p ->
+        |        NOT (len(list_filter(w.red, x -> p >= x.s AND p <= x.e)) > 0
+        |             AND (w.can IS NULL OR len(list_filter(w.can, x -> p >= x.s AND p <= x.e)) = 0)))
+        |      END AS kept
+        |  FROM toks0 t LEFT JOIN wins w ON t.doc_id = w.doc_id),
+        |cleaned AS (
+        |  SELECT doc_id,
+        |    CASE WHEN kept IS NULL THEN array_to_string(tk, ' ')
+        |      ELSE COALESCE(array_to_string(list_transform(kept, p -> tk[p + 1]), ' '), '') END AS clean_text,
+        |    CAST(CASE WHEN kept IS NULL THEN 0 ELSE len(tk) - len(kept) END AS BIGINT) AS n_removed
+        |  FROM final),
+        |cq AS (
+        |  SELECT doc_id, clean_text, n_removed,
+        |    CAST(len(regexp_extract_all(clean_text, '[A-Za-z0-9_]+|[^A-Za-z0-9_\s]')) AS BIGINT) AS n_tok
+        |  FROM cleaned
+        |  WHERE (CASE WHEN trim(clean_text) = '' OR clean_text IS NULL THEN 0
+        |         ELSE len(regexp_split_to_array(trim(clean_text), '\s+')) END) >= 30),
+        |toks AS (SELECT doc_id, regexp_split_to_array(trim(lower(clean_text)), '\s+') AS tk FROM cq),
+        |sh AS (
+        |  SELECT DISTINCT doc_id, list_extract(tk, i) || ' ' || list_extract(tk, i+1) || ' ' || list_extract(tk, i+2) AS s
+        |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk)-1)) AS i) r
+        |  WHERE len(tk) >= 3
+        |  UNION
+        |  SELECT DISTINCT doc_id, array_to_string(tk, ' ') AS s FROM toks WHERE len(tk) < 3
+        |),
+        |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+        |common AS (
+        |  SELECT x.doc_id AS idA, y.doc_id AS idB, count(*) AS c
+        |  FROM sh x JOIN sh y USING (s) WHERE x.doc_id < y.doc_id
+        |  GROUP BY 1, 2),
+        |pairs AS (
+        |  SELECT idA, idB FROM common
+        |  JOIN sizes na ON na.doc_id = idA
+        |  JOIN sizes nb ON nb.doc_id = idB
+        |  WHERE CAST(c AS DOUBLE) / (na.n_sh + nb.n_sh - c) >= 0.2),
+        |edges AS (SELECT idA AS src, idB AS dst FROM pairs UNION ALL SELECT idB AS src, idA AS dst FROM pairs),
+        |cc(id, label) AS (
+        |  SELECT doc_id, doc_id FROM cq
+        |  UNION
+        |  SELECT e.dst, cc.label FROM edges e JOIN cc ON cc.id = e.src
+        |),
+        |fsurv AS (
+        |  SELECT x.doc_id, x.n_tok, x.n_removed FROM cq x
+        |  JOIN (SELECT id, MIN(label) AS lab FROM cc GROUP BY id) m
+        |    ON m.id = x.doc_id AND m.lab = x.doc_id),
+        |spairs AS (
+        |  SELECT a.vec_id AS idA, b.vec_id AS idB
+        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |  JOIN fsurv sa ON sa.doc_id = a.vec_id
+        |  JOIN fsurv sb ON sb.doc_id = b.vec_id
+        |  WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
+        |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+        |       * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) >= 0.4),
+        |sedges AS (SELECT idA AS src, idB AS dst FROM spairs UNION ALL SELECT idB AS src, idA AS dst FROM spairs),
+        |scc(id, label) AS (
+        |  SELECT doc_id, doc_id FROM fsurv
+        |  UNION
+        |  SELECT e.dst, scc.label FROM sedges e JOIN scc ON scc.id = e.src
+        |),
+        |ssurv AS (
+        |  SELECT x.doc_id, x.n_tok, x.n_removed FROM fsurv x
+        |  JOIN (SELECT id, MIN(label) AS lab FROM scc GROUP BY id) m
+        |    ON m.id = x.doc_id AND m.lab = x.doc_id)""".stripMargin
+
+  private val corpusLadderCtes: String =
+    corpusLadderCoreCtes + """,
+        |cum AS (SELECT doc_id, n_tok, n_removed,
+        |  SUM(n_tok) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM ssurv)""".stripMargin
+
+  /** DSIR per-doc importance weights (shared verbatim by the batch entry
+    * and its streaming twin — bucket counts are multiset functions, so
+    * stream ≡ batch exactly). */
+  private[registry] lazy val dsirWeightsOracleSql: String =
+    """WITH toks AS (
+      |  SELECT doc_id, lang,
+      |    list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
+      |                t -> t <> '') AS tk
+      |  FROM documents),
+      |feats AS (
+      |  SELECT doc_id, lang, t.f AS feat FROM toks, UNNEST(tk) AS t(f)
+      |  UNION ALL
+      |  SELECT doc_id, lang, list_extract(tk, i) || ' ' || list_extract(tk, i + 1) AS feat
+      |  FROM toks, LATERAL (SELECT unnest(range(1, len(tk))) AS i) r
+      |  WHERE len(tk) >= 2),
+      |fb AS (
+      |  SELECT doc_id, lang,
+      |    CAST(('0x' || substr(md5(feat), 1, 8)) AS BIGINT) % 4096 AS bucket
+      |  FROM feats),
+      |ct AS (SELECT bucket, COUNT(*) AS ct FROM fb WHERE lang = 'en' GROUP BY 1),
+      |cr AS (SELECT bucket, COUNT(*) AS cr FROM fb WHERE lang <> 'en' GROUP BY 1),
+      |nt AS (SELECT CAST(COALESCE(SUM(ct), 0) AS BIGINT) AS nt FROM ct),
+      |nr AS (SELECT CAST(COALESCE(SUM(cr), 0) AS BIGINT) AS nr FROM cr),
+      |lr AS (
+      |  SELECT cr.bucket,
+      |    CAST(ROUND(LN((CAST(COALESCE(ct.ct, 0) AS DOUBLE) + 1)
+      |                  / (CAST(nt.nt AS DOUBLE) + 4096)), 6) AS DECIMAL(18,6))
+      |    - CAST(ROUND(LN((CAST(cr.cr AS DOUBLE) + 1)
+      |                  / (CAST(nr.nr AS DOUBLE) + 4096)), 6) AS DECIMAL(18,6)) AS lr
+      |  FROM cr LEFT JOIN ct USING (bucket) CROSS JOIN nt CROSS JOIN nr),
+      |pd AS (
+      |  SELECT fb.doc_id, COUNT(*) AS n_feat, SUM(lr.lr) AS slw
+      |  FROM fb JOIN lr USING (bucket) WHERE fb.lang <> 'en' GROUP BY 1)
+      |SELECT d.doc_id, COALESCE(pd.n_feat, 0) AS n_feat,
+      |  CAST(pd.slw AS DOUBLE) AS logw
+      |FROM documents d LEFT JOIN pd USING (doc_id)
+      |WHERE d.lang <> 'en'
+      |ORDER BY d.doc_id""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

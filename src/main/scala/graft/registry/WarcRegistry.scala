@@ -7,17 +7,452 @@ import org.apache.spark.sql.functions._
 import graft.functions.{EventTime, GraftFunctions}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.StreamingIngest
-import SparkEntry._
+import MultimodalRegistry.{pdfExtractOracleSql, imageDecodeOracleSql}
+import TextRegistry.textExtractOracleSql
 
 /** Warc query/oracle registry — one slice of the driver contract
   * surface, split out of the former 15k-line SparkEntry monolith so a
   * duplicated query-name literal can never silently shadow a pair out
   * of the sweep again (the round-17 q_text_chunks incident).
-  * Query lambdas and oracle texts are verbatim moves; shared helpers
-  * stay on [[SparkEntry]] (imported above). Composed — with a
-  * cross-registry duplicate guard — in [[SparkEntry.queries]] /
+  * Each query's lambda, fixtures and oracle text live here; a helper
+  * that a streaming twin or another family also uses is
+  * `private[registry]` in its batch query's registry. Composed — with
+  * a cross-registry duplicate guard — in [[SparkEntry.queries]] /
   * [[SparkEntry.oracleSql]]. */
 private[graft] object WarcRegistry extends QueryRegistry {
+
+  /** Synthetic WARC archives derived from the
+    * documents table: 4 buckets keyed by doc_id % 4, bucket 0 gzipped
+    * with per-record members, each file led by a warcinfo record, every
+    * response carrying the synthetic crawl page ([[operators.TextExtract
+    * .syntheticHtml]]) behind a real HTTP/1.1 200 message. Deterministic,
+    * so bench re-runs reuse the archives ([[Scratch.once]]). */
+  private[registry] def warcFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warc") { out =>
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://www."), col("source"), lit(".example.com/docs/"),
+          col("doc_id").cast("string")).as("uri"),
+        operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
+          .as("body"))
+      ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri", "body",
+        out, nFiles = 4)
+    }
+
+  /** IMAGE archives: the same WARC framing with
+    * `image/png` responses whose bodies are the synthetic pixel PNGs
+    * ([[operators.Multimodal.syntheticPngPixelPayload]]) — crawls are
+    * mostly binary, and this fixture is what pins the reader's
+    * byte-exact `body_bytes` path. */
+  private def warcImageFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warcimg") { out =>
+      val png = udf((id: Long) => Multimodal.syntheticPngPixelPayload(id))
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://img."), col("source"),
+          lit(".example.com/png/"), col("doc_id").cast("string"),
+          lit(".png")).as("uri"),
+        png(col("doc_id")).as("body"))
+      ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri", "body",
+        out, nFiles = 4, contentType = "image/png")
+    }
+
+  /** PAGE archives whose HTML references the
+    * [[warcImageFixtureDir]] pixel PNGs — the image-text JOIN fixture:
+    * each page carries one `<figure>` img pointing at its document's
+    * synthetic PNG (absolute src on the img. host) plus alt text and a
+    * figcaption that names the image's true dimensions, so pair
+    * assembly must route extraction, resolution, and the
+    * archive-decoded pixels into one frame and the caption/pixel
+    * agreement is itself oracle-checkable. */
+  private def warcImgPageFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warcimgpg") { out =>
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://www."), col("source"),
+          lit(".example.com/docs/"), col("doc_id").cast("string"))
+          .as("uri"),
+        concat(
+          lit("<html><body><figure><img src=\"https://img."),
+          col("source"), lit(".example.com/png/"),
+          col("doc_id").cast("string"),
+          lit(".png\" alt=\"png "), pmod(col("doc_id"), lit(13)),
+          lit("\"><figcaption>Pixel grid "),
+          (lit(16) + pmod(col("doc_id"), lit(17))).cast("string"),
+          lit(" by "),
+          (lit(16) + pmod(col("doc_id") * 3, lit(13))).cast("string"),
+          lit("</figcaption></figure></body></html>")).as("body"))
+      ingest.WarcIngest.writeSyntheticWarc(s, docs, "doc_id", "uri",
+        "body", out, nFiles = 4)
+    }
+
+  /** The legacy-charset rotation for the charset-sniffing WARC fixture:
+    * (java charset name, non-ASCII marker appended to the page text).
+    * Every marker is encodable in its charset and survives the charset's
+    * encode→decode round-trip bit-exactly; the windows-1252 euro (0x80)
+    * and em-dash (0x97) distinguish cp1252 from ISO-8859-1. Shared by
+    * the fixture UDF and the oracle's CASE literal (\u escapes because
+    * the container's platform charset is US-ASCII). */
+  private val CharsetModes: IndexedSeq[(String, String)] = IndexedSeq(
+    ("UTF-8", "unicode üñî ✓ probe"),
+    ("ISO-8859-1", "café à la carte ±°"),
+    ("windows-1252", "€uro café — quote"),
+    ("GB2312", "中文编码测试"),
+    ("Shift_JIS", "日本語テキスト"),
+    ("UTF-16", "Ωmega ±π bom"))
+
+  /** LEGACY-CHARSET archives: each document's
+    * page re-encoded under the doc_id % 6 rotation and declared three
+    * different ways — Content-Type parameter (modes 1/3), `<meta>` in
+    * the head (modes 0/2/4: charset attr and http-equiv both), or a
+    * UTF-16 BOM (mode 5) — so every branch of
+    * [[ingest.WarcIngest.sniffCharset]]'s precedence ladder carries
+    * fixture rows. Pages are simple head+h1+p documents (no uppercase
+    * twin: non-ASCII case-mapping is locale-lore neither engine should
+    * be oracled on). */
+  private def warcCharsetFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warccs") { out =>
+      val modes = CharsetModes
+      val pageBytes = udf { (id: Long, text: String) =>
+        val mode = (id % 6).toInt
+        val (cs, mk) = modes(mode)
+        val meta = mode match {
+          case 0 => "<meta charset=\"utf-8\">\n"
+          case 2 => "<meta http-equiv=\"Content-Type\" " +
+            "content=\"text/html; charset=windows-1252\">\n"
+          case 4 => "<meta charset=\"shift_jis\">\n"
+          case _ => ""
+        }
+        val esc = text.replace("&", "&amp;")
+          .replace("<", "&lt;").replace(">", "&gt;")
+        val page = "<!doctype html>\n<html>\n<head>\n" + meta +
+          "<title>Doc " + id + "</title>\n</head>\n<body>\n" +
+          "<h1>Charset probe document about encodings</h1>\n<p>" +
+          esc + " " + mk + "</p>\n</body>\n</html>\n"
+        page.getBytes(java.nio.charset.Charset.forName(cs))
+      }
+      val ctOf = udf { (id: Long) =>
+        (id % 6).toInt match {
+          case 1 => "text/html; charset=iso-8859-1"
+          case 3 => "text/html; charset=gb2312"
+          case 5 => "text/html; charset=utf-16"
+          case _ => "text/html"
+        }
+      }
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://cs."), col("source"), lit(".example.com/p/"),
+          col("doc_id").cast("string")).as("uri"),
+        pageBytes(col("doc_id"), col("text")).as("body"),
+        ctOf(col("doc_id")).as("ct"))
+      ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
+        "ct", out, nFiles = 4)
+    }
+
+  /** WIRE-ENCODING archives: each document's page
+    * framed under the doc_id % 5 rotation of HTTP transfer/content
+    * codings a Heritrix-style raw capture preserves — identity,
+    * chunked (16-byte chunks), gzip, gzip-then-chunked, zlib deflate.
+    * The reader must strip the framing before the body reaches the
+    * charset/extraction stages; the oracle recomputes the raw payload
+    * octets for the SQL-derivable modes (identity head arithmetic and
+    * the exact chunk-framing formula). */
+  private def warcEncodingsFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warcenc") { out =>
+      val payload = udf { (id: Long, text: String) =>
+        val ascii = java.nio.charset.StandardCharsets.UTF_8
+        val esc = text.replace("&", "&amp;")
+          .replace("<", "&lt;").replace(">", "&gt;")
+        val page = ("<html>\n<head>\n<title>E" + id + "</title>\n</head>\n" +
+          "<body>\n<h1>Encoding probe document headline</h1>\n<p>" + esc +
+          "</p>\n</body>\n</html>\n").getBytes(ascii)
+        def gz(b: Array[Byte]) = {
+          val bos = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
+          val g = new java.util.zip.GZIPOutputStream(bos)
+          try { g.write(b); g.finish() } finally g.close()
+          bos.toByteArray
+        }
+        def defl(b: Array[Byte]) = {
+          val d = new java.util.zip.Deflater()
+          d.setInput(b); d.finish()
+          val bos = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
+          val buf = new Array[Byte](4096)
+          while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
+          d.end()
+          bos.toByteArray
+        }
+        def chunk(b: Array[Byte]) = {
+          val bos = new java.io.ByteArrayOutputStream(b.length + b.length / 4 + 16)
+          var i = 0
+          while (i < b.length) {
+            val k = math.min(16, b.length - i)
+            bos.write((java.lang.Long.toHexString(k.toLong) + "\r\n").getBytes(ascii))
+            bos.write(b, i, k)
+            bos.write("\r\n".getBytes(ascii))
+            i += k
+          }
+          bos.write("0\r\n\r\n".getBytes(ascii))
+          bos.toByteArray
+        }
+        val (codingHeaders, body) = (id % 5).toInt match {
+          case 0 => (s"Content-Length: ${page.length}\r\n", page)
+          case 1 => ("Transfer-Encoding: chunked\r\n", chunk(page))
+          case 2 =>
+            val g = gz(page)
+            (s"Content-Encoding: gzip\r\nContent-Length: ${g.length}\r\n", g)
+          case 3 =>
+            ("Content-Encoding: gzip\r\nTransfer-Encoding: chunked\r\n",
+              chunk(gz(page)))
+          case _ =>
+            val d = defl(page)
+            (s"Content-Encoding: deflate\r\nContent-Length: ${d.length}\r\n", d)
+        }
+        val head = ("HTTP/1.1 200 OK\r\n" +
+          "Content-Type: text/html; charset=utf-8\r\n" +
+          codingHeaders + "\r\n").getBytes(ascii)
+        head ++ body
+      }
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://enc."), col("source"), lit(".example.com/p/"),
+          col("doc_id").cast("string")).as("uri"),
+        payload(col("doc_id"), col("text")).as("payload"))
+      ingest.WarcIngest.writeHttpResponsesWarc(s, docs, "doc_id", "uri",
+        "payload", out, nFiles = 4)
+    }
+
+  /** PDF archives: application/pdf responses
+    * whose bodies are the synthetic-invertible PDFs
+    * ([[graft.expr.PdfOps.syntheticPdf]]; odd doc_ids FlateDecode-
+    * compressed) — the second text modality decoded straight out of the
+    * crawl archive, like the PNG fixture pins the binary path. */
+  private def warcPdfFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warcpdf") { out =>
+      val pdf = udf { (id: Long, text: String) =>
+        graft.expr.PdfOps.syntheticPdf(id, text, flate = id % 2 == 1)
+      }
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://pdf."), col("source"), lit(".example.com/d/"),
+          col("doc_id").cast("string"), lit(".pdf")).as("uri"),
+        pdf(col("doc_id"), col("text")).as("body"),
+        lit("application/pdf").as("ct"))
+      ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
+        "ct", out, nFiles = 4)
+    }
+
+  /** warc-image-pairs oracle: the page-side construction (src, alt,
+    * figcaption) joined to the direct-decode pixel formula of
+    * [[imageDecodeOracleSql]] — extraction, resolution, and the decoded
+    * planes must agree in one frame. */
+  private val warcImagePairsOracleSql: String =
+    """WITH m AS (
+      |  SELECT doc_id, source, 16 + doc_id % 17 AS w,
+      |    16 + (doc_id * 3) % 13 AS h
+      |  FROM documents),
+      |px AS (
+      |  SELECT doc_id, i,
+      |    CASE doc_id % 4
+      |      WHEN 0 THEN (doc_id * 7 + i * 13) % 251
+      |      WHEN 3 THEN (77 * ((doc_id + 3 * i) % 256)
+      |        + 150 * (((doc_id + 3 * i) % 256) * 7 % 256)
+      |        + 29 * (((doc_id + 3 * i) % 256) * 13 % 256)) // 256
+      |      ELSE (77 * ((doc_id + 2 * i) % 256)
+      |        + 150 * ((doc_id * 3 + 5 * i) % 256)
+      |        + 29 * ((doc_id * 5 + 7 * i) % 256)) // 256
+      |    END AS lum
+      |  FROM m, LATERAL (SELECT unnest(range(0, w * h)) AS i) r),
+      |agg AS (
+      |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_pixels,
+      |    CAST(SUM(lum) AS BIGINT) AS lum_sum
+      |  FROM px GROUP BY doc_id)
+      |SELECT m.doc_id,
+      |  'https://img.' || m.source || '.example.com/png/' ||
+      |    CAST(m.doc_id AS VARCHAR) || '.png' AS img_url,
+      |  'png ' || CAST(m.doc_id % 13 AS VARCHAR) AS alt,
+      |  'Pixel grid ' || CAST(m.w AS VARCHAR) || ' by ' ||
+      |    CAST(m.h AS VARCHAR) AS caption,
+      |  CAST(m.w AS BIGINT) AS width, CAST(m.h AS BIGINT) AS height,
+      |  a.n_pixels, a.lum_sum
+      |FROM m JOIN agg a USING (doc_id) ORDER BY m.doc_id""".stripMargin
+
+  /** MISLABELED archives: every response's
+    * Content-Type header deliberately contradicts its payload (PNG as
+    * text/html, PDF as image/png, HTML as octet-stream, WAV as
+    * text/plain, plain text as application/pdf) — the real-crawl
+    * pathology the magic-byte sniffer exists for. */
+  private def warcMimeFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warcmime") { out =>
+      val body = udf { (id: Long, text: String) =>
+        (id % 5).toInt match {
+          case 0 => Multimodal.syntheticPngPixelPayload(id)
+          case 1 => graft.expr.PdfOps.syntheticPdf(id, text, flate = true)
+          case 2 => ("<!doctype html>\n<html><body><p>" + text +
+            "</p></body></html>\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          case 3 => Multimodal.syntheticWavPayload(id)
+          case _ => text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        }
+      }
+      val declared = when(col("doc_id") % 5 === 0, "text/html")
+        .when(col("doc_id") % 5 === 1, "image/png")
+        .when(col("doc_id") % 5 === 2, "application/octet-stream")
+        .when(col("doc_id") % 5 === 3, "text/plain")
+        .otherwise("application/pdf")
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://mm."), col("source"), lit(".example.com/r/"),
+          col("doc_id").cast("string")).as("uri"),
+        body(col("doc_id"), col("text")).as("body"),
+        declared.as("ct"))
+      ingest.WarcIngest.writeResponsesWarc(s, docs, "doc_id", "uri", "body",
+        "ct", out, nFiles = 4)
+    }
+
+  /** REDIRECT archives: doc_id % 5 == 3 pages
+    * respond 301 → the mode-0 page three ids back; mode-4 pages respond
+    * 302 → the mode-3 page one id back (a two-hop chain 302→301→200);
+    * everything else serves the page. The chain targets live in the
+    * same archive — the loop a crawler actually has to resolve. */
+  private def warcRedirFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warcredir") { out =>
+      val base = t(s, dir, "documents")
+        .select(col("doc_id"), col("source"), col("text"))
+      def urlOf(idc: Column, srcc: Column): Column =
+        concat(lit("https://www."), srcc, lit(".example.com/docs/"),
+          idc.cast("string"))
+      val t3 = base.select(col("doc_id").as("t3_id"),
+        col("source").as("t3_src"))
+      val t1 = base.select(col("doc_id").as("t1_id"),
+        col("source").as("t1_src"))
+      val payload = udf { (id: Long, text: String, loc3: String,
+                           loc1: String) =>
+        val ascii = java.nio.charset.StandardCharsets.UTF_8
+        def redirect(code: Int, reason: String, loc: String) =
+          (s"HTTP/1.1 $code $reason\r\nLocation: $loc\r\n" +
+            "Content-Length: 0\r\n\r\n").getBytes(ascii)
+        (id % 5).toInt match {
+          case 3 if loc3 != null => redirect(301, "Moved Permanently", loc3)
+          case 4 if loc1 != null => redirect(302, "Found", loc1)
+          case _ =>
+            val page = ("<html><body><p>" + text.replace("&", "&amp;")
+              .replace("<", "&lt;").replace(">", "&gt;") +
+              "</p></body></html>\n").getBytes(ascii)
+            (s"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
+              s"Content-Length: ${page.length}\r\n\r\n").getBytes(ascii) ++ page
+        }
+      }
+      val docs = base
+        .join(t3, col("doc_id") - 3 === col("t3_id"), "left")
+        .join(t1, col("doc_id") - 1 === col("t1_id"), "left")
+        .select(col("doc_id"),
+          urlOf(col("doc_id"), col("source")).as("uri"),
+          payload(col("doc_id"), col("text"),
+            urlOf(col("t3_id"), col("t3_src")),
+            urlOf(col("t1_id"), col("t1_src"))).as("payload"))
+      ingest.WarcIngest.writeHttpResponsesWarc(s, docs, "doc_id", "uri",
+        "payload", out, nFiles = 4)
+    }
+
+  /** TWO-CRAWL archives for the revisit story:
+    * crawl 1 (c1/) captures every page; crawl 2 (c2/) stores the
+    * unchanged third (doc_id % 3 == 0) as payload-free `revisit`
+    * records pointing at the c1 capture via WARC-Refers-To, and
+    * re-captures the rest with updated content (text + " v2") — the
+    * ISO 28500 mechanism consecutive crawls use to avoid re-storing the
+    * stable majority of the web. */
+  private def warcRevisitFixtureDir(s: SparkSession, dir: String): String =
+    Scratch.once(dir, "warcrev") { out =>
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        concat(lit("https://www."), col("source"), lit(".example.com/docs/"),
+          col("doc_id").cast("string")).as("uri"),
+        col("text"))
+      ingest.WarcIngest.writeSyntheticWarc(s,
+        docs.select(col("doc_id"), col("uri"),
+          operators.TextExtract.syntheticHtml(col("doc_id"), col("text"))
+            .as("body")),
+        "doc_id", "uri", "body", s"$out/c1", nFiles = 4)
+      val framed = udf { (id: Long, uri: String, html: Array[Byte]) =>
+        if (id % 3 == 0)
+          ingest.WarcIngest.revisitRecord(id, uri, s"<urn:graft:doc:$id>")
+        else ingest.WarcIngest.responseRecord(id, uri, html,
+          "text/html; charset=utf-8")
+      }
+      ingest.WarcIngest.writeFramedWarc(s,
+        docs.select(col("doc_id"),
+          framed(col("doc_id"), col("uri"),
+            operators.TextExtract.syntheticHtml(col("doc_id"),
+              concat(col("text"), lit(" v2"))).cast("binary")).as("rec")),
+        "doc_id", "rec", s"$out/c2", nFiles = 4)
+    }
+
+  /** The page template as a SQL EXPRESSION over caller-chosen id/text —
+    * shared by [[warcPageSql]] and the crawl-loop oracle, which renders
+    * frontier targets under their host page's text. */
+  private[registry] def warcHtmlSqlExpr(idExpr: String, textExpr: String): String =
+    s"""'<!doctype html>' || chr(10) || '<html>' || chr(10) || '<head>' || chr(10) ||
+      |    '<title>Doc ' || CAST($idExpr AS VARCHAR) || '</title>' || chr(10) ||
+      |    '<style>p { color: #222; }</style>' || chr(10) || '</head>' || chr(10) ||
+      |    '<body>' || chr(10) ||
+      |    '<nav><a href="/">Home</a> <a href="/about">About</a> <a href="/contact">Contact</a></nav>' || chr(10) ||
+      |    '<h1>Corpus document from the synthetic crawl corpus</h1>' || chr(10) ||
+      |    '<p>' || replace(replace(replace($textExpr, '&', '&amp;'), '<', '&lt;'), '>', '&gt;') || '</p>' || chr(10) ||
+      |    '<div class="ads"><a href="/buy">Buy now</a> <a href="/sale">Sale</a></div>' || chr(10) ||
+      |    '<blockquote>' || replace(replace(replace(upper($textExpr), '&', '&amp;'), '<', '&lt;'), '>', '&gt;') || '</blockquote>' || chr(10) ||
+      |    '<script>var t = "track";</script>' || chr(10) ||
+      |    '<footer><a href="/tos">Terms</a> <a href="/priv">Privacy</a> &#169; 2026 Example Corp</footer>' || chr(10) ||
+      |    '</body>' || chr(10) || '</html>' || chr(10)""".stripMargin
+
+  /** The synthetic crawl page rebuilt in SQL — must mirror
+    * [[operators.TextExtract.syntheticHtml]] byte for byte, because the
+    * WARC oracles check the archive framing ARITHMETIC (Content-Length
+    * headers, payload/body octet counts) against this template's octet
+    * lengths. Emits (doc_id, html, uri); `uri` is the WARC fixture's
+    * target-URI rule. */
+  private lazy val warcPageSql: String =
+    s"""SELECT doc_id,
+      |    ${warcHtmlSqlExpr("doc_id", "text")} AS html,
+      |    'https://www.' || source || '.example.com/docs/' || CAST(doc_id AS VARCHAR) AS uri
+      |  FROM documents""".stripMargin
+
+  /** Charset-fixture oracle: sniffed charset name and extracted text
+    * (h1 + the marker-suffixed paragraph) reconstructed from the
+    * documents table and the [[CharsetModes]] rotation — both CASE
+    * ladders are generated from the same Scala constant the fixture UDF
+    * encodes with, so a decode under the wrong charset cannot match. */
+  private lazy val warcCharsetOracleSql: String = {
+    val csCase = CharsetModes.zipWithIndex
+      .map { case ((cs, _), i) => s"WHEN $i THEN '$cs'" }.mkString(" ")
+    val mkCase = CharsetModes.zipWithIndex
+      .map { case ((_, mk), i) => s"WHEN $i THEN '$mk'" }.mkString(" ")
+    s"""SELECT doc_id,
+       |  CASE doc_id % 6 $csCase END AS charset,
+       |  'Charset probe document about encodings' || chr(10) ||
+       |    text || ' ' || CASE doc_id % 6 $mkCase END AS extracted
+       |FROM documents ORDER BY doc_id""".stripMargin
+  }
+
+  /** WARC record-table oracle — shared verbatim by the one-shot read
+    * (q_warc_records) and the two-wave manifest-driven incremental
+    * ingest (q_warc_incremental): every WARC/HTTP framing field is
+    * recomputed from the page template's octet arithmetic. */
+  private lazy val warcRecordsOracleSql: String =
+    s"""WITH page AS ($warcPageSql),
+      |resp AS (
+      |  SELECT doc_id AS rec_key, 'response' AS warc_type, uri AS target_uri,
+      |    CAST(strlen('HTTP/1.1 200 OK') + 2
+      |      + strlen('Content-Type: text/html; charset=utf-8') + 2
+      |      + strlen('Content-Length: ' || CAST(strlen(html) AS VARCHAR)) + 2
+      |      + 2 + strlen(html) AS BIGINT) AS content_length,
+      |    CAST(200 AS BIGINT) AS http_status,
+      |    'text/html; charset=utf-8' AS http_content_type,
+      |    CAST(strlen(html) AS BIGINT) AS body_octets
+      |  FROM page),
+      |info AS (
+      |  SELECT CAST(-(b + 1) AS BIGINT) AS rec_key, 'warcinfo' AS warc_type,
+      |    CAST(NULL AS VARCHAR) AS target_uri,
+      |    CAST(strlen('software: graft-warc/1.0') + 2
+      |      + strlen('bucket: ' || CAST(b AS VARCHAR)) + 2 AS BIGINT) AS content_length,
+      |    CAST(NULL AS BIGINT) AS http_status,
+      |    CAST(NULL AS VARCHAR) AS http_content_type,
+      |    CAST(strlen('software: graft-warc/1.0') + 2
+      |      + strlen('bucket: ' || CAST(b AS VARCHAR)) + 2 AS BIGINT) AS body_octets
+      |  FROM (SELECT unnest(range(4)) AS b))
+      |SELECT * FROM info UNION ALL SELECT * FROM resp
+      |ORDER BY rec_key""".stripMargin
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -134,7 +134,7 @@ object VersionedTable {
   /** Drop data files no manifest references (crashed commits, compacted-
     * away snapshots) and, optionally, manifests older than `keepVersions`.
     * The vacuum a snapshot-versioned table needs to bound storage. */
-  def vacuum(spark: SparkSession, path: String, keepVersions: Int = Int.MaxValue): Unit = {
+  def vacuum(spark: SparkSession, path: String, keepVersions: Int): Unit = {
     require(keepVersions >= 1, "must keep at least the latest version")
     val f = fs(spark, path)
     val all = versions(spark, path)

@@ -88,7 +88,7 @@ object Warehouse {
     * Attribute comparison is null-safe (a null attribute value is a value,
     * not a wildcard). */
   def scdType2(history: DataFrame, keyCol: String, attrCols: Seq[String],
-               tsCol: String, tieCols: Seq[String] = Nil): DataFrame = {
+               tsCol: String, tieCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(attrCols.nonEmpty, "scdType2: need at least one tracked attribute")
     val ord = (tsCol +: tieCols).map(col)
@@ -279,7 +279,7 @@ object Warehouse {
     * maps onto partitioned writers + `batchsize`. */
   def writeJdbc(df: DataFrame, url: String, table: String,
                 properties: java.util.Properties = new java.util.Properties(),
-                mode: String = "append", batchSize: Int = 10000): Unit =
+                mode: String, batchSize: Int): Unit =
     df.write.mode(mode)
       .option("batchsize", batchSize)
       .jdbc(url, table, properties)

@@ -87,7 +87,7 @@ object Formats {
     * row per file — parallelism is file-count-bounded, the right shape
     * for image/audio shards. */
   def readBinary(spark: SparkSession, path: String,
-                 globFilter: String = "*",
+                 globFilter: String,
                  maxBytesPerFile: Long = 64L * 1024 * 1024): DataFrame = {
     import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
     val base = spark.read.format("binaryFile")

@@ -156,8 +156,8 @@ object StreamingIngest {
     * state stays bounded by ACTIVE sessions regardless of stream length.
     * Returns the streaming frame; caller attaches the sink. */
   def sessionizedEvents(events: DataFrame, gapMicros: Long,
-                        keyCol: String = "user_id",
-                        tsCol: String = "tsm",
+                        keyCol: String,
+                        tsCol: String,
                         watermark: String = "0 seconds"): DataFrame =
     events
       .withWatermark(tsCol, watermark)
@@ -599,8 +599,8 @@ object StreamingIngest {
     * df order. */
   def runStreamCurateBounded(spark: SparkSession, parquetPath: String,
                              idCol: String, textCol: String,
-                             minTokens: Int, n: Int = 3,
-                             threshold: Double = 0.2,
+                             minTokens: Int, n: Int,
+                             threshold: Double,
                              maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.Dedup
     val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)
@@ -661,8 +661,8 @@ object StreamingIngest {
     * pair set and the statuses gate against the batch twin verbatim. */
   def runStreamCurateFuzzyBounded(spark: SparkSession, parquetPath: String,
                                   idCol: String, textCol: String,
-                                  minTokens: Int, n: Int = 3, k: Int = 64,
-                                  bands: Int = 16, threshold: Double = 0.5): DataFrame = {
+                                  minTokens: Int, n: Int, k: Int,
+                                  bands: Int, threshold: Double): DataFrame = {
     import graft.operators.Dedup
     val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger = 0)
     val statuses = byBatchId()
@@ -906,7 +906,7 @@ object StreamingIngest {
     * discipline). The standing index for batch b is rebuilt as the union
     * of slices with id < b — identical on first delivery and on replay. */
   def runStreamErBounded(spark: SparkSession, parquetPath: String,
-                         idCol: String, nameCol: String, maxDist: Int = 1,
+                         idCol: String, nameCol: String, maxDist: Int,
                          maxFilesPerTrigger: Int = 0): DataFrame = {
     import graft.operators.EntityResolution
     val stream = boundedStream(spark, parquetPath, maxFilesPerTrigger)

@@ -68,12 +68,12 @@ object CountryViews {
 
   /** Latest-consultation row per customer with derived columns — the view
     * body before the country predicate (`view_generator.py:19-63`). */
-  def dedupedCustomers(warehouse: DataFrame, asOf: Column = current_date()): DataFrame =
+  def dedupedCustomers(warehouse: DataFrame, asOf: Column): DataFrame =
     withAsOf(latestRows(warehouse), asOf)
 
   /** P9: one country's view (`view_generator.py:64`) — filter AFTER rank. */
   def countryView(warehouse: DataFrame, country: String,
-                  asOf: Column = current_date()): DataFrame =
+                  asOf: Column): DataFrame =
     dedupedCustomers(warehouse, asOf).filter(col("COUNTRY") === lit(country))
 
   /** S8/A1: enumerate countries (`SELECT DISTINCT COUNTRY`, `main.py:74-81`,
@@ -93,7 +93,7 @@ object CountryViews {
     * (`view_generator.py:17-65`) re-expressed in Spark SQL over a registered
     * warehouse table/view, deterministic tie-breaks included. */
   def viewSql(country: String, warehouseTable: String,
-              asOfSql: String = "current_date()"): String = {
+              asOfSql: String): String = {
     val name = viewName(country)
     s"""CREATE OR REPLACE TEMPORARY VIEW $name AS
        |WITH RankedCustomers AS (
@@ -126,7 +126,7 @@ object CountryViews {
     * `scripts/dml/generated/VIEW_<C>.sql`, `view_generator.py:66-72`). */
   def writeViewSqlFiles(countries: Seq[String], warehouseTable: String,
                         outputDir: String,
-                        asOfSql: String = "current_date()"): Seq[String] = {
+                        asOfSql: String): Seq[String] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outputDir))
     countries.map { c =>
       val path = java.nio.file.Paths.get(outputDir, s"${viewName(c)}.sql")

@@ -329,4 +329,31 @@ class MaterializeSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"pass Locale.ROOT to every String case conversion: ${offenders.mkString(", ")}")
   }
+
+  test("guard: SparkEntry is composition only: no registry imports it, no operator names it") {
+    val wildcard = """import\s+(?:graft\.)?SparkEntry\._""".r
+    // a word-only literal stays visible to callLines: skip a quoted name
+    val named = """(?<!")\bSparkEntry\b(?!")""".r
+    // the wildcard spelled apart, so a text search of the sources finds
+    // no import of it, not even in this probe
+    val all = "._"
+    val probe = Seq(
+      s"import SparkEntry$all",
+      s"import graft.SparkEntry$all",
+      s"// import SparkEntry$all",
+      "val n = graft.SparkEntry.queries.size",
+      "val s = \"SparkEntry\"").mkString("\n")
+    assert(callLines(probe, wildcard) == Seq(1, 2))
+    assert(callLines(probe, named) == Seq(1, 2, 4))
+    val operators = new java.io.File(mainRoot, "graft/operators")
+    assert(operators.isDirectory, s"no operators dir: ${operators.getAbsolutePath}")
+    val offenders = for {
+      (f, src) <- mainSources()
+      inOperators = f.getPath.startsWith(operators.getPath + java.io.File.separator)
+      line <- callLines(src, if (inOperators) named else wildcard)
+    } yield s"${f.getPath}:$line"
+    assert(offenders.isEmpty,
+      s"keep a helper in the registry or operator that owns it, not on SparkEntry: " +
+        offenders.mkString(", "))
+  }
 }

@@ -118,4 +118,14 @@ class OracleContractSpec extends AnyFunSuite {
         s"$name: a *_verify oracle must be the empty relation (violations-only contract)")
     }
   }
+
+  test("every oracle text is non-null and non-blank") {
+    // registries share oracle texts through defs and lazy vals; a strict
+    // val read from another registry while that object is still
+    // initializing would arrive here as null
+    val blank = SparkEntry.oracleSql.collect {
+      case (name, sql) if sql == null || sql.trim.isEmpty => name
+    }
+    assert(blank.isEmpty, s"null or blank oracle text: ${blank.toSeq.sorted.mkString(", ")}")
+  }
 }

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""List the options of the program that no caller sets.
+"""List the options of the program that no caller sets, and the defaults
+that no caller leaves out.
 
 An option is a default parameter of a `def`, or a defaulted field of a
 class or case-class constructor, declared under src/main/scala. An option
@@ -13,9 +14,14 @@ as setting the option: `Owner.f(...)` matches only `f` declared in
 is therefore one that no call can reach. Deployment settings (connection
 properties, input globs, paths) are kept on purpose and listed in ALLOWED.
 
+The second list holds the defaults that every matched call passes a value
+for: no call relies on the default, so it can go. Here the generous
+matching errs the other way: any matched call that leaves the value out,
+or does not apply the parameter list at all, keeps the default.
+
 Usage: python3 tools/unset_options.py [repo_root]
-Prints one line per unset option, then the count outside the allow-list.
-Exits 0 always; the count is the result.
+Prints one line per listed option, then each list's count outside its
+allow-list. Exits 0 always; the counts are the result.
 """
 import os
 import re
@@ -34,6 +40,9 @@ ALLOWED = {
     ("Warehouse", "readJdbc", "properties"),
     ("WarcIngest", "readRecords", "glob"),
 }
+
+# Defaults every matched call passes a value for, kept on purpose.
+ALLOWED_NEVER_OMITTED = set()
 
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 KEYWORDS = {
@@ -328,7 +337,7 @@ def main():
     for d in decls:
         if d["kind"] == "class":
             fields.setdefault(d["param"], []).append(d)
-    used = set()
+    used, omitted = set(), set()
     for qual, name, lists in calls():
         if name == "copy":
             for _, named in lists[:1]:
@@ -343,18 +352,28 @@ def main():
                 positional, named = lists[d["list"]]
                 if positional > d["pos"] or d["param"] in named:
                     used.add(id(d))
+                    continue
+            omitted.add(id(d))
     unset = [d for d in decls if id(d) not in used]
-    allowed = [d for d in unset
-               if (d["owner"], d["name"], d["param"]) in ALLOWED]
-    counted = [d for d in unset if d not in allowed]
+    # a default is needed only where some call leaves its value out
+    unneeded = [d for d in decls if id(d) in used and id(d) not in omitted]
+    report("unset", unset, ALLOWED)
+    report("never omitted", unneeded, ALLOWED_NEVER_OMITTED)
+    print(f"{len(decls)} options declared")
+
+
+def report(what, found, allow):
+    allowed = [d for d in found
+               if (d["owner"], d["name"], d["param"]) in allow]
+    counted = [d for d in found if d not in allowed]
     for d in counted:
-        print(f'{d["path"]}:{d["line"]}: {d["owner"]}.{d["name"]} '
+        print(f'{what}: {d["path"]}:{d["line"]}: {d["owner"]}.{d["name"]} '
               f'{d["param"]} = {d["default"]}')
     for d in allowed:
-        print(f'allowed {d["path"]}:{d["line"]}: {d["owner"]}.{d["name"]} '
-              f'{d["param"]}')
-    print(f"{len(decls)} options declared, {len(unset)} unset, "
-          f"{len(allowed)} allowed, {len(counted)} unset outside the allow-list")
+        print(f'{what}, allowed: {d["path"]}:{d["line"]}: '
+              f'{d["owner"]}.{d["name"]} {d["param"]}')
+    print(f"{len(found)} {what}, {len(allowed)} allowed, "
+          f"{len(counted)} {what} outside the allow-list")
 
 
 if __name__ == "__main__":
