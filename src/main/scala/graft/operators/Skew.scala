@@ -26,7 +26,8 @@ object Skew {
     * exchange of the frame's bytes.
     *
     * Applied SELECTIVELY at measured per-row-HEAVY stages, not blanket
-    * in `QueryRegistry.t`: an A/B of the blanket form showed multi-stage ladders
+    * in `QueryRegistry.t`: an A/B of the blanket form showed
+    * multi-stage ladders
     * (q_curate_multimodal 6.7 → 12.0 s) losing more to ×cores task
     * scheduling across their ~15 tiny stages than the wide scan gains,
     * while decode/synthesis stages win big (q_pdf_unicode −80%). Call
